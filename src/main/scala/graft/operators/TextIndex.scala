@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
+import scala.jdk.CollectionConverters._
 
 /** Persisted inverted index for lexical (BM25) retrieval — the serving
   * counterpart of the from-scratch `bm25_top_docs` pipeline, which
@@ -16,14 +19,16 @@ import org.apache.spark.sql.functions._
   *    one tokenization pass, zero joins (plan-asserted in PlanSpec); the
   *    lexicon and avgdl then derive from the WRITTEN postings (one
   *    aggregation each — index-derived, never a second tokenize).
-  *  - `bm25TopDocs` serves queries from the persisted tables alone: the
-  *    bounded query-term set reads its df rows from the bucket-pruned
-  *    lexicon first (a vocabulary-keyed point lookup), then becomes the
-  *    posting scan's `IN` filter — whole buckets prune for narrow
-  *    queries (`SelectedBucketsCount`) and parquet row-group stats on
-  *    the sorted term column prune within buckets. One
-  *    map-side-combined agg per (qid, doc) and a top-k window after —
-  *    the same shape as the transient pipeline, minus the corpus-wide
+  *  - `bm25TopDocs` serves queries from the persisted tables alone and
+  *    resolves the bounded probe on the DRIVER: the (qid, term) pairs
+  *    are collected and deduped once, the corpus stats and the probe
+  *    terms' df rows are read raw and summed there as exact Longs, and
+  *    one local (qid, term, df) relation broadcast-joins the posting
+  *    scan. The probe terms are that scan's `IN` filter — whole buckets
+  *    prune for narrow queries (`SelectedBucketsCount`) and parquet
+  *    row-group stats on the sorted term column prune within buckets.
+  *    One map-side-combined agg per (qid, doc) and a top-k window after
+  *    — the same shape as the transient pipeline, minus the corpus-wide
   *    aggregations.
   *  - STOPWORD-CLASS pruning (`maxDfFrac`): a Zipf head term's posting
   *    list is O(corpus) to read yet contributes ~zero BM25 mass
@@ -144,16 +149,33 @@ object TextIndex {
   private def avgdlOf(ndl: Long, sumdl: Long): Double =
     if (ndl == 0) 0.0 else sumdl.toDouble / ndl
 
-  /** (Σn, Σndl, Σsumdl) across all epoch rows, minus the delete-side
-    * adjustments when a deletes table exists. Indexes persisted by older
-    * builds carry (n, avgdl) only — still served (single-epoch), but
-    * append/remove require the mergeable format. */
+  /** Exact column sums over raw rows (a null counts 0) — the first
+    * `width` columns, each a long. */
+  private def sumLongs(rows: Array[Row], width: Int): Array[Long] = {
+    val acc = new Array[Long](width)
+    rows.foreach { r =>
+      for (i <- 0 until width if !r.isNullAt(i)) acc(i) += r.getLong(i)
+    }
+    acc
+  }
+
+  /** Sums of `cols` over a small table (the stats epoch rows, the delete
+    * vector), read as raw rows and summed on the driver: one scan job,
+    * where `agg(sum …).first()` runs two (partial aggregate, exchange,
+    * final aggregate). */
+  private def driverSums(t: DataFrame, cols: Column*): Array[Long] =
+    sumLongs(t.select(cols.map(_.cast("long")): _*).collect(), cols.size)
+
+  /** (Σn, Σndl, Σsumdl) across all epoch rows, without the delete-side
+    * adjustments. Indexes persisted by older builds carry (n, avgdl)
+    * only — still served (single-epoch), but append/remove require the
+    * mergeable format. */
   private def rawStats(spark: SparkSession, prefix: String): (Long, Long, Long) = {
     val t = spark.table(statsTable(prefix))
     require(t.columns.contains("sumdl"),
       s"index '$prefix' predates the mergeable stats format — rebuild it")
-    val r = t.agg(sum("n"), sum("ndl"), sum("sumdl")).first()
-    (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))
+    val Array(n, ndl, sumdl) = driverSums(t, col("n"), col("ndl"), col("sumdl"))
+    (n, ndl, sumdl)
   }
 
   /** Load the corpus stats for a persisted index (epoch rows aggregated,
@@ -184,18 +206,14 @@ object TextIndex {
   def describe(spark: SparkSession, prefix: String,
       epochFactor: Long = 8): DataFrame = {
     val t = spark.table(statsTable(prefix))
-    // one aggregate reads stats AND the epoch count (the old
-    // stats()+count() pair ran two jobs over the same tiny table —
-    // OPTIMIZATION r15); delete adjustments apply exactly as in stats()
+    // one read of the epoch rows gives the stats AND the epoch count;
+    // delete adjustments apply exactly as in stats()
     val (st, epochs, nDel) =
       if (t.columns.contains("sumdl")) {
-        val r = t.agg(sum("n"), sum("ndl"), sum("sumdl"),
-          count(lit(1))).first()
+        val Array(n, ndl, sumdl, nEpochs) =
+          driverSums(t, col("n"), col("ndl"), col("sumdl"), lit(1L))
         val (nd, ndlDel, sumdlDel) = deleteAdjust(spark, prefix)
-        val sumdl = if (r.isNullAt(2)) 0L else r.getLong(2)
-        (Stats(r.getLong(0) - nd,
-          avgdlOf(r.getLong(1) - ndlDel, sumdl - sumdlDel)),
-          r.getLong(3), nd)
+        (Stats(n - nd, avgdlOf(ndl - ndlDel, sumdl - sumdlDel)), nEpochs, nd)
       } else {
         val r = t.first()
         (Stats(r.getAs[Long]("n"), r.getAs[Double]("avgdl")), 1L,
@@ -241,9 +259,9 @@ object TextIndex {
   /** (#deleted docs, #deleted docs with postings, Σ their dl). */
   private def deleteAdjust(spark: SparkSession, prefix: String): (Long, Long, Long) = {
     if (!deletesExist(spark, prefix)) return (0L, 0L, 0L)
-    val r = spark.table(deletesTable(prefix))
-      .agg(count(lit(1)), count(col("dl")), sum("dl")).first()
-    (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))
+    val Array(n, ndl, sumdl) = driverSums(spark.table(deletesTable(prefix)),
+      lit(1L), col("dl").isNotNull, col("dl"))
+    (n, ndl, sumdl)
   }
 
   /** Append a NEW batch of docs to a persisted index without touching the
@@ -408,21 +426,22 @@ object TextIndex {
 
   /** Okapi BM25 top-`topk` docs per query, served from the persisted
     * index. `queryTerms` (qid, term) must be bounded (the probe
-    * contract): its distinct terms first look up their df in the
-    * bucket-pruned lexicon (a vocabulary-keyed point read), then the
-    * SURVIVORS of the `maxDfFrac` cut become the posting scan's
-    * bucket/row-group pruning filter — a stopword-class term's
-    * O(corpus) posting list is never read. The probe side and the
-    * #query-terms df table broadcast.
+    * contract): it is collected once and resolved on the driver — the
+    * corpus stats and the probe terms' df are read as raw rows and
+    * summed there, the `maxDfFrac` cut is applied there, and the
+    * SURVIVING terms become the posting scan's bucket/row-group pruning
+    * filter, so a stopword-class term's O(corpus) posting list is never
+    * read. See [[bm25Serve]] for the plan.
     *
     * `maxDfFrac = 1.0` (default) keeps every term: identical score
     * arithmetic + round-before-rank as `TextQueries.bm25Ranked`, so
     * results hash-match the same oracle. With `maxDfFrac < 1`, terms
     * with df > maxDfFrac·N contribute nothing (their ~zero idf mass is
     * dropped with them); a query whose every term is cut returns no
-    * rows. Indexes persisted before the lexicon existed fall back to
-    * counting df from the pruned posting scan (correct, but the cut
-    * then can't skip the read). */
+    * rows. Under deletes, and on indexes persisted before the lexicon
+    * existed, df is counted from the surviving pruned postings (correct,
+    * but the cut then can't skip the read). The result keeps the
+    * probe's `qid` type. */
   def bm25TopDocs(spark: SparkSession, prefix: String,
       queryTerms: DataFrame, topk: Int,
       k1: Double = 1.2, b: Double = 0.75,
@@ -439,69 +458,63 @@ object TextIndex {
 
   /** The serve plan over explicit frames — shared by the table path
     * ([[bm25TopDocs]]) and the table∪streaming-epoch path
-    * ([[bm25TopDocsWithEpochs]]); identical score arithmetic and
-    * round-before-rank either way. `lexicon` is used only when no
-    * deletes frame is given (df must count SURVIVING postings under
-    * deletes, so it comes from the pruned anti-joined scan — exact, but
-    * the stopword cut can then no longer skip the read; compact()
-    * restores that). */
+    * ([[bm25TopDocsWithEpochs]]). The bounded probe resolves on the
+    * driver, so the only Spark plan is the scoring scan:
+    *  1. the (qid, term) pairs are collected once and deduped here (a
+    *     local probe costs no job);
+    *  2. df for the distinct probe terms comes back in ONE collect: the
+    *     `lexicon` (term, df) rows — one per epoch — summed as exact
+    *     Longs, or, when `deletes` is given or there is no lexicon, the
+    *     surviving pruned postings counted per term (df must count
+    *     survivors); the `maxDfFrac` cut applies to the merged df, so
+    *     its keep/drop decisions match a single-epoch rebuild;
+    *  3. one local (qid, term, df) relation broadcast-joins the posting
+    *     scan, which is `IN`-filtered to the surviving terms and stays
+    *     bucket-pruned; one (qid, doc) aggregate and the top-k window
+    *     follow, with the score arithmetic and round-before-rank of
+    *     `TextQueries.bm25Ranked`.
+    * A probe term absent from the index has no df and contributes
+    * nothing; no surviving term gives an empty (qid, rnk, doc_id, bm25)
+    * frame. */
   private def bm25Serve(spark: SparkSession, st: Stats, postings: DataFrame,
       lexicon: Option[DataFrame], deletes: Option[DataFrame],
       queryTerms: DataFrame, topk: Int, k1: Double, b: Double,
       maxDfFrac: Double): DataFrame = {
     require(topk > 0, "topk must be positive")
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0, "maxDfFrac in (0, 1]")
-    val qt = queryTerms.select(col("qid"), col("term")).distinct()
-    val allTerms: Array[String] = qt.select("term").distinct()
-      .collect().map(_.getString(0))
-    import spark.implicits._
+    val probe = queryTerms.select(col("qid"), col("term"))
+    val pairs = probe.collect().map(r => (r.get(0), r.getString(1)))
+      .filter(_._2 != null).distinct
+    val probeTerms = pairs.map(_._2).distinct.toSeq
     val antiDel = (p: DataFrame) => deletes match {
       case Some(d) => p.join(broadcast(d.select("doc_id")),
         Seq("doc_id"), "left_anti")
       case None => p
     }
-    val (terms, dfT) = lexicon match {
-      case Some(lex) if deletes.isEmpty && maxDfFrac >= 1.0 =>
-        // no stopword cut ⇒ no term can be skipped, so the df side needs
-        // no driver round-trip: the bucket-pruned lexicon lookup joins
-        // IN-PLAN (epoch rows merged by exact integer sum) instead of
-        // collecting df pairs to the driver first (OPTIMIZATION r15 —
-        // one blocking driver action less per serve). A query term
-        // absent from the lexicon is equally absent from the postings
-        // (the lexicon derives from them), so keeping it in the scan
-        // filter changes nothing.
-        (allTerms, broadcast(lex
-          .filter(col("term").isin(allTerms.toSeq: _*))
-          .groupBy("term").agg(sum("df").as("df"))))
+    val dfRows = lexicon match {
       case Some(lex) if deletes.isEmpty =>
-        // epoch rows merge by exact integer sum; the maxDfFrac cut
-        // applies to the MERGED df so the skip-read decision matches a
-        // single-epoch rebuild — the cut's whole point is skipping the
-        // posting read, so the surviving-term set must reach the driver
-        val dfPairs = lex
-          .filter(col("term").isin(allTerms.toSeq: _*))
-          .groupBy("term").agg(sum("df").as("df"))
-          .filter(col("df") <= lit(maxDfFrac) * lit(st.n.toDouble))
-          .select("term", "df").as[(String, Long)].collect()
-        (dfPairs.map(_._1), broadcast(dfPairs.toSeq.toDF("term", "df")))
+        lex.filter(col("term").isin(probeTerms: _*)).select("term", "df")
       case _ =>
-        val pruned = antiDel(postings
-          .filter(col("term").isin(allTerms.toSeq: _*)))
-        val counted = pruned.groupBy("term").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= lit(maxDfFrac) * lit(st.n.toDouble))
-        (allTerms, broadcast(counted))
+        antiDel(postings.filter(col("term").isin(probeTerms: _*)))
+          .groupBy("term").agg(count(lit(1)).as("df"))
     }
-    if (terms.isEmpty)
-      return Seq.empty[(Long, Int, Long, Double)]
-        .toDF("qid", "rnk", "doc_id", "bm25")
+    val df: Map[String, Long] = dfRows.collect()
+      .groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
+      .filter { case (_, d) => d <= maxDfFrac * st.n.toDouble }
+    // an empty IN list (no probe term, or no term survives) prunes its
+    // plan to an empty relation in the optimizer: it runs no job
+    val resolved = spark.createDataFrame(
+      pairs.collect { case (q, t) if df.contains(t) => Row(q, t, df(t)) }
+        .toSeq.asJava,
+      StructType(Seq(probe.schema("qid"), StructField("term", StringType),
+        StructField("df", LongType, nullable = false))))
     val scanned = antiDel(postings
-      .filter(col("term").isin(terms.toSeq: _*)))
+      .filter(col("term").isin(df.keys.toSeq: _*)))
     val score = log(lit(1.0) +
         (lit(st.n.toDouble) - col("df") + 0.5) / (col("df") + 0.5)) *
       col("tf") * (k1 + 1.0) /
       (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / st.avgdl))
-    val scored = broadcast(qt).join(scanned, Seq("term"))
-      .join(dfT, Seq("term"))
+    val scored = broadcast(resolved).join(scanned, Seq("term"))
       .groupBy("qid", "doc_id")
       .agg(graft.Qutil.rnd(sum(score), 4).as("bm25"))
     val w = Window.partitionBy("qid")
@@ -801,16 +814,20 @@ object TextIndex {
     }
     if (!exists(s"$root/postings") || !exists(s"$root/stats")) None
     else {
-      val committed = spark.read.parquet(s"$root/stats")
-        .select("epoch").distinct()
-      val posts = spark.read.parquet(s"$root/postings")
-        .join(broadcast(committed), Seq("epoch"))
-        .select("term", "doc_id", "tf", "dl")
-      val st = spark.read.parquet(s"$root/stats")
-        .agg(sum("n"), sum("ndl"), sum("sumdl")).first()
-      if (st.isNullAt(0)) None
-      else Some((posts, st.getLong(0), st.getLong(1),
-        if (st.isNullAt(2)) 0L else st.getLong(2)))
+      // ONE read of the stats markers gives both the committed epoch
+      // list and the summed stats
+      val rows = spark.read.parquet(s"$root/stats")
+        .select(col("n").cast("long"), col("ndl").cast("long"),
+          col("sumdl").cast("long"), col("epoch").cast("string"))
+        .collect()
+      if (rows.isEmpty) None
+      else {
+        val Array(n, ndl, sumdl) = sumLongs(rows, 3)
+        val posts = spark.read.parquet(s"$root/postings")
+          .filter(col("epoch").isin(rows.map(_.getString(3)).distinct.toSeq: _*))
+          .select("term", "doc_id", "tf", "dl")
+        Some((posts, n, ndl, sumdl))
+      }
     }
   }
 

@@ -49,6 +49,6 @@ class SessionLruSpec extends AnyFunSuite {
     val lru = new SessionLru(1)
     lru.get(spark, "a")(new Object)
     lru.get(spark, "b")(new Object) // evicts "a" — must not throw
-    assert(lru.get(spark, "b")(fail("must hit")) != null)
+    assert(lru.get[AnyRef](spark, "b")(fail("must hit")) != null)
   }
 }

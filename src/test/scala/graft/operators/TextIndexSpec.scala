@@ -140,6 +140,74 @@ class TextIndexSpec extends AnyFunSuite {
     queryTerms.unpersist()
   }
 
+  test("a warm single-query serve over a local probe runs at most 6 " +
+      "Spark jobs") {
+    built
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val terms = spark.table(s"${prefix}_lexicon").select("term")
+      .as[String].collect().sorted.take(3)
+    val probe = terms.toSeq.map(t => (0L, t)).toDF("qid", "term")
+    def query() = TextIndex.bm25TopDocs(spark, prefix, probe, topk = 10)
+      .collect()
+    assert(query().nonEmpty, "the probe terms come from the lexicon")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      query()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    // stats read, df read, then one plan: broadcast, scan + partial
+    // aggregate, final aggregate, window
+    info(s"${jobs.get} jobs")
+    assert(jobs.get <= 6, s"${jobs.get} jobs for one warm 3-term query")
+  }
+
+  test("probe edge cases: empty probe, absent term, duplicate pairs, " +
+      "non-long qid") {
+    built
+    import spark.implicits._
+    val qt = spark.table(s"${prefix}_postings").filter(col("doc_id") < 20)
+      .select(col("doc_id").as("qid"), col("term")).cache()
+    val want = serve(prefix, qt)
+    assert(want.nonEmpty)
+
+    val empty = TextIndex.bm25TopDocs(spark, prefix,
+      Seq.empty[(Long, String)].toDF("qid", "term"), topk = 10)
+    assert(empty.columns.toSeq == Seq("qid", "rnk", "doc_id", "bm25"))
+    assert(empty.schema("qid").dataType ==
+      org.apache.spark.sql.types.LongType)
+    assert(empty.collect().isEmpty)
+
+    // a term the index has never seen contributes nothing
+    val absent = Seq((0L, "no-such-term-in-the-index")).toDF("qid", "term")
+    assert(serve(prefix, qt.unionByName(absent)) == want)
+    assert(serve(prefix, absent).isEmpty)
+
+    // duplicate (qid, term) rows count once
+    assert(serve(prefix, qt.unionByName(qt)) == want)
+
+    // a string qid keeps its type, with the same rows
+    val strQt = qt.select(col("qid").cast("string").as("qid"), col("term"))
+    val strRes = TextIndex.bm25TopDocs(spark, prefix, strQt, topk = 10)
+    assert(strRes.schema("qid").dataType ==
+      org.apache.spark.sql.types.StringType)
+    assert(strRes.collect().map(r => (r.getString(0).toLong, r.getInt(1),
+      r.getLong(2), r.getDouble(3))).toSet == want)
+    val strEmpty = TextIndex.bm25TopDocs(spark, prefix,
+      strQt.filter(lit(false)), topk = 10)
+    assert(strEmpty.schema("qid").dataType ==
+      org.apache.spark.sql.types.StringType)
+    qt.unpersist()
+  }
+
   test("drop removes the persisted tables (store CRUD contract)") {
     TextIndex.drop(spark, prefix)
     assert(!spark.catalog.tableExists(s"${prefix}_postings"))
@@ -168,6 +236,26 @@ class TextIndexSpec extends AnyFunSuite {
     assert(serve(inc, qt) == serve(full, qt))
     // the stopword cut must make the SAME keep/drop decisions on merged df
     assert(serve(inc, qt, maxDfFrac = 0.5) == serve(full, qt, maxDfFrac = 0.5))
+
+    // a cut between the per-epoch df and the merged df: the probe's
+    // most frequent term survives against either epoch row alone but is
+    // dropped on the merged df, as on the rebuild
+    val n = stFull.n
+    val fullDf = spark.table(s"${full}_lexicon").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toMap
+    val (head, headDf) = qt.select("term").distinct().collect()
+      .map(r => (r.getString(0), fullDf(r.getString(0)))).maxBy(_._2)
+    val frac = (headDf - 0.5) / n
+    val epochDfs = spark.table(s"${inc}_lexicon")
+      .filter(col("term") === head).collect().map(_.getLong(1))
+    assert(epochDfs.length == 2 && epochDfs.sum == headDf &&
+      epochDfs.forall(_ <= frac * n),
+      s"'$head': epoch df ${epochDfs.mkString(",")} vs merged $headDf")
+    val cutInc = serve(inc, qt, maxDfFrac = frac)
+    assert(cutInc == serve(full, qt, maxDfFrac = frac))
+    val kept = fullDf.filter(_._2 <= frac * n).keySet
+    assert(cutInc == serve(full, qt.filter(col("term").isin(kept.toSeq: _*))))
+    assert(cutInc != serve(inc, qt), "the cut must drop the head term")
     qt.unpersist()
     TextIndex.drop(spark, inc); TextIndex.drop(spark, full)
   }
