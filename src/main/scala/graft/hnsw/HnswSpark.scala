@@ -2,7 +2,6 @@ package graft.hnsw
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** One persisted graph node of one partition-local sub-index. */
@@ -31,8 +30,9 @@ case class HnswParams(
   *
   * Scale design: the build never moves a vector twice (one hash-partition
   * shuffle, then executor-local inserts); queries broadcast (small probe
-  * sets) so the graph side never shuffles; the only exchange after search
-  * is |queries|·P·k candidate rows. Partition count P is the
+  * sets) so the graph side never shuffles, and nothing shuffles after the
+  * search: each task's per-query top-k merges on the driver ([[ShardTopK]],
+  * at most |queries|·P·k rows in flight). Partition count P is the
   * memory/recall knob: size P so rows/P·(d·4B + M·levels·8B) fits an
   * executor (SURVEY §7.4).
   */
@@ -157,11 +157,95 @@ class HnswModel(
     val graph: Dataset[PartGraphRow],
     val modelId: String = java.util.UUID.randomUUID().toString) extends Serializable {
 
+  /** O12 distributed: approximate k-NN of each probe row.
+    * Result: (query_id, neighbor_id, score, rank), rank ∈ [1,k] by
+    * descending score with an id tie-break. Per-query efSearch override
+    * preserved (reference src/main.ts:267, tests/HNSW.test.ts:69-79).
+    *
+    * EAGER: the call collects the probes, runs the search as one Spark job
+    * (one task per graph partition, no exchange) and merges the per-shard
+    * top-k lists on the driver ([[ShardTopK]]). The returned frame is a
+    * local relation of at most probes × k rows; reading it runs no job. */
+  def knnJoin(queries: DataFrame, k: Int, efSearchOverride: Option[Int] = None,
+      queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame =
+    search(queries, k, efSearchOverride, queryId, queryVec).toDF(graph.sparkSession)
+
+  private def search(queries: DataFrame, k: Int, efSearchOverride: Option[Int],
+      queryId: String, queryVec: String): ShardTopK.Result = {
+    val (id, p, ef) = (modelId, params, efSearchOverride)
+    ShardTopK.search(k, ShardTopK.probes(queries, queryId, queryVec))(_ => graph.rdd) {
+      (rows, probes, hits) =>
+        HnswModel.rebuild(id, rows, p).foreach { case (_, idx) =>
+          probes.foreach { case (qid, qv) => hits.search(qid)(idx.searchKNN(qv, k, ef)) }
+        }
+    }
+  }
+
+  /** Large-probe-set variant: shard-and-search requires every shard to see
+    * every query, so the probe set crosses the driver — this caps driver
+    * memory by hash-batching the queries and unioning per-batch results.
+    * (At truly huge probe cardinalities prefer the LSH/IVF pruned paths or
+    * an index-per-query-partition replication strategy.) */
+  def knnJoinBatched(queries: DataFrame, k: Int, efSearchOverride: Option[Int] = None,
+      batchRows: Int = 100000,
+      queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame =
+    graft.operators.ProbeBatch.batched(queries, batchRows, queryId)(
+      knnJoin(_, k, efSearchOverride, queryId, queryVec))
+
+  /** knnJoin variant that also reports honest per-query search latency:
+    * each shard times its searchKNN call; a query's latency is its
+    * critical-path (max-over-shards) in-executor search time. Both come
+    * from the same single job. Returns
+    * (results, latencies(query_id, search_ms)). */
+  def knnJoinTimed(queries: DataFrame, k: Int, efSearchOverride: Option[Int] = None,
+      queryId: String = "query_id", queryVec: String = "query_vec")
+      : (DataFrame, DataFrame) = {
+    val res = search(queries, k, efSearchOverride, queryId, queryVec)
+    (res.toDF(graph.sparkSession), res.latencies(graph.sparkSession))
+  }
+
+  /** O13/O15 save: graph parquet + params as a small JSON file.
+    * `cellPartitioned = true` lays the graph out as one parquet directory
+    * per `part` (= IVF cell for [[IvfHnsw]] models), so a probe-time
+    * `part IN (...)` filter prunes whole files at the scan — the same
+    * load-scale pruning the IVF-PQ codes parquet already has. */
+  def save(path: String, cellPartitioned: Boolean = false): Unit = {
+    val w = graph.write.mode("overwrite")
+    (if (cellPartitioned) w.partitionBy("part") else w).parquet(s"$path/graph")
+    val p = params
+    val json =
+      s"""{"m":${p.m},"efConstruction":${p.efConstruction},"efSearch":${p.efSearch},
+         |"metric":"${p.metric}","seed":${p.seed},"numPartitions":${p.numPartitions},
+         |"modelId":"$modelId"}""".stripMargin.replaceAll("\n", "")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
+    val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/params.json"), true)
+    out.write(json.getBytes("UTF-8")); out.close()
+  }
+
+  /** Release the cached graph AND evict this model's executor-side
+    * sub-indexes. The eviction job runs while the graph is still
+    * persisted (cheap, no rebuild) and reaches every executor holding a
+    * graph partition; the driver-local evict covers local mode. */
+  def unpersist(): Unit = {
+    val id = modelId
+    try graph.foreachPartition { (_: Iterator[PartGraphRow]) => SubIndexCache.evictModel(id) }
+    catch { case _: Exception => () } // best-effort; LRU bound is the backstop
+    SubIndexCache.evictModel(id)
+    graph.unpersist()
+    ()
+  }
+}
+
+object HnswModel {
   /** Per-part meta derived from the rows: levelMax = max level;
     * entryPointId = first inserted node holding the max level, which under
     * ascending-id insertion is the min id at that level (promotion is
-    * strict-increase only, src/main.ts:225-228). */
-  private[hnsw] def rebuild(rows: Iterator[PartGraphRow], p: HnswParams): Iterator[(Int, HnswIndex)] = {
+    * strict-increase only, src/main.ts:225-228). On the companion, so a
+    * search task's closure captures no model: the model's graph Dataset
+    * memoizes its RDD, which must not ship with every task. */
+  private[hnsw] def rebuild(modelId: String, rows: Iterator[PartGraphRow],
+      p: HnswParams): Iterator[(Int, HnswIndex)] = {
     // Streamed, cache-aware grouping: a part whose sub-index is already in
     // [[SubIndexCache]] is drained row-by-row without retaining anything,
     // so the warm path's cost is the scan alone — materializing the whole
@@ -199,111 +283,6 @@ class HnswModel(
     }
   }
 
-  /** O12 distributed: approximate k-NN of each probe row.
-    * Result: (query_id, neighbor_id, score, rank), rank ∈ [1,k] by
-    * descending score with an id tie-break. Per-query efSearch override
-    * preserved (reference src/main.ts:267, tests/HNSW.test.ts:69-79). */
-  def knnJoin(queries: DataFrame, k: Int, efSearchOverride: Option[Int] = None,
-      queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame = {
-    val session = graph.sparkSession
-    import session.implicits._
-    val p = params
-    val probes: Array[(Long, Array[Float])] = queries
-      .select(col(queryId).cast("long"), col(queryVec).cast("array<float>"))
-      .as[(Long, Array[Float])].collect()
-    val bc = session.sparkContext.broadcast(probes)
-    val ef = efSearchOverride
-    val local = graph.mapPartitions { rows =>
-      rebuild(rows, p).flatMap { case (_, idx) =>
-        bc.value.iterator.flatMap { case (qid, qv) =>
-          idx.searchKNN(qv, k, ef).iterator.map { case (id, score) => (qid, id, score) }
-        }
-      }
-    }.toDF("query_id", "neighbor_id", "score")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    local.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** Large-probe-set variant: shard-and-search requires every shard to see
-    * every query, so the probe set crosses the driver — this caps driver
-    * memory by hash-batching the queries and unioning per-batch results.
-    * (At truly huge probe cardinalities prefer the LSH/IVF pruned paths or
-    * an index-per-query-partition replication strategy.) */
-  def knnJoinBatched(queries: DataFrame, k: Int, efSearchOverride: Option[Int] = None,
-      batchRows: Int = 100000,
-      queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame =
-    graft.operators.ProbeBatch.batched(queries, batchRows, queryId)(
-      knnJoin(_, k, efSearchOverride, queryId, queryVec))
-
-  /** knnJoin variant that also reports honest per-query search latency:
-    * each shard times its searchKNN call; a query's latency is its
-    * critical-path (max-over-shards) in-executor search time. Returns
-    * (results, latencies(query_id, search_ms)). */
-  def knnJoinTimed(queries: DataFrame, k: Int, efSearchOverride: Option[Int] = None,
-      queryId: String = "query_id", queryVec: String = "query_vec")
-      : (DataFrame, DataFrame) = {
-    val session = graph.sparkSession
-    import session.implicits._
-    val p = params
-    val probes: Array[(Long, Array[Float])] = queries
-      .select(col(queryId).cast("long"), col(queryVec).cast("array<float>"))
-      .as[(Long, Array[Float])].collect()
-    val bc = session.sparkContext.broadcast(probes)
-    val ef = efSearchOverride
-    val local = graph.mapPartitions { rows =>
-      rebuild(rows, p).flatMap { case (_, idx) =>
-        bc.value.iterator.flatMap { case (qid, qv) =>
-          val t0 = System.nanoTime()
-          val res = idx.searchKNN(qv, k, ef)
-          val ms = (System.nanoTime() - t0) / 1e6
-          res.iterator.map { case (id, score) => (qid, id, score, ms) }
-        }
-      }
-    }.toDF("query_id", "neighbor_id", "score", "shard_ms").cache()
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    val results = local
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .drop("shard_ms")
-    val latencies = local.groupBy("query_id").agg(max("shard_ms").as("search_ms"))
-    (results, latencies)
-  }
-
-  /** O13/O15 save: graph parquet + params as a small JSON file.
-    * `cellPartitioned = true` lays the graph out as one parquet directory
-    * per `part` (= IVF cell for [[IvfHnsw]] models), so a probe-time
-    * `part IN (...)` filter prunes whole files at the scan — the same
-    * load-scale pruning the IVF-PQ codes parquet already has. */
-  def save(path: String, cellPartitioned: Boolean = false): Unit = {
-    val w = graph.write.mode("overwrite")
-    (if (cellPartitioned) w.partitionBy("part") else w).parquet(s"$path/graph")
-    val p = params
-    val json =
-      s"""{"m":${p.m},"efConstruction":${p.efConstruction},"efSearch":${p.efSearch},
-         |"metric":"${p.metric}","seed":${p.seed},"numPartitions":${p.numPartitions},
-         |"modelId":"$modelId"}""".stripMargin.replaceAll("\n", "")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/params.json"), true)
-    out.write(json.getBytes("UTF-8")); out.close()
-  }
-
-  /** Release the cached graph AND evict this model's executor-side
-    * sub-indexes. The eviction job runs while the graph is still
-    * persisted (cheap, no rebuild) and reaches every executor holding a
-    * graph partition; the driver-local evict covers local mode. */
-  def unpersist(): Unit = {
-    val id = modelId
-    try graph.foreachPartition { (_: Iterator[PartGraphRow]) => SubIndexCache.evictModel(id) }
-    catch { case _: Exception => () } // best-effort; LRU bound is the backstop
-    SubIndexCache.evictModel(id)
-    graph.unpersist()
-    ()
-  }
-}
-
-object HnswModel {
   /** O14/O15 load. Missing path → None (load-if-missing no-op semantics,
     * reference src/db.ts:72-74).
     * `eager = false` skips the persist: the graph stays a lazy scan (+

@@ -1,7 +1,6 @@
 package graft.hnsw
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.similarity
@@ -138,45 +137,46 @@ object IvfHnsw {
 
   /** Cell-routed search: rank centroids per query executor-side
     * ([[routeProbes]]), search the `nprobe` nearest cells' sub-graphs only,
-    * merge with the usual per-query top-k window. The routed probe set
-    * crosses the driver only as an opaque collect-and-broadcast (the
-    * shard-and-search contract, HnswModel.knnJoin) — no per-probe driver
-    * compute; cap driver heap for large probe sets via [[knnJoinBatched]]. */
+    * merge the per-cell top-k lists on the driver ([[ShardTopK]]). The
+    * routed probe set crosses the driver only as an opaque
+    * collect-and-broadcast (the shard-and-search contract,
+    * HnswModel.knnJoin) — no per-probe driver compute; cap driver heap for
+    * large probe sets via [[knnJoinBatched]].
+    *
+    * EAGER, like [[HnswModel.knnJoin]]: the search runs inside the call as
+    * one job over the probed cells, and the result is a local relation of
+    * at most probes × k rows. */
   def knnJoin(model: Model, queries: DataFrame, k: Int, nprobe: Int = 2,
       efSearchOverride: Option[Int] = None,
       queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame = {
-    require(k > 0 && nprobe > 0)
-    val session = model.hnsw.graph.sparkSession
-    import session.implicits._
-    val p = model.hnsw.params
-    val routed: Array[(Long, Array[Float], Array[Int])] =
-      routeProbes(model, queries, nprobe, queryId, queryVec)
-        .as[(Long, Array[Float], Array[Int])].collect()
-    val wanted = routed.iterator.flatMap(_._3).toSet.toSeq
-    val bcQ = session.sparkContext.broadcast(routed)
-    val ef = efSearchOverride
+    require(nprobe > 0)
     val hnsw = model.hnsw
-    // partition pruning: untouched cells never rebuild or search (and with
-    // cell-partitioned persistence, their files are never read — the
-    // filter pushes below the load-time repartition to the parquet scan)
-    val pruned = hnsw.graph.filter(col("part").isin(wanted: _*))
-    val local = pruned.mapPartitions { rows =>
-      // group probes by routed cell once per task: per-cell probe lookup is
-      // O(1) instead of an O(|Q|·nprobe) scan per sub-index
-      val byCell: Map[Int, Array[(Long, Array[Float])]] = bcQ.value
-        .iterator
-        .flatMap { case (qid, qv, cells) => cells.iterator.map(c => (c, (qid, qv))) }
-        .toArray.groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2)) }
-      hnsw.rebuild(rows, p).flatMap { case (cell, idx) =>
-        byCell.getOrElse(cell, Array.empty[(Long, Array[Float])]).iterator
-          .flatMap { case (qid, qv) =>
-            idx.searchKNN(qv, k, ef).iterator.map { case (id, s) => (qid, id, s) }
-          }
+    val (id, p, ef) = (hnsw.modelId, hnsw.params, efSearchOverride)
+    ShardTopK.search(k, probesByCell(model.centroids, p.metric, queries, nprobe,
+        queryId, queryVec)) { byCell =>
+      // partition pruning: untouched cells never rebuild or search (and
+      // with cell-partitioned persistence, their files are never read —
+      // the filter pushes below the load-time repartition to the scan)
+      hnsw.graph.filter(col("part").isin(byCell.keys.toSeq: _*)).rdd
+    } { (rows, byCell, hits) =>
+      HnswModel.rebuild(id, rows, p).foreach { case (cell, idx) =>
+        byCell.getOrElse(cell, Array.empty[(Long, Array[Float])]).foreach {
+          case (qid, qv) => hits.search(qid)(idx.searchKNN(qv, k, ef))
+        }
       }
-    }.toDF("query_id", "neighbor_id", "score")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    local.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    }.toDF(hnsw.graph.sparkSession)
+  }
+
+  /** The routed probe set grouped by cell: each cell's `(query_id,
+    * query_vec)` probes ([[routeProbes]] order and tie-breaks). */
+  private[graft] def probesByCell(centroids: Array[(Int, Array[Float])], metric: String,
+      queries: DataFrame, nprobe: Int, queryId: String,
+      queryVec: String): Map[Int, Array[(Long, Array[Float])]] = {
+    import queries.sparkSession.implicits._
+    routeProbes(centroids, metric, queries, nprobe, queryId, queryVec)
+      .as[(Long, Array[Float], Array[Int])].collect()
+      .flatMap { case (qid, qv, cells) => cells.map(c => (c, (qid, qv))) }
+      .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2)) }
   }
 
   /** Large-probe-set variant mirroring [[HnswModel.knnJoinBatched]]: hash-

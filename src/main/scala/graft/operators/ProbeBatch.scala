@@ -14,6 +14,14 @@ import org.apache.spark.sql.functions._
   * independent across queries; the spec asserts set equality on every
   * path).
   *
+  * The batch decision is one bounded read: the first `batchRows + 1`
+  * probe rows are collected. When they are all the rows, they go to
+  * `join` as a local relation, so the probe source is read once and a
+  * join that collects its probes (the HNSW paths) runs no job for it.
+  * Only a larger probe set pays a `count()` and per-batch reads. The HNSW
+  * joins are eager, so their results cross the driver too, bounded by
+  * probes × k rows per batch.
+  *
   * One helper so Hnsw / IvfHnsw / Pq / Opq / Sq / IvfPq / IvfFlat batch
   * identically instead of five hand-rolled copies.
   */
@@ -24,11 +32,16 @@ object ProbeBatch {
   def batched(queries: DataFrame, batchRows: Int, queryId: String)(
       join: DataFrame => DataFrame): DataFrame = {
     require(batchRows > 0, "batchRows must be positive")
-    val n = queries.count()
-    val numBatches = math.max(1, math.ceil(n.toDouble / batchRows).toInt)
-    if (numBatches == 1) join(queries)
-    else (0 until numBatches).map { b =>
-      join(queries.filter(pmod(xxhash64(col(queryId)), lit(numBatches)) === b))
-    }.reduce(_ unionByName _)
+    val head = queries.limit(if (batchRows == Int.MaxValue) batchRows else batchRows + 1)
+      .collect()
+    if (head.length <= batchRows)
+      join(queries.sparkSession.createDataFrame(java.util.Arrays.asList(head: _*),
+        queries.schema))
+    else {
+      val numBatches = math.ceil(queries.count().toDouble / batchRows).toInt
+      (0 until numBatches).map { b =>
+        join(queries.filter(pmod(xxhash64(col(queryId)), lit(numBatches)) === b))
+      }.reduce(_ unionByName _)
+    }
   }
 }

@@ -29,7 +29,9 @@ import graft.hnsw.{HnswModel, IvfHnsw}
   *
   * is rewritten by [[AnnProbeRule]] from an O(n) scan + top-k into an
   * index probe (graph descent per shard + global top-k — the same
-  * distributed plan as `HnswModel.knnJoin`). The rewrite fires only when
+  * search as `HnswModel.knnJoin`, which is eager: the probe runs while
+  * the rule rewrites the plan, and its top-k result takes the scan's
+  * place as a local relation). The rewrite fires only when
   * EVERY guard holds: the scanned path has a registered index, the
   * similarity metric matches the index metric, the query vector is a
   * literal, the projection is exactly (id column, similarity alias), and

@@ -2,10 +2,9 @@ package graft.streaming
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.hnsw.{HnswIndex, HnswParams, Metric, SubIndexPin}
+import graft.hnsw.{HnswIndex, HnswParams, Metric, ShardTopK, SubIndexPin}
 import graft.operators.ProbeBatch
 
 /** UPSERTING incremental streaming index maintenance (the O10 `addPoint`
@@ -26,12 +25,17 @@ import graft.operators.ProbeBatch
   * local mode or a one-executor static cluster; on a multi-executor
   * cluster a task can land on an executor missing its shard. Rather than
   * silently returning partial results, [[knnJoin]] and [[snapshot]]
-  * compare [[indexedCount]] against the rows this instance inserted
-  * ([[ingestedCount]]) and THROW on mismatch. For durable, relocatable
+  * compare the rows the shards hold against the rows this instance
+  * inserted ([[ingestedCount]]) and THROW on mismatch ([[knnJoin]] counts
+  * the shards inside its own search job). For durable, relocatable
   * state use [[EventPipeline.StreamingIndexMaintainer]] (staging +
   * compaction refit) and [[snapshot]] (persist current shards to rows) —
   * the two maintainers are complementary: this one bounds per-batch
   * latency, that one bounds recovery.
+  *
+  * [[knnJoin]] is EAGER: the search runs inside the call as one Spark job
+  * and its result crosses the driver as a local relation, bounded by
+  * probes × k rows.
   */
 class IncrementalIndex(spark: SparkSession, params: HnswParams,
     val maintainerId: String = java.util.UUID.randomUUID().toString)
@@ -105,8 +109,9 @@ class IncrementalIndex(spark: SparkSession, params: HnswParams,
   /** Fails loudly when the pinned shards hold fewer vectors than this
     * instance inserted — the silent-partial-results failure mode of
     * executor-pinned state on a multi-executor cluster. */
-  def assertComplete(context: String): Unit = {
-    val indexed = indexedCount()
+  def assertComplete(context: String): Unit = requireComplete(context, indexedCount())
+
+  private def requireComplete(context: String, indexed: Long): Unit = {
     val expected = ingested.value
     if (indexed < expected) throw new IllegalStateException(
       s"$context: pinned shards hold $indexed vectors but $expected were " +
@@ -115,42 +120,35 @@ class IncrementalIndex(spark: SparkSession, params: HnswParams,
         s"from snapshot(), or serve through the compaction path.")
   }
 
-  /** Pinned-shard k-NN: one task per shard, searched in place. Probe sets
-    * are hash-batched (`batchRows`) so driver heap stays bounded;
-    * completeness-guarded ([[assertComplete]]). */
+  /** Pinned-shard k-NN: one task per shard, searched in place, merged on
+    * the driver ([[graft.hnsw.ShardTopK]]). Probe sets are hash-batched
+    * (`batchRows`) so driver heap stays bounded. The completeness guard
+    * rides the same job: each shard task reports its size with its hits,
+    * and the call throws before returning any row. */
   def knnJoin(queries: DataFrame, k: Int,
       efSearchOverride: Option[Int] = None, batchRows: Int = 100000,
-      completenessCheck: Boolean = true): DataFrame = {
-    if (completenessCheck) assertComplete("knnJoin")
+      completenessCheck: Boolean = true): DataFrame =
     ProbeBatch.batched(queries, batchRows, "query_id")(
-      knnJoinOnce(_, k, efSearchOverride))
-  }
+      knnJoinOnce(_, k, efSearchOverride, completenessCheck))
 
   private def knnJoinOnce(queries: DataFrame, k: Int,
-      efSearchOverride: Option[Int]): DataFrame = {
-    import spark.implicits._
-    val probes = queries
-      .select(col("query_id").cast("long"), col("query_vec").cast("array<float>"))
-      .as[(Long, Array[Float])].collect()
-    val bc = spark.sparkContext.broadcast(probes)
+      efSearchOverride: Option[Int], completenessCheck: Boolean): DataFrame = {
     val mid = maintainerId
     val ef = efSearchOverride
-    val local = spark.sparkContext
-      .makeRDD(0 until p.numPartitions, p.numPartitions)
-      .mapPartitions { partIds =>
-        partIds.flatMap { part =>
-          Option(SubIndexPin.get(s"$mid/$part")).iterator.flatMap { idx =>
+    val res = ShardTopK.search(k, ShardTopK.probes(queries, "query_id", "query_vec"))(
+      _ => spark.sparkContext.makeRDD(0 until p.numPartitions, p.numPartitions)) {
+      (partIds, probes, hits) =>
+        partIds.foreach { part =>
+          Option(SubIndexPin.get(s"$mid/$part")).foreach { idx =>
             idx.synchronized {
-              bc.value.iterator.flatMap { case (qid, qv) =>
-                idx.searchKNN(qv, k, ef).iterator.map { case (id, s) => (qid, id, s) }
-              }.toVector
-            }.iterator
+              hits.addShardRows(idx.size)
+              probes.foreach { case (qid, qv) => hits.search(qid)(idx.searchKNN(qv, k, ef)) }
+            }
           }
         }
-      }.toDF("query_id", "neighbor_id", "score")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    local.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    }
+    if (completenessCheck) requireComplete("knnJoin", res.shardRows)
+    res.toDF(spark)
   }
 
   /** Total vectors currently held by the pinned shards (consistency probe:

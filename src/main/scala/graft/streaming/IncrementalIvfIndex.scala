@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.similarity
-import graft.hnsw.{HnswIndex, HnswModel, HnswParams, IvfHnsw, Metric, SubIndexPin}
+import graft.hnsw.{HnswIndex, HnswModel, HnswParams, IvfHnsw, Metric, ShardTopK, SubIndexPin}
 import graft.operators.ProbeBatch
 
 /** UPSERTING incremental ingest for the HYBRID index
@@ -164,8 +164,9 @@ class IncrementalIvfIndex(spark: SparkSession,
     * instance inserted — the silent-partial-results failure mode of
     * executor-pinned state on a multi-executor cluster (shard lost with
     * its executor, or a task scheduled off-JVM from its shard). */
-  def assertComplete(context: String): Unit = {
-    val indexed = indexedCount()
+  def assertComplete(context: String): Unit = requireComplete(context, indexedCount())
+
+  private def requireComplete(context: String, indexed: Long): Unit = {
     val expected = ingested.value
     if (indexed < expected) throw new IllegalStateException(
       s"$context: pinned shards hold $indexed vectors but $expected were " +
@@ -181,49 +182,40 @@ class IncrementalIvfIndex(spark: SparkSession,
     * -1.0) — so the driver never computes per-probe work; the routed set
     * crosses the driver only as the collect-and-broadcast the pinned-
     * shard contract requires, hash-batched (`batchRows`) so driver heap
-    * stays bounded for large probe sets. Completeness-guarded
-    * ([[assertComplete]]); disable via `completenessCheck` only in a
-    * loop that already checked. */
+    * stays bounded for large probe sets. EAGER: one job per batch, one
+    * task per cell, merged on the driver ([[graft.hnsw.ShardTopK]]).
+    * Completeness-guarded in that same job (every cell task reports its
+    * size); disable via `completenessCheck` only in a loop that already
+    * checked. */
   def knnJoin(queries: DataFrame, k: Int, nprobe: Int = 2,
       efSearchOverride: Option[Int] = None, batchRows: Int = 100000,
       completenessCheck: Boolean = true): DataFrame = {
-    require(k > 0 && nprobe > 0)
-    if (completenessCheck) assertComplete("knnJoin")
+    require(nprobe > 0)
     ProbeBatch.batched(queries, batchRows, "query_id")(
-      knnJoinOnce(_, k, nprobe, efSearchOverride))
+      knnJoinOnce(_, k, nprobe, efSearchOverride, completenessCheck))
   }
 
   private def knnJoinOnce(queries: DataFrame, k: Int, nprobe: Int,
-      efSearchOverride: Option[Int]): DataFrame = {
-    import spark.implicits._
-    val routed: Array[(Long, Array[Float], Array[Int])] =
-      IvfHnsw.routeProbes(centroids, p.metric, queries, nprobe,
-        "query_id", "query_vec")
-        .as[(Long, Array[Float], Array[Int])].collect()
-    val byCell: Map[Int, Array[(Long, Array[Float])]] = routed
-      .flatMap { case (qid, qv, cells) => cells.map(c => (c, (qid, qv))) }
-      .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2)) }
-    val bc = spark.sparkContext.broadcast(byCell)
+      efSearchOverride: Option[Int], completenessCheck: Boolean): DataFrame = {
     val mid = maintainerId
     val ef = efSearchOverride
-    val local = spark.sparkContext
-      .makeRDD(0 until numCells, numCells)
-      .mapPartitions { cellIds =>
-        cellIds.flatMap { cell =>
-          val qs = bc.value.getOrElse(cell, Array.empty[(Long, Array[Float])])
-          if (qs.isEmpty) Iterator.empty
-          else Option(SubIndexPin.get(s"$mid/$cell")).iterator.flatMap { idx =>
+    val res = ShardTopK.search(k, IvfHnsw.probesByCell(centroids, p.metric, queries,
+        nprobe, "query_id", "query_vec"))(
+      _ => spark.sparkContext.makeRDD(0 until numCells, numCells)) {
+      (cellIds, byCell, hits) =>
+        cellIds.foreach { cell =>
+          Option(SubIndexPin.get(s"$mid/$cell")).foreach { idx =>
             idx.synchronized {
-              qs.iterator.flatMap { case (qid, qv) =>
-                idx.searchKNN(qv, k, ef).iterator.map { case (id, s) => (qid, id, s) }
-              }.toVector
-            }.iterator
+              hits.addShardRows(idx.size)
+              byCell.getOrElse(cell, Array.empty[(Long, Array[Float])]).foreach {
+                case (qid, qv) => hits.search(qid)(idx.searchKNN(qv, k, ef))
+              }
+            }
           }
         }
-      }.toDF("query_id", "neighbor_id", "score")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    local.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    }
+    if (completenessCheck) requireComplete("knnJoin", res.shardRows)
+    res.toDF(spark)
   }
 
   /** Indexed-corpus growth relative to the quantizer's fit corpus

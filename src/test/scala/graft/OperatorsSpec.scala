@@ -1036,6 +1036,17 @@ class OperatorsSpec extends AnyFunSuite {
     model.unpersist()
   }
 
+  test("knnJoinTimed adds no entry to the session's cache manager") {
+    import graft.hnsw.{HnswIndexer, HnswParams}
+    import org.apache.spark.sql.CacheEntries
+    val model = HnswIndexer.fit(emb, HnswParams(numPartitions = 2))
+    val before = CacheEntries(spark)
+    val (res, lat) = model.knnJoinTimed(probes, k = 5)
+    assert(res.count() == 100 && lat.count() == 20)
+    assert(CacheEntries(spark) == before)
+    model.unpersist()
+  }
+
   test("probe batching: batched == unbatched on every code-based ANN path") {
     import graft.operators.{IvfPq, Opq, Pq, Sq}
     // batchRows = 7 forces 3 hash batches over the 20 probes on each path

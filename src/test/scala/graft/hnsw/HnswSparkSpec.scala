@@ -109,9 +109,18 @@ class HnswSparkSpec extends AnyFunSuite {
     val model = HnswIndexer.fit(emb, HnswParams(numPartitions = 2))
     val whole = model.knnJoin(probes, k = 5)
       .select("query_id", "neighbor_id", "rank").collect().map(_.toSeq).toSet
-    val batched = model.knnJoinBatched(probes, k = 5, batchRows = 7)
-      .select("query_id", "neighbor_id", "rank").collect().map(_.toSeq).toSet
-    assert(whole == batched)
+    // 20 probes: 7 per batch → 3 hash batches; exactly batchRows (20) →
+    // one batch; batchRows + 1 probes (19 per batch) → 2 hash batches
+    Seq(7 -> 3, 20 -> 1, 19 -> 2).foreach { case (batchRows, batches) =>
+      val batched = model.knnJoinBatched(probes, k = 5, batchRows = batchRows)
+        .select("query_id", "neighbor_id", "rank").collect().map(_.toSeq).toSet
+      assert(whole == batched, s"batchRows = $batchRows")
+      var joins = 0
+      graft.operators.ProbeBatch.batched(probes, batchRows, "query_id") { q =>
+        joins += 1; model.knnJoin(q, k = 5)
+      }
+      assert(joins == batches, s"batchRows = $batchRows ran $joins batches")
+    }
     model.unpersist()
   }
 
@@ -213,40 +222,109 @@ class HnswSparkSpec extends AnyFunSuite {
   }
 
   test("IVF-HNSW: loaded model reads only the probed cells' files") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val s = spark; import s.implicits._
     val model = IvfHnsw.fit(emb, numCells = 8,
       HnswParams(m = 8, efConstruction = 120, numPartitions = 8))
     val path = java.nio.file.Files.createTempDirectory("ivfhnsw_prune").toString + "/m"
     IvfHnsw.save(model, path)
     val loaded = IvfHnsw.load(spark, path).get
+    // a local probe, so the only file reads of the search are the graph's
     val oneProbe = probes.limit(1)
+      .select(col("query_id").cast("long"), col("query_vec"))
+      .as[(Long, Array[Float])].collect().toSeq.toDF("query_id", "query_vec")
     val probedCells = IvfHnsw.routeProbes(loaded, oneProbe, nprobe = 2)
       .collect().flatMap(_.getSeq[Int](2)).toSet
     assert(probedCells.size == 2)
-    val q = IvfHnsw.knnJoin(loaded, oneProbe, k = 5, nprobe = 2)
-    q.collect()
-    // AQE hides materialized stages behind leaf wrapper nodes — recurse
-    // through AdaptiveSparkPlanExec AND QueryStageExec to reach the scans
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case qs: QueryStageExec => scans(qs.plan)
-      case f: FileSourceScanExec => Seq(f)
-    }.flatten
-    val graphScans = scans(q.queryExecution.executedPlan)
-      .filter(_.relation.location.rootPaths.exists(_.toString.contains("/hnsw/graph")))
-    assert(graphScans.nonEmpty, "expected a parquet file scan of the saved graph")
-    val filesRead = graphScans.map(_.metrics("numFiles").value).sum
-    def filesUnder(cells: Set[Int]): Long = cells.toSeq.map { c =>
-      val d = new java.io.File(s"$path/hnsw/graph/part=$c")
-      Option(d.listFiles()).map(_.count(_.getName.endsWith(".parquet")).toLong).getOrElse(0L)
-    }.sum
-    val allCells = (0 until 8).toSet
-    assert(filesUnder(allCells) > filesUnder(probedCells),
-      "fixture degenerate: probed cells hold every file")
-    assert(filesRead == filesUnder(probedCells),
-      s"scan read $filesRead files, expected only the ${probedCells.size} probed cells'")
+    // the search runs eagerly inside knnJoin and returns a local relation,
+    // so its scan is observed through the rows its tasks read
+    val read = new java.util.concurrent.atomic.AtomicLong()
+    org.apache.spark.ListenerBusDrain.listening(spark.sparkContext,
+      new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          Option(e.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+      })(IvfHnsw.knnJoin(loaded, oneProbe, k = 5, nprobe = 2).collect())
+    val graph = spark.read.parquet(s"$path/hnsw/graph")
+    def rowsUnder(cells: Set[Int]): Long = graph.filter(col("part").isin(cells.toSeq: _*)).count()
+    assert(rowsUnder((0 until 8).toSet) > rowsUnder(probedCells),
+      "fixture degenerate: probed cells hold every row")
+    assert(read.get == rowsUnder(probedCells),
+      s"scan read ${read.get} rows, expected only the ${probedCells.size} probed cells'")
     model.unpersist(); loaded.unpersist()
     IvfHnsw.delete(spark, path)
+  }
+
+  test("shard top-k merge equals the row_number window on the same candidates") {
+    val s = spark; import s.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val k = 3
+    val zero = Array.fill(4)(0f)
+    val unit = Array(1f, 0f, 0f, 0f)
+    val nan = Metric("cosine").sim(zero, unit) // zero-norm cosine → NaN
+    assert(nan.isNaN)
+    // shard → query → hits, in no particular order
+    val shards: Seq[Seq[(Long, Array[(Long, Double)])]] = Seq(
+      Seq(1L -> Array(10L -> 0.5, 11L -> 0.9),
+        2L -> Array(9L -> nan, 4L -> nan),
+        3L -> Array(20L -> nan, 21L -> -0.0)),
+      Seq(1L -> Array(12L -> 0.9, 5L -> 0.5),
+        2L -> Array(2L -> nan, 8L -> nan),
+        3L -> Array(19L -> 0.0, 22L -> -0.5)),
+      Seq(1L -> Array(7L -> 0.5, 3L -> 0.1),
+        2L -> Array(6L -> nan),
+        3L -> Array(23L -> 0.3, 18L -> -0.0)))
+    // equal scores across shards (q1), a zero-norm query scoring NaN
+    // against everything (q2), and NaN, -0.0 and 0.0 beside finite
+    // scores (q3); two of the three shards share a task
+    val got = ShardTopK.search(k, ())(_ => spark.sparkContext.parallelize(shards, 2)) {
+      (it, _, hits) => it.foreach(_.foreach { case (q, hs) => hits.search(q)(hs) })
+    }.toDF(spark)
+    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("neighbor_id").asc)
+    val reference = shards.flatten.flatMap { case (q, hs) => hs.map { case (id, sc) => (q, id, sc) } }
+      .toDF("query_id", "neighbor_id", "score")
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getLong(0), r.getLong(1), java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getInt(3)))
+      .sorted.toSeq
+    assert(rows(got) == rows(reference))
+    assert(got.schema == reference.schema)
+    // the order the window gives, spelled out
+    assert(got.filter(col("query_id") === 3).orderBy("rank").select("neighbor_id")
+      .as[Long].collect().toSeq == Seq(20L, 23L, 18L))
+    assert(got.filter(col("query_id") === 2).orderBy("rank").select("neighbor_id")
+      .as[Long].collect().toSeq == Seq(2L, 4L, 6L))
+  }
+
+  test("k <= 0 throws on every shard-and-search path") {
+    import graft.streaming.{IncrementalIndex, IncrementalIvfIndex}
+    val small = emb.filter(col("vec_id") < 100)
+    val hnsw = HnswIndexer.fit(small, HnswParams(m = 8, efConstruction = 50, numPartitions = 2))
+    val ivf = IvfHnsw.fit(small, numCells = 2, HnswParams(m = 8, efConstruction = 50))
+    val inc = new IncrementalIndex(spark, HnswParams(m = 8, efConstruction = 50, numPartitions = 2))
+    inc.processBatch(small.select("vec_id", "embedding"), 0L)
+    val incIvf = IncrementalIvfIndex.fromModel(spark, ivf)
+    incIvf.processBatch(small.select("vec_id", "embedding"), 0L)
+    val q = probes.limit(2)
+    val paths: Seq[(String, Int => Unit)] = Seq(
+      "HnswModel" -> (k => hnsw.knnJoin(q, k)),
+      "IvfHnsw" -> (k => IvfHnsw.knnJoin(ivf, q, k)),
+      "IncrementalIndex" -> (k => inc.knnJoin(q, k)),
+      "IncrementalIvfIndex" -> (k => incIvf.knnJoin(q, k)))
+    for ((name, run) <- paths; k <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](run(k))
+      assert(e.getMessage.contains("k must be positive"), s"$name, k = $k: ${e.getMessage}")
+    }
+    inc.close(); incIvf.close(); hnsw.unpersist(); ivf.unpersist()
+  }
+
+  test("a warm single-query knnJoin plus collect runs 1 Spark job") {
+    val s = spark; import s.implicits._
+    val model = HnswIndexer.fit(emb, HnswParams(numPartitions = 4))
+    val v = emb.filter(col("vec_id") === 3).select("embedding").as[Array[Float]].head()
+    val q = Seq((3L, v)).toDF("query_id", "query_vec")
+    def query() = model.knnJoin(q, k = 10).collect()
+    assert(query().length == 10)
+    val jobs = org.apache.spark.ListenerBusDrain.jobsDuring(spark.sparkContext)(query())
+    assert(jobs == 1, s"$jobs jobs for one warm single-query knnJoin")
+    model.unpersist()
   }
 }

@@ -151,23 +151,11 @@ class TextIndexSpec extends AnyFunSuite {
     def query() = TextIndex.bm25TopDocs(spark, prefix, probe, topk = 10)
       .collect()
     assert(query().nonEmpty, "the probe terms come from the lexicon")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      query()
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
+    val jobs = org.apache.spark.ListenerBusDrain.jobsDuring(sc)(query())
     // stats read, df read, then one plan: broadcast, scan + partial
     // aggregate, final aggregate, window
-    info(s"${jobs.get} jobs")
-    assert(jobs.get <= 6, s"${jobs.get} jobs for one warm 3-term query")
+    info(s"$jobs jobs")
+    assert(jobs <= 6, s"$jobs jobs for one warm 3-term query")
   }
 
   test("probe edge cases: empty probe, absent term, duplicate pairs, " +

@@ -232,6 +232,21 @@ class IncrementalIndexSpec extends AnyFunSuite {
     batchModel.unpersist()
   }
 
+  test("a 100-probe knnJoin plus collect runs 1 Spark job") {
+    import spark.implicits._
+    val maintainer = new IncrementalIndex(spark,
+      HnswParams(m = 16, efConstruction = 100, numPartitions = 4))
+    maintainer.processBatch(emb.select("vec_id", "embedding"), 0L)
+    val q = emb.filter(col("vec_id") < 100)
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+      .as[(Long, Array[Float])].collect().toSeq.toDF("query_id", "query_vec")
+    def query() = maintainer.knnJoin(q, k = 10).collect()
+    assert(query().length == 1000)
+    val jobs = org.apache.spark.ListenerBusDrain.jobsDuring(spark.sparkContext)(query())
+    assert(jobs == 1, s"$jobs jobs for one 100-probe knnJoin")
+    maintainer.close()
+  }
+
   test("plain maintainer upsert: in-place updates served, replay free") {
     import spark.implicits._
     val maintainer = new IncrementalIndex(spark,
