@@ -30,10 +30,15 @@ run_side() { # $1 = side label (A|B), $2 = git ref
   rm -rf "$res"; mkdir -p "$res"
   git -C "$REPO" worktree remove --force "$wt" 2>/dev/null || true
   git -C "$REPO" worktree add --force --detach "$wt" "$ref" >/dev/null
-  # bench-source injection: old refs may predate SweepMain
+  # bench-source injection: old refs may predate SweepMain, and the
+  # injected SweepMain builds its session through GraftSession
   if [ ! -f "$wt/src/main/scala/graft/bench/SweepMain.scala" ]; then
     cp "$REPO/src/main/scala/graft/bench/SweepMain.scala" \
        "$wt/src/main/scala/graft/bench/SweepMain.scala"
+  fi
+  if [ ! -f "$wt/src/main/scala/graft/GraftSession.scala" ]; then
+    cp "$REPO/src/main/scala/graft/GraftSession.scala" \
+       "$wt/src/main/scala/graft/GraftSession.scala"
   fi
   echo "== [$side] $ref: build + sweep -> $res"
   ( cd "$wt" && SPARK_GRAFT_CPUS="$CPUS" \

@@ -1,24 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core — an unset env var must not quietly run the
-    // battery on local[4] (4-8x slower on a 32-way box)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val loadStart = readLoadAvg()
     // Warm-up: pay session/codegen/JIT startup once, outside any timing.
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000).count()

@@ -547,8 +547,8 @@ object VectorQueries {
 
     // serving-THROUGHPUT summary (VERDICT-r5 #8): every base vector becomes
     // a probe and is pushed through the batched cell-routed hybrid — the
-    // battery's r-vs-r tracker for the serving path that ServingBenchMain
-    // measures at 1M/10M scale. Rows-only by nature (wall-clock content);
+    // battery's r-vs-r tracker for the serving path measured at 1M/10M
+    // scale in BASELINE.md round 6. Rows-only by nature (wall-clock content);
     // the row-count column is still a hard correctness check (n·k rows or
     // the serving path dropped probes).
     "hybrid_serving_summary" -> ((s, dir) => {

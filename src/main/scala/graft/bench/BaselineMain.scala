@@ -1,6 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Captures the committed BASELINE measurement (BASELINE.md protocol):
@@ -10,15 +9,7 @@ import org.apache.spark.sql.functions._
 object BaselineMain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val base = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
     base.count()
     val queries = base.filter(col("vec_id") < 100)

@@ -25,31 +25,39 @@ import graft.sources.VectorSources
   *   sbt "runMain graft.bench.CoreScalingMain [nDocs] [nVecs]"
   */
 object CoreScalingMain {
+
+  /** n docs of ~len tokens over a vocab-sized Zipf-ish vocabulary, as pure
+    * column expressions (deterministic in (doc_id, position), so
+    * partition-independent): token ranks follow an inverse-CDF draw
+    * r = floor(V^u) (P(rank ≤ r) = log_V r, so p(r) ∝ 1/r — the heavy
+    * tail of natural text); doc length varies len/2..3len/2 keyed on
+    * doc_id. */
+  private def corpus(spark: SparkSession, n: Long, len: Int, vocab: Int): DataFrame =
+    spark.range(n).toDF("doc_id")
+      .withColumn("text", concat_ws(" ",
+        transform(
+          sequence(lit(0), pmod(hash(col("doc_id")), lit(len)) + lit(len / 2)),
+          i => concat(lit("t"), floor(pow(lit(vocab.toDouble),
+            (pmod(hash(col("doc_id"), i), lit(100000)).cast("double") + 0.5)
+              / 100000.0)).cast("long")))))
+
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.length > 0) args(0).toLong else 400000L
     val nVecs = if (args.length > 1) args(1).toLong else 400000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
+    val cpus = spark.sparkContext.defaultParallelism
     // same untimed warmups as Bench: session + codegen startup
     spark.range(0, 1000000).selectExpr("sum(id)").collect()
 
     // ---- corpora (untimed; deterministic in (id, position) — identical
     // bytes at any core count) ----
     val tmp = java.nio.file.Files.createTempDirectory("corescale").toString
-    TextIndexScaleMain.corpus(spark, nDocs, len = 60, vocab = 50000)
-      .repartition(cpus.toInt)
+    corpus(spark, nDocs, len = 60, vocab = 50000)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$tmp/docs")
     val docs = spark.read.parquet(s"$tmp/docs")
     VectorSources.synthetic(spark, nVecs, 64, seed = 42)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$tmp/vecs")
     val vecs = spark.read.parquet(s"$tmp/vecs")
     val probes = vecs.filter(col("vec_id") < 400)
@@ -79,7 +87,7 @@ object CoreScalingMain {
     //    write + lexicon/stats — the bm25_indexed/incremental family
     t("textindex_build") {
       TextIndex.drop(spark, "corescale_tix")
-      TextIndex.build(docs, "corescale_tix", numBuckets = cpus.toInt)
+      TextIndex.build(docs, "corescale_tix", numBuckets = cpus)
       ()
     }
     // 3. MinHash-LSH candidate pairs: shingle explode + signature

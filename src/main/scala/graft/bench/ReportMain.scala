@@ -1,7 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 /** Baseline-vs-candidate report job (B12-B16): reads two directories of
   * GridBench JSON outputs, joins on the dataset×params key, writes the
   * delta CSV + JSON and prints the aggregate delta summary.
@@ -9,13 +7,7 @@ import org.apache.spark.sql.SparkSession
 object ReportMain {
   def main(args: Array[String]): Unit = {
     val Array(baseDir, candDir, outPrefix) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val base = GridBench.readResultsDir(spark, baseDir)
     val cand = GridBench.readResultsDir(spark, candDir)
     val (compared, missInBase, missInCand) = GridBench.compare(base, cand)

@@ -1,6 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Parameterized grid sweep for the A/B driver (B17-lite, reference
@@ -20,14 +19,7 @@ object SweepMain {
     val ms = list(2, Seq(8, 16))
     val efCs = list(3, Seq(100, 200))
     val efs = list(4, Seq(10, 50, 100))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val base = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
     base.count()
     val queries = base.filter(col("vec_id") < 100)

@@ -14,9 +14,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * `array_sort(array(...))` over one struct per centroid) is correct and
   * oracle-proven, but its generated source grows O(C·d): at C=128,
   * d=64 Janino+JIT pay a ~100 s FIXED compile cost per plan (measured in
-  * `SemDedupScaleMain` round 8), and every plan that embeds the
-  * assignment pays it again. This expression keeps the matrix in one
-  * object reference — generated code is a single call into JIT-compiled
+  * BASELINE.md round 8, "SemDeDup at 1M vectors"), and every plan that
+  * embeds the assignment pays it again. This expression keeps the matrix
+  * in one object reference — generated code is a single call into JIT-compiled
   * Scala, so compile cost is O(1) in C and the per-row loop is the same
   * double-accumulation kernel the binary similarity expressions use.
   *

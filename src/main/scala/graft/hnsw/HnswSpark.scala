@@ -3,6 +3,7 @@ package graft.hnsw
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** One persisted graph node of one partition-local sub-index. */
 case class PartGraphRow(part: Int, id: Long, level: Int, vector: Array[Float],
@@ -112,9 +113,8 @@ object HnswIndexer {
   * executors that job doesn't reach). */
 private[hnsw] object SubIndexCache {
   // must exceed one model's partitions-per-executor or every knnJoin
-  // rebuilds all shards (cache thrash); overridable for bigger local runs
-  private val maxEntries =
-    sys.props.get("graft.subindex.cache.max").map(_.toInt).getOrElse(128)
+  // rebuilds all shards (cache thrash)
+  private val maxEntries = 128
   private val lru = new java.util.LinkedHashMap[String, HnswIndex](64, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[String, HnswIndex]): Boolean =
       size() > maxEntries
@@ -224,13 +224,17 @@ class HnswModel(
   }
 
   /** Release the cached graph AND evict this model's executor-side
-    * sub-indexes. The eviction job runs while the graph is still
-    * persisted (cheap, no rebuild) and reaches every executor holding a
-    * graph partition; the driver-local evict covers local mode. */
+    * sub-indexes. For a persisted graph the eviction job runs while the
+    * graph is still cached (cheap, no rebuild) and reaches every executor
+    * holding a graph partition. A lazily loaded graph is not cached, so a
+    * job would re-read (or, after a delete, fail on) every graph file:
+    * it gets no job. The driver-local evict covers local mode; the LRU
+    * bound is the backstop elsewhere. */
   def unpersist(): Unit = {
     val id = modelId
-    try graph.foreachPartition { (_: Iterator[PartGraphRow]) => SubIndexCache.evictModel(id) }
-    catch { case _: Exception => () } // best-effort; LRU bound is the backstop
+    if (graph.storageLevel != StorageLevel.NONE)
+      try graph.foreachPartition { (_: Iterator[PartGraphRow]) => SubIndexCache.evictModel(id) }
+      catch { case _: Exception => () } // best-effort; LRU bound is the backstop
     SubIndexCache.evictModel(id)
     graph.unpersist()
     ()

@@ -96,10 +96,11 @@ object Dsir {
     * `outCol` once alongside its regular output and every later gram
     * consumer ([[score]]-shape folds, [[PplFilter]] fit/score) reads the
     * stored array with ZERO tokenize/md5 work. Measured at 2M docs
-    * (TokenHandoffBenchMain, medians of interleaved rounds): consuming
-    * stored buckets scores at 0.42x the re-split-and-hash wall, and the
-    * array<long> parquet is SMALLER than the text column it replaces
-    * (the bucket ints RLE-compress; 215 MB vs 264 MB). */
+    * (BASELINE.md round 11, "Tokenize-once", medians of interleaved
+    * rounds): consuming stored buckets scores at 0.42x the
+    * re-split-and-hash wall, and the array<long> parquet is SMALLER than
+    * the text column it replaces (the bucket ints RLE-compress; 215 MB vs
+    * 264 MB). */
   def withGramBuckets(df: DataFrame, toksCol: Column, outCol: String,
       buckets: Int = 1024): DataFrame = {
     val t = mat(df, toksCol, "__gb_toks")

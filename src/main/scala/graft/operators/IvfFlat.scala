@@ -116,7 +116,7 @@ object IvfFlat {
     * executed by [[graft.functions.CellScorer]] — a single reference-
     * object expression, so codegen cost is O(1) in C instead of the
     * O(C·d) generated source that cost ~100 s of Janino/JIT per plan at
-    * C=128 (SemDedupScaleMain, round 8). */
+    * C=128 (BASELINE.md round 8, "SemDeDup at 1M vectors"). */
   private[graft] def assign(df: DataFrame, centroids: Array[(Int, Array[Float])],
       metric: String = "cosine"): DataFrame =
     df.withColumn("cell", element_at(

@@ -230,15 +230,6 @@ object IvfRabitq {
       queryId, queryVec, idCol, vecCol, metric, scoreDigits, u4 = true)
   }
 
-  def knnJoinU4Batched(model: Model, base: DataFrame, queries: DataFrame,
-      k: Int, nprobe: Int = 4, rerank: Int = 100, batchRows: Int = 100000,
-      queryId: String = "query_id", queryVec: String = "query_vec",
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      metric: String = "cosine", scoreDigits: Int = -1): DataFrame =
-    ProbeBatch.batched(queries, batchRows, queryId)(
-      knnJoinU4(model, base, _, k, nprobe, rerank, queryId, queryVec,
-        idCol, vecCol, metric, scoreDigits))
-
   private def knnJoinWith(model: Model, base: DataFrame, queries: DataFrame,
       k: Int, nprobe: Int, rerankOf: (Long, Array[Int]) => Int,
       queryId: String, queryVec: String, idCol: String,

@@ -42,7 +42,7 @@ object NgramDup {
     * chained 64-bit token hash emitted by a typed kernel
     * ([[hashedWindowRows]]) — identical results modulo 64-bit collisions
     * (~n²/2⁶⁴), at 8 bytes of shuffle per window instead of the full
-    * text AND ~7x less map CPU (measured, NgramSkewMain round 9). That
+    * text AND ~7x less map CPU (measured, BASELINE.md round 9). That
     * is the 100 TB configuration; the default keeps exact strings so the
     * result is collision-free and cross-engine oracle-checkable.
     */
@@ -67,7 +67,7 @@ object NgramDup {
     * Spark's own shuffle-hash primitive), chain-combine the w token
     * hashes per window in a tight JVM loop — the window STRING is never
     * built and no expression lambda runs. Measured motivation
-    * (NgramSkewMain, round 9): the declarative explode path costs ~9 µs
+    * (BASELINE.md round 9): the declarative explode path costs ~9 µs
     * per window REGARDLESS of key type — string building vs
     * lambda-chained hashing was a wash because the interpreted
     * higher-order-function machinery dominates, so the hot O(total

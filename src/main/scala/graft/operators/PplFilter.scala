@@ -101,7 +101,8 @@ object PplFilter {
   /** [[score]] from a PRECOMPUTED gram-bucket frame with a `bs` column —
     * the deepest handoff: the md5 gram pass ran at an earlier stage and
     * this is a pure integer fold over the stored array (0.42x the
-    * re-split-and-hash wall, TokenHandoffBenchMain medians at 2M).
+    * re-split-and-hash wall; BASELINE.md round 11, "Tokenize-once",
+    * medians at 2M).
     * `bs` must match `model.buckets` (metadata-stamp checked). */
   def scoreGrams(g: DataFrame, model: PplModel): DataFrame = {
     Dsir.requireBucketMeta(g, model.buckets)

@@ -308,16 +308,6 @@ object RabitQ {
     new QueryPlanes(d, lo, delta, planes, tSum)
   }
 
-  /** Large-probe-set u4-kernel variant (see [[ProbeBatch]]). */
-  def knnJoinU4Batched(model: Model, base: DataFrame, queries: DataFrame,
-      k: Int, rerank: Int = 100, batchRows: Int = 100000,
-      queryId: String = "query_id", queryVec: String = "query_vec",
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scoreDigits: Int = -1): DataFrame =
-    ProbeBatch.batched(queries, batchRows, queryId)(
-      knnJoinU4(model, base, _, k, rerank, queryId, queryVec, idCol, vecCol,
-        scoreDigits))
-
   /** Large-probe-set variant: caps the per-batch collect/broadcast at
     * ~batchRows probes (see [[ProbeBatch]]). */
   def knnJoinBatched(model: Model, base: DataFrame, queries: DataFrame,

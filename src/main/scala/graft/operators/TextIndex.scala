@@ -538,8 +538,8 @@ object TextIndex {
     * Index structures for efficient phrase querying"): a head unigram's
     * posting list is O(corpus), but a phrase's BIGRAM lists are sharply
     * smaller, and serve cost is bounded by the probed lists (measured
-    * in `bench.PhraseScaleMain`). Independent of the BM25 tables: build
-    * either or both under one prefix. */
+    * in BASELINE.md round 8, "Phrase search at scale"). Independent of
+    * the BM25 tables: build either or both under one prefix. */
   def buildPositional(docs: DataFrame, prefix: String,
       numBuckets: Int = 32): Unit = {
     val spark = docs.sparkSession

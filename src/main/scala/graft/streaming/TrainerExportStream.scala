@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Bpe, Mixing, SequenceExport}
 
 /** STREAMING corpus-to-trainer: the batch last mile
-  * ([[graft.bench.MixPackExportMain]]'s mix → pack → export) as a
+  * (mix → pack → export; BASELINE.md round 12, "The corpus-to-trainer
+  * artifact at 10M") as a
   * checkpointed stream — documents arrive in micro-batches, each batch
   * is mixed under what REMAINS of the per-domain token budgets
   * ([[Mixing.mixBatch]] — the drain contract), the selection is packed

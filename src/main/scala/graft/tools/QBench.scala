@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev measurement harness (guide §1): time named queries with
   * repetitions inside one JVM so per-query costs separate into
   * first-run (includes memoized builds + planning + codegen) and
@@ -17,16 +15,7 @@ object QBench {
     val names = args.filterNot(_.contains("="))
     val reps = opts.getOrElse("reps", "3").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(

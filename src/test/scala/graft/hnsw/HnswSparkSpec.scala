@@ -327,4 +327,21 @@ class HnswSparkSpec extends AnyFunSuite {
     assert(jobs == 1, s"$jobs jobs for one warm single-query knnJoin")
     model.unpersist()
   }
+
+  test("unpersist of a lazily loaded model after delete runs no job and evicts its sub-indexes") {
+    val model = IvfHnsw.fit(emb, numCells = 4,
+      HnswParams(m = 8, efConstruction = 60, numPartitions = 4))
+    val path = java.nio.file.Files.createTempDirectory("ivfhnsw_unpersist").toString + "/m"
+    IvfHnsw.save(model, path)
+    model.unpersist()
+    val loaded = IvfHnsw.load(spark, path).get
+    val id = loaded.hnsw.modelId
+    def cached: Seq[Int] = (0 until 4).filter(c => SubIndexCache.get(s"$id/$c") != null)
+    assert(IvfHnsw.knnJoin(loaded, probes, k = 5, nprobe = 4).collect().nonEmpty)
+    assert(cached.nonEmpty, "the query cached no sub-index")
+    IvfHnsw.delete(spark, path)
+    val jobs = org.apache.spark.ListenerBusDrain.jobsDuring(spark.sparkContext)(loaded.unpersist())
+    assert(jobs == 0, s"$jobs jobs to unpersist a lazily loaded model")
+    assert(cached.isEmpty, s"cells ${cached.mkString(",")} still cached")
+  }
 }
