@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 import graft.operators.KnnJoin
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -45,10 +46,23 @@ object SparkEntry {
       "text" -> TextQueries.queries,
       "advanced" -> AdvancedQueries.queries))
 
-  def oracleSql: Map[String, String] =
+  /** DuckDB SQL per oracle-checked query over the tables in `dir`. The
+    * trained families' SQL carries literals of the model fitted on `dir`
+    * (the memoized one, when its queries already ran in this session). */
+  def oracleSql(spark: SparkSession, dir: String): Map[String, String] =
     merged(Seq(
       "relational" -> RelationalQueries.oracle,
-      "vector" -> VectorQueries.oracle,
-      "text" -> TextQueries.oracle,
+      "vector" -> VectorQueries.oracle(spark, dir),
+      "text" -> TextQueries.oracle(spark, dir),
       "advanced" -> AdvancedQueries.oracle))
+
+  /** One trained family's oracle entries. A fit that throws leaves only
+    * that family's keys out and prints one `[verify]` line, so a bad
+    * family cannot empty the rest of the dump. */
+  private[graft] def fitted(family: String)(
+      sql: => Map[String, String]): Map[String, String] =
+    try sql catch { case NonFatal(e) =>
+      System.err.println(s"[verify] $family oracle failed: ${e.getMessage}")
+      Map.empty
+    }
 }

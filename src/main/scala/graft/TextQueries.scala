@@ -1342,28 +1342,22 @@ object TextQueries {
       |    ORDER BY bm25 DESC, doc_id) AS rnk FROM sc)
       |WHERE rnk <= 10""".stripMargin
 
-  /** The trained quality-classifier weights, recorded at fit time so
-    * [[oracle]] can emit the literal-weight DuckDB twin when Verify
-    * dumps oracle_sql.json AFTER the query ran (the VectorQueries
-    * trained-literal contract). */
-  @volatile private var qualityLrForOracle:
-    Option[graft.operators.QualityLr.Model] = None
-  private def qualityLrModel(s: SparkSession, dir: String)
-      : graft.operators.QualityLr.Model = {
-    val m = TextMemo.get(s, s"qlr/$dir") {
+  /** The trained quality classifier; its weights are also the literals
+    * of the `quality_classifier`/`corpus_pipeline` oracle SQL. */
+  private[graft] def qualityLrModel(s: SparkSession, dir: String)
+      : graft.operators.QualityLr.Model =
+    TextMemo.get(s, s"qlr/$dir") {
       graft.operators.QualityLr.fit(docs(s, dir), col("lang") === "en")
     }
-    qualityLrForOracle = Some(m)
-    m
-  }
 
-  def oracle: Map[String, String] = staticOracle ++
-    (qualityLrForOracle match {
-      case None => Map.empty[String, String]
-      case Some(m) =>
-        Map("quality_classifier" -> graft.operators.QualityLr.duckdbSql(m),
-          "corpus_pipeline" -> corpusPipelineSql(m))
-    })
+  /** The static entries plus the two whose SQL carries the memoized
+    * classifier's weights (the VectorQueries trained-literal recipe). */
+  def oracle(s: SparkSession, dir: String): Map[String, String] =
+    staticOracle ++ SparkEntry.fitted("qlr") {
+      val m = qualityLrModel(s, dir)
+      Map("quality_classifier" -> graft.operators.QualityLr.duckdbSql(m),
+        "corpus_pipeline" -> corpusPipelineSql(m))
+    }
 
   /** DuckDB twin of the six-stage `corpus_pipeline` composition,
     * assembled from the SAME composable CTE generators each stage's own

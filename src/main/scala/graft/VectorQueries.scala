@@ -55,87 +55,42 @@ object VectorQueries {
       HnswIndexer.fit(emb(s, dir),
         HnswParams(m = 16, efConstruction = 200, numPartitions = 4)))
 
-  /** The battery's IVF model. Fitting also records the trained centroids
-    * so [[oracle]] can emit the data-dependent IVF oracle SQL (literal
-    * centroids) when Verify dumps oracle_sql.json AFTER the query ran —
-    * the LSH/SQ8 cross-engine recipe extended to a trained quantizer. */
-  @volatile private var ivfCentroidsForOracle: Option[Array[(Int, Array[Float])]] = None
-  private def ivfModel(s: SparkSession, dir: String): graft.operators.IvfFlat.Model = {
-    val m = ModelMemo.get(s, s"ivf/c16/$dir")(
+  /** The battery's trained quantizers. Each is also the source of its
+    * family's trained-literal oracle SQL (centroids, codebooks,
+    * rotations written into DuckDB SQL — the LSH/SQ8 cross-engine recipe
+    * extended to trained models): [[oracle]] reads the same memo entry,
+    * so after a battery run it fits nothing. */
+  private[graft] def ivfModel(s: SparkSession, dir: String): graft.operators.IvfFlat.Model =
+    ModelMemo.get(s, s"ivf/c16/$dir")(
       graft.operators.IvfFlat.fit(emb(s, dir), numCells = 16))
-    ivfCentroidsForOracle = Some(m.centroids)
-    m
-  }
 
-  /** The battery's PQ model. Like [[ivfModel]], fitting records the
-    * trained codebooks so [[oracle]] can emit the data-dependent PQ oracle
-    * SQL (literal codebooks) when Verify dumps oracle_sql.json after the
-    * query ran. */
-  @volatile private var pqCodebooksForOracle: Option[Array[Array[Array[Float]]]] = None
-  private def pqModel(s: SparkSession, dir: String): graft.operators.Pq.Model = {
-    val m = ModelMemo.get(s, s"pq/s8c16/$dir")(
+  private def pqModel(s: SparkSession, dir: String): graft.operators.Pq.Model =
+    ModelMemo.get(s, s"pq/s8c16/$dir")(
       graft.operators.Pq.fit(emb(s, dir), numSub = 8, codesPerSub = 16))
-    pqCodebooksForOracle = Some(m.codebooks)
-    m
-  }
 
-  /** The battery's OPQ model — records (rotation, codebooks) for the
-    * literal-emission oracle, same contract as [[pqModel]]. */
-  @volatile private var opqForOracle:
-    Option[(Array[Array[Float]], Array[Array[Array[Float]]])] = None
-  private def opqModel(s: SparkSession, dir: String): graft.operators.Opq.Model = {
-    val m = ModelMemo.get(s, s"opq/s8c16/$dir")(
+  private def opqModel(s: SparkSession, dir: String): graft.operators.Opq.Model =
+    ModelMemo.get(s, s"opq/s8c16/$dir")(
       graft.operators.Opq.fit(emb(s, dir), numSub = 8, codesPerSub = 16))
-    opqForOracle = Some((m.rotation, m.pq.codebooks))
-    m
-  }
 
-  /** The battery's IVF-PQ model — records (centroids, codebooks,
-    * rotation) for the composed literal-emission oracle, same contract as
-    * [[pqModel]]. */
-  @volatile private var ivfpqForOracle: Option[(Array[(Int, Array[Float])],
-    Array[Array[Array[Float]]], Option[Array[Array[Float]]])] = None
-  private def ivfpqModel(s: SparkSession, dir: String): graft.operators.IvfPq.Model = {
-    val m = ModelMemo.get(s, s"ivfpq/c16s8c16r4p/$dir")(
+  private def ivfpqModel(s: SparkSession, dir: String): graft.operators.IvfPq.Model =
+    ModelMemo.get(s, s"ivfpq/c16s8c16r4p/$dir")(
       graft.operators.IvfPq.fit(emb(s, dir), numCells = 16,
         numSub = 8, codesPerSub = 16, opqIters = 4, packed = true))
-    ivfpqForOracle = Some((m.centroids, m.codebooks, m.rotation))
-    m
-  }
 
-  /** The battery's PCA model — records (mean, weights) for the
-    * literal-emission oracle, same contract as [[pqModel]]. */
-  @volatile private var pcaForOracle:
-    Option[(Array[Double], Array[Array[Double]])] = None
-  private def pcaModel(s: SparkSession, dir: String): graft.operators.Pca.Model = {
-    val m = ModelMemo.get(s, s"pca/p16/$dir")(
+  private def pcaModel(s: SparkSession, dir: String): graft.operators.Pca.Model =
+    ModelMemo.get(s, s"pca/p16/$dir")(
       graft.operators.Pca.fit(emb(s, dir), p = 16))
-    pcaForOracle = Some((m.mean, m.weights))
-    m
-  }
 
-  /** The battery's RaBitQ model — records the seeded rotation for the
-    * literal-emission oracle, same contract as [[pqModel]]. */
-  @volatile private var rabitqForOracle: Option[Array[Array[Float]]] = None
-  private def rabitqModel(s: SparkSession, dir: String): graft.operators.RabitQ.Model = {
-    val m = ModelMemo.get(s, s"rabitq/s42/$dir")(
+  private def rabitqModel(s: SparkSession, dir: String): graft.operators.RabitQ.Model =
+    ModelMemo.get(s, s"rabitq/s42/$dir")(
       graft.operators.RabitQ.fit(emb(s, dir), seed = 42L))
-    rabitqForOracle = Some(m.rotation)
-    m
-  }
 
-  /** The battery's IVF×RaBitQ model — composed from the memoized IVF
-    * quantizer (same centroid literals as `knn_ivf_cosine`); records
-    * (centroids, rotation, R·c offsets) for the composed oracle. */
-  @volatile private var ivfRabitqForOracle: Option[(Array[(Int, Array[Float])],
-    Array[Array[Float]], Array[Array[Double]])] = None
+  /** Composed from the memoized IVF quantizer (same centroid literals as
+    * `knn_ivf_cosine`). */
   private def ivfRabitqModel(s: SparkSession, dir: String)
-      : graft.operators.IvfRabitq.Model = {
-    val m = ModelMemo.get(s, s"ivfrabitq/c16s42/$dir")(
+      : graft.operators.IvfRabitq.Model =
+    ModelMemo.get(s, s"ivfrabitq/c16s42/$dir")(
       graft.operators.IvfRabitq.fromIvf(ivfModel(s, dir), seed = 42L))
-    ivfRabitqForOracle = Some((m.centroids, m.rotation, m.rotCents))
-    m
-  }
 
   private def emb(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
@@ -456,7 +411,7 @@ object VectorQueries {
         numPlanes = 6, d = 64, numTables = 4)),
 
     // SemDeDup-style semantic dedup: IVF-cell clustering + within-cell
-    // keep-first cosine pruning. Oracle-checked from the SAME recorded
+    // keep-first cosine pruning. Oracle-checked from the SAME memoized
     // centroid literals as knn_ivf (the trained-quantizer recipe); the
     // only pairwise work is a cell equi-join (PlanSpec no-cartesian).
     "semdedup_embeddings" -> ((s, dir) =>
@@ -1189,352 +1144,334 @@ object VectorQueries {
       |     ORDER BY score DESC, neighbor_id) AS rank FROM rer)
       |  WHERE rank <= 10)""".stripMargin
 
-  /** IVF oracle entries exist only after a battery fit recorded the
-    * trained centroids (Verify runs every query before dumping the SQL,
-    * so the dump always sees them; a standalone dump without a fit just
-    * falls back to the rows-only gate). */
-  private def ivfOracle: Map[String, String] = ivfCentroidsForOracle match {
-    case None => Map.empty
-    case Some(cents) =>
-      val cte = graft.operators.IvfFlat.duckdbTopkCte(cents, nprobe = 4, k = 10)
-      val bqCte = graft.operators.IvfBq.duckdbTopkCte(cents, d = 64,
-        nprobe = 4, rerank = 100, k = 10, residual = true)
-      val hnCte = graft.operators.IvfFlat.duckdbTopkCte(cents, nprobe = 4,
-        k = 10, probeFilter = "vec_id < 50")
-      Map(
-        // IVF-gated hard-negative mining from the SAME centroid
-        // literals: probed cells → candidates (self excluded) → labels
-        // joined → negative top-5 / hardest-positive / semi-hard flag.
-        // The oracle is the single-round form; the Spark side only
-        // escalates when a probed set under-fills, which the battery
-        // parameters never trigger (a mismatch here would flag it).
-        "hard_negatives_ivf" ->
-          s"""$hnCte,
-             | hn_cand AS (
-             |  SELECT qc.query_id, ql.label AS qlabel, a.vec_id, al.label,
-             |   floor((CASE WHEN isnan(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(qc.qv AS DOUBLE[]))) THEN -1.0
-             |          ELSE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(qc.qv AS DOUBLE[])) END)*1e6 + 0.5)/1e6 AS score
-             |  FROM ivf_qcells qc
-             |   JOIN ivf_assigned a ON a.cell = qc.cell AND a.vec_id <> qc.query_id
-             |   JOIN embeddings ql ON ql.vec_id = qc.query_id
-             |   JOIN embeddings al ON al.vec_id = a.vec_id),
-             | hn_pos AS (SELECT query_id, max(score) AS pos_score FROM hn_cand
-             |            WHERE label = qlabel GROUP BY 1),
-             | hn_top AS (SELECT query_id, vec_id, label, score,
-             |   row_number() OVER (PARTITION BY query_id
-             |     ORDER BY score DESC, vec_id) AS rnk
-             |  FROM hn_cand WHERE label <> qlabel)
-             |SELECT t.query_id, t.rnk, t.vec_id AS neighbor_id, t.label,
-             | t.score, p.pos_score, t.score < p.pos_score AS semi_hard
-             |FROM hn_top t LEFT JOIN hn_pos p USING (query_id)
-             |WHERE t.rnk <= 5""".stripMargin,
-        "knn_ivfbq_cosine" ->
-          s"""$bqCte
-             |SELECT query_id, neighbor_id, score, rank FROM ivfbq_topk""".stripMargin,
-        "recall_ivfbq" ->
-          s"""$bqCte,
-             | exact_scored AS (
-             |  SELECT q.query_id, e.vec_id AS neighbor_id,
-             |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-             |  FROM embeddings e, ivf_q q),
-             | exact_topk AS (
-             |  SELECT query_id, neighbor_id FROM (
-             |   SELECT *, row_number() OVER (PARTITION BY query_id
-             |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
-             |  WHERE rank <= 10),
-             | per_q AS (SELECT x.query_id, count(*) AS total,
-             |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-             |      AS BIGINT) AS hits
-             |   FROM exact_topk x LEFT JOIN ivfbq_topk s
-             |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
-             |   GROUP BY x.query_id)
-             |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-             | CAST(sum(total) AS BIGINT) AS total,
-             | sum(hits)*1.0/sum(total) AS recall
-             |FROM per_q""".stripMargin,
-        "semdedup_embeddings" ->
-          graft.operators.SemDedup.duckdbSql(cents, threshold = 0.8),
-        "prune_prototypes" ->
-          graft.operators.Prune.duckdbSql(cents, keepFrac = 0.5),
-        "cluster_eval" ->
-          graft.operators.ClusterEval.duckdbSql(cents),
-        "knn_ivf_cosine" ->
-          s"""$cte
-             |SELECT query_id, neighbor_id, score, rank FROM ivf_topk""".stripMargin,
-        "recall_ivf" ->
-          s"""$cte,
-             | exact_scored AS (
-             |  SELECT q.query_id, e.vec_id AS neighbor_id,
-             |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-             |  FROM embeddings e, ivf_q q),
-             | exact_topk AS (
-             |  SELECT query_id, neighbor_id FROM (
-             |   SELECT *, row_number() OVER (PARTITION BY query_id
-             |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
-             |  WHERE rank <= 10),
-             | per AS (
-             |  SELECT ex.query_id,
-             |   CAST(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits,
-             |   CAST(count(*) AS BIGINT) AS total
-             |  FROM exact_topk ex LEFT JOIN ivf_topk l
-             |    ON ex.query_id = l.query_id AND ex.neighbor_id = l.neighbor_id
-             |  GROUP BY ex.query_id)
-             |SELECT CAST(count(*) AS BIGINT) AS n_queries,
-             |  CAST(sum(hits) AS BIGINT) AS hits,
-             |  CAST(sum(total) AS BIGINT) AS total,
-             |  CAST(sum(hits) AS DOUBLE)/CAST(sum(total) AS DOUBLE) AS recall
-             |FROM per""".stripMargin,
-        // IVF-cell-gated MaxSim from the SAME centroid literals: doc-vector
-        // assignment ties to the LARGER cell (greatest-struct), query-vector
-        // routing ties to the SMALLER (array_sort) — mirrored exactly; the
-        // candidate join and the MaxSim tail reuse the proven recipes.
-        "maxsim_multivec_ivf" -> {
-          val rows = cents.map { case (c, v) =>
-            s"($c, CAST([${v.map(_.toDouble.toString).mkString(", ")}] AS DOUBLE[]))"
-          }.mkString(",\n   ")
-          def guarded(a: String) =
-            s"""CASE WHEN isnan(list_cosine_similarity($a, c.cvec)) THEN -1.0
-               |        ELSE list_cosine_similarity($a, c.cvec) END""".stripMargin
-          s"""WITH mi_cents(cell, cvec) AS (VALUES
-             |   $rows),
-             | mi_d AS (SELECT vec_id, vec_id // 8 AS doc_id, embedding FROM embeddings),
-             | mi_dsim AS (
-             |  SELECT d.vec_id, d.doc_id, c.cell,
-             |   ${guarded("CAST(d.embedding AS DOUBLE[])")} AS s
-             |  FROM mi_d d CROSS JOIN mi_cents c),
-             | mi_dcell AS (
-             |  SELECT DISTINCT doc_id, cell FROM (
-             |   SELECT vec_id, doc_id, cell,
-             |    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell DESC) AS rn
-             |   FROM mi_dsim) WHERE rn = 1),
-             | mi_q AS (SELECT vec_id, vec_id // 8 AS query_id, CAST(vec_id % 8 AS INT) AS vec_no,
-             |          embedding AS qvec FROM embeddings WHERE vec_id < 40),
-             | mi_qsim AS (
-             |  SELECT q.vec_id, q.query_id, c.cell,
-             |   ${guarded("CAST(q.qvec AS DOUBLE[])")} AS s
-             |  FROM mi_q q CROSS JOIN mi_cents c),
-             | mi_qcell AS (
-             |  SELECT DISTINCT query_id, cell FROM (
-             |   SELECT vec_id, query_id, cell,
-             |    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
-             |   FROM mi_qsim) WHERE rn <= 4),
-             | mi_cand AS (
-             |  SELECT DISTINCT q.query_id, d.doc_id
-             |  FROM mi_qcell q JOIN mi_dcell d USING (cell)),
-             | mi_dv AS (SELECT vec_id // 8 AS doc_id, embedding AS dvec FROM embeddings),
-             | mi_pairs AS (
-             |  SELECT c.query_id, c.doc_id, q.vec_no,
-             |   max(list_inner_product(CAST(d.dvec AS DOUBLE[]), CAST(q.qvec AS DOUBLE[]))) AS best
-             |  FROM mi_cand c JOIN mi_dv d ON d.doc_id = c.doc_id
-             |   JOIN mi_q q ON q.query_id = c.query_id
-             |  GROUP BY 1, 2, 3),
-             | mi_scored AS (
-             |  SELECT query_id, doc_id, floor((sum(best))*1e6 + 0.5)/1e6 AS score
-             |  FROM mi_pairs GROUP BY 1, 2)
-             |SELECT query_id, doc_id, score, rank FROM (
-             | SELECT *, row_number() OVER (PARTITION BY query_id
-             |   ORDER BY score DESC, doc_id) AS rank FROM mi_scored)
-             |WHERE rank <= 10""".stripMargin
-        })
+  private def ivfOracle(m: graft.operators.IvfFlat.Model): Map[String, String] = {
+    val cents = m.centroids
+    val cte = graft.operators.IvfFlat.duckdbTopkCte(cents, nprobe = 4, k = 10)
+    val bqCte = graft.operators.IvfBq.duckdbTopkCte(cents, d = 64,
+      nprobe = 4, rerank = 100, k = 10, residual = true)
+    val hnCte = graft.operators.IvfFlat.duckdbTopkCte(cents, nprobe = 4,
+      k = 10, probeFilter = "vec_id < 50")
+    Map(
+      // IVF-gated hard-negative mining from the SAME centroid
+      // literals: probed cells → candidates (self excluded) → labels
+      // joined → negative top-5 / hardest-positive / semi-hard flag.
+      // The oracle is the single-round form; the Spark side only
+      // escalates when a probed set under-fills, which the battery
+      // parameters never trigger (a mismatch here would flag it).
+      "hard_negatives_ivf" ->
+        s"""$hnCte,
+           | hn_cand AS (
+           |  SELECT qc.query_id, ql.label AS qlabel, a.vec_id, al.label,
+           |   floor((CASE WHEN isnan(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(qc.qv AS DOUBLE[]))) THEN -1.0
+           |          ELSE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(qc.qv AS DOUBLE[])) END)*1e6 + 0.5)/1e6 AS score
+           |  FROM ivf_qcells qc
+           |   JOIN ivf_assigned a ON a.cell = qc.cell AND a.vec_id <> qc.query_id
+           |   JOIN embeddings ql ON ql.vec_id = qc.query_id
+           |   JOIN embeddings al ON al.vec_id = a.vec_id),
+           | hn_pos AS (SELECT query_id, max(score) AS pos_score FROM hn_cand
+           |            WHERE label = qlabel GROUP BY 1),
+           | hn_top AS (SELECT query_id, vec_id, label, score,
+           |   row_number() OVER (PARTITION BY query_id
+           |     ORDER BY score DESC, vec_id) AS rnk
+           |  FROM hn_cand WHERE label <> qlabel)
+           |SELECT t.query_id, t.rnk, t.vec_id AS neighbor_id, t.label,
+           | t.score, p.pos_score, t.score < p.pos_score AS semi_hard
+           |FROM hn_top t LEFT JOIN hn_pos p USING (query_id)
+           |WHERE t.rnk <= 5""".stripMargin,
+      "knn_ivfbq_cosine" ->
+        s"""$bqCte
+           |SELECT query_id, neighbor_id, score, rank FROM ivfbq_topk""".stripMargin,
+      "recall_ivfbq" ->
+        s"""$bqCte,
+           | exact_scored AS (
+           |  SELECT q.query_id, e.vec_id AS neighbor_id,
+           |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
+           |  FROM embeddings e, ivf_q q),
+           | exact_topk AS (
+           |  SELECT query_id, neighbor_id FROM (
+           |   SELECT *, row_number() OVER (PARTITION BY query_id
+           |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
+           |  WHERE rank <= 10),
+           | per_q AS (SELECT x.query_id, count(*) AS total,
+           |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+           |      AS BIGINT) AS hits
+           |   FROM exact_topk x LEFT JOIN ivfbq_topk s
+           |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
+           |   GROUP BY x.query_id)
+           |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
+           | CAST(sum(total) AS BIGINT) AS total,
+           | sum(hits)*1.0/sum(total) AS recall
+           |FROM per_q""".stripMargin,
+      "semdedup_embeddings" ->
+        graft.operators.SemDedup.duckdbSql(cents, threshold = 0.8),
+      "prune_prototypes" ->
+        graft.operators.Prune.duckdbSql(cents, keepFrac = 0.5),
+      "cluster_eval" ->
+        graft.operators.ClusterEval.duckdbSql(cents),
+      "knn_ivf_cosine" ->
+        s"""$cte
+           |SELECT query_id, neighbor_id, score, rank FROM ivf_topk""".stripMargin,
+      "recall_ivf" ->
+        s"""$cte,
+           | exact_scored AS (
+           |  SELECT q.query_id, e.vec_id AS neighbor_id,
+           |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
+           |  FROM embeddings e, ivf_q q),
+           | exact_topk AS (
+           |  SELECT query_id, neighbor_id FROM (
+           |   SELECT *, row_number() OVER (PARTITION BY query_id
+           |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
+           |  WHERE rank <= 10),
+           | per AS (
+           |  SELECT ex.query_id,
+           |   CAST(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits,
+           |   CAST(count(*) AS BIGINT) AS total
+           |  FROM exact_topk ex LEFT JOIN ivf_topk l
+           |    ON ex.query_id = l.query_id AND ex.neighbor_id = l.neighbor_id
+           |  GROUP BY ex.query_id)
+           |SELECT CAST(count(*) AS BIGINT) AS n_queries,
+           |  CAST(sum(hits) AS BIGINT) AS hits,
+           |  CAST(sum(total) AS BIGINT) AS total,
+           |  CAST(sum(hits) AS DOUBLE)/CAST(sum(total) AS DOUBLE) AS recall
+           |FROM per""".stripMargin,
+      // IVF-cell-gated MaxSim from the SAME centroid literals: doc-vector
+      // assignment ties to the LARGER cell (greatest-struct), query-vector
+      // routing ties to the SMALLER (array_sort) — mirrored exactly; the
+      // candidate join and the MaxSim tail reuse the proven recipes.
+      "maxsim_multivec_ivf" -> {
+        val rows = cents.map { case (c, v) =>
+          s"($c, CAST([${v.map(_.toDouble.toString).mkString(", ")}] AS DOUBLE[]))"
+        }.mkString(",\n   ")
+        def guarded(a: String) =
+          s"""CASE WHEN isnan(list_cosine_similarity($a, c.cvec)) THEN -1.0
+             |        ELSE list_cosine_similarity($a, c.cvec) END""".stripMargin
+        s"""WITH mi_cents(cell, cvec) AS (VALUES
+           |   $rows),
+           | mi_d AS (SELECT vec_id, vec_id // 8 AS doc_id, embedding FROM embeddings),
+           | mi_dsim AS (
+           |  SELECT d.vec_id, d.doc_id, c.cell,
+           |   ${guarded("CAST(d.embedding AS DOUBLE[])")} AS s
+           |  FROM mi_d d CROSS JOIN mi_cents c),
+           | mi_dcell AS (
+           |  SELECT DISTINCT doc_id, cell FROM (
+           |   SELECT vec_id, doc_id, cell,
+           |    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell DESC) AS rn
+           |   FROM mi_dsim) WHERE rn = 1),
+           | mi_q AS (SELECT vec_id, vec_id // 8 AS query_id, CAST(vec_id % 8 AS INT) AS vec_no,
+           |          embedding AS qvec FROM embeddings WHERE vec_id < 40),
+           | mi_qsim AS (
+           |  SELECT q.vec_id, q.query_id, c.cell,
+           |   ${guarded("CAST(q.qvec AS DOUBLE[])")} AS s
+           |  FROM mi_q q CROSS JOIN mi_cents c),
+           | mi_qcell AS (
+           |  SELECT DISTINCT query_id, cell FROM (
+           |   SELECT vec_id, query_id, cell,
+           |    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS rn
+           |   FROM mi_qsim) WHERE rn <= 4),
+           | mi_cand AS (
+           |  SELECT DISTINCT q.query_id, d.doc_id
+           |  FROM mi_qcell q JOIN mi_dcell d USING (cell)),
+           | mi_dv AS (SELECT vec_id // 8 AS doc_id, embedding AS dvec FROM embeddings),
+           | mi_pairs AS (
+           |  SELECT c.query_id, c.doc_id, q.vec_no,
+           |   max(list_inner_product(CAST(d.dvec AS DOUBLE[]), CAST(q.qvec AS DOUBLE[]))) AS best
+           |  FROM mi_cand c JOIN mi_dv d ON d.doc_id = c.doc_id
+           |   JOIN mi_q q ON q.query_id = c.query_id
+           |  GROUP BY 1, 2, 3),
+           | mi_scored AS (
+           |  SELECT query_id, doc_id, floor((sum(best))*1e6 + 0.5)/1e6 AS score
+           |  FROM mi_pairs GROUP BY 1, 2)
+           |SELECT query_id, doc_id, score, rank FROM (
+           | SELECT *, row_number() OVER (PARTITION BY query_id
+           |   ORDER BY score DESC, doc_id) AS rank FROM mi_scored)
+           |WHERE rank <= 10""".stripMargin
+      })
   }
 
-  /** PQ oracle entries exist only after a battery fit recorded the trained
-    * codebooks (same contract as [[ivfOracle]]). */
-  private def pqOracle: Map[String, String] = pqCodebooksForOracle match {
-    case None => Map.empty
-    case Some(cbs) =>
-      val cte = graft.operators.Pq.duckdbTopkCte(cbs, rerank = 100, k = 10)
-      Map(
-        "knn_pq_euclid" ->
-          s"""$cte
-             |SELECT query_id, neighbor_id, score, rank FROM pq_topk""".stripMargin,
-        "recall_pq" ->
-          s"""$cte,
-             | exact_topk AS (SELECT query_id, neighbor_id FROM (
-             |   SELECT q.query_id, e.vec_id AS neighbor_id,
-             |    row_number() OVER (PARTITION BY q.query_id ORDER BY
-             |      floor((1.0/(1.0 + list_distance(CAST(e.embedding AS DOUBLE[]),
-             |        CAST(q.qv AS DOUBLE[]))))*1e6 + 0.5)/1e6 DESC, e.vec_id) AS rank
-             |   FROM embeddings e, pq_q q) WHERE rank <= 10),
-             | per_q AS (SELECT x.query_id, count(*) AS total,
-             |    CAST(sum(CASE WHEN p.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-             |      AS BIGINT) AS hits
-             |   FROM exact_topk x LEFT JOIN pq_topk p
-             |    ON p.query_id = x.query_id AND p.neighbor_id = x.neighbor_id
-             |   GROUP BY x.query_id)
-             |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-             | CAST(sum(total) AS BIGINT) AS total,
-             | sum(hits)*1.0/sum(total) AS recall
-             |FROM per_q""".stripMargin)
+  private def pqOracle(m: graft.operators.Pq.Model): Map[String, String] = {
+    val cte = graft.operators.Pq.duckdbTopkCte(m.codebooks, rerank = 100, k = 10)
+    Map(
+      "knn_pq_euclid" ->
+        s"""$cte
+           |SELECT query_id, neighbor_id, score, rank FROM pq_topk""".stripMargin,
+      "recall_pq" ->
+        s"""$cte,
+           | exact_topk AS (SELECT query_id, neighbor_id FROM (
+           |   SELECT q.query_id, e.vec_id AS neighbor_id,
+           |    row_number() OVER (PARTITION BY q.query_id ORDER BY
+           |      floor((1.0/(1.0 + list_distance(CAST(e.embedding AS DOUBLE[]),
+           |        CAST(q.qv AS DOUBLE[]))))*1e6 + 0.5)/1e6 DESC, e.vec_id) AS rank
+           |   FROM embeddings e, pq_q q) WHERE rank <= 10),
+           | per_q AS (SELECT x.query_id, count(*) AS total,
+           |    CAST(sum(CASE WHEN p.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+           |      AS BIGINT) AS hits
+           |   FROM exact_topk x LEFT JOIN pq_topk p
+           |    ON p.query_id = x.query_id AND p.neighbor_id = x.neighbor_id
+           |   GROUP BY x.query_id)
+           |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
+           | CAST(sum(total) AS BIGINT) AS total,
+           | sum(hits)*1.0/sum(total) AS recall
+           |FROM per_q""".stripMargin)
   }
 
-  /** PCA oracle entries exist only after a battery fit recorded the
-    * trained mean + weights (same contract as [[pqOracle]]). */
-  private def pcaOracle: Map[String, String] = pcaForOracle match {
-    case None => Map.empty
-    case Some((mean, weights)) =>
-      val cte = graft.operators.Pca.duckdbTopkCte(mean, weights,
-        nQueries = 100, rerank = 100, k = 10)
-      Map(
-        "knn_pca_cosine" ->
-          s"""$cte
-             |SELECT query_id, neighbor_id, score, rank FROM pca_topk""".stripMargin,
-        "recall_pca" ->
-          s"""$cte,
-             | exact_scored AS (
-             |  SELECT q.query_id, e.vec_id AS neighbor_id,
-             |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-             |  FROM embeddings e, pca_q q),
-             | exact_topk AS (
-             |  SELECT query_id, neighbor_id FROM (
-             |   SELECT *, row_number() OVER (PARTITION BY query_id
-             |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
-             |  WHERE rank <= 10),
-             | per_q AS (SELECT x.query_id, count(*) AS total,
-             |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-             |      AS BIGINT) AS hits
-             |   FROM exact_topk x LEFT JOIN pca_topk s
-             |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
-             |   GROUP BY x.query_id)
-             |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-             | CAST(sum(total) AS BIGINT) AS total,
-             | sum(hits)*1.0/sum(total) AS recall
-             |FROM per_q""".stripMargin)
+  private def pcaOracle(m: graft.operators.Pca.Model): Map[String, String] = {
+    val cte = graft.operators.Pca.duckdbTopkCte(m.mean, m.weights,
+      nQueries = 100, rerank = 100, k = 10)
+    Map(
+      "knn_pca_cosine" ->
+        s"""$cte
+           |SELECT query_id, neighbor_id, score, rank FROM pca_topk""".stripMargin,
+      "recall_pca" ->
+        s"""$cte,
+           | exact_scored AS (
+           |  SELECT q.query_id, e.vec_id AS neighbor_id,
+           |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
+           |  FROM embeddings e, pca_q q),
+           | exact_topk AS (
+           |  SELECT query_id, neighbor_id FROM (
+           |   SELECT *, row_number() OVER (PARTITION BY query_id
+           |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
+           |  WHERE rank <= 10),
+           | per_q AS (SELECT x.query_id, count(*) AS total,
+           |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+           |      AS BIGINT) AS hits
+           |   FROM exact_topk x LEFT JOIN pca_topk s
+           |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
+           |   GROUP BY x.query_id)
+           |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
+           | CAST(sum(total) AS BIGINT) AS total,
+           | sum(hits)*1.0/sum(total) AS recall
+           |FROM per_q""".stripMargin)
   }
 
-  /** RaBitQ oracle entries exist only after a battery fit recorded the
-    * seeded rotation (same contract as [[pqOracle]]). */
-  private def rabitqOracle: Map[String, String] = rabitqForOracle match {
-    case None => Map.empty
-    case Some(rot) =>
-      val cte = graft.operators.RabitQ.duckdbTopkCte(rot,
-        nQueries = 100, rerank = 100, k = 10)
-      Map(
-        "knn_rabitq_cosine" ->
-          s"""$cte
-             |SELECT query_id, neighbor_id, score, rank FROM rbq_topk""".stripMargin,
-        "recall_rabitq" ->
-          s"""$cte,
-             | exact_scored AS (
-             |  SELECT q.query_id, e.vec_id AS neighbor_id,
-             |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-             |  FROM embeddings e, rbq_q q),
-             | exact_topk AS (
-             |  SELECT query_id, neighbor_id FROM (
-             |   SELECT *, row_number() OVER (PARTITION BY query_id
-             |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
-             |  WHERE rank <= 10),
-             | per_q AS (SELECT x.query_id, count(*) AS total,
-             |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-             |      AS BIGINT) AS hits
-             |   FROM exact_topk x LEFT JOIN rbq_topk s
-             |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
-             |   GROUP BY x.query_id)
-             |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-             | CAST(sum(total) AS BIGINT) AS total,
-             | sum(hits)*1.0/sum(total) AS recall
-             |FROM per_q""".stripMargin)
+  private def rabitqOracle(m: graft.operators.RabitQ.Model): Map[String, String] = {
+    val cte = graft.operators.RabitQ.duckdbTopkCte(m.rotation,
+      nQueries = 100, rerank = 100, k = 10)
+    Map(
+      "knn_rabitq_cosine" ->
+        s"""$cte
+           |SELECT query_id, neighbor_id, score, rank FROM rbq_topk""".stripMargin,
+      "recall_rabitq" ->
+        s"""$cte,
+           | exact_scored AS (
+           |  SELECT q.query_id, e.vec_id AS neighbor_id,
+           |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
+           |  FROM embeddings e, rbq_q q),
+           | exact_topk AS (
+           |  SELECT query_id, neighbor_id FROM (
+           |   SELECT *, row_number() OVER (PARTITION BY query_id
+           |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
+           |  WHERE rank <= 10),
+           | per_q AS (SELECT x.query_id, count(*) AS total,
+           |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+           |      AS BIGINT) AS hits
+           |   FROM exact_topk x LEFT JOIN rbq_topk s
+           |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
+           |   GROUP BY x.query_id)
+           |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
+           | CAST(sum(total) AS BIGINT) AS total,
+           | sum(hits)*1.0/sum(total) AS recall
+           |FROM per_q""".stripMargin)
   }
 
-  /** IVF×RaBitQ oracle entries exist only after a battery fit recorded
-    * the composed trained parameters (same contract as [[pqOracle]]). */
-  private def ivfRabitqOracle: Map[String, String] = ivfRabitqForOracle match {
-    case None => Map.empty
-    case Some((cents, rot, rotCents)) =>
-      val cte = graft.operators.IvfRabitq.duckdbTopkCte(cents, rot, rotCents,
-        nprobe = 4, rerank = 100, k = 10, nQueries = 100)
-      Map(
-        "knn_ivfrabitq_cosine" ->
-          s"""$cte
-             |SELECT query_id, neighbor_id, score, rank FROM ivfrbq_topk""".stripMargin,
-        "recall_ivfrabitq" ->
-          s"""$cte,
-             | exact_scored AS (
-             |  SELECT q.query_id, e.vec_id AS neighbor_id,
-             |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-             |  FROM embeddings e, ivf_q q),
-             | exact_topk AS (
-             |  SELECT query_id, neighbor_id FROM (
-             |   SELECT *, row_number() OVER (PARTITION BY query_id
-             |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
-             |  WHERE rank <= 10),
-             | per_q AS (SELECT x.query_id, count(*) AS total,
-             |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-             |      AS BIGINT) AS hits
-             |   FROM exact_topk x LEFT JOIN ivfrbq_topk s
-             |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
-             |   GROUP BY x.query_id)
-             |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-             | CAST(sum(total) AS BIGINT) AS total,
-             | sum(hits)*1.0/sum(total) AS recall
-             |FROM per_q""".stripMargin)
+  private def ivfRabitqOracle(m: graft.operators.IvfRabitq.Model): Map[String, String] = {
+    val cte = graft.operators.IvfRabitq.duckdbTopkCte(m.centroids, m.rotation,
+      m.rotCents, nprobe = 4, rerank = 100, k = 10, nQueries = 100)
+    Map(
+      "knn_ivfrabitq_cosine" ->
+        s"""$cte
+           |SELECT query_id, neighbor_id, score, rank FROM ivfrbq_topk""".stripMargin,
+      "recall_ivfrabitq" ->
+        s"""$cte,
+           | exact_scored AS (
+           |  SELECT q.query_id, e.vec_id AS neighbor_id,
+           |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
+           |  FROM embeddings e, ivf_q q),
+           | exact_topk AS (
+           |  SELECT query_id, neighbor_id FROM (
+           |   SELECT *, row_number() OVER (PARTITION BY query_id
+           |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
+           |  WHERE rank <= 10),
+           | per_q AS (SELECT x.query_id, count(*) AS total,
+           |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+           |      AS BIGINT) AS hits
+           |   FROM exact_topk x LEFT JOIN ivfrbq_topk s
+           |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
+           |   GROUP BY x.query_id)
+           |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
+           | CAST(sum(total) AS BIGINT) AS total,
+           | sum(hits)*1.0/sum(total) AS recall
+           |FROM per_q""".stripMargin)
   }
 
-  /** OPQ oracle entries exist only after a battery fit recorded the
-    * trained rotation + codebooks (same contract as [[pqOracle]]). */
-  private def opqOracle: Map[String, String] = opqForOracle match {
-    case None => Map.empty
-    case Some((rot, cbs)) =>
-      val cte = graft.operators.Opq.duckdbTopkCte(rot, cbs, rerank = 100, k = 10)
-      Map(
-        "knn_opq_euclid" ->
-          s"""$cte
-             |SELECT query_id, neighbor_id, score, rank FROM pq_topk""".stripMargin,
-        "recall_opq" ->
-          s"""$cte,
-             | exact_topk AS (SELECT query_id, neighbor_id FROM (
-             |   SELECT q.query_id, e.vec_id AS neighbor_id,
-             |    row_number() OVER (PARTITION BY q.query_id ORDER BY
-             |      floor((1.0/(1.0 + list_distance(CAST(e.embedding AS DOUBLE[]),
-             |        CAST(q.qv AS DOUBLE[]))))*1e6 + 0.5)/1e6 DESC, e.vec_id) AS rank
-             |   FROM embeddings e, pq_q q) WHERE rank <= 10),
-             | per_q AS (SELECT x.query_id, count(*) AS total,
-             |    CAST(sum(CASE WHEN p.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-             |      AS BIGINT) AS hits
-             |   FROM exact_topk x LEFT JOIN pq_topk p
-             |    ON p.query_id = x.query_id AND p.neighbor_id = x.neighbor_id
-             |   GROUP BY x.query_id)
-             |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-             | CAST(sum(total) AS BIGINT) AS total,
-             | sum(hits)*1.0/sum(total) AS recall
-             |FROM per_q""".stripMargin)
+  private def opqOracle(m: graft.operators.Opq.Model): Map[String, String] = {
+    val cte = graft.operators.Opq.duckdbTopkCte(m.rotation, m.pq.codebooks,
+      rerank = 100, k = 10)
+    Map(
+      "knn_opq_euclid" ->
+        s"""$cte
+           |SELECT query_id, neighbor_id, score, rank FROM pq_topk""".stripMargin,
+      "recall_opq" ->
+        s"""$cte,
+           | exact_topk AS (SELECT query_id, neighbor_id FROM (
+           |   SELECT q.query_id, e.vec_id AS neighbor_id,
+           |    row_number() OVER (PARTITION BY q.query_id ORDER BY
+           |      floor((1.0/(1.0 + list_distance(CAST(e.embedding AS DOUBLE[]),
+           |        CAST(q.qv AS DOUBLE[]))))*1e6 + 0.5)/1e6 DESC, e.vec_id) AS rank
+           |   FROM embeddings e, pq_q q) WHERE rank <= 10),
+           | per_q AS (SELECT x.query_id, count(*) AS total,
+           |    CAST(sum(CASE WHEN p.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+           |      AS BIGINT) AS hits
+           |   FROM exact_topk x LEFT JOIN pq_topk p
+           |    ON p.query_id = x.query_id AND p.neighbor_id = x.neighbor_id
+           |   GROUP BY x.query_id)
+           |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
+           | CAST(sum(total) AS BIGINT) AS total,
+           | sum(hits)*1.0/sum(total) AS recall
+           |FROM per_q""".stripMargin)
   }
 
-  /** IVF-PQ oracle entries exist only after a battery fit recorded the
-    * trained centroids + codebooks + rotation (same contract as
-    * [[pqOracle]]). */
-  private def ivfpqOracle: Map[String, String] = ivfpqForOracle match {
-    case None => Map.empty
-    case Some((cents, cbs, rot)) =>
-      val cte = graft.operators.IvfPq.duckdbTopkCte(cents, cbs, rot,
-        nprobe = 6, rerank = 150, k = 10)
-      Map(
-        "knn_ivfpq_euclid" ->
-          s"""$cte
-             |SELECT query_id, neighbor_id, score, rank FROM pq_topk""".stripMargin,
-        "recall_ivfpq" ->
-          s"""$cte,
-             | exact_topk AS (SELECT query_id, neighbor_id FROM (
-             |   SELECT q.query_id, e.vec_id AS neighbor_id,
-             |    row_number() OVER (PARTITION BY q.query_id ORDER BY
-             |      floor((1.0/(1.0 + list_distance(CAST(e.embedding AS DOUBLE[]),
-             |        CAST(q.qv AS DOUBLE[]))))*1e6 + 0.5)/1e6 DESC, e.vec_id) AS rank
-             |   FROM embeddings e, ipq_q q) WHERE rank <= 10),
-             | per_q AS (SELECT x.query_id, count(*) AS total,
-             |    CAST(sum(CASE WHEN p.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-             |      AS BIGINT) AS hits
-             |   FROM exact_topk x LEFT JOIN pq_topk p
-             |    ON p.query_id = x.query_id AND p.neighbor_id = x.neighbor_id
-             |   GROUP BY x.query_id)
-             |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-             | CAST(sum(total) AS BIGINT) AS total,
-             | sum(hits)*1.0/sum(total) AS recall
-             |FROM per_q""".stripMargin)
+  private def ivfpqOracle(m: graft.operators.IvfPq.Model): Map[String, String] = {
+    val cte = graft.operators.IvfPq.duckdbTopkCte(m.centroids, m.codebooks,
+      m.rotation, nprobe = 6, rerank = 150, k = 10)
+    Map(
+      "knn_ivfpq_euclid" ->
+        s"""$cte
+           |SELECT query_id, neighbor_id, score, rank FROM pq_topk""".stripMargin,
+      "recall_ivfpq" ->
+        s"""$cte,
+           | exact_topk AS (SELECT query_id, neighbor_id FROM (
+           |   SELECT q.query_id, e.vec_id AS neighbor_id,
+           |    row_number() OVER (PARTITION BY q.query_id ORDER BY
+           |      floor((1.0/(1.0 + list_distance(CAST(e.embedding AS DOUBLE[]),
+           |        CAST(q.qv AS DOUBLE[]))))*1e6 + 0.5)/1e6 DESC, e.vec_id) AS rank
+           |   FROM embeddings e, ipq_q q) WHERE rank <= 10),
+           | per_q AS (SELECT x.query_id, count(*) AS total,
+           |    CAST(sum(CASE WHEN p.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+           |      AS BIGINT) AS hits
+           |   FROM exact_topk x LEFT JOIN pq_topk p
+           |    ON p.query_id = x.query_id AND p.neighbor_id = x.neighbor_id
+           |   GROUP BY x.query_id)
+           |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
+           | CAST(sum(total) AS BIGINT) AS total,
+           | sum(hits)*1.0/sum(total) AS recall
+           |FROM per_q""".stripMargin)
   }
 
-  def oracle: Map[String, String] =
-    staticOracle ++ ivfOracle ++ pqOracle ++ pcaOracle ++ rabitqOracle ++
-      ivfRabitqOracle ++ opqOracle ++ ivfpqOracle
+  /** The static entries plus each trained family's SQL, built from the
+    * same memoized model its queries serve with (a fit only when no
+    * query of the family ran in this session for `dir`). */
+  def oracle(s: SparkSession, dir: String): Map[String, String] = {
+    import SparkEntry.fitted
+    staticOracle ++
+      fitted("ivf")(ivfOracle(ivfModel(s, dir))) ++
+      fitted("pq")(pqOracle(pqModel(s, dir))) ++
+      fitted("pca")(pcaOracle(pcaModel(s, dir))) ++
+      fitted("rabitq")(rabitqOracle(rabitqModel(s, dir))) ++
+      fitted("ivfrabitq")(ivfRabitqOracle(ivfRabitqModel(s, dir))) ++
+      fitted("opq")(opqOracle(opqModel(s, dir))) ++
+      fitted("ivfpq")(ivfpqOracle(ivfpqModel(s, dir)))
+  }
 
   /** Shared DuckDB CTE prefix for the real-media oracles: re-derives the
     * quantized pixels/samples straight from the embeddings with the SAME

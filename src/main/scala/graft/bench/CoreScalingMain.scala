@@ -12,7 +12,8 @@ import graft.sources.VectorSources
   * nothing about 100 TB behavior. This main runs the shuffle-bearing
   * families on synthetic corpora big enough that compute dominates
   * (tens of seconds per op at 32 cores), at the core count given by
-  * `$SPARK_GRAFT_CPUS`, and prints ONE JSON line {op: sec}.
+  * `$SPARK_GRAFT_CPUS`, and prints ONE JSON line {op: sec}, also
+  * written to `bench/outputs/core_scaling_c<cpus>_<nDocs>x<nVecs>.json`.
   *
   * Protocol: run twice — `SPARK_GRAFT_CPUS=8` and `=32` — and compare
   * per-op ratios; a parallelizable operator should approach the 4x core
@@ -121,7 +122,10 @@ object CoreScalingMain {
     try {
       val dir = java.nio.file.Paths.get("bench/outputs")
       java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.write(dir.resolve(s"core_scaling_c$cpus.json"),
+      // named by every input, so a small smoke run cannot overwrite
+      // the committed 400k-row numbers
+      java.nio.file.Files.write(
+        dir.resolve(s"core_scaling_c${cpus}_${nDocs}x$nVecs.json"),
         (line + "\n").getBytes("UTF-8"))
     } catch { case e: Exception =>
       System.err.println(s"core-scaling file write failed: $e") }

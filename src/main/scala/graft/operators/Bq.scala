@@ -6,8 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.similarity
-
 /** Binary (sign) quantization: 1 bit per dimension packed into 64-bit
   * words — 32× smaller than float32 (100 TB of embeddings becomes ~3 TB
   * of codes). The candidate scan is XOR + popcount over packed words, the
@@ -87,32 +85,6 @@ object Bq {
     val maxs = partials.map(_._2).reduce { (a, b) =>
       Array.tabulate(d)(i => math.max(a(i), b(i))) }
     Array.tabulate(d)(i => (mins(i).toDouble + maxs(i).toDouble) / 2.0)
-  }
-
-  /** Bounded exact top-k: rounded-cosine rerank of (query_id, cand_id)
-    * candidates on the original vectors (the battery score contract).
-    * Shared by [[knnJoin]], [[IvfBq.knnJoin]]. */
-  private[operators] def cosineRerank(topCands: DataFrame, base: DataFrame,
-      queries: DataFrame, k: Int, queryId: String, queryVec: String,
-      idCol: String, vecCol: String, scoreDigits: Int): DataFrame = {
-    val rawScore = similarity.cosine_sim(col("bvec"), col("qvec"))
-    val scoreCol =
-      if (scoreDigits >= 0) graft.Qutil.rnd(rawScore, scoreDigits) else rawScore
-    // candidates are bounded by (probe-batch queries × rerank) — two
-    // longs per row — so they BROADCAST and base never shuffles. Left
-    // to AQE, the SMJ→BHJ conversion still pays the full base shuffle
-    // WRITE before converting: at the 100M point that is a 26 GB spill
-    // per serve wave (measured, round 13 — it filled the disk).
-    val scored = broadcast(topCands)
-      .join(base.select(col(idCol).cast("long").as("cand_id"),
-        col(vecCol).cast("array<float>").as("bvec")), Seq("cand_id"))
-      .join(broadcast(queries.select(col(queryId).cast("long").as("query_id"),
-        col(queryVec).cast("array<float>").as("qvec"))), Seq("query_id"))
-      .select(col("query_id"), col("cand_id").as("neighbor_id"),
-        scoreCol.as("score"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** Midrange thresholds (partials pass, the [[Sq.fit]] shape), then one
@@ -232,8 +204,8 @@ object Bq {
     val topCands = cands.withColumn("crank", row_number().over(wr))
       .filter(col("crank") <= r)
       .select("query_id", "cand_id")
-    cosineRerank(topCands, base, queries, k, queryId, queryVec, idCol, vecCol,
-      scoreDigits)
+    KnnJoin.rerank(topCands, base, queries, k, "cosine", queryId, queryVec,
+      idCol, vecCol, scoreDigits)
   }
 
   /** Large-probe-set variant: caps the per-batch collect/broadcast at

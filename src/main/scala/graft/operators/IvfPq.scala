@@ -6,8 +6,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.similarity
-
 /** IVF-PQ (additive beyond the reference's ANN surface, like its
   * parents; exact rerank mirrors the reference oracle kernel,
   * src/bench/metrics.ts:9-24): the composition both parents exist for —
@@ -311,24 +309,10 @@ object IvfPq {
       .orderBy(rankDist.asc, col("cand_id").asc)
     val topCands = cands.withColumn("crank", row_number().over(wr))
       .filter(col("crank") <= r).select("query_id", "cand_id")
-    val rawScore = similarity.euclidean_sim(col("bvec"), col("qvec"))
-    val scoreExpr =
-      if (scoreDigits >= 0) graft.Qutil.rnd(rawScore, scoreDigits) else rawScore
-    // broadcast the bounded candidate side — base must not shuffle for
-    // a rerank (the 100M disk-fill lesson; see Bq.cosineRerank) — and a
-    // cell-clustered rerank store prunes to the probed cells' row groups
-    val scored = broadcast(topCands)
-      .join(graft.functions.cells
-        .pruneRerankBase(base, wantedCells.toSeq, model.centroids.length)
-        .select(col(idCol).cast("long").as("cand_id"),
-          col(vecCol).cast("array<float>").as("bvec")), Seq("cand_id"))
-      .join(broadcast(queries.select(col(queryId).cast("long").as("query_id"),
-        col(queryVec).cast("array<float>").as("qvec"))), Seq("query_id"))
-      .select(col("query_id"), col("cand_id").as("neighbor_id"),
-        scoreExpr.as("score"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    // a cell-clustered rerank store prunes to the probed cells' row groups
+    KnnJoin.rerank(topCands, graft.functions.cells
+        .pruneRerankBase(base, wantedCells.toSeq, model.centroids.length),
+      queries, k, "euclidean", queryId, queryVec, idCol, vecCol, scoreDigits)
   }
 
   /** Large-probe-set variant: caps the per-batch collect/broadcast at

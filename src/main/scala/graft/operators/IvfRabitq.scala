@@ -382,10 +382,10 @@ object IvfRabitq {
       .select("query_id", "cand_id")
     // a cell-clustered rerank store prunes to the probed cells' row
     // groups (the 100M small-wave serve was rerank-scan-bound)
-    Bq.cosineRerank(topCands,
+    KnnJoin.rerank(topCands,
       graft.functions.cells.pruneRerankBase(base, wanted,
         model.centroids.length),
-      queries, k, queryId, queryVec, idCol, vecCol, scoreDigits)
+      queries, k, "cosine", queryId, queryVec, idCol, vecCol, scoreDigits)
   }
 
   /** Large-probe-set variant: caps the per-batch collect/broadcast at

@@ -57,12 +57,10 @@ object KnnJoin {
       .filter(col("rank") <= k)
   }
 
-  /** Shared serving tail of the cosine candidate-generation paths
-    * ([[Mrl]], [[Pca]]): cut candidates at `rerank` per query in
-    * (tscore DESC, cand_id ASC) order, then exact full-vector cosine
-    * top-k with the battery's (score DESC, neighbor_id ASC) contract —
-    * factored so the tie orders and rounding live in ONE place.
-    * `scored` must carry (query_id, cand_id, tscore). */
+  /** Shared candidate cut of the cosine candidate-generation paths
+    * ([[Mrl]], [[Pca]], [[RabitQ]]): keep `rerank` candidates per query
+    * in (tscore DESC, cand_id ASC) order, then [[rerank]] them by exact
+    * cosine. `scored` must carry (query_id, cand_id, tscore). */
   private[operators] def cosineCandidateRerank(scored: DataFrame,
       base: DataFrame, queries: DataFrame, k: Int, rerank: Int,
       queryId: String, queryVec: String, idCol: String, vecCol: String,
@@ -72,19 +70,40 @@ object KnnJoin {
     val cands = scored.withColumn("crank", row_number().over(wc))
       .filter(col("crank") <= rerank)
       .select("query_id", "cand_id")
-    val rRaw = similarity.cosine_sim(col("bvec"), col("qvec"))
-    val rCol = if (scoreDigits >= 0) graft.Qutil.rnd(rRaw, scoreDigits) else rRaw
-    // broadcast the bounded candidate side — base must not shuffle for
-    // a rerank (the 100M disk-fill lesson; see Bq.cosineRerank)
-    val rer = broadcast(cands)
+    this.rerank(cands, base, queries, k, "cosine", queryId, queryVec, idCol,
+      vecCol, scoreDigits)
+  }
+
+  /** The one exact-rerank tail of every candidate-generation path (PQ,
+    * OPQ, SQ, BQ, IVF-BQ, IVF-PQ, IVF-RaBitQ, RaBitQ, MRL, PCA): score
+    * (query_id, cand_id) candidates on the original vectors by
+    * `similarity.sim(metric)` and keep the top-k per query with the
+    * battery's (score DESC, neighbor_id ASC) order. `scoreDigits >= 0`
+    * rounds scores (fixed-point floor form) BEFORE ranking so an oracle
+    * engine reproduces the order. A caller that prunes its rerank store
+    * passes the pruned base. Output: (query_id, neighbor_id, score,
+    * rank). */
+  private[operators] def rerank(cands: DataFrame, base: DataFrame,
+      queries: DataFrame, k: Int, metric: String, queryId: String,
+      queryVec: String, idCol: String, vecCol: String,
+      scoreDigits: Int): DataFrame = {
+    val rawScore = similarity.sim(metric)(col("bvec"), col("qvec"))
+    val scoreCol =
+      if (scoreDigits >= 0) graft.Qutil.rnd(rawScore, scoreDigits) else rawScore
+    // candidates are bounded by (probe-batch queries × rerank) — two
+    // longs per row — so they BROADCAST and base never shuffles. Left
+    // to AQE, the SMJ→BHJ conversion still pays the full base shuffle
+    // WRITE before converting: at the 100M point that is a 26 GB spill
+    // per serve wave (measured, round 13 — it filled the disk).
+    val scored = broadcast(cands)
       .join(base.select(col(idCol).cast("long").as("cand_id"),
         col(vecCol).cast("array<float>").as("bvec")), Seq("cand_id"))
       .join(broadcast(queries.select(col(queryId).cast("long").as("query_id"),
         col(queryVec).cast("array<float>").as("qvec"))), Seq("query_id"))
       .select(col("query_id"), col("cand_id").as("neighbor_id"),
-        rCol.as("score"))
+        scoreCol.as("score"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("neighbor_id").asc)
-    rer.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 }

@@ -257,8 +257,8 @@ object Opq {
       .as[(Long, Array[Float])].collect()
       .map { case (qid, qv) => (qid, rotate(rr, qv)) }
     val topCands = Pq.adcCandidates(model.pq, probes, rerank, adcDigits)
-    Pq.exactRerank(topCands, base, queries, k, queryId, queryVec, idCol, vecCol,
-      scoreDigits)
+    KnnJoin.rerank(topCands, base, queries, k, "euclidean", queryId, queryVec,
+      idCol, vecCol, scoreDigits)
   }
 
   /** DuckDB CTE reproducing the WHOLE OPQ pipeline from trained literals:

@@ -6,8 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.similarity
-
 /** Product quantization (PQ) — the memory-bound ANN scale path, additive
   * beyond the reference's HNSW/brute-force pair (its ANN surface is the
   * graph index, reference src/main.ts:253; the exact-rerank step here is
@@ -310,30 +308,6 @@ object Pq {
       .select("query_id", "cand_id")
   }
 
-  /** Exact `1/(1+L2)` top-k rerank of (query_id, cand_id) candidates on
-    * the original vectors (shared by PQ, OPQ and SQ). `scoreDigits >= 0`
-    * rounds scores (fixed-point floor form) BEFORE ranking so an oracle
-    * engine reproduces the order. */
-  private[operators] def exactRerank(cands: DataFrame, base: DataFrame,
-      queries: DataFrame, k: Int, queryId: String, queryVec: String,
-      idCol: String, vecCol: String, scoreDigits: Int = -1): DataFrame = {
-    val rawScore = similarity.euclidean_sim(col("bvec"), col("qvec"))
-    val scoreCol =
-      if (scoreDigits >= 0) graft.Qutil.rnd(rawScore, scoreDigits) else rawScore
-    // broadcast the bounded candidate side — base must not shuffle for
-    // a rerank (the 100M disk-fill lesson; see Bq.cosineRerank)
-    val scored = broadcast(cands)
-      .join(base.select(col(idCol).cast("long").as("cand_id"),
-        col(vecCol).cast("array<float>").as("bvec")), Seq("cand_id"))
-      .join(broadcast(queries.select(col(queryId).cast("long").as("query_id"),
-        col(queryVec).cast("array<float>").as("qvec"))), Seq("query_id"))
-      .select(col("query_id"), col("cand_id").as("neighbor_id"),
-        scoreCol.as("score"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
   /** ADC scan + exact rerank: approximate euclidean top-`rerank` per query
     * from the code table, then exact `1/(1+L2)` rerank on the original
     * vectors → top-k. */
@@ -349,8 +323,8 @@ object Pq {
       .select(col(queryId).cast("long"), col(queryVec).cast("array<float>"))
       .as[(Long, Array[Float])].collect()
     val topCands = adcCandidates(model, probes, rerank, adcDigits)
-    exactRerank(topCands, base, queries, k, queryId, queryVec, idCol, vecCol,
-      scoreDigits)
+    KnnJoin.rerank(topCands, base, queries, k, "euclidean", queryId, queryVec,
+      idCol, vecCol, scoreDigits)
   }
 
   /** Large-probe-set variant: caps the per-batch collect/broadcast at

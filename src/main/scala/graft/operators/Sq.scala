@@ -220,8 +220,8 @@ object Sq {
     val topCands = cands.withColumn("crank", row_number().over(wr))
       .filter(col("crank") <= r)
       .select("query_id", "cand_id")
-    Pq.exactRerank(topCands, base, queries, k, queryId, queryVec, idCol, vecCol,
-      scoreDigits)
+    KnnJoin.rerank(topCands, base, queries, k, "euclidean", queryId, queryVec,
+      idCol, vecCol, scoreDigits)
   }
 
   /** Large-probe-set variant: caps the per-batch collect/broadcast at

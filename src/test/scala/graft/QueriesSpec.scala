@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.Files
+import org.apache.commons.io.FileUtils
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,8 +21,71 @@ class QueriesSpec extends AnyFunSuite {
   val dir = "/root/testdata/sf0.001"
 
   test("every oracleSql key has a matching queries entry") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    val orphans = SparkEntry.oracleSql(spark, dir).keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle without query: $orphans")
+  }
+
+  /** The entries whose SQL carries a fitted model's literals. */
+  val trainedKeys = Seq(
+    "knn_ivf_cosine", "recall_ivf", "knn_ivfbq_cosine", "recall_ivfbq",
+    "hard_negatives_ivf", "semdedup_embeddings", "prune_prototypes",
+    "cluster_eval", "maxsim_multivec_ivf",
+    "knn_pq_euclid", "recall_pq", "knn_opq_euclid", "recall_opq",
+    "knn_ivfpq_euclid", "recall_ivfpq", "knn_pca_cosine", "recall_pca",
+    "knn_rabitq_cosine", "recall_rabitq",
+    "knn_ivfrabitq_cosine", "recall_ivfrabitq",
+    "quality_classifier", "corpus_pipeline")
+
+  test("oracleSql has every trained-literal entry before any query ran") {
+    // models are memoized per (session, dir): a fresh copy of the tables
+    // is a dir no battery query has touched in this session
+    val fresh = Files.createTempDirectory("oracle-fresh").toFile
+    FileUtils.copyDirectory(new java.io.File(dir), fresh)
+    val keys = try SparkEntry.oracleSql(spark, fresh.toString).keySet
+      finally FileUtils.deleteDirectory(fresh)
+    assert(trainedKeys.size == 23)
+    val missing = trainedKeys.filterNot(keys)
+    assert(missing.isEmpty, s"missing trained-literal entries: $missing")
+  }
+
+  test("trained-literal SQL is built from its own dir's memoized model") {
+    val small = SparkEntry.oracleSql(spark, dir)
+    val big = SparkEntry.oracleSql(spark, "/root/testdata/sf0.01")
+    val again = SparkEntry.oracleSql(spark, dir)
+    Seq("knn_ivf_cosine", "quality_classifier").foreach { k =>
+      assert(again(k) == small(k), s"$k changed after sf0.01's fit")
+      assert(big(k) != small(k), s"$k: sf0.01 and sf0.001 SQL coincide")
+    }
+    val cte = graft.operators.IvfFlat.duckdbTopkCte(
+      VectorQueries.ivfModel(spark, dir).centroids, nprobe = 4, k = 10)
+    assert(again("knn_ivf_cosine") ==
+      s"""$cte
+         |SELECT query_id, neighbor_id, score, rank FROM ivf_topk""".stripMargin)
+    assert(again("quality_classifier") == graft.operators.QualityLr.duckdbSql(
+      TextQueries.qualityLrModel(spark, dir)))
+  }
+
+  test("a trained family whose fit throws leaves out only its own keys") {
+    assert(SparkEntry.fitted("boom")(throw new IllegalStateException("fit")) ==
+      Map.empty)
+    assert(SparkEntry.fitted("ok")(Map("a" -> "b")) == Map("a" -> "b"))
+  }
+
+  test("Verify with names dumps only those queries and their oracle SQL") {
+    val out = Files.createTempDirectory("verify-names").toFile
+    // one oracle-checked entry, one rows-only entry
+    val names = Seq("knn_pq_euclid", "hybrid_serving_summary")
+    val (dumped, json) = try {
+      Verify.dump(spark, dir, out.toString, names)
+      (out.listFiles.filter(_.isDirectory).map(_.getName).toSet,
+        new com.fasterxml.jackson.databind.ObjectMapper()
+          .readValue(new java.io.File(out, "oracle_sql.json"),
+            classOf[java.util.Map[String, String]]).asScala.toMap)
+    } finally FileUtils.deleteDirectory(out)
+    assert(dumped == names.toSet)
+    val full = SparkEntry.oracleSql(spark, dir)
+    assert(json.keySet == Set("knn_pq_euclid"))
+    assert(json("knn_pq_euclid") == full("knn_pq_euclid"))
   }
 
   test("entry flagship returns rows (driver smoke contract)") {
