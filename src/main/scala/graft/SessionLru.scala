@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Session-scoped bounded LRU for BUILT ARTIFACTS (fitted models, index
   * store prefixes/paths) — the shared implementation behind
@@ -26,9 +27,17 @@ private[graft] final class SessionLru(maxEntries: Int) {
     }
   }
 
+  private def ctx(s: SparkSession) = s"${System.identityHashCode(s.sparkContext)}/"
+
+  /** The keys held for `s`'s context, as passed to [[get]]. */
+  def keys(s: SparkSession): Seq[String] = lru.synchronized {
+    val c = ctx(s)
+    lru.keySet.asScala.toSeq.collect { case k if k.startsWith(c) => k.stripPrefix(c) }
+  }
+
   def get[T <: AnyRef](s: SparkSession, key: String)(mk: => T): T =
     lru.synchronized {
-      val k = s"${System.identityHashCode(s.sparkContext)}/$key"
+      val k = ctx(s) + key
       val hit = lru.get(k)
       if (hit != null) hit.asInstanceOf[T]
       else { val v = mk; lru.put(k, v); v }

@@ -48,12 +48,15 @@ object SparkEntry {
 
   /** DuckDB SQL per oracle-checked query over the tables in `dir`. The
     * trained families' SQL carries literals of the model fitted on `dir`
-    * (the memoized one, when its queries already ran in this session). */
-  def oracleSql(spark: SparkSession, dir: String): Map[String, String] =
+    * (the memoized one, when its queries already ran in this session);
+    * a family is built only when `wanted` picks one of its keys, so a
+    * names-only dump fits no model its names do not need. */
+  def oracleSql(spark: SparkSession, dir: String,
+      wanted: String => Boolean = _ => true): Map[String, String] =
     merged(Seq(
       "relational" -> RelationalQueries.oracle,
-      "vector" -> VectorQueries.oracle(spark, dir),
-      "text" -> TextQueries.oracle(spark, dir),
+      "vector" -> VectorQueries.oracle(spark, dir, wanted),
+      "text" -> TextQueries.oracle(spark, dir, wanted),
       "advanced" -> AdvancedQueries.oracle))
 
   /** One trained family's oracle entries. A fit that throws leaves only
@@ -64,5 +67,19 @@ object SparkEntry {
     try sql catch { case NonFatal(e) =>
       System.err.println(s"[verify] $family oracle failed: ${e.getMessage}")
       Map.empty
+    }
+
+  /** [[fitted]] for a family whose entries are `keys`: it is built only
+    * when `wanted` picks one of them, and SQL under any other key set
+    * fails loudly (a key added to the SQL must be added here too). */
+  private[graft] def fittedFamily(family: String, wanted: String => Boolean,
+      keys: String*)(sql: => Map[String, String]): Map[String, String] =
+    if (!keys.exists(wanted)) Map.empty
+    else {
+      val m = fitted(family)(sql)
+      require(m.isEmpty || m.keySet == keys.toSet,
+        s"$family oracle keys ${m.keySet.mkString(", ")} are not the " +
+          s"declared ${keys.mkString(", ")}")
+      m
     }
 }

@@ -480,8 +480,9 @@ object TextQueries {
     // BM25 served from the PERSISTED inverted index
     // ([[graft.operators.TextIndex]]): build tokenizes once into a
     // term-bucketed posting table (df/dl denormalized into the posting
-    // row), queries probe it with bucket/row-group-pruned scans + a
-    // broadcast term join — no corpus-wide aggregation at query time.
+    // row), queries probe it with bucket/row-group-pruned scans that
+    // attach each term's (qid, df) entries in-scan — no corpus-wide
+    // aggregation at query time.
     // Same score arithmetic and round-before-rank as bm25_top_docs, so
     // the index-served results hash-match the SAME oracle (the whole
     // point: a user switching to the index keeps bit-identical results).
@@ -1350,10 +1351,13 @@ object TextQueries {
       graft.operators.QualityLr.fit(docs(s, dir), col("lang") === "en")
     }
 
-  /** The static entries plus the two whose SQL carries the memoized
-    * classifier's weights (the VectorQueries trained-literal recipe). */
-  def oracle(s: SparkSession, dir: String): Map[String, String] =
-    staticOracle ++ SparkEntry.fitted("qlr") {
+  /** The static entries plus, when `wanted` picks one of them, the two
+    * whose SQL carries the memoized classifier's weights (the
+    * VectorQueries trained-literal recipe). */
+  def oracle(s: SparkSession, dir: String,
+      wanted: String => Boolean): Map[String, String] =
+    staticOracle ++ SparkEntry.fittedFamily("qlr", wanted,
+        "quality_classifier", "corpus_pipeline") {
       val m = qualityLrModel(s, dir)
       Map("quality_classifier" -> graft.operators.QualityLr.duckdbSql(m),
         "corpus_pipeline" -> corpusPipelineSql(m))

@@ -1458,20 +1458,35 @@ object VectorQueries {
            |FROM per_q""".stripMargin)
   }
 
-  /** The static entries plus each trained family's SQL, built from the
-    * same memoized model its queries serve with (a fit only when no
-    * query of the family ran in this session for `dir`). */
-  def oracle(s: SparkSession, dir: String): Map[String, String] = {
-    import SparkEntry.fitted
+  /** The static entries plus the SQL of each trained family `wanted`
+    * picks a key of, built from the same memoized model its queries
+    * serve with (a fit only when no query of the family ran in this
+    * session for `dir`). */
+  def oracle(s: SparkSession, dir: String,
+      wanted: String => Boolean): Map[String, String] = {
+    def family(name: String, keys: String*)(sql: => Map[String, String]) =
+      SparkEntry.fittedFamily(name, wanted, keys: _*)(sql)
     staticOracle ++
-      fitted("ivf")(ivfOracle(ivfModel(s, dir))) ++
-      fitted("pq")(pqOracle(pqModel(s, dir))) ++
-      fitted("pca")(pcaOracle(pcaModel(s, dir))) ++
-      fitted("rabitq")(rabitqOracle(rabitqModel(s, dir))) ++
-      fitted("ivfrabitq")(ivfRabitqOracle(ivfRabitqModel(s, dir))) ++
-      fitted("opq")(opqOracle(opqModel(s, dir))) ++
-      fitted("ivfpq")(ivfpqOracle(ivfpqModel(s, dir)))
+      family("ivf", "knn_ivf_cosine", "recall_ivf", "knn_ivfbq_cosine",
+        "recall_ivfbq", "hard_negatives_ivf", "semdedup_embeddings",
+        "prune_prototypes", "cluster_eval", "maxsim_multivec_ivf")(
+        ivfOracle(ivfModel(s, dir))) ++
+      family("pq", "knn_pq_euclid", "recall_pq")(pqOracle(pqModel(s, dir))) ++
+      family("pca", "knn_pca_cosine", "recall_pca")(
+        pcaOracle(pcaModel(s, dir))) ++
+      family("rabitq", "knn_rabitq_cosine", "recall_rabitq")(
+        rabitqOracle(rabitqModel(s, dir))) ++
+      family("ivfrabitq", "knn_ivfrabitq_cosine", "recall_ivfrabitq")(
+        ivfRabitqOracle(ivfRabitqModel(s, dir))) ++
+      family("opq", "knn_opq_euclid", "recall_opq")(
+        opqOracle(opqModel(s, dir))) ++
+      family("ivfpq", "knn_ivfpq_euclid", "recall_ivfpq")(
+        ivfpqOracle(ivfpqModel(s, dir)))
   }
+
+  /** The model memo keys held for `dir` in `s`'s context. */
+  private[graft] def memoized(s: SparkSession, dir: String): Seq[String] =
+    ModelMemo.keys(s).filter(_.endsWith(s"/$dir"))
 
   /** Shared DuckDB CTE prefix for the real-media oracles: re-derives the
     * quantized pixels/samples straight from the embeddings with the SAME

@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row,
+  SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField,
-  StructType}
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType,
+  StructField, StructType}
 
 /** Persisted inverted index for lexical (BM25) retrieval — the serving
   * counterpart of the from-scratch `bm25_top_docs` pipeline, which
@@ -19,17 +21,19 @@ import scala.jdk.CollectionConverters._
   *    one tokenization pass, zero joins (plan-asserted in PlanSpec); the
   *    lexicon and avgdl then derive from the WRITTEN postings (one
   *    aggregation each — index-derived, never a second tokenize).
-  *  - `bm25TopDocs` serves queries from the persisted tables alone and
-  *    resolves the bounded probe on the DRIVER: the (qid, term) pairs
-  *    are collected and deduped once, the corpus stats and the probe
-  *    terms' df rows are read raw and summed there as exact Longs, and
-  *    one local (qid, term, df) relation broadcast-joins the posting
-  *    scan. The probe terms are that scan's `IN` filter — whole buckets
+  *  - `bm25TopDocs` serves queries from the persisted tables alone in at
+  *    most three Spark jobs. The bounded probe resolves on the DRIVER:
+  *    the (qid, term) pairs are collected and deduped once, and ONE
+  *    lookup collect returns the stats epoch rows and the probe terms'
+  *    df rows, summed there as exact Longs. The resolved (qid, df)
+  *    entries ride into the posting scan as one term-keyed map literal
+  *    (no broadcast job), and each posting row is scored in the scan
+  *    stage. The probe terms are that scan's `IN` filter — whole buckets
   *    prune for narrow queries (`SelectedBucketsCount`) and parquet
   *    row-group stats on the sorted term column prune within buckets.
-  *    One map-side-combined agg per (qid, doc) and a top-k window after
-  *    — the same shape as the transient pipeline, minus the corpus-wide
-  *    aggregations.
+  *    One exchange by qid feeds both the (qid, doc) sum and the top-k
+  *    window — the transient pipeline's score and ranking, minus the
+  *    corpus-wide aggregations.
   *  - STOPWORD-CLASS pruning (`maxDfFrac`): a Zipf head term's posting
   *    list is O(corpus) to read yet contributes ~zero BM25 mass
   *    (df ≈ N ⇒ idf ≈ 0) — measured at 1M docs, head terms made serve
@@ -159,39 +163,68 @@ object TextIndex {
     acc
   }
 
-  /** Sums of `cols` over a small table (the stats epoch rows, the delete
-    * vector), read as raw rows and summed on the driver: one scan job,
-    * where `agg(sum …).first()` runs two (partial aggregate, exchange,
-    * final aggregate). */
-  private def driverSums(t: DataFrame, cols: Column*): Array[Long] =
-    sumLongs(t.select(cols.map(_.cast("long")): _*).collect(), cols.size)
+  /** What one [[lookup]] read resolves: the corpus stats (epoch rows
+    * summed, deletions subtracted), the number of stats epoch rows, the
+    * number of deleted docs, and the df of the looked-up terms summed
+    * across their epoch rows. */
+  private case class Lookup(stats: Stats, epochs: Long, deleted: Long,
+      df: Map[String, Long])
 
-  /** (Σn, Σndl, Σsumdl) across all epoch rows, without the delete-side
-    * adjustments. Indexes persisted by older builds carry (n, avgdl)
-    * only — still served (single-epoch), but append/remove require the
-    * mergeable format. */
-  private def rawStats(spark: SparkSession, prefix: String): (Long, Long, Long) = {
-    val t = spark.table(statsTable(prefix))
-    require(t.columns.contains("sumdl"),
-      s"index '$prefix' predates the mergeable stats format — rebuild it")
-    val Array(n, ndl, sumdl) = driverSums(t, col("n"), col("ndl"), col("sumdl"))
-    (n, ndl, sumdl)
+  /** ONE driver collect over the union of the small reads serving needs:
+    * the stats epoch rows, the delete vector's rows and, when given, the
+    * (term, df) rows of the probe terms. Each row is laid out as
+    * (a, b, c, kind, term, avgdl):
+    *  - kind 0, a stats epoch row: (n, ndl, sumdl); an index persisted
+    *    before the mergeable format has one (n, -, -, avgdl) row;
+    *  - kind 1, a deleted doc: (1, 1 when it has postings, its dl);
+    *  - kind 2, a df row: (df, -, -, term).
+    * The longs are summed here as exact integers, so the stats are
+    * bit-identical to a rebuild over the surviving docs; `staged` adds
+    * the (n, ndl, sumdl) of committed streaming epochs. Scans union
+    * into one job; an aggregate inside `dfRows` (df counted from
+    * surviving postings) runs its own. */
+  private def lookup(statsT: DataFrame, deletes: Option[DataFrame],
+      dfRows: Option[DataFrame],
+      staged: (Long, Long, Long) = (0L, 0L, 0L)): Lookup = {
+    val legacy = !statsT.columns.contains("sumdl")
+    val nul = lit(null)
+    def rows(kind: Int, a: Column, b: Column, c: Column,
+        term: Column = nul, avgdl: Column = nul) =
+      Seq(a.cast("long"), b.cast("long"), c.cast("long"), lit(kind),
+        term.cast("string"), avgdl.cast("double"))
+    val statRows =
+      if (legacy) rows(0, col("n"), nul, nul, avgdl = col("avgdl"))
+      else rows(0, col("n"), col("ndl"), col("sumdl"))
+    val parts = Seq(statsT.select(statRows: _*)) ++
+      deletes.map(_.select(
+        rows(1, lit(1L), col("dl").isNotNull, col("dl")): _*)) ++
+      dfRows.map(_.select(rows(2, col("df"), nul, nul, col("term")): _*))
+    val got = parts.reduce(_ union _).collect().groupBy(_.getInt(3))
+    def of(kind: Int) = got.getOrElse(kind, Array.empty[Row])
+    val Array(n, ndl, sumdl) = sumLongs(of(0), 3)
+    val Array(nDel, ndlDel, sumdlDel) = sumLongs(of(1), 3)
+    val (sn, sndl, ssumdl) = staged
+    val st =
+      if (legacy) Stats(of(0).head.getLong(0), of(0).head.getDouble(5))
+      else Stats(n - nDel + sn,
+        avgdlOf(ndl - ndlDel + sndl, sumdl - sumdlDel + ssumdl))
+    Lookup(st, of(0).length.toLong, nDel,
+      of(2).groupMapReduce(_.getString(4))(_.getLong(0))(_ + _))
   }
+
+  private def deletesOf(spark: SparkSession, prefix: String): Option[DataFrame] =
+    if (deletesExist(spark, prefix)) Some(spark.table(deletesTable(prefix)))
+    else None
+
+  /** The stats/delete [[lookup]] of a persisted index, without terms. */
+  private def lookupIndex(spark: SparkSession, prefix: String): Lookup =
+    lookup(spark.table(statsTable(prefix)), deletesOf(spark, prefix), None)
 
   /** Load the corpus stats for a persisted index (epoch rows aggregated,
     * deletions subtracted — exact integer arithmetic, so the result is
     * bit-identical to a from-scratch build over the surviving docs). */
-  def stats(spark: SparkSession, prefix: String): Stats = {
-    val t = spark.table(statsTable(prefix))
-    if (!t.columns.contains("sumdl")) {
-      // pre-mergeable layout: single row (n, avgdl)
-      val r = t.first()
-      return Stats(r.getAs[Long]("n"), r.getAs[Double]("avgdl"))
-    }
-    val (n, ndl, sumdl) = rawStats(spark, prefix)
-    val (nDel, ndlDel, sumdlDel) = deleteAdjust(spark, prefix)
-    Stats(n - nDel, avgdlOf(ndl - ndlDel, sumdl - sumdlDel))
-  }
+  def stats(spark: SparkSession, prefix: String): Stats =
+    lookupIndex(spark, prefix).stats
 
   private def deletesExist(spark: SparkSession, prefix: String): Boolean =
     spark.catalog.tableExists(deletesTable(prefix))
@@ -205,20 +238,9 @@ object TextIndex {
     * to outgrow. */
   def describe(spark: SparkSession, prefix: String,
       epochFactor: Long = 8): DataFrame = {
-    val t = spark.table(statsTable(prefix))
-    // one read of the epoch rows gives the stats AND the epoch count;
-    // delete adjustments apply exactly as in stats()
-    val (st, epochs, nDel) =
-      if (t.columns.contains("sumdl")) {
-        val Array(n, ndl, sumdl, nEpochs) =
-          driverSums(t, col("n"), col("ndl"), col("sumdl"), lit(1L))
-        val (nd, ndlDel, sumdlDel) = deleteAdjust(spark, prefix)
-        (Stats(n - nd, avgdlOf(ndl - ndlDel, sumdl - sumdlDel)), nEpochs, nd)
-      } else {
-        val r = t.first()
-        (Stats(r.getAs[Long]("n"), r.getAs[Double]("avgdl")), 1L,
-          deleteAdjust(spark, prefix)._1)
-      }
+    // one read of the epoch rows and the delete vector gives the stats,
+    // the epoch count and the deleted-doc count
+    val lk = lookupIndex(spark, prefix)
     val positional = spark.catalog.tableExists(positionsTable(prefix))
     val terms = spark.table(lexiconTable(prefix))
       .select("term").distinct().count()
@@ -230,13 +252,13 @@ object TextIndex {
       store_kind = "text_index",
       location = prefix,
       family = if (positional) "bm25+positional" else "bm25",
-      live_rows = st.n,
-      deleted_rows = nDel,
-      epochs = epochs,
+      live_rows = lk.stats.n,
+      deleted_rows = lk.deleted,
+      epochs = lk.epochs,
       bytes_on_disk = bytes,
       growth_since_fit = None,
-      needs_compaction = nDel > 0 || epochs >= epochFactor,
-      detail = f"avgdl=${st.avgdl}%.4f terms=$terms"))
+      needs_compaction = lk.deleted > 0 || lk.epochs >= epochFactor,
+      detail = f"avgdl=${lk.stats.avgdl}%.4f terms=$terms"))
   }
 
   /** The POLICY LOOP over [[describe]]'s trigger (the
@@ -248,20 +270,10 @@ object TextIndex {
     * so the policy can run unattended between ingest batches. */
   def autoCompact(spark: SparkSession, prefix: String,
       numBuckets: Int = 32, epochFactor: Long = 8): Boolean = {
-    val t = spark.table(statsTable(prefix))
-    val epochs = if (t.columns.contains("sumdl")) t.count() else 1L
-    val (nDel, _, _) = deleteAdjust(spark, prefix)
-    if (nDel > 0 || epochs >= epochFactor) {
+    val lk = lookupIndex(spark, prefix)
+    if (lk.deleted > 0 || lk.epochs >= epochFactor) {
       compact(spark, prefix, numBuckets); true
     } else false
-  }
-
-  /** (#deleted docs, #deleted docs with postings, Σ their dl). */
-  private def deleteAdjust(spark: SparkSession, prefix: String): (Long, Long, Long) = {
-    if (!deletesExist(spark, prefix)) return (0L, 0L, 0L)
-    val Array(n, ndl, sumdl) = driverSums(spark.table(deletesTable(prefix)),
-      lit(1L), col("dl").isNotNull, col("dl"))
-    (n, ndl, sumdl)
   }
 
   /** Append a NEW batch of docs to a persisted index without touching the
@@ -426,12 +438,12 @@ object TextIndex {
 
   /** Okapi BM25 top-`topk` docs per query, served from the persisted
     * index. `queryTerms` (qid, term) must be bounded (the probe
-    * contract): it is collected once and resolved on the driver — the
-    * corpus stats and the probe terms' df are read as raw rows and
-    * summed there, the `maxDfFrac` cut is applied there, and the
-    * SURVIVING terms become the posting scan's bucket/row-group pruning
-    * filter, so a stopword-class term's O(corpus) posting list is never
-    * read. See [[bm25Serve]] for the plan.
+    * contract): it is collected once and resolved on the driver — one
+    * lookup read returns the corpus stats and the probe terms' df, the
+    * `maxDfFrac` cut is applied there, and the SURVIVING terms become
+    * the posting scan's bucket/row-group pruning filter, so a
+    * stopword-class term's O(corpus) posting list is never read. See
+    * [[bm25Serve]] for the plan.
     *
     * `maxDfFrac = 1.0` (default) keeps every term: identical score
     * arithmetic + round-before-rank as `TextQueries.bm25Ranked`, so
@@ -441,45 +453,52 @@ object TextIndex {
     * rows. Under deletes, and on indexes persisted before the lexicon
     * existed, df is counted from the surviving pruned postings (correct,
     * but the cut then can't skip the read). The result keeps the
-    * probe's `qid` type. */
+    * probe's `qid` type and nullability. */
   def bm25TopDocs(spark: SparkSession, prefix: String,
       queryTerms: DataFrame, topk: Int,
       k1: Double = 1.2, b: Double = 0.75,
       maxDfFrac: Double = 1.0): DataFrame = {
-    val hasDeletes = deletesExist(spark, prefix)
-    bm25Serve(spark, stats(spark, prefix),
+    val deletes = deletesOf(spark, prefix)
+    bm25Serve(spark.table(statsTable(prefix)), (0L, 0L, 0L),
       spark.table(postingsTable(prefix)),
-      if (!hasDeletes && spark.catalog.tableExists(lexiconTable(prefix)))
+      if (deletes.isEmpty && spark.catalog.tableExists(lexiconTable(prefix)))
         Some(spark.table(lexiconTable(prefix)))
       else None,
-      if (hasDeletes) Some(spark.table(deletesTable(prefix))) else None,
-      queryTerms, topk, k1, b, maxDfFrac)
+      deletes, queryTerms, topk, k1, b, maxDfFrac)
   }
 
   /** The serve plan over explicit frames — shared by the table path
     * ([[bm25TopDocs]]) and the table∪streaming-epoch path
-    * ([[bm25TopDocsWithEpochs]]). The bounded probe resolves on the
-    * driver, so the only Spark plan is the scoring scan:
-    *  1. the (qid, term) pairs are collected once and deduped here (a
-    *     local probe costs no job);
-    *  2. df for the distinct probe terms comes back in ONE collect: the
-    *     `lexicon` (term, df) rows — one per epoch — summed as exact
-    *     Longs, or, when `deletes` is given or there is no lexicon, the
+    * ([[bm25TopDocsWithEpochs]]). At most three Spark jobs on the
+    * lexicon path:
+    *  1. the bounded (qid, term) pairs are collected and deduped on the
+    *     driver (a local probe costs no job);
+    *  2. ONE [[lookup]] collect returns the stats epoch rows and the
+    *     probe terms' df rows — the `lexicon` (term, df) rows, one per
+    *     epoch, or, when `deletes` is given or there is no lexicon, the
     *     surviving pruned postings counted per term (df must count
-    *     survivors); the `maxDfFrac` cut applies to the merged df, so
-    *     its keep/drop decisions match a single-epoch rebuild;
-    *  3. one local (qid, term, df) relation broadcast-joins the posting
-    *     scan, which is `IN`-filtered to the surviving terms and stays
-    *     bucket-pruned; one (qid, doc) aggregate and the top-k window
-    *     follow, with the score arithmetic and round-before-rank of
-    *     `TextQueries.bm25Ranked`.
+    *     survivors), beside the delete vector's rows. The `maxDfFrac`
+    *     cut applies to the merged df, so its keep/drop decisions match
+    *     a single-epoch rebuild;
+    *  3. the resolved (qid, df) entries join the posting rows INSIDE the
+    *     scan stage: a term → array<(qid, df)> map literal, looked up
+    *     and inlined per posting row (no broadcast job; the lookup scans
+    *     the map's keys, which the probe contract keeps few). The scan is
+    *     `IN`-filtered to the surviving terms and stays bucket-pruned;
+    *     each row is scored there with the score arithmetic of
+    *     `TextQueries.bm25Ranked`;
+    *  4. the scored rows are hash-partitioned by qid ONCE: that
+    *     exchange satisfies both the (qid, doc) sum — rounded to 4 dp
+    *     before ranking — and the per-qid top-k window on
+    *     (bm25 DESC, doc_id ASC), which needs a query's candidates in
+    *     one task anyway.
     * A probe term absent from the index has no df and contributes
     * nothing; no surviving term gives an empty (qid, rnk, doc_id, bm25)
-    * frame. */
-  private def bm25Serve(spark: SparkSession, st: Stats, postings: DataFrame,
-      lexicon: Option[DataFrame], deletes: Option[DataFrame],
-      queryTerms: DataFrame, topk: Int, k1: Double, b: Double,
-      maxDfFrac: Double): DataFrame = {
+    * frame, which runs no job. */
+  private def bm25Serve(statsT: DataFrame, staged: (Long, Long, Long),
+      postings: DataFrame, lexicon: Option[DataFrame],
+      deletes: Option[DataFrame], queryTerms: DataFrame, topk: Int,
+      k1: Double, b: Double, maxDfFrac: Double): DataFrame = {
     require(topk > 0, "topk must be positive")
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0, "maxDfFrac in (0, 1]")
     val probe = queryTerms.select(col("qid"), col("term"))
@@ -498,25 +517,33 @@ object TextIndex {
         antiDel(postings.filter(col("term").isin(probeTerms: _*)))
           .groupBy("term").agg(count(lit(1)).as("df"))
     }
-    val df: Map[String, Long] = dfRows.collect()
-      .groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
-      .filter { case (_, d) => d <= maxDfFrac * st.n.toDouble }
-    // an empty IN list (no probe term, or no term survives) prunes its
-    // plan to an empty relation in the optimizer: it runs no job
-    val resolved = spark.createDataFrame(
-      pairs.collect { case (q, t) if df.contains(t) => Row(q, t, df(t)) }
-        .toSeq.asJava,
-      StructType(Seq(probe.schema("qid"), StructField("term", StringType),
-        StructField("df", LongType, nullable = false))))
-    val scanned = antiDel(postings
-      .filter(col("term").isin(df.keys.toSeq: _*)))
+    val lk = lookup(statsT, deletes, Some(dfRows), staged)
+    val st = lk.stats
+    val df = lk.df.filter { case (_, d) => d <= maxDfFrac * st.n.toDouble }
+    // term → the (qid, df) entries of its probe pairs, one literal; the
+    // qid field is the probe's own, so the result keeps its type and
+    // nullability
+    val entries = MapType(StringType, ArrayType(StructType(Seq(
+        probe.schema("qid"), StructField("df", LongType, nullable = false))),
+        containsNull = false), valueContainsNull = false)
+    val byTerm = pairs
+      .collect { case (q, t) if df.contains(t) => (t, Row(q, df(t))) }
+      .groupMap(_._1)(_._2)
+    val probeMap = GraftColumnBridge.column(Literal(
+      CatalystTypeConverters.createToCatalystConverter(entries)(byTerm), entries))
     val score = log(lit(1.0) +
         (lit(st.n.toDouble) - col("df") + 0.5) / (col("df") + 0.5)) *
       col("tf") * (k1 + 1.0) /
       (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / st.avgdl))
-    val scored = broadcast(resolved).join(scanned, Seq("term"))
+    // an empty IN list (no probe term, or no term survives) prunes the
+    // plan to an empty relation in the optimizer: it runs no job
+    val scored = antiDel(postings.filter(col("term").isin(df.keys.toSeq: _*)))
+      .select(col("doc_id"), col("tf"), col("dl"),
+        inline(element_at(probeMap, col("term"))))
+      .select(col("qid"), col("doc_id"), score.as("score"))
+      .repartition(col("qid"))
       .groupBy("qid", "doc_id")
-      .agg(graft.Qutil.rnd(sum(score), 4).as("bm25"))
+      .agg(graft.Qutil.rnd(sum("score"), 4).as("bm25"))
     val w = Window.partitionBy("qid")
       .orderBy(col("bm25").desc, col("doc_id").asc)
     scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= topk)
@@ -845,21 +872,19 @@ object TextIndex {
     committedEpochs(spark, root) match {
       case None => bm25TopDocs(spark, prefix, queryTerms, topk, k1, b, maxDfFrac)
       case Some((epPosts, epN, epNdl, epSumdl)) =>
-        val (n0, ndl0, sumdl0) = rawStats(spark, prefix)
-        val (nDel, ndlDel, sumdlDel) = deleteAdjust(spark, prefix)
-        val st = Stats(n0 - nDel + epN,
-          avgdlOf(ndl0 - ndlDel + epNdl, sumdl0 - sumdlDel + epSumdl))
+        val statsT = spark.table(statsTable(prefix))
+        require(statsT.columns.contains("sumdl"),
+          s"index '$prefix' predates the mergeable stats format — rebuild it")
         val postings = spark.table(postingsTable(prefix))
           .select("term", "doc_id", "tf", "dl").unionByName(epPosts)
-        val hasDel = deletesExist(spark, prefix)
+        val deletes = deletesOf(spark, prefix)
         val lex =
-          if (!hasDel && spark.catalog.tableExists(lexiconTable(prefix)))
+          if (deletes.isEmpty && spark.catalog.tableExists(lexiconTable(prefix)))
             Some(spark.table(lexiconTable(prefix)).select("term", "df")
               .unionByName(
                 epPosts.groupBy("term").agg(count(lit(1)).as("df"))))
           else None
-        bm25Serve(spark, st, postings, lex,
-          if (hasDel) Some(spark.table(deletesTable(prefix))) else None,
+        bm25Serve(statsT, (epN, epNdl, epSumdl), postings, lex, deletes,
           queryTerms, topk, k1, b, maxDfFrac)
     }
 

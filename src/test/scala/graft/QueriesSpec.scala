@@ -88,6 +88,27 @@ class QueriesSpec extends AnyFunSuite {
     assert(json("knn_pq_euclid") == full("knn_pq_euclid"))
   }
 
+  test("a names-only dump fits only the trained models its names need") {
+    // a fresh copy of the tables: no model is memoized for it yet
+    val fresh = Files.createTempDirectory("verify-fresh").toFile
+    FileUtils.copyDirectory(new java.io.File(dir), fresh)
+    val out = Files.createTempDirectory("verify-fits").toFile
+    val freshDir = fresh.toString
+    try {
+      Verify.dump(spark, freshDir, out.toString, Seq("bm25_indexed"))
+      assert(new java.io.File(out, "bm25_indexed").isDirectory)
+      assert(VectorQueries.memoized(spark, freshDir).isEmpty)
+      // one trained entry fits its own family's model and no other
+      Verify.dump(spark, freshDir, out.toString, Seq("knn_pq_euclid"))
+      assert(VectorQueries.memoized(spark, freshDir) ==
+        Seq(s"pq/s8c16/$freshDir"))
+      assert(scala.io.Source.fromFile(new java.io.File(out, "oracle_sql.json"))
+        .mkString.contains("knn_pq_euclid"))
+    } finally {
+      FileUtils.deleteDirectory(fresh); FileUtils.deleteDirectory(out)
+    }
+  }
+
   test("entry flagship returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

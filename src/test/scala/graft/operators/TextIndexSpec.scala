@@ -140,7 +140,7 @@ class TextIndexSpec extends AnyFunSuite {
     queryTerms.unpersist()
   }
 
-  test("a warm single-query serve over a local probe runs at most 6 " +
+  test("a warm single-query serve over a local probe runs at most 3 " +
       "Spark jobs") {
     built
     import spark.implicits._
@@ -152,10 +152,11 @@ class TextIndexSpec extends AnyFunSuite {
       .collect()
     assert(query().nonEmpty, "the probe terms come from the lexicon")
     val jobs = org.apache.spark.ListenerBusDrain.jobsDuring(sc)(query())
-    // stats read, df read, then one plan: broadcast, scan + partial
-    // aggregate, final aggregate, window
+    // one lookup read (stats and df rows), then one plan: the scan
+    // stage scoring each posting row, and the aggregate + window after
+    // the one exchange by qid
     info(s"$jobs jobs")
-    assert(jobs <= 6, s"$jobs jobs for one warm 3-term query")
+    assert(jobs <= 3, s"$jobs jobs for one warm 3-term query")
   }
 
   test("probe edge cases: empty probe, absent term, duplicate pairs, " +
