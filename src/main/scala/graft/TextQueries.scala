@@ -41,14 +41,60 @@ object TextQueries {
   private[graft] def incrementalTextIndex(s: SparkSession,
       dir: String): String =
     TextMemo.get(s, s"textindexinc/$dir") {
-      val p = "graft_tixinc_" + java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+      val p = perDirName("tixinc", dir)
       graft.operators.TextIndex.build(
         docs(s, dir).filter(col("doc_id") < 250), p, numBuckets = 8)
       graft.operators.TextIndex.append(
         docs(s, dir).filter(col("doc_id") >= 250), p, numBuckets = 8)
       p
     }
+
+  /** The memoized text index over all of `dir`'s documents — served by
+    * `bm25_indexed` and the BM25 leg of `bm25_phrase_boost`. */
+  private def textIndex(s: SparkSession, dir: String): String =
+    TextMemo.get(s, s"textindex/$dir") {
+      val p = perDirName("tix", dir)
+      graft.operators.TextIndex.build(docs(s, dir), p, numBuckets = 8)
+      p
+    }
+
+  /** The memoized positional index over all of `dir`'s documents —
+    * served by `phrase_search` and the phrase leg of `bm25_phrase_boost`. */
+  private def positionalIndex(s: SparkSession, dir: String): String =
+    TextMemo.get(s, s"textindexpos/$dir") {
+      val p = perDirName("tixpos", dir)
+      graft.operators.TextIndex.buildPositional(docs(s, dir), p,
+        numBuckets = 8)
+      p
+    }
+
+  /** The phrase queries (qid, phrase): the 3 tokens at token offset 4
+    * of each doc with id < `nq` and at least 6 tokens. */
+  private def phraseQueries(s: SparkSession, dir: String, nq: Int): DataFrame =
+    docs(s, dir)
+      .filter(size(split(trim(col("text")), "\\s+")) >= 6)
+      .filter(col("doc_id") < nq)
+      .select(col("doc_id").as("qid"),
+        array_join(slice(split(trim(col("text")), "\\s+"), 4, 3), " ")
+          .as("phrase"))
+
+  /** `graft_<kind>_` and the first 8 hex digits of md5(dir): a name of
+    * `dir`'s own for an artifact of `kind` (an index's table prefix, a
+    * dump path). */
+  private def perDirName(kind: String, dir: String): String =
+    s"graft_${kind}_" + java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+
+  /** BM25 top-`topk` docs from the index at `prefix`, the query docs
+    * being those with id < `nq` (their distinct terms, read from the
+    * posting table). */
+  private def bm25FromIndex(s: SparkSession, prefix: String, nq: Int,
+      topk: Int): DataFrame = {
+    val queryTerms = s.table(s"${prefix}_postings")
+      .filter(col("doc_id") < nq)
+      .select(col("doc_id").as("qid"), col("term"))
+    graft.operators.TextIndex.bm25TopDocs(s, prefix, queryTerms, topk)
+  }
 
   /** md5-derived 60-bit integer hash of a string column (portable). */
   private def md5Long(c: Column): Column = Qutil.md5Long60(c)
@@ -486,41 +532,21 @@ object TextQueries {
     // Same score arithmetic and round-before-rank as bm25_top_docs, so
     // the index-served results hash-match the SAME oracle (the whole
     // point: a user switching to the index keeps bit-identical results).
-    "bm25_indexed" -> ((s, dir) => {
-      val prefix = TextMemo.get(s, s"textindex/$dir") {
-        val p = "graft_tix_" + java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-        graft.operators.TextIndex.build(docs(s, dir), p, numBuckets = 8)
-        p
-      }
-      val queryTerms = s.table(s"${prefix}_postings")
-        .filter(col("doc_id") < 20)
-        .select(col("doc_id").as("qid"), col("term"))
-      graft.operators.TextIndex.bm25TopDocs(s, prefix, queryTerms, topk = 10)
-    }),
+    "bm25_indexed" -> ((s, dir) =>
+      bm25FromIndex(s, textIndex(s, dir), nq = 20, topk = 10)),
 
     // BM25 ⊕ exact-phrase boost: the classic "exact-match bonus"
     // retrieval composition — the BM25 top-20 head re-ranked after
     // adding 0.5 per occurrence of the query's 3-token phrase (served
     // from the battery's positional/nextword index). Both legs are
-    // bounded heads, so the fusion is one small join + window.
+    // bounded heads, so the fusion is one small join + window. The BM25
+    // head is served from the battery's text index (bit-identical to the
+    // from-scratch ranking, so the same oracle holds).
     "bm25_phrase_boost" -> ((s, dir) => {
-      val lex = bm25Ranked(s, dir, nq = 10, topk = 20)
-      val prefix = TextMemo.get(s, s"textindexpos/$dir") {
-        val p = "graft_tixpos_" + java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-        graft.operators.TextIndex.buildPositional(docs(s, dir), p,
-          numBuckets = 8)
-        p
-      }
-      val phr = docs(s, dir)
-        .filter(size(split(trim(col("text")), "\\s+")) >= 6)
-        .filter(col("doc_id") < 10)
-        .select(col("doc_id").as("qid"),
-          array_join(slice(split(trim(col("text")), "\\s+"), 4, 3), " ")
-            .as("phrase"))
+      val lex = bm25FromIndex(s, textIndex(s, dir), nq = 10, topk = 20)
       val hits = graft.operators.TextIndex
-        .phraseTopDocs(s, prefix, phr, topk = 1000)
+        .phraseTopDocs(s, positionalIndex(s, dir), phraseQueries(s, dir, 10),
+          topk = 1000)
         .select(col("qid"), col("doc_id"), col("n_hits"))
       val w = Window.partitionBy("qid")
         .orderBy(col("boosted").desc, col("doc_id").asc)
@@ -535,13 +561,8 @@ object TextQueries {
     // corpus, APPEND the other half as a new epoch (df/avgdl merge by
     // exact integer sums), serve — hash-matches the SAME oracle as the
     // build-once path, i.e. append ≡ rebuild end to end
-    "bm25_incremental" -> ((s, dir) => {
-      val prefix = incrementalTextIndex(s, dir)
-      val queryTerms = s.table(s"${prefix}_postings")
-        .filter(col("doc_id") < 20)
-        .select(col("doc_id").as("qid"), col("term"))
-      graft.operators.TextIndex.bm25TopDocs(s, prefix, queryTerms, topk = 10)
-    }),
+    "bm25_incremental" -> ((s, dir) =>
+      bm25FromIndex(s, incrementalTextIndex(s, dir), nq = 20, topk = 10)),
 
     // exact phrase search from the POSITIONAL inverted index: occurrence
     // counts by positional intersection (every (term,doc,pos) row votes
@@ -550,22 +571,9 @@ object TextQueries {
     // pruned), so the rarest term bounds the work — the classic
     // inverted-index phrase-query shape. Queries: the 3-token phrase at
     // token offset 4 of each doc with id < 20 (guaranteed ≥ 1 self-hit).
-    "phrase_search" -> ((s, dir) => {
-      val prefix = TextMemo.get(s, s"textindexpos/$dir") {
-        val p = "graft_tixpos_" + java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-        graft.operators.TextIndex.buildPositional(docs(s, dir), p,
-          numBuckets = 8)
-        p
-      }
-      val phr = docs(s, dir)
-        .filter(size(split(trim(col("text")), "\\s+")) >= 6)
-        .filter(col("doc_id") < 20)
-        .select(col("doc_id").as("qid"),
-          array_join(slice(split(trim(col("text")), "\\s+"), 4, 3), " ")
-            .as("phrase"))
-      graft.operators.TextIndex.phraseTopDocs(s, prefix, phr, topk = 10)
-    }),
+    "phrase_search" -> ((s, dir) =>
+      graft.operators.TextIndex.phraseTopDocs(s, positionalIndex(s, dir),
+        phraseQueries(s, dir, 20), topk = 10)),
 
     // DSIR-style importance resampling (hashed unigram+bigram LM ratio
     // vs a target corpus — here sources src0/src1): the published LLM
@@ -1211,10 +1219,7 @@ object TextQueries {
     // WarcSpec's gate, the extraction hash is this one's.
     "warc_extract" -> ((s, dir) => {
       val path = TextMemo.get(s, s"warcdump/$dir") {
-        val p = "/tmp/graft_warc_" +
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(dir.getBytes("UTF-8")).take(4)
-            .map("%02x".format(_)).mkString
+        val p = "/tmp/" + perDirName("warc", dir)
         val fs = new org.apache.hadoop.fs.Path(p)
           .getFileSystem(s.sparkContext.hadoopConfiguration)
         fs.delete(new org.apache.hadoop.fs.Path(p), true)
@@ -1241,10 +1246,7 @@ object TextQueries {
     // hash gates decompress + decode + extract end to end.
     "warc_gz_extract" -> ((s, dir) => {
       val path = TextMemo.get(s, s"warcgzdump/$dir") {
-        val p = "/tmp/graft_warcgz_" +
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(dir.getBytes("UTF-8")).take(4)
-            .map("%02x".format(_)).mkString
+        val p = "/tmp/" + perDirName("warcgz", dir)
         val fs = new org.apache.hadoop.fs.Path(p)
           .getFileSystem(s.sparkContext.hadoopConfiguration)
         fs.delete(new org.apache.hadoop.fs.Path(p), true)
@@ -1319,16 +1321,19 @@ object TextQueries {
       |   ON a.band = b.band AND a.mh0 = b.mh0 AND a.mh1 = b.mh1
       |    AND a.doc_id < b.doc_id)""".stripMargin
 
-  /** Shared by `bm25_top_docs` and the index-served `bm25_indexed`. */
-  private val bm25Sql: String =
-    """WITH toks AS (SELECT doc_id,
+  /** DuckDB BM25 (k1=1.2, b=0.75) of every doc against each query doc
+    * with id < `nq`: a WITH prefix ending in `sc(qid, doc_id, bm25)`, the
+    * sum rounded to 4 dp before any ranking — the twin of [[bm25Ranked]]
+    * and of the index-served path. */
+  private[graft] def bm25ScoredCte(nq: Int): String =
+    raw"""WITH toks AS (SELECT doc_id,
       |   unnest(string_split_regex(trim(text),'\s+')) AS term FROM documents),
       | tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
       | dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
       | stats AS (SELECT avg(dl) AS avgdl FROM dl),
       | dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
       | n AS (SELECT count(*) AS n FROM documents),
-      | qt AS (SELECT DISTINCT doc_id AS qid, term FROM tf WHERE doc_id < 20),
+      | qt AS (SELECT DISTINCT doc_id AS qid, term FROM tf WHERE doc_id < $nq),
       | sc AS (SELECT qt.qid, tf.doc_id,
       |   floor((sum(ln(1.0 + (n.n - dft.df + 0.5)/(dft.df + 0.5))
       |     * tf.tf * 2.2
@@ -1337,7 +1342,11 @@ object TextQueries {
       |  FROM qt JOIN tf USING (term) JOIN dft USING (term)
       |    JOIN dl ON dl.doc_id = tf.doc_id
       |    CROSS JOIN n CROSS JOIN stats
-      |  GROUP BY 1, 2)
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** Shared by `bm25_top_docs` and the index-served `bm25_indexed`. */
+  private val bm25Sql: String =
+    s"""${bm25ScoredCte(20)}
       |SELECT qid, rnk, doc_id, bm25 FROM (
       |  SELECT *, row_number() OVER (PARTITION BY qid
       |    ORDER BY bm25 DESC, doc_id) AS rnk FROM sc)
@@ -1937,23 +1946,7 @@ object TextQueries {
     // BM25 head + exact-phrase occurrence bonus, re-ranked — both legs
     // are the already-oracled pipelines, composed
     "bm25_phrase_boost" ->
-      """WITH toks AS (SELECT doc_id,
-        |   unnest(string_split_regex(trim(text),'\s+')) AS term FROM documents),
-        | tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        | dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-        | stats AS (SELECT avg(dl) AS avgdl FROM dl),
-        | dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        | n AS (SELECT count(*) AS n FROM documents),
-        | qt AS (SELECT DISTINCT doc_id AS qid, term FROM tf WHERE doc_id < 10),
-        | sc AS (SELECT qt.qid, tf.doc_id,
-        |   floor((sum(ln(1.0 + (n.n - dft.df + 0.5)/(dft.df + 0.5))
-        |     * tf.tf * 2.2
-        |     / (tf.tf + 1.2*(1.0 - 0.75 + 0.75*dl.dl/stats.avgdl))))*1e4
-        |     + 0.5)/1e4 AS bm25
-        |  FROM qt JOIN tf USING (term) JOIN dft USING (term)
-        |    JOIN dl ON dl.doc_id = tf.doc_id
-        |    CROSS JOIN n CROSS JOIN stats
-        |  GROUP BY 1, 2),
+      (bm25ScoredCte(10) + """,
         | bm AS (SELECT qid, doc_id, bm25 FROM (
         |   SELECT *, row_number() OVER (PARTITION BY qid
         |     ORDER BY bm25 DESC, doc_id) AS rnk FROM sc) WHERE rnk <= 20),
@@ -1978,7 +1971,7 @@ object TextQueries {
         |      floor((b.bm25 + 0.5*coalesce(p.n_hits, 0))*1e4 + 0.5)/1e4 DESC,
         |      b.doc_id) AS rnk
         |  FROM bm b LEFT JOIN perdoc p ON p.qid = b.qid AND p.doc_id = b.doc_id)
-        |WHERE rnk <= 10""".stripMargin,
+        |WHERE rnk <= 10""".stripMargin),
     // span-corruption masks — exact integer pipeline, hash-seeded starts
     "span_corruption" ->
       """WITH d AS (SELECT doc_id,

@@ -112,31 +112,54 @@ object VectorQueries {
     KnnJoin.exactKnnJoin(emb(s, dir), probes(s, dir), k = 10,
       metric = metric, scoreDigits = scoreDigits)
 
-  private def knnHnswRes(s: SparkSession, dir: String): DataFrame =
-    hnswModel(s, dir).knnJoin(probes(s, dir), k = 10, Some(100))
+  /** The battery's 100 probes as a DuckDB relation (query_id, qv). */
+  private val probesSql =
+    """(SELECT vec_id AS query_id, embedding AS qv
+      |   FROM embeddings WHERE vec_id < 100)""".stripMargin
 
-  private def knnLshRes(s: SparkSession, dir: String): DataFrame =
-    AnnLsh.lshKnnJoin(emb(s, dir), probes(s, dir), k = 10,
-      numPlanes = 6, d = 64, numTables = 4, scoreDigits = 6)
+  /** DuckDB twin of [[KnnJoin.exactKnnJoin]] over the `embeddings` rows
+    * `e` that pass `where`: the top `k` of each probe of the relation `q`
+    * (query_id, qv) by `metric`, scores floor-rounded to 1e-6 before
+    * ranking, ties by neighbor_id. */
+  private def exactTopkSql(metric: String, q: String, k: Int = 10,
+      where: String = "true"): String = {
+    val e = "CAST(e.embedding AS DOUBLE[])"
+    val qv = "CAST(q.qv AS DOUBLE[])"
+    val sim = metric match {
+      case "cosine" => s"list_cosine_similarity($e, $qv)"
+      case "euclidean" => s"1.0/(1.0 + list_distance($e, $qv))"
+      case "dot" => s"list_inner_product($e, $qv)"
+    }
+    s"""SELECT query_id, neighbor_id, score, rank FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY query_id
+       |    ORDER BY score DESC, neighbor_id) AS rank FROM (
+       |   SELECT q.query_id, e.vec_id AS neighbor_id,
+       |    floor(($sim)*1e6 + 0.5)/1e6 AS score
+       |   FROM embeddings e, $q q WHERE $where))
+       |WHERE rank <= $k""".stripMargin
+  }
 
-  private def knnIvfRes(s: SparkSession, dir: String): DataFrame =
-    graft.operators.IvfFlat.knnJoin(ivfModel(s, dir), probes(s, dir),
-      k = 10, nprobe = 4, scoreDigits = 6)
+  /** An ANN family's DuckDB twin: `cte` is a WITH prefix ending in the
+    * CTE `topk` (query_id, neighbor_id, score, rank) over the battery's
+    * probes, which it reads from the relation `q` (query_id, qv). */
+  private final case class AnnCte(cte: String, topk: String, q: String)
 
-  private def knnPqRes(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Pq.knnJoin(pqModel(s, dir), emb(s, dir),
-      probes(s, dir), k = 10, rerank = 100, scoreDigits = 6,
-      adcDigits = 9)
-
-  private def knnOpqRes(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Opq.knnJoin(opqModel(s, dir), emb(s, dir),
-      probes(s, dir), k = 10, rerank = 100, scoreDigits = 6,
-      adcDigits = 9)
-
-  private def knnIvfpqRes(s: SparkSession, dir: String): DataFrame =
-    graft.operators.IvfPq.knnJoin(ivfpqModel(s, dir), emb(s, dir),
-      probes(s, dir), k = 10, nprobe = 6, rerank = 150,
-      scoreDigits = 6, adcDigits = 9)
+  /** One ANN family, declared once. It yields the entry
+    * `knn_<name>_<metric>` (`serve`: the top-10 of the 100 probes) and
+    * `recall_<name>` (the micro-averaged recall@10 of `serve` against the
+    * exact top-10 scored at `digits`), and, unless the family is
+    * rows-only (`oracle` None), both DuckDB twins from `oracle`'s CTE. A
+    * trained family's CTE carries its memoized model's literals; `fit`
+    * names that model, and the twins are built only when a key of the
+    * fit is wanted ([[SparkEntry.fittedFamily]]). */
+  private final case class Ann(name: String, metric: String, digits: Int,
+      serve: (SparkSession, String) => DataFrame,
+      oracle: Option[(SparkSession, String) => AnnCte] = None,
+      fit: Option[String] = None) {
+    val knnKey = s"knn_${name}_${if (metric == "euclidean") "euclid" else metric}"
+    val recallKey = s"recall_$name"
+    def keys: Seq[String] = Seq(knnKey, recallKey)
+  }
 
   private def ivfHnswModel(s: SparkSession, dir: String): graft.hnsw.IvfHnsw.Model =
     ModelMemo.get(s, s"ivfhnsw/c8m16/$dir")(
@@ -144,47 +167,230 @@ object VectorQueries {
         graft.hnsw.HnswParams(m = 16, efConstruction = 200),
         balanceSlack = 0.2))
 
-  private def knnIvfHnswRes(s: SparkSession, dir: String): DataFrame =
-    graft.hnsw.IvfHnsw.knnJoin(ivfHnswModel(s, dir), probes(s, dir),
-      k = 10, nprobe = 4)
+  private val anns: Seq[Ann] = Seq(
+    // O3-O12: distributed HNSW approximate k-NN (4 partition-local
+    // sub-indexes, shard-and-search). Non-SQL-expressible → rows-only gate;
+    // quality is asserted by recall_hnsw (B6/B7 micro-averaged recall@10
+    // vs the exact oracle) and the ScalaTest suite.
+    Ann("hnsw", "cosine", -1, (s, dir) =>
+      hnswModel(s, dir).knnJoin(probes(s, dir), k = 10, Some(100))),
 
-  private def knnSqRes(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sq.knnJoin(
-      ModelMemo.get(s, s"sq/8bit/$dir")(
-        graft.operators.Sq.fit(emb(s, dir))),
-      emb(s, dir), probes(s, dir), k = 10, rerank = 100,
-      scoreDigits = 6)
+    // LSH-bucketed ANN (the non-graph scale path): signature equi-join +
+    // rerank. The hyperplanes are pure (seed, plane, dim) functions, so the
+    // WHOLE approximate path is cross-engine oracle-checked: the DuckDB
+    // oracle recomputes the same signatures from double literals of the
+    // same planes (scores fixed-point-rounded before ranking on both sides).
+    Ann("lsh", "cosine", 6, (s, dir) =>
+      AnnLsh.lshKnnJoin(emb(s, dir), probes(s, dir), k = 10,
+        numPlanes = 6, d = 64, numTables = 4, scoreDigits = 6),
+      Some((_, _) => AnnCte(lshKnnCte, "lsh_topk", probesSql))),
 
-  private def knnBqRes(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Bq.knnJoin(
-      ModelMemo.get(s, s"bq/1bit/$dir")(
-        graft.operators.Bq.fit(emb(s, dir))),
-      emb(s, dir), probes(s, dir), k = 10, rerank = 100,
-      scoreDigits = 6)
+    // IVF-Flat ANN (coarse-quantized scale path). Oracle-checked like
+    // LSH/SQ8: the trained centroids are emitted as DuckDB literals from
+    // the memoized [[ivfModel]], so the WHOLE approximate path
+    // hash-matches cross-engine.
+    Ann("ivf", "cosine", 6, (s, dir) =>
+      graft.operators.IvfFlat.knnJoin(ivfModel(s, dir), probes(s, dir),
+        k = 10, nprobe = 4, scoreDigits = 6),
+      Some((s, dir) => AnnCte(graft.operators.IvfFlat.duckdbTopkCte(
+        ivfModel(s, dir).centroids, nprobe = 4, k = 10), "ivf_topk", "ivf_q")),
+      Some("ivf")),
 
-  private def knnRabitqRes(s: SparkSession, dir: String): DataFrame =
-    graft.operators.RabitQ.knnJoin(rabitqModel(s, dir), emb(s, dir),
-      probes(s, dir), k = 10, rerank = 100, scoreDigits = 6)
+    // PQ ANN (memory-bound scale path: 8-byte codes + ADC scan + exact
+    // rerank). Oracle-checked like LSH/SQ8/IVF: the trained codebooks are
+    // emitted as DuckDB literals from the memoized [[pqModel]], ADC
+    // distances rank by the shared 1e-9-rounded (dist, cand_id) total
+    // order, rerank scores by the 1e-6-rounded one — the WHOLE
+    // product-code path hash-matches cross-engine. OperatorsSpec
+    // additionally asserts recall floors incl. the exhaustive-rerank
+    // exactness case.
+    Ann("pq", "euclidean", 6, (s, dir) =>
+      graft.operators.Pq.knnJoin(pqModel(s, dir), emb(s, dir),
+        probes(s, dir), k = 10, rerank = 100, scoreDigits = 6,
+        adcDigits = 9),
+      Some((s, dir) => AnnCte(graft.operators.Pq.duckdbTopkCte(
+        pqModel(s, dir).codebooks, rerank = 100, k = 10), "pq_topk", "pq_q")),
+      Some("pq")),
 
-  private def knnIvfBqRes(s: SparkSession, dir: String): DataFrame =
-    graft.operators.IvfBq.knnJoin(
-      ModelMemo.get(s, s"ivfbq/c16r/$dir")(
-        graft.operators.IvfBq.fromIvf(ivfModel(s, dir))),
-      emb(s, dir), probes(s, dir), k = 10, nprobe = 4, rerank = 100,
-      scoreDigits = 6)
+    // IVF-PQ (the composed largest-corpus path: nprobe cell pruning ×
+    // OPQ-rotated residual PQ codes in PACKED 4-bit nibbles × exact
+    // rerank). Oracle-checked like its parents: every trained artifact
+    // (centroids, codebooks, rotation) is emitted as DuckDB literals and
+    // every stage's arithmetic + tie order is mirrored exactly
+    // ([[graft.operators.IvfPq.duckdbTopkCte]]) — the full composed
+    // approximate path hash-matches cross-engine. Spec additionally
+    // asserts recall floors incl. the all-cells/full-rerank exactness
+    // case and packed ≡ unpacked.
+    Ann("ivfpq", "euclidean", 6, (s, dir) =>
+      graft.operators.IvfPq.knnJoin(ivfpqModel(s, dir), emb(s, dir),
+        probes(s, dir), k = 10, nprobe = 6, rerank = 150,
+        scoreDigits = 6, adcDigits = 9),
+      Some { (s, dir) =>
+        val m = ivfpqModel(s, dir)
+        AnnCte(graft.operators.IvfPq.duckdbTopkCte(m.centroids, m.codebooks,
+          m.rotation, nprobe = 6, rerank = 150, k = 10), "pq_topk", "ipq_q")
+      },
+      Some("ivfpq")),
 
-  private def knnIvfRabitqRes(s: SparkSession, dir: String): DataFrame =
-    graft.operators.IvfRabitq.knnJoin(ivfRabitqModel(s, dir),
-      emb(s, dir), probes(s, dir), k = 10, nprobe = 4, rerank = 100,
-      scoreDigits = 6)
+    // hybrid IVF→HNSW (cell-routed graph ANN): coarse cells bound WHICH
+    // sub-graphs a query touches (nprobe/C of the corpus — sublinear,
+    // unlike shard-and-search HNSW which fans every query to every
+    // shard), per-cell HNSW answers inside them. Rows-only gate; spec
+    // asserts recall floors incl. the all-cells == shard-and-search case.
+    // balanceSlack = 0.2 explicitly (see ivfHnswModel): the battery ran
+    // with the capped assignment in round 5
+    Ann("ivfhnsw", "cosine", -1, (s, dir) =>
+      graft.hnsw.IvfHnsw.knnJoin(ivfHnswModel(s, dir), probes(s, dir),
+        k = 10, nprobe = 4)),
 
-  private def knnMrlRes(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Mrl.knnJoinTruncated(emb(s, dir), probes(s, dir),
-      k = 10, prefixDims = 16, rerank = 100, scoreDigits = 6)
+    // OPQ (learned-rotation PQ): same ADC+rerank scan as PQ, better code
+    // quality under correlated dims. Oracle-checked like PQ — the learned
+    // rotation is emitted as explicit left-associative dot-product
+    // expressions CAST to REAL (bit-identical to [[Opq.rotate]]), then the
+    // shared rounded-ADC/rerank total orders apply. Spec additionally
+    // asserts the objective + recall floor.
+    Ann("opq", "euclidean", 6, (s, dir) =>
+      graft.operators.Opq.knnJoin(opqModel(s, dir), emb(s, dir),
+        probes(s, dir), k = 10, rerank = 100, scoreDigits = 6,
+        adcDigits = 9),
+      Some { (s, dir) =>
+        val m = opqModel(s, dir)
+        AnnCte(graft.operators.Opq.duckdbTopkCte(m.rotation, m.pq.codebooks,
+          rerank = 100, k = 10), "pq_topk", "pq_q")
+      },
+      Some("opq")),
 
-  private def knnPcaRes(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Pca.knnJoin(pcaModel(s, dir), emb(s, dir),
-      probes(s, dir), k = 10, rerank = 100, scoreDigits = 6)
+    // SQ8 (scalar quantization): 4x-compressed int8 codes, ADC scan +
+    // exact rerank. The encode is closed-form double arithmetic over
+    // per-dim min/max, so — like the LSH path — the WHOLE approximate
+    // pipeline is cross-engine ORACLE-checked: the DuckDB oracle
+    // recomputes identical codes, ranks candidates by the same
+    // (1e-9-rounded dist, cand_id) total order, and reranks with the
+    // same rounded euclidean scores.
+    Ann("sq", "euclidean", 6, (s, dir) =>
+      graft.operators.Sq.knnJoin(
+        ModelMemo.get(s, s"sq/8bit/$dir")(
+          graft.operators.Sq.fit(emb(s, dir))),
+        emb(s, dir), probes(s, dir), k = 10, rerank = 100,
+        scoreDigits = 6),
+      Some((_, _) => AnnCte(sqTopCte, "sq_topk", "q"))),
+
+    // BQ (binary/sign quantization): 1 bit/dim packed into longs — 32×
+    // smaller than float32; XOR+popcount Hamming scan + exact cosine
+    // rerank. Midrange thresholds are order-independent exact arithmetic
+    // and the candidate key (hamming, cand_id) is integer-valued, so the
+    // WHOLE pipeline is cross-engine oracle-checked with no rounding
+    // epsilon before the shared 1e-6 rerank.
+    Ann("bq", "cosine", 6, (s, dir) =>
+      graft.operators.Bq.knnJoin(
+        ModelMemo.get(s, s"bq/1bit/$dir")(
+          graft.operators.Bq.fit(emb(s, dir))),
+        emb(s, dir), probes(s, dir), k = 10, rerank = 100,
+        scoreDigits = 6),
+      Some((_, _) => AnnCte(graft.operators.Bq.duckdbTopkCte(64), "bq_topk", "q"))),
+
+    // RaBitQ (Gao & Long, SIGMOD 2024): seeded random rotation → sign
+    // bits + ONE per-vector correction factor, served by the paper's
+    // unbiased real-valued estimator instead of integer Hamming — the
+    // answer to the round-10 BASELINE finding that plain BQ collapses at
+    // d≥768 from Hamming-tie mass. Rotation is trained-literal data, all
+    // derived arithmetic is explicit left-associative folds, so the WHOLE
+    // pipeline is cross-engine oracle-checked like [[Pca]]/[[Opq]].
+    Ann("rabitq", "cosine", 6, (s, dir) =>
+      graft.operators.RabitQ.knnJoin(rabitqModel(s, dir), emb(s, dir),
+        probes(s, dir), k = 10, rerank = 100, scoreDigits = 6),
+      Some((s, dir) => AnnCte(graft.operators.RabitQ.duckdbTopkCte(
+        rabitqModel(s, dir).rotation, nQueries = 100, rerank = 100, k = 10),
+        "rbq_topk", "rbq_q")),
+      Some("rabitq")),
+
+    // IVF × BQ: the composition the round-8 compressed-scan ladder
+    // measured its way to — cell-routed Hamming scan (scan AND candidate
+    // exchange both divided by nprobe/C) + exact cosine rerank, with
+    // RESIDUAL sign codes (bits of v − centroid[cell]) so the code
+    // discriminates inside the cell the probe lands in. Composed from
+    // the battery's memoized IVF quantizer, so the whole trained
+    // pipeline is cross-engine oracle-checked from centroid literals.
+    Ann("ivfbq", "cosine", 6, (s, dir) =>
+      graft.operators.IvfBq.knnJoin(
+        ModelMemo.get(s, s"ivfbq/c16r/$dir")(
+          graft.operators.IvfBq.fromIvf(ivfModel(s, dir))),
+        emb(s, dir), probes(s, dir), k = 10, nprobe = 4, rerank = 100,
+        scoreDigits = 6),
+      Some((s, dir) => AnnCte(graft.operators.IvfBq.duckdbTopkCte(
+        ivfModel(s, dir).centroids, d = 64, nprobe = 4, rerank = 100,
+        k = 10, residual = true), "ivfbq_topk", "ivf_q")),
+      Some("ivf")),
+
+    // IVF × RaBitQ: the paper's own deployment shape — residual sign
+    // bits + per-vector factor behind the coarse quantizer, ranked by
+    // the real-valued normalized estimator instead of residual Hamming.
+    // Composed from the battery's memoized IVF quantizer so the whole
+    // trained pipeline is oracle-checked from centroid + rotation
+    // literals.
+    Ann("ivfrabitq", "cosine", 6, (s, dir) =>
+      graft.operators.IvfRabitq.knnJoin(ivfRabitqModel(s, dir),
+        emb(s, dir), probes(s, dir), k = 10, nprobe = 4, rerank = 100,
+        scoreDigits = 6),
+      Some { (s, dir) =>
+        val m = ivfRabitqModel(s, dir)
+        AnnCte(graft.operators.IvfRabitq.duckdbTopkCte(m.centroids,
+          m.rotation, m.rotCents, nprobe = 4, rerank = 100, k = 10,
+          nQueries = 100), "ivfrbq_topk", "ivf_q")
+      },
+      Some("ivfrabitq")),
+
+    // MRL (matryoshka) truncated-dim retrieval: candidates by cosine on
+    // the first 16 of 64 dims (4× fewer bytes touched in the scan stage),
+    // exact full-dim rerank. Fully declarative — two windows, no shuffle
+    // of the base data — and fully cross-engine oracle-checked.
+    Ann("mrl", "cosine", 6, (s, dir) =>
+      graft.operators.Mrl.knnJoinTruncated(emb(s, dir), probes(s, dir),
+        k = 10, prefixDims = 16, rerank = 100, scoreDigits = 6),
+      Some((_, _) => AnnCte(graft.operators.Mrl.duckdbTopkCte(16), "mrl_topk", "q"))),
+
+    // PCA-projected retrieval (trained dimensionality reduction): top-16
+    // principal components learned from a seeded sample, candidates by
+    // cosine in the projected space, exact full-dim rerank. The trained
+    // (mean, weights) are emitted as DuckDB literals from the memoized
+    // [[pcaModel]], so the WHOLE pipeline hash-matches cross-engine — the
+    // learned twin of knn_mrl_cosine for embeddings without matryoshka
+    // training.
+    Ann("pca", "cosine", 6, (s, dir) =>
+      graft.operators.Pca.knnJoin(pcaModel(s, dir), emb(s, dir),
+        probes(s, dir), k = 10, rerank = 100, scoreDigits = 6),
+      Some { (s, dir) =>
+        val m = pcaModel(s, dir)
+        AnnCte(graft.operators.Pca.duckdbTopkCte(m.mean, m.weights,
+          nQueries = 100, rerank = 100, k = 10), "pca_topk", "pca_q")
+      },
+      Some("pca")))
+
+  /** `recall_<f>`'s DuckDB twin: `o.topk` against the exact top-10 of the
+    * same probes, micro-averaged like [[Recall.microAvgRecall]]. */
+  private def recallSql(metric: String, o: AnnCte): String =
+    s"""${o.cte},
+       | exact_topk AS (
+       |${exactTopkSql(metric, o.q)}),
+       | per_q AS (SELECT x.query_id, CAST(count(*) AS BIGINT) AS total,
+       |    CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS hits
+       |   FROM exact_topk x LEFT JOIN ${o.topk} a
+       |    ON a.query_id = x.query_id AND a.neighbor_id = x.neighbor_id
+       |   GROUP BY x.query_id)
+       |SELECT CAST(count(*) AS BIGINT) AS n_queries,
+       | CAST(sum(hits) AS BIGINT) AS hits, CAST(sum(total) AS BIGINT) AS total,
+       | CAST(sum(hits) AS DOUBLE)/CAST(sum(total) AS DOUBLE) AS recall
+       |FROM per_q""".stripMargin
+
+  /** Family `a`'s two DuckDB twins. */
+  private def annSql(a: Ann, s: SparkSession, dir: String): Map[String, String] = {
+    val o = a.oracle.get(s, dir)
+    Map(a.knnKey ->
+        s"""${o.cte}
+           |SELECT query_id, neighbor_id, score, rank FROM ${o.topk}""".stripMargin,
+      a.recallKey -> recallSql(a.metric, o))
+  }
 
   /** Synthetic media table with REAL payloads: each embedding quantized
     * to 0..255 and encoded as an actual 8x8 grayscale BMP by the JDK
@@ -299,18 +505,23 @@ object VectorQueries {
     // rrf_fusion_bm25 and rank_quality, making the second entry a cache
     // read (VERDICT r14: gaming). Each entry recomputes the lexical +
     // vector legs and the fuse — its declared computation.
-    val nq = 10
-    val lexical = graft.TextQueries.bm25Ranked(s, dir, nq = nq, topk = 20)
+    rrfFused(s, dir, graft.TextQueries.bm25Ranked(s, dir, nq = 10, topk = 20)
       .select(col("qid").as("query_id"), col("doc_id"),
-        col("rnk").as("rank"))
-    val vector = KnnJoin.exactKnnJoin(emb(s, dir), probes(s, dir, nq),
+        col("rnk").as("rank")))
+  }
+
+  /** RRF top-10 of a lexical top-20 (query_id, doc_id, rank) of the first
+    * 10 docs fused with the exact-cosine top-20 of the first 10 vectors. */
+  private def rrfFused(s: SparkSession, dir: String,
+      lexical: DataFrame): DataFrame = {
+    val vector = KnnJoin.exactKnnJoin(emb(s, dir), probes(s, dir, 10),
         k = 20, metric = "cosine", scoreDigits = 6)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"),
-        col("rank"))
+      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
     graft.operators.Rrf.fuse(lexical, vector, k = 10)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     // B5 exact k-NN, cosine — queries are the first 100 base vectors
     // (reference semantics, src/bench/run.ts:121-122: queries ⊆ base)
     "knn_exact_cosine" -> ((s, dir) =>
@@ -381,27 +592,6 @@ object VectorQueries {
         .filter(col("cos_sim") >= 0.4)
     }),
 
-    // O3-O12: distributed HNSW approximate k-NN (4 partition-local
-    // sub-indexes, shard-and-search). Non-SQL-expressible → rows-only gate;
-    // quality is asserted by recall_hnsw below and the ScalaTest suite.
-    "knn_hnsw_cosine" -> ((s, dir) => knnHnswRes(s, dir)),
-
-    // B6/B7 micro-averaged recall@10 of the HNSW path vs the exact oracle
-    "recall_hnsw" -> ((s, dir) =>
-      Recall.microAvgRecall(knnHnswRes(s, dir),
-        exactKnn10(s, dir, "cosine", scoreDigits = -1))),
-
-    // LSH-bucketed ANN (the non-graph scale path): signature equi-join +
-    // rerank. The hyperplanes are pure (seed, plane, dim) functions, so the
-    // WHOLE approximate path is cross-engine oracle-checked: the DuckDB
-    // oracle recomputes the same signatures from double literals of the
-    // same planes (scores fixed-point-rounded before ranking on both sides).
-    "knn_lsh_cosine" -> ((s, dir) => knnLshRes(s, dir)),
-
-    "recall_lsh" -> ((s, dir) =>
-      Recall.microAvgRecall(knnLshRes(s, dir),
-        exactKnn10(s, dir, "cosine", scoreDigits = 6))),
-
     // the scale-safe near-dup path: LSH bucket prefilter + exact cosine
     // rerank — same output contract as near_dup_embeddings (which stays
     // only as the small-sf brute-force oracle twin). No cartesian anywhere
@@ -432,55 +622,6 @@ object VectorQueries {
     "cluster_eval" -> ((s, dir) =>
       graft.operators.ClusterEval.eval(ivfModel(s, dir),
         emb(s, dir).select("vec_id", "label"))),
-
-    // IVF-Flat ANN (coarse-quantized scale path). Oracle-checked like
-    // LSH/SQ8: the trained centroids are emitted as DuckDB literals at
-    // Verify-dump time ([[ivfModel]] records them), so the WHOLE
-    // approximate path hash-matches cross-engine.
-    "knn_ivf_cosine" -> ((s, dir) => knnIvfRes(s, dir)),
-
-    // B6/B7 micro-averaged recall@10 of the IVF path vs the exact oracle
-    "recall_ivf" -> ((s, dir) =>
-      Recall.microAvgRecall(knnIvfRes(s, dir),
-        exactKnn10(s, dir, "cosine", scoreDigits = 6))),
-
-    // PQ ANN (memory-bound scale path: 8-byte codes + ADC scan + exact
-    // rerank). Oracle-checked like LSH/SQ8/IVF: the trained codebooks are
-    // emitted as DuckDB literals at Verify-dump time ([[pqModel]] records
-    // them), ADC distances rank by the shared 1e-9-rounded (dist, cand_id)
-    // total order, rerank scores by the 1e-6-rounded one — the WHOLE
-    // product-code path hash-matches cross-engine. OperatorsSpec
-    // additionally asserts recall floors incl. the exhaustive-rerank
-    // exactness case.
-    "knn_pq_euclid" -> ((s, dir) => knnPqRes(s, dir)),
-
-    "recall_pq" -> ((s, dir) =>
-      Recall.microAvgRecall(knnPqRes(s, dir),
-        exactKnn10(s, dir, "euclidean", scoreDigits = 6))),
-
-    // IVF-PQ (the composed largest-corpus path: nprobe cell pruning ×
-    // OPQ-rotated residual PQ codes in PACKED 4-bit nibbles × exact
-    // rerank). Oracle-checked like its parents: every trained artifact
-    // (centroids, codebooks, rotation) is emitted as DuckDB literals and
-    // every stage's arithmetic + tie order is mirrored exactly
-    // ([[graft.operators.IvfPq.duckdbTopkCte]]) — the full composed
-    // approximate path hash-matches cross-engine. Spec additionally
-    // asserts recall floors incl. the all-cells/full-rerank exactness
-    // case and packed ≡ unpacked.
-    "knn_ivfpq_euclid" -> ((s, dir) => knnIvfpqRes(s, dir)),
-
-    // hybrid IVF→HNSW (cell-routed graph ANN): coarse cells bound WHICH
-    // sub-graphs a query touches (nprobe/C of the corpus — sublinear,
-    // unlike shard-and-search HNSW which fans every query to every
-    // shard), per-cell HNSW answers inside them. Rows-only gate; spec
-    // asserts recall floors incl. the all-cells == shard-and-search case.
-    // balanceSlack = 0.2 explicitly (see ivfHnswModel): the battery ran
-    // with the capped assignment in round 5
-    "knn_ivfhnsw_cosine" -> ((s, dir) => knnIvfHnswRes(s, dir)),
-
-    "recall_ivfhnsw" -> ((s, dir) =>
-      Recall.microAvgRecall(knnIvfHnswRes(s, dir),
-        exactKnn10(s, dir, "cosine", scoreDigits = -1))),
 
     // metadata-FILTERED ANN with a k-result guarantee
     // ([[graft.operators.FilteredAnn]]): probe-then-filter escalates the
@@ -529,22 +670,17 @@ object VectorQueries {
     // rank arithmetic is exactly SQL-expressible, so the whole composition
     // is cross-engine oracle-checked.
     "rrf_fusion" -> ((s, dir) => {
-      val nq = 10
       val d = s.read.parquet(s"$dir/documents.parquet")
       val terms = d.select(col("doc_id"),
         explode(array_distinct(split(trim(col("text")), "\\s+"))).as("term"))
-      val overlap = terms.filter(col("doc_id") < nq)
+      val overlap = terms.filter(col("doc_id") < 10)
         .select(col("doc_id").as("query_id"), col("term"))
         .join(terms, Seq("term"))
         .groupBy("query_id", "doc_id").agg(count(lit(1)).as("overlap"))
       val wl = Window.partitionBy("query_id")
         .orderBy(col("overlap").desc, col("doc_id").asc)
-      val lexical = overlap.withColumn("rank", row_number().over(wl))
-        .filter(col("rank") <= 20).select("query_id", "doc_id", "rank")
-      val vector = KnnJoin.exactKnnJoin(emb(s, dir), probes(s, dir, nq),
-          k = 20, metric = "cosine", scoreDigits = 6)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-      graft.operators.Rrf.fuse(lexical, vector, k = 10)
+      rrfFused(s, dir, overlap.withColumn("rank", row_number().over(wl))
+        .filter(col("rank") <= 20).select("query_id", "doc_id", "rank"))
     }),
 
     // RRF fusion with the REAL lexical scorer: BM25 top-20 per query doc
@@ -568,107 +704,6 @@ object VectorQueries {
         .select(col("query_id"), col("neighbor_id").as("doc_id"))
       graft.operators.RankEval.rankMetrics(fused, truth, k = 10)
     }),
-
-    // OPQ (learned-rotation PQ): same ADC+rerank scan as PQ, better code
-    // quality under correlated dims. Oracle-checked like PQ — the learned
-    // rotation is emitted as explicit left-associative dot-product
-    // expressions CAST to REAL (bit-identical to [[Opq.rotate]]), then the
-    // shared rounded-ADC/rerank total orders apply. Spec additionally
-    // asserts the objective + recall floor.
-    "knn_opq_euclid" -> ((s, dir) => knnOpqRes(s, dir)),
-
-    // SQ8 (scalar quantization): 4x-compressed int8 codes, ADC scan +
-    // exact rerank. The encode is closed-form double arithmetic over
-    // per-dim min/max, so — like the LSH path — the WHOLE approximate
-    // pipeline is cross-engine ORACLE-checked: the DuckDB oracle
-    // recomputes identical codes, ranks candidates by the same
-    // (1e-9-rounded dist, cand_id) total order, and reranks with the
-    // same rounded euclidean scores.
-    "knn_sq_euclid" -> ((s, dir) => knnSqRes(s, dir)),
-
-    "recall_sq" -> ((s, dir) =>
-      Recall.microAvgRecall(knnSqRes(s, dir),
-        exactKnn10(s, dir, "euclidean", scoreDigits = 6))),
-
-    // BQ (binary/sign quantization): 1 bit/dim packed into longs — 32×
-    // smaller than float32; XOR+popcount Hamming scan + exact cosine
-    // rerank. Midrange thresholds are order-independent exact arithmetic
-    // and the candidate key (hamming, cand_id) is integer-valued, so the
-    // WHOLE pipeline is cross-engine oracle-checked with no rounding
-    // epsilon before the shared 1e-6 rerank.
-    "knn_bq_cosine" -> ((s, dir) => knnBqRes(s, dir)),
-
-    "recall_bq" -> ((s, dir) =>
-      Recall.microAvgRecall(knnBqRes(s, dir),
-        exactKnn10(s, dir, "cosine", scoreDigits = 6))),
-
-    // RaBitQ (Gao & Long, SIGMOD 2024): seeded random rotation → sign
-    // bits + ONE per-vector correction factor, served by the paper's
-    // unbiased real-valued estimator instead of integer Hamming — the
-    // answer to the round-10 BASELINE finding that plain BQ collapses at
-    // d≥768 from Hamming-tie mass. Rotation is trained-literal data, all
-    // derived arithmetic is explicit left-associative folds, so the WHOLE
-    // pipeline is cross-engine oracle-checked like [[Pca]]/[[Opq]].
-    "knn_rabitq_cosine" -> ((s, dir) => knnRabitqRes(s, dir)),
-
-    "recall_rabitq" -> ((s, dir) =>
-      Recall.microAvgRecall(knnRabitqRes(s, dir),
-        exactKnn10(s, dir, "cosine", scoreDigits = 6))),
-
-    // IVF × BQ: the composition the round-8 compressed-scan ladder
-    // measured its way to — cell-routed Hamming scan (scan AND candidate
-    // exchange both divided by nprobe/C) + exact cosine rerank, with
-    // RESIDUAL sign codes (bits of v − centroid[cell]) so the code
-    // discriminates inside the cell the probe lands in. Composed from
-    // the battery's memoized IVF quantizer, so the whole trained
-    // pipeline is cross-engine oracle-checked from centroid literals.
-    "knn_ivfbq_cosine" -> ((s, dir) => knnIvfBqRes(s, dir)),
-
-    "recall_ivfbq" -> ((s, dir) =>
-      Recall.microAvgRecall(knnIvfBqRes(s, dir),
-        exactKnn10(s, dir, "cosine", scoreDigits = 6))),
-
-    // IVF × RaBitQ: the paper's own deployment shape — residual sign
-    // bits + per-vector factor behind the coarse quantizer, ranked by
-    // the real-valued normalized estimator instead of residual Hamming.
-    // Composed from the battery's memoized IVF quantizer so the whole
-    // trained pipeline is oracle-checked from centroid + rotation
-    // literals.
-    "knn_ivfrabitq_cosine" -> ((s, dir) => knnIvfRabitqRes(s, dir)),
-
-    "recall_ivfrabitq" -> ((s, dir) =>
-      Recall.microAvgRecall(knnIvfRabitqRes(s, dir),
-        exactKnn10(s, dir, "cosine", scoreDigits = 6))),
-
-    // MRL (matryoshka) truncated-dim retrieval: candidates by cosine on
-    // the first 16 of 64 dims (4× fewer bytes touched in the scan stage),
-    // exact full-dim rerank. Fully declarative — two windows, no shuffle
-    // of the base data — and fully cross-engine oracle-checked.
-    "knn_mrl_cosine" -> ((s, dir) => knnMrlRes(s, dir)),
-
-    "recall_mrl" -> ((s, dir) =>
-      Recall.microAvgRecall(knnMrlRes(s, dir),
-        exactKnn10(s, dir, "cosine", scoreDigits = 6))),
-
-    // PCA-projected retrieval (trained dimensionality reduction): top-16
-    // principal components learned from a seeded sample, candidates by
-    // cosine in the projected space, exact full-dim rerank. The trained
-    // (mean, weights) are emitted as DuckDB literals at Verify-dump time,
-    // so the WHOLE pipeline hash-matches cross-engine — the learned twin
-    // of knn_mrl_cosine for embeddings without matryoshka training.
-    "knn_pca_cosine" -> ((s, dir) => knnPcaRes(s, dir)),
-
-    "recall_pca" -> ((s, dir) =>
-      Recall.microAvgRecall(knnPcaRes(s, dir),
-        exactKnn10(s, dir, "cosine", scoreDigits = 6))),
-
-    "recall_opq" -> ((s, dir) =>
-      Recall.microAvgRecall(knnOpqRes(s, dir),
-        exactKnn10(s, dir, "euclidean", scoreDigits = 6))),
-
-    "recall_ivfpq" -> ((s, dir) =>
-      Recall.microAvgRecall(knnIvfpqRes(s, dir),
-        exactKnn10(s, dir, "euclidean", scoreDigits = 6))),
 
     // B8 reference-shaped latency summary for the HNSW path: per-query
     // critical-path shard search times → count/avg + exact nearest-rank-
@@ -1076,7 +1111,11 @@ object VectorQueries {
       graft.operators.MaxSim.maxSimJoinIvf(dv, qv, k = 10,
         centroids = model.centroids, nprobe = 4, scoreDigits = 6)
     })
-  )
+  ) ++ anns.flatMap(a => Seq(
+    a.knnKey -> a.serve,
+    a.recallKey -> ((s: SparkSession, dir: String) =>
+      Recall.microAvgRecall(a.serve(s, dir),
+        exactKnn10(s, dir, a.metric, a.digits)))))
 
   /** Shared DuckDB CTE prefix reproducing the LSH signature pipeline of
     * [[AnnLsh.lshKnnJoin]] / [[AnnLsh.lshNearDupPairs]] (numPlanes=6, d=64,
@@ -1144,11 +1183,10 @@ object VectorQueries {
       |     ORDER BY score DESC, neighbor_id) AS rank FROM rer)
       |  WHERE rank <= 10)""".stripMargin
 
+  /** The IVF quantizer's other trained-literal entries (its ANN pairs,
+    * IVF and IVF-BQ, are declared in [[anns]]). */
   private def ivfOracle(m: graft.operators.IvfFlat.Model): Map[String, String] = {
     val cents = m.centroids
-    val cte = graft.operators.IvfFlat.duckdbTopkCte(cents, nprobe = 4, k = 10)
-    val bqCte = graft.operators.IvfBq.duckdbTopkCte(cents, d = 64,
-      nprobe = 4, rerank = 100, k = 10, residual = true)
     val hnCte = graft.operators.IvfFlat.duckdbTopkCte(cents, nprobe = 4,
       k = 10, probeFilter = "vec_id < 50")
     Map(
@@ -1178,62 +1216,12 @@ object VectorQueries {
            | t.score, p.pos_score, t.score < p.pos_score AS semi_hard
            |FROM hn_top t LEFT JOIN hn_pos p USING (query_id)
            |WHERE t.rnk <= 5""".stripMargin,
-      "knn_ivfbq_cosine" ->
-        s"""$bqCte
-           |SELECT query_id, neighbor_id, score, rank FROM ivfbq_topk""".stripMargin,
-      "recall_ivfbq" ->
-        s"""$bqCte,
-           | exact_scored AS (
-           |  SELECT q.query_id, e.vec_id AS neighbor_id,
-           |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-           |  FROM embeddings e, ivf_q q),
-           | exact_topk AS (
-           |  SELECT query_id, neighbor_id FROM (
-           |   SELECT *, row_number() OVER (PARTITION BY query_id
-           |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
-           |  WHERE rank <= 10),
-           | per_q AS (SELECT x.query_id, count(*) AS total,
-           |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS hits
-           |   FROM exact_topk x LEFT JOIN ivfbq_topk s
-           |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
-           |   GROUP BY x.query_id)
-           |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-           | CAST(sum(total) AS BIGINT) AS total,
-           | sum(hits)*1.0/sum(total) AS recall
-           |FROM per_q""".stripMargin,
       "semdedup_embeddings" ->
         graft.operators.SemDedup.duckdbSql(cents, threshold = 0.8),
       "prune_prototypes" ->
         graft.operators.Prune.duckdbSql(cents, keepFrac = 0.5),
       "cluster_eval" ->
         graft.operators.ClusterEval.duckdbSql(cents),
-      "knn_ivf_cosine" ->
-        s"""$cte
-           |SELECT query_id, neighbor_id, score, rank FROM ivf_topk""".stripMargin,
-      "recall_ivf" ->
-        s"""$cte,
-           | exact_scored AS (
-           |  SELECT q.query_id, e.vec_id AS neighbor_id,
-           |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-           |  FROM embeddings e, ivf_q q),
-           | exact_topk AS (
-           |  SELECT query_id, neighbor_id FROM (
-           |   SELECT *, row_number() OVER (PARTITION BY query_id
-           |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
-           |  WHERE rank <= 10),
-           | per AS (
-           |  SELECT ex.query_id,
-           |   CAST(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits,
-           |   CAST(count(*) AS BIGINT) AS total
-           |  FROM exact_topk ex LEFT JOIN ivf_topk l
-           |    ON ex.query_id = l.query_id AND ex.neighbor_id = l.neighbor_id
-           |  GROUP BY ex.query_id)
-           |SELECT CAST(count(*) AS BIGINT) AS n_queries,
-           |  CAST(sum(hits) AS BIGINT) AS hits,
-           |  CAST(sum(total) AS BIGINT) AS total,
-           |  CAST(sum(hits) AS DOUBLE)/CAST(sum(total) AS DOUBLE) AS recall
-           |FROM per""".stripMargin,
       // IVF-cell-gated MaxSim from the SAME centroid literals: doc-vector
       // assignment ties to the LARGER cell (greatest-struct), query-vector
       // routing ties to the SMALLER (array_sort) — mirrored exactly; the
@@ -1288,200 +1276,25 @@ object VectorQueries {
       })
   }
 
-  private def pqOracle(m: graft.operators.Pq.Model): Map[String, String] = {
-    val cte = graft.operators.Pq.duckdbTopkCte(m.codebooks, rerank = 100, k = 10)
-    Map(
-      "knn_pq_euclid" ->
-        s"""$cte
-           |SELECT query_id, neighbor_id, score, rank FROM pq_topk""".stripMargin,
-      "recall_pq" ->
-        s"""$cte,
-           | exact_topk AS (SELECT query_id, neighbor_id FROM (
-           |   SELECT q.query_id, e.vec_id AS neighbor_id,
-           |    row_number() OVER (PARTITION BY q.query_id ORDER BY
-           |      floor((1.0/(1.0 + list_distance(CAST(e.embedding AS DOUBLE[]),
-           |        CAST(q.qv AS DOUBLE[]))))*1e6 + 0.5)/1e6 DESC, e.vec_id) AS rank
-           |   FROM embeddings e, pq_q q) WHERE rank <= 10),
-           | per_q AS (SELECT x.query_id, count(*) AS total,
-           |    CAST(sum(CASE WHEN p.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS hits
-           |   FROM exact_topk x LEFT JOIN pq_topk p
-           |    ON p.query_id = x.query_id AND p.neighbor_id = x.neighbor_id
-           |   GROUP BY x.query_id)
-           |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-           | CAST(sum(total) AS BIGINT) AS total,
-           | sum(hits)*1.0/sum(total) AS recall
-           |FROM per_q""".stripMargin)
-  }
-
-  private def pcaOracle(m: graft.operators.Pca.Model): Map[String, String] = {
-    val cte = graft.operators.Pca.duckdbTopkCte(m.mean, m.weights,
-      nQueries = 100, rerank = 100, k = 10)
-    Map(
-      "knn_pca_cosine" ->
-        s"""$cte
-           |SELECT query_id, neighbor_id, score, rank FROM pca_topk""".stripMargin,
-      "recall_pca" ->
-        s"""$cte,
-           | exact_scored AS (
-           |  SELECT q.query_id, e.vec_id AS neighbor_id,
-           |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-           |  FROM embeddings e, pca_q q),
-           | exact_topk AS (
-           |  SELECT query_id, neighbor_id FROM (
-           |   SELECT *, row_number() OVER (PARTITION BY query_id
-           |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
-           |  WHERE rank <= 10),
-           | per_q AS (SELECT x.query_id, count(*) AS total,
-           |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS hits
-           |   FROM exact_topk x LEFT JOIN pca_topk s
-           |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
-           |   GROUP BY x.query_id)
-           |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-           | CAST(sum(total) AS BIGINT) AS total,
-           | sum(hits)*1.0/sum(total) AS recall
-           |FROM per_q""".stripMargin)
-  }
-
-  private def rabitqOracle(m: graft.operators.RabitQ.Model): Map[String, String] = {
-    val cte = graft.operators.RabitQ.duckdbTopkCte(m.rotation,
-      nQueries = 100, rerank = 100, k = 10)
-    Map(
-      "knn_rabitq_cosine" ->
-        s"""$cte
-           |SELECT query_id, neighbor_id, score, rank FROM rbq_topk""".stripMargin,
-      "recall_rabitq" ->
-        s"""$cte,
-           | exact_scored AS (
-           |  SELECT q.query_id, e.vec_id AS neighbor_id,
-           |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-           |  FROM embeddings e, rbq_q q),
-           | exact_topk AS (
-           |  SELECT query_id, neighbor_id FROM (
-           |   SELECT *, row_number() OVER (PARTITION BY query_id
-           |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
-           |  WHERE rank <= 10),
-           | per_q AS (SELECT x.query_id, count(*) AS total,
-           |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS hits
-           |   FROM exact_topk x LEFT JOIN rbq_topk s
-           |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
-           |   GROUP BY x.query_id)
-           |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-           | CAST(sum(total) AS BIGINT) AS total,
-           | sum(hits)*1.0/sum(total) AS recall
-           |FROM per_q""".stripMargin)
-  }
-
-  private def ivfRabitqOracle(m: graft.operators.IvfRabitq.Model): Map[String, String] = {
-    val cte = graft.operators.IvfRabitq.duckdbTopkCte(m.centroids, m.rotation,
-      m.rotCents, nprobe = 4, rerank = 100, k = 10, nQueries = 100)
-    Map(
-      "knn_ivfrabitq_cosine" ->
-        s"""$cte
-           |SELECT query_id, neighbor_id, score, rank FROM ivfrbq_topk""".stripMargin,
-      "recall_ivfrabitq" ->
-        s"""$cte,
-           | exact_scored AS (
-           |  SELECT q.query_id, e.vec_id AS neighbor_id,
-           |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-           |  FROM embeddings e, ivf_q q),
-           | exact_topk AS (
-           |  SELECT query_id, neighbor_id FROM (
-           |   SELECT *, row_number() OVER (PARTITION BY query_id
-           |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
-           |  WHERE rank <= 10),
-           | per_q AS (SELECT x.query_id, count(*) AS total,
-           |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS hits
-           |   FROM exact_topk x LEFT JOIN ivfrbq_topk s
-           |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
-           |   GROUP BY x.query_id)
-           |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-           | CAST(sum(total) AS BIGINT) AS total,
-           | sum(hits)*1.0/sum(total) AS recall
-           |FROM per_q""".stripMargin)
-  }
-
-  private def opqOracle(m: graft.operators.Opq.Model): Map[String, String] = {
-    val cte = graft.operators.Opq.duckdbTopkCte(m.rotation, m.pq.codebooks,
-      rerank = 100, k = 10)
-    Map(
-      "knn_opq_euclid" ->
-        s"""$cte
-           |SELECT query_id, neighbor_id, score, rank FROM pq_topk""".stripMargin,
-      "recall_opq" ->
-        s"""$cte,
-           | exact_topk AS (SELECT query_id, neighbor_id FROM (
-           |   SELECT q.query_id, e.vec_id AS neighbor_id,
-           |    row_number() OVER (PARTITION BY q.query_id ORDER BY
-           |      floor((1.0/(1.0 + list_distance(CAST(e.embedding AS DOUBLE[]),
-           |        CAST(q.qv AS DOUBLE[]))))*1e6 + 0.5)/1e6 DESC, e.vec_id) AS rank
-           |   FROM embeddings e, pq_q q) WHERE rank <= 10),
-           | per_q AS (SELECT x.query_id, count(*) AS total,
-           |    CAST(sum(CASE WHEN p.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS hits
-           |   FROM exact_topk x LEFT JOIN pq_topk p
-           |    ON p.query_id = x.query_id AND p.neighbor_id = x.neighbor_id
-           |   GROUP BY x.query_id)
-           |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-           | CAST(sum(total) AS BIGINT) AS total,
-           | sum(hits)*1.0/sum(total) AS recall
-           |FROM per_q""".stripMargin)
-  }
-
-  private def ivfpqOracle(m: graft.operators.IvfPq.Model): Map[String, String] = {
-    val cte = graft.operators.IvfPq.duckdbTopkCte(m.centroids, m.codebooks,
-      m.rotation, nprobe = 6, rerank = 150, k = 10)
-    Map(
-      "knn_ivfpq_euclid" ->
-        s"""$cte
-           |SELECT query_id, neighbor_id, score, rank FROM pq_topk""".stripMargin,
-      "recall_ivfpq" ->
-        s"""$cte,
-           | exact_topk AS (SELECT query_id, neighbor_id FROM (
-           |   SELECT q.query_id, e.vec_id AS neighbor_id,
-           |    row_number() OVER (PARTITION BY q.query_id ORDER BY
-           |      floor((1.0/(1.0 + list_distance(CAST(e.embedding AS DOUBLE[]),
-           |        CAST(q.qv AS DOUBLE[]))))*1e6 + 0.5)/1e6 DESC, e.vec_id) AS rank
-           |   FROM embeddings e, ipq_q q) WHERE rank <= 10),
-           | per_q AS (SELECT x.query_id, count(*) AS total,
-           |    CAST(sum(CASE WHEN p.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS hits
-           |   FROM exact_topk x LEFT JOIN pq_topk p
-           |    ON p.query_id = x.query_id AND p.neighbor_id = x.neighbor_id
-           |   GROUP BY x.query_id)
-           |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-           | CAST(sum(total) AS BIGINT) AS total,
-           | sum(hits)*1.0/sum(total) AS recall
-           |FROM per_q""".stripMargin)
-  }
-
-  /** The static entries plus the SQL of each trained family `wanted`
-    * picks a key of, built from the same memoized model its queries
-    * serve with (a fit only when no query of the family ran in this
-    * session for `dir`). */
+  /** The static entries, the closed-form ANN families' twins, and the
+    * SQL of each trained family `wanted` picks a key of, built from the
+    * same memoized model its queries serve with (a fit only when no query
+    * of the family ran in this session for `dir`). */
   def oracle(s: SparkSession, dir: String,
       wanted: String => Boolean): Map[String, String] = {
-    def family(name: String, keys: String*)(sql: => Map[String, String]) =
-      SparkEntry.fittedFamily(name, wanted, keys: _*)(sql)
+    def family(fit: String, extraKeys: String*)(extra: => Map[String, String]) = {
+      val fam = anns.filter(_.fit.contains(fit))
+      SparkEntry.fittedFamily(fit, wanted, fam.flatMap(_.keys) ++ extraKeys: _*)(
+        fam.flatMap(annSql(_, s, dir)).toMap ++ extra)
+    }
     staticOracle ++
-      family("ivf", "knn_ivf_cosine", "recall_ivf", "knn_ivfbq_cosine",
-        "recall_ivfbq", "hard_negatives_ivf", "semdedup_embeddings",
+      anns.filter(a => a.oracle.nonEmpty && a.fit.isEmpty)
+        .flatMap(annSql(_, s, dir)) ++
+      family("ivf", "hard_negatives_ivf", "semdedup_embeddings",
         "prune_prototypes", "cluster_eval", "maxsim_multivec_ivf")(
         ivfOracle(ivfModel(s, dir))) ++
-      family("pq", "knn_pq_euclid", "recall_pq")(pqOracle(pqModel(s, dir))) ++
-      family("pca", "knn_pca_cosine", "recall_pca")(
-        pcaOracle(pcaModel(s, dir))) ++
-      family("rabitq", "knn_rabitq_cosine", "recall_rabitq")(
-        rabitqOracle(rabitqModel(s, dir))) ++
-      family("ivfrabitq", "knn_ivfrabitq_cosine", "recall_ivfrabitq")(
-        ivfRabitqOracle(ivfRabitqModel(s, dir))) ++
-      family("opq", "knn_opq_euclid", "recall_opq")(
-        opqOracle(opqModel(s, dir))) ++
-      family("ivfpq", "knn_ivfpq_euclid", "recall_ivfpq")(
-        ivfpqOracle(ivfpqModel(s, dir)))
+      anns.flatMap(_.fit).distinct.filter(_ != "ivf")
+        .flatMap(family(_)(Map.empty))
   }
 
   /** The model memo keys held for `dir` in `s`'s context. */
@@ -1654,6 +1467,47 @@ object VectorQueries {
       | mm_cl AS (SELECT a AS media_id, min(b) AS cluster_id
       |  FROM mm_reach GROUP BY 1)""".stripMargin
 
+  /** The RRF twins' shared tail. `lexCte` is a WITH prefix ending in
+    * the lexical top-20 `lex(query_id, doc_id, lrank)`; this adds the
+    * rounded exact-cosine ranking of the first 10 vectors (`vranked`, all
+    * ranks; `vec`, its top 20), their two-term reciprocal sum (written
+    * order lexical-then-vector, CAST(1 AS DOUBLE) so the division is IEEE
+    * double, rounded before ranking) as `fused`, and its top 10 by
+    * (rrf_score DESC, doc_id) as `fused_top`. */
+  private def rrfFusedCte(lexCte: String): String =
+    lexCte + """,
+      | vscored AS (
+      |  SELECT q.vec_id AS query_id, e.vec_id AS doc_id,
+      |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
+      |  FROM embeddings e, (SELECT * FROM embeddings WHERE vec_id < 10) q),
+      | vranked AS (
+      |  SELECT query_id, doc_id, vrank FROM (
+      |   SELECT *, row_number() OVER (PARTITION BY query_id
+      |     ORDER BY score DESC, doc_id) AS vrank FROM vscored)),
+      | vec AS (SELECT * FROM vranked WHERE vrank <= 20),
+      | fused AS (
+      |  SELECT coalesce(l.query_id, v.query_id) AS query_id,
+      |   coalesce(l.doc_id, v.doc_id) AS doc_id, l.lrank, v.vrank,
+      |   floor((coalesce(CAST(1 AS DOUBLE)/(60 + l.lrank), 0.0)
+      |        + coalesce(CAST(1 AS DOUBLE)/(60 + v.vrank), 0.0))*1e6 + 0.5)/1e6
+      |     AS rrf_score
+      |  FROM lex l FULL OUTER JOIN vec v
+      |   ON l.query_id = v.query_id AND l.doc_id = v.doc_id),
+      | fused_top AS (
+      |  SELECT query_id, doc_id, lrank, vrank, rrf_score, rank FROM (
+      |   SELECT *, row_number() OVER (PARTITION BY query_id
+      |     ORDER BY rrf_score DESC, doc_id) AS rank FROM fused)
+      |  WHERE rank <= 10)""".stripMargin
+
+  /** [[rrfFusedCte]] over the BM25 top-20 of the first 10 docs — the
+    * twin of [[rrfBm25Fused]]. */
+  private def rrfBm25FusedCte: String =
+    rrfFusedCte(TextQueries.bm25ScoredCte(10) + """,
+      | lex AS (SELECT qid AS query_id, doc_id, lrank FROM (
+      |   SELECT *, row_number() OVER (PARTITION BY qid
+      |     ORDER BY bm25 DESC, doc_id) AS lrank FROM sc)
+      |  WHERE lrank <= 20)""".stripMargin)
+
   private val staticOracle: Map[String, String] = Map(
     // audio fingerprint: sign-of-energy-delta bits from the same
     // fixed-point rms values the feature oracle proved bit-exact
@@ -1806,143 +1660,39 @@ object VectorQueries {
           |    ORDER BY score DESC, neighbor_id) AS rank FROM mm_scored)
           |WHERE rank <= 5""".stripMargin),
     // RRF twin: same lexical inverted-index overlap ranking, same rounded
-    // exact-cosine ranking, same two-term reciprocal sum (written order
-    // lexical-then-vector, CAST(1 AS DOUBLE) so the division is IEEE
-    // double), same round-before-rank + doc_id tie-break.
+    // exact-cosine ranking, same fusion ([[rrfFusedCte]]).
     "rrf_fusion" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |   unnest(list_distinct(string_split_regex(trim(text),'\s+'))) AS term
-        |  FROM documents),
-        | ovl AS (
-        |  SELECT q.doc_id AS query_id, c.doc_id AS doc_id, count(*) AS overlap
-        |  FROM toks q JOIN toks c USING (term) WHERE q.doc_id < 10
-        |  GROUP BY 1, 2),
-        | lex AS (
-        |  SELECT query_id, doc_id, lrank FROM (
-        |   SELECT *, row_number() OVER (PARTITION BY query_id
-        |     ORDER BY overlap DESC, doc_id) AS lrank FROM ovl)
-        |  WHERE lrank <= 20),
-        | vscored AS (
-        |  SELECT q.vec_id AS query_id, e.vec_id AS doc_id,
-        |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-        |  FROM embeddings e, (SELECT * FROM embeddings WHERE vec_id < 10) q),
-        | vec AS (
-        |  SELECT query_id, doc_id, vrank FROM (
-        |   SELECT *, row_number() OVER (PARTITION BY query_id
-        |     ORDER BY score DESC, doc_id) AS vrank FROM vscored)
-        |  WHERE vrank <= 20),
-        | fused AS (
-        |  SELECT coalesce(l.query_id, v.query_id) AS query_id,
-        |   coalesce(l.doc_id, v.doc_id) AS doc_id, l.lrank, v.vrank,
-        |   floor((coalesce(CAST(1 AS DOUBLE)/(60 + l.lrank), 0.0)
-        |        + coalesce(CAST(1 AS DOUBLE)/(60 + v.vrank), 0.0))*1e6 + 0.5)/1e6
-        |     AS rrf_score
-        |  FROM lex l FULL OUTER JOIN vec v
-        |   ON l.query_id = v.query_id AND l.doc_id = v.doc_id)
-        |SELECT query_id, doc_id, lrank, vrank, rrf_score, rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY rrf_score DESC, doc_id) AS rank FROM fused)
-        |WHERE rank <= 10""".stripMargin,
+      (rrfFusedCte(
+        """WITH toks AS (
+          |  SELECT doc_id,
+          |   unnest(list_distinct(string_split_regex(trim(text),'\s+'))) AS term
+          |  FROM documents),
+          | ovl AS (
+          |  SELECT q.doc_id AS query_id, c.doc_id AS doc_id, count(*) AS overlap
+          |  FROM toks q JOIN toks c USING (term) WHERE q.doc_id < 10
+          |  GROUP BY 1, 2),
+          | lex AS (
+          |  SELECT query_id, doc_id, lrank FROM (
+          |   SELECT *, row_number() OVER (PARTITION BY query_id
+          |     ORDER BY overlap DESC, doc_id) AS lrank FROM ovl)
+          |  WHERE lrank <= 20)""".stripMargin) +
+        "\nSELECT query_id, doc_id, lrank, vrank, rrf_score, rank FROM fused_top"),
     // BM25-leg RRF twin: the bm25_top_docs CTE pipeline (nq=10, topk=20)
-    // as the lexical list, the rounded exact-cosine top-20 as the vector
-    // list, same fusion arithmetic/tie-breaks as rrf_fusion.
+    // as the lexical list, the same vector list and fusion as rrf_fusion.
     "rrf_fusion_bm25" ->
-      """WITH toks AS (SELECT doc_id,
-        |   unnest(string_split_regex(trim(text),'\s+')) AS term FROM documents),
-        | tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        | dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-        | stats AS (SELECT avg(dl) AS avgdl FROM dl),
-        | dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        | n AS (SELECT count(*) AS n FROM documents),
-        | qt AS (SELECT DISTINCT doc_id AS qid, term FROM tf WHERE doc_id < 10),
-        | sc AS (SELECT qt.qid, tf.doc_id,
-        |   floor((sum(ln(1.0 + (n.n - dft.df + 0.5)/(dft.df + 0.5))
-        |     * tf.tf * 2.2
-        |     / (tf.tf + 1.2*(1.0 - 0.75 + 0.75*dl.dl/stats.avgdl))))*1e4
-        |     + 0.5)/1e4 AS bm25
-        |  FROM qt JOIN tf USING (term) JOIN dft USING (term)
-        |    JOIN dl ON dl.doc_id = tf.doc_id
-        |    CROSS JOIN n CROSS JOIN stats
-        |  GROUP BY 1, 2),
-        | lex AS (SELECT qid AS query_id, doc_id, lrank FROM (
-        |   SELECT *, row_number() OVER (PARTITION BY qid
-        |     ORDER BY bm25 DESC, doc_id) AS lrank FROM sc)
-        |  WHERE lrank <= 20),
-        | vscored AS (
-        |  SELECT q.vec_id AS query_id, e.vec_id AS doc_id,
-        |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-        |  FROM embeddings e, (SELECT * FROM embeddings WHERE vec_id < 10) q),
-        | vec AS (
-        |  SELECT query_id, doc_id, vrank FROM (
-        |   SELECT *, row_number() OVER (PARTITION BY query_id
-        |     ORDER BY score DESC, doc_id) AS vrank FROM vscored)
-        |  WHERE vrank <= 20),
-        | fused AS (
-        |  SELECT coalesce(l.query_id, v.query_id) AS query_id,
-        |   coalesce(l.doc_id, v.doc_id) AS doc_id, l.lrank, v.vrank,
-        |   floor((coalesce(CAST(1 AS DOUBLE)/(60 + l.lrank), 0.0)
-        |        + coalesce(CAST(1 AS DOUBLE)/(60 + v.vrank), 0.0))*1e6 + 0.5)/1e6
-        |     AS rrf_score
-        |  FROM lex l FULL OUTER JOIN vec v
-        |   ON l.query_id = v.query_id AND l.doc_id = v.doc_id)
-        |SELECT query_id, doc_id, lrank, vrank, rrf_score, rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY rrf_score DESC, doc_id) AS rank FROM fused)
-        |WHERE rank <= 10""".stripMargin,
+      (rrfBm25FusedCte +
+        "\nSELECT query_id, doc_id, lrank, vrank, rrf_score, rank FROM fused_top"),
     // rank-metrics twin: the rrf_fusion_bm25 fused top-10 as the system,
-    // exact-cosine top-10 (vrank <= 10 of the same vscored CTE) as binary
+    // exact-cosine top-10 (vrank <= 10 of the same ranking) as binary
     // truth; RR = max(rel/rank) (order-free), DCG via ln/ln(2) parity,
     // IDCG as the shared double literal, round-before-compare at 6 dp.
     "rank_quality" ->
-      s"""WITH toks AS (SELECT doc_id,
-        |   unnest(string_split_regex(trim(text),'\\s+')) AS term FROM documents),
-        | tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        | dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-        | stats AS (SELECT avg(dl) AS avgdl FROM dl),
-        | dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        | n AS (SELECT count(*) AS n FROM documents),
-        | qt AS (SELECT DISTINCT doc_id AS qid, term FROM tf WHERE doc_id < 10),
-        | sc AS (SELECT qt.qid, tf.doc_id,
-        |   floor((sum(ln(1.0 + (n.n - dft.df + 0.5)/(dft.df + 0.5))
-        |     * tf.tf * 2.2
-        |     / (tf.tf + 1.2*(1.0 - 0.75 + 0.75*dl.dl/stats.avgdl))))*1e4
-        |     + 0.5)/1e4 AS bm25
-        |  FROM qt JOIN tf USING (term) JOIN dft USING (term)
-        |    JOIN dl ON dl.doc_id = tf.doc_id
-        |    CROSS JOIN n CROSS JOIN stats
-        |  GROUP BY 1, 2),
-        | lex AS (SELECT qid AS query_id, doc_id, lrank FROM (
-        |   SELECT *, row_number() OVER (PARTITION BY qid
-        |     ORDER BY bm25 DESC, doc_id) AS lrank FROM sc)
-        |  WHERE lrank <= 20),
-        | vscored AS (
-        |  SELECT q.vec_id AS query_id, e.vec_id AS doc_id,
-        |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-        |  FROM embeddings e, (SELECT * FROM embeddings WHERE vec_id < 10) q),
-        | vranked AS (
-        |  SELECT query_id, doc_id, vrank FROM (
-        |   SELECT *, row_number() OVER (PARTITION BY query_id
-        |     ORDER BY score DESC, doc_id) AS vrank FROM vscored)),
-        | vec AS (SELECT * FROM vranked WHERE vrank <= 20),
-        | fused AS (
-        |  SELECT coalesce(l.query_id, v.query_id) AS query_id,
-        |   coalesce(l.doc_id, v.doc_id) AS doc_id,
-        |   floor((coalesce(CAST(1 AS DOUBLE)/(60 + l.lrank), 0.0)
-        |        + coalesce(CAST(1 AS DOUBLE)/(60 + v.vrank), 0.0))*1e6 + 0.5)/1e6
-        |     AS rrf_score
-        |  FROM lex l FULL OUTER JOIN vec v
-        |   ON l.query_id = v.query_id AND l.doc_id = v.doc_id),
-        | system AS (
-        |  SELECT query_id, doc_id, rank FROM (
-        |   SELECT *, row_number() OVER (PARTITION BY query_id
-        |     ORDER BY rrf_score DESC, doc_id) AS rank FROM fused)
-        |  WHERE rank <= 10),
+      s"""$rrfBm25FusedCte,
         | truth AS (SELECT query_id, doc_id FROM vranked WHERE vrank <= 10),
         | lab AS (
         |  SELECT s.query_id, s.rank,
         |   CASE WHEN t.doc_id IS NOT NULL THEN 1 ELSE 0 END AS rel
-        |  FROM system s LEFT JOIN truth t
+        |  FROM fused_top s LEFT JOIN truth t
         |   ON s.query_id = t.query_id AND s.doc_id = t.doc_id)
         |SELECT query_id,
         |  floor((max(rel*CAST(1 AS DOUBLE)/rank))*1e6 + 0.5)/1e6 AS rr,
@@ -1950,112 +1700,7 @@ object VectorQueries {
         |    / ${graft.operators.RankEval.idcg(10)})*1e6 + 0.5)/1e6 AS ndcg
         |FROM lab GROUP BY 1""".stripMargin,
     "knn_filtered_guarantee" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-        |           FROM embeddings WHERE vec_id < 100),
-        | scored AS (
-        |  SELECT q.query_id, e.vec_id AS neighbor_id,
-        |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-        |  FROM embeddings e, q WHERE e.vec_id < 15)
-        |SELECT query_id, neighbor_id, score, rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY score DESC, neighbor_id) AS rank FROM scored)
-        |WHERE rank <= 20""".stripMargin,
-    "knn_sq_euclid" ->
-      s"""$sqTopCte
-         |SELECT query_id, neighbor_id, score, rank FROM sq_topk""".stripMargin,
-    "recall_sq" ->
-      s"""$sqTopCte,
-         | exact_topk AS (SELECT query_id, neighbor_id FROM (
-         |   SELECT q.query_id, e.vec_id AS neighbor_id,
-         |    row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |      floor((1.0/(1.0 + list_distance(CAST(e.embedding AS DOUBLE[]),
-         |        CAST(q.qv AS DOUBLE[]))))*1e6 + 0.5)/1e6 DESC, e.vec_id) AS rank
-         |   FROM embeddings e, q) WHERE rank <= 10),
-         | per_q AS (SELECT x.query_id, count(*) AS total,
-         |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS hits
-         |   FROM exact_topk x LEFT JOIN sq_topk s
-         |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
-         |   GROUP BY x.query_id)
-         |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-         | CAST(sum(total) AS BIGINT) AS total,
-         | sum(hits)*1.0/sum(total) AS recall
-         |FROM per_q""".stripMargin,
-    "knn_mrl_cosine" ->
-      s"""${graft.operators.Mrl.duckdbTopkCte(16)}
-         |SELECT query_id, neighbor_id, score, rank FROM mrl_topk""".stripMargin,
-    "recall_mrl" ->
-      s"""${graft.operators.Mrl.duckdbTopkCte(16)},
-         | exact_scored AS (
-         |  SELECT q.query_id, e.vec_id AS neighbor_id,
-         |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-         |  FROM embeddings e, q),
-         | exact_topk AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |   SELECT *, row_number() OVER (PARTITION BY query_id
-         |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
-         |  WHERE rank <= 10),
-         | per_q AS (SELECT x.query_id, count(*) AS total,
-         |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS hits
-         |   FROM exact_topk x LEFT JOIN mrl_topk s
-         |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
-         |   GROUP BY x.query_id)
-         |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-         | CAST(sum(total) AS BIGINT) AS total,
-         | sum(hits)*1.0/sum(total) AS recall
-         |FROM per_q""".stripMargin,
-    "knn_bq_cosine" ->
-      s"""${graft.operators.Bq.duckdbTopkCte(64)}
-         |SELECT query_id, neighbor_id, score, rank FROM bq_topk""".stripMargin,
-    "recall_bq" ->
-      s"""${graft.operators.Bq.duckdbTopkCte(64)},
-         | exact_scored AS (
-         |  SELECT q.query_id, e.vec_id AS neighbor_id,
-         |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-         |  FROM embeddings e, q),
-         | exact_topk AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |   SELECT *, row_number() OVER (PARTITION BY query_id
-         |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
-         |  WHERE rank <= 10),
-         | per_q AS (SELECT x.query_id, count(*) AS total,
-         |    CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS hits
-         |   FROM exact_topk x LEFT JOIN bq_topk s
-         |    ON s.query_id = x.query_id AND s.neighbor_id = x.neighbor_id
-         |   GROUP BY x.query_id)
-         |SELECT count(*) AS n_queries, CAST(sum(hits) AS BIGINT) AS hits,
-         | CAST(sum(total) AS BIGINT) AS total,
-         | sum(hits)*1.0/sum(total) AS recall
-         |FROM per_q""".stripMargin,
-    "knn_lsh_cosine" ->
-      s"""$lshKnnCte
-         |SELECT query_id, neighbor_id, score, rank FROM lsh_topk""".stripMargin,
-    "recall_lsh" ->
-      s"""$lshKnnCte,
-         | exact_scored AS (
-         |  SELECT q.query_id, e.vec_id AS neighbor_id,
-         |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-         |  FROM embeddings e, (SELECT vec_id AS query_id, embedding AS qv
-         |                      FROM embeddings WHERE vec_id < 100) q),
-         | exact_topk AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |   SELECT *, row_number() OVER (PARTITION BY query_id
-         |     ORDER BY score DESC, neighbor_id) AS rank FROM exact_scored)
-         |  WHERE rank <= 10),
-         | per AS (
-         |  SELECT ex.query_id,
-         |   CAST(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits,
-         |   CAST(count(*) AS BIGINT) AS total
-         |  FROM exact_topk ex LEFT JOIN lsh_topk l
-         |    ON ex.query_id = l.query_id AND ex.neighbor_id = l.neighbor_id
-         |  GROUP BY ex.query_id)
-         |SELECT CAST(count(*) AS BIGINT) AS n_queries,
-         |  CAST(sum(hits) AS BIGINT) AS hits,
-         |  CAST(sum(total) AS BIGINT) AS total,
-         |  CAST(sum(hits) AS DOUBLE)/CAST(sum(total) AS DOUBLE) AS recall
-         |FROM per""".stripMargin,
+      exactTopkSql("cosine", probesSql, k = 20, where = "e.vec_id < 15"),
     "near_dup_embeddings_lsh" ->
       s"""$lshSigsCte,
          | pair_probes AS (
@@ -2086,17 +1731,7 @@ object VectorQueries {
         |  SELECT *, row_number() OVER (PARTITION BY query_id
         |    ORDER BY score DESC, neighbor_id) AS rank FROM scored)
         |WHERE rank <= 5""".stripMargin,
-    "knn_exact_cosine" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-        |           FROM embeddings WHERE vec_id < 100),
-        | scored AS (
-        |  SELECT q.query_id, e.vec_id AS neighbor_id,
-        |   floor((list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-        |  FROM embeddings e, q)
-        |SELECT query_id, neighbor_id, score, rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY score DESC, neighbor_id) AS rank FROM scored)
-        |WHERE rank <= 10""".stripMargin,
+    "knn_exact_cosine" -> exactTopkSql("cosine", probesSql),
     // contrastive triplets — hardest positive × top-3 negatives, margins
     "training_triplets" ->
       """WITH a AS (SELECT vec_id AS query_id, embedding AS qv,
@@ -2135,28 +1770,8 @@ object VectorQueries {
         |SELECT t.query_id, t.rnk, t.vec_id AS neighbor_id, t.label,
         |  t.score, p.pos_score, t.score < p.pos_score AS semi_hard
         |FROM top t LEFT JOIN pos p USING (query_id) WHERE t.rnk <= 5""".stripMargin,
-    "knn_exact_euclid" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-        |           FROM embeddings WHERE vec_id < 100),
-        | scored AS (
-        |  SELECT q.query_id, e.vec_id AS neighbor_id,
-        |   floor((1.0/(1.0 + list_distance(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[]))))*1e6 + 0.5)/1e6 AS score
-        |  FROM embeddings e, q)
-        |SELECT query_id, neighbor_id, score, rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY score DESC, neighbor_id) AS rank FROM scored)
-        |WHERE rank <= 10""".stripMargin,
-    "knn_exact_dot" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-        |           FROM embeddings WHERE vec_id < 100),
-        | scored AS (
-        |  SELECT q.query_id, e.vec_id AS neighbor_id,
-        |   floor((list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))*1e6 + 0.5)/1e6 AS score
-        |  FROM embeddings e, q)
-        |SELECT query_id, neighbor_id, score, rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY score DESC, neighbor_id) AS rank FROM scored)
-        |WHERE rank <= 10""".stripMargin,
+    "knn_exact_euclid" -> exactTopkSql("euclidean", probesSql),
+    "knn_exact_dot" -> exactTopkSql("dot", probesSql),
     "vec_norms" ->
       """SELECT vec_id, label,
         | floor((list_inner_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))*1e6 + 0.5)/1e6 AS self_dot,

@@ -20,10 +20,31 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *
   * Accumulation is double-precision over float inputs in index order, which
   * is what a straightforward sequential implementation (and the DuckDB
-  * oracle) produces.
+  * oracle) produces. Both arguments must have the same length: a
+  * dimension mismatch throws, in generated and interpreted code alike.
   */
 abstract class VectorBinaryExpression extends BinaryExpression {
   override def dataType: DataType = DoubleType
+
+  /** The common length of `x` and `y`. Vectors of different dimensions
+    * have no similarity (reference: src/main.ts:235-237), so a mismatch
+    * throws, naming both lengths. */
+  protected def dim(x: ArrayData, y: ArrayData): Int = {
+    val n = x.numElements()
+    if (n != y.numElements()) throw new IllegalArgumentException(
+      s"$prettyName: dimension mismatch, $n vs ${y.numElements()}")
+    n
+  }
+
+  /** Generated-code twin of [[dim]]: declares `n` as the common length of
+    * the arrays `a` and `b`, or throws. */
+  protected def genDim(n: String, a: String, b: String): String =
+    s"""int $n = $a.numElements();
+       |if ($n != $b.numElements()) {
+       |  throw new IllegalArgumentException("$prettyName: dimension mismatch, "
+       |    + $n + " vs " + $b.numElements());
+       |}""".stripMargin
+
   override def nullIntolerant: Boolean = true
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     def ok(dt: DataType): Boolean = dt match {
@@ -47,7 +68,7 @@ case class DotProductExpr(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = dim(x, y)
     var dot = 0.0
     var i = 0
     while (i < n) { dot += x.getFloat(i).toDouble * y.getFloat(i); i += 1 }
@@ -59,7 +80,7 @@ case class DotProductExpr(left: Expression, right: Expression)
       val n = ctx.freshName("n")
       val dot = ctx.freshName("dot")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |${genDim(n, a, b)}
          |double $dot = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  $dot += ((double) $a.getFloat($i)) * $b.getFloat($i);
@@ -78,7 +99,7 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = dim(x, y)
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
@@ -99,7 +120,7 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
       val xi = ctx.freshName("xi")
       val yi = ctx.freshName("yi")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |${genDim(n, a, b)}
          |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  double $xi = (double) $a.getFloat($i);
@@ -120,7 +141,7 @@ case class EuclideanSimilarityExpr(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = dim(x, y)
     var ss = 0.0
     var i = 0
     while (i < n) {
@@ -137,7 +158,7 @@ case class EuclideanSimilarityExpr(left: Expression, right: Expression)
       val ss = ctx.freshName("ss")
       val d = ctx.freshName("d")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |${genDim(n, a, b)}
          |double $ss = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  double $d = ((double) $a.getFloat($i)) - $b.getFloat($i);

@@ -109,6 +109,17 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("the rows-only entries are exactly the 16 without an oracle") {
+    val rowsOnly =
+      SparkEntry.queries.keySet -- SparkEntry.oracleSql(spark, dir).keySet
+    assert(rowsOnly == Set(
+      "bpe_pack_sequences", "bpe_token_stats", "hnsw_latency_summary",
+      "hybrid_serving_summary", "index_describe", "knn_hnsw_cosine",
+      "knn_ivfhnsw_cosine", "mllib_brp_ann", "mllib_minhash_neardups",
+      "mllib_word2vec_knn", "q_approx_sketch", "recall_hnsw",
+      "recall_ivfhnsw", "sgns_knn", "sgns_subword_knn", "sgns_train_loss"))
+  }
+
   test("entry flagship returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

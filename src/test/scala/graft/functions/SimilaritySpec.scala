@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -104,5 +104,37 @@ class SimilaritySpec extends AnyFunSuite {
       .agg(sum("s")).first().getDouble(0)
     spark.conf.set("spark.sql.codegen.wholeStage", "true")
     assert(cg == interp)
+  }
+
+  test("a dimension mismatch throws naming both lengths, in generated " +
+      "and interpreted code") {
+    // id-dependent vectors, so no optimizer rule folds the kernel away
+    val ragged = spark.range(1, 4).selectExpr(
+      "transform(sequence(1, 3), i -> cast(id * i as float)) as a",
+      "transform(sequence(1, 2), i -> cast(id + i as float)) as b")
+    val kernels = Seq[(String, (Column, Column) => Column)](
+      "dot_product" -> similarity.dot_product,
+      "cosine_similarity" -> similarity.cosine_sim,
+      "euclidean_similarity" -> similarity.euclidean_sim)
+    // (whole-stage codegen, expression factory mode)
+    val paths = Seq(("true", "CODEGEN_ONLY"), ("false", "NO_CODEGEN"))
+    try paths.foreach { case (wholeStage, factory) =>
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      kernels.foreach { case (name, f) =>
+        val e = intercept[Exception](
+          ragged.select(f(col("a"), col("b"))).collect())
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(_.getMessage).toSeq
+        assert(msgs.exists(m => m != null &&
+            m.contains(s"$name: dimension mismatch, 3 vs 2")),
+          s"$name ($factory): ${msgs.mkString(" | ")}")
+        // equal lengths still score
+        assert(ragged.select(f(col("a"), col("a"))).collect().length == 3)
+      }
+    } finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
   }
 }
