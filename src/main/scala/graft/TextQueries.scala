@@ -50,8 +50,9 @@ object TextQueries {
     }
 
   /** The memoized text index over all of `dir`'s documents — served by
-    * `bm25_indexed` and the BM25 leg of `bm25_phrase_boost`. */
-  private def textIndex(s: SparkSession, dir: String): String =
+    * `bm25_indexed`, the BM25 leg of `bm25_phrase_boost` and the lexical
+    * leg of `rrf_fusion_bm25` / `rank_quality`. */
+  private[graft] def textIndex(s: SparkSession, dir: String): String =
     TextMemo.get(s, s"textindex/$dir") {
       val p = perDirName("tix", dir)
       graft.operators.TextIndex.build(docs(s, dir), p, numBuckets = 8)
@@ -88,7 +89,7 @@ object TextQueries {
   /** BM25 top-`topk` docs from the index at `prefix`, the query docs
     * being those with id < `nq` (their distinct terms, read from the
     * posting table). */
-  private def bm25FromIndex(s: SparkSession, prefix: String, nq: Int,
+  private[graft] def bm25FromIndex(s: SparkSession, prefix: String, nq: Int,
       topk: Int): DataFrame = {
     val queryTerms = s.table(s"${prefix}_postings")
       .filter(col("doc_id") < nq)
@@ -107,8 +108,8 @@ object TextQueries {
     * (qid, doc), then a top-`topk` window. Round-before-rank (4 dp) keeps
     * cross-engine rank ties deterministic (double group-sum order differs
     * between engines; ~1e-12 error vs 1e-4 grain — same regime
-    * unigram_surprisal hash-matches in). Shared by the `bm25_top_docs`
-    * battery entry and the `rrf_fusion_bm25` lexical leg. */
+    * unigram_surprisal hash-matches in). Serves the `bm25_top_docs`
+    * battery entry; index-served BM25 is spec-pinned bit-identical to it. */
   private[graft] def bm25Ranked(s: SparkSession, dir: String,
       nq: Int, topk: Int): DataFrame =
     // NOT memoized (OPTIMIZATION r15): r14 cached the ranked head across

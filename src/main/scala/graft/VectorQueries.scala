@@ -505,7 +505,8 @@ object VectorQueries {
     // rrf_fusion_bm25 and rank_quality, making the second entry a cache
     // read (VERDICT r14: gaming). Each entry recomputes the lexical +
     // vector legs and the fuse — its declared computation.
-    rrfFused(s, dir, graft.TextQueries.bm25Ranked(s, dir, nq = 10, topk = 20)
+    rrfFused(s, dir, graft.TextQueries.bm25FromIndex(s,
+        graft.TextQueries.textIndex(s, dir), nq = 10, topk = 20)
       .select(col("qid").as("query_id"), col("doc_id"),
         col("rnk").as("rank")))
   }
@@ -684,7 +685,8 @@ object VectorQueries {
     }),
 
     // RRF fusion with the REAL lexical scorer: BM25 top-20 per query doc
-    // ([[graft.TextQueries.bm25Ranked]] — inverted-index posting join)
+    // (served from the persisted [[graft.operators.TextIndex]], which is
+    // spec-pinned bit-identical to [[graft.TextQueries.bm25Ranked]])
     // fused with exact-cosine top-20 over the same ids. The production
     // hybrid-retrieval composition (BM25 ⊕ dense) end to end, and every
     // stage — BM25 arithmetic, cosine ranking, reciprocal-rank sum — is

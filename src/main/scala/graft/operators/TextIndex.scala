@@ -57,7 +57,12 @@ import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType,
   * survivors — again bit-identical to a rebuild without those docs);
   * [[compact]] folds both back into a fresh single-epoch layout. The
   * `bm25_incremental` battery entry hash-matches the SAME oracle as the
-  * build-once path after an append.
+  * build-once path after an append. An epoch's rows are hash-partitioned
+  * by term once before they are written ([[clusterByTerm]]), so each
+  * bucket sits in one task: an epoch adds at most ONE file per bucket to
+  * each bucketed table (postings, lexicon, positional tables) plus one
+  * stats file — 2·numBuckets + 1 files for a BM25 append — whatever the
+  * session's shuffle partition count.
   */
 object TextIndex {
 
@@ -96,16 +101,58 @@ object TextIndex {
     * count) with ONE exchange (the groupBy) instead of two. The
     * explode(array(...)) wrapper is the usual materialization barrier:
     * tokenize once, not once per consumer. */
-  private[graft] def postingsFor(docs: DataFrame): DataFrame = {
-    val toks = docs
-      .select(col("doc_id"),
-        explode(array(split(trim(col("text")), "\\s+"))).as("ts"))
+  private[graft] def postingsFor(docs: DataFrame): DataFrame =
+    tfRows(tokenRows(docs))
+
+  /** The doc's token array: the whitespace tokenization the postings and
+    * the epoch stats row both count. */
+  private def tokensOf(text: Column): Column = split(trim(text), "\\s+")
+
+  /** (doc_id, dl, term): one row per token occurrence, dl in-row. */
+  private def tokenRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(array(tokensOf(col("text")))).as("ts"))
       .select(col("doc_id"), size(col("ts")).cast("long").as("dl"),
         explode(col("ts")).as("term"))
+
+  /** The (doc_id, term) tf aggregation of [[tokenRows]]. */
+  private def tfRows(toks: DataFrame): DataFrame =
     toks.groupBy("doc_id", "term")
       .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
       .select(col("term"), col("doc_id"), col("tf"), col("dl"))
+
+  /** One epoch's (n, ndl, sumdl) stats row as ONE global aggregate over
+    * its docs: n counts every doc (a null-text doc never reaches the
+    * token stream but still counts toward N), ndl the docs that do, and
+    * sumdl their token counts — the dl [[postingsFor]] records, so the
+    * row is the exact integers a rebuild derives from the postings. */
+  private def epochStats(docs: DataFrame): DataFrame = {
+    val text = col("text")
+    docs.agg(count(lit(1)).as("n"), count(text).as("ndl"),
+      coalesce(sum(when(text.isNotNull, size(tokensOf(text)).cast("long"))),
+        lit(0L)).as("sumdl"))
   }
+
+  /** Hash-partition epoch rows by term into the largest divisor of
+    * `numBuckets` that is at most the session's shuffle partition count.
+    * Spark's bucket id is pmod(murmur3(term), numBuckets), and for n
+    * dividing numBuckets pmod(h, n) = pmod(pmod(h, numBuckets), n): each
+    * bucket's rows land in exactly one task, so [[appendEpoch]] writes
+    * one file per bucket while the task count stays at the session's. */
+  private def clusterByTerm(rows: DataFrame, numBuckets: Int): DataFrame = {
+    val cap = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val n = (math.min(cap, numBuckets) to 1 by -1).find(numBuckets % _ == 0).get
+    rows.repartition(n, col("term"))
+  }
+
+  /** Append one epoch's rows to the bucketed table `table`. The rows are
+    * [[clusterByTerm]]-partitioned here; rows that already are (a
+    * per-term aggregate over a clustered frame) keep their partitioning
+    * with no second exchange. */
+  private def appendEpoch(rows: DataFrame, table: String,
+      numBuckets: Int): Unit =
+    clusterByTerm(rows, numBuckets).write.mode(SaveMode.Append)
+      .bucketBy(numBuckets, "term").sortBy("term")
+      .format("parquet").saveAsTable(table)
 
   /** Tokenize `docs` (doc_id, text) and persist the posting + lexicon +
     * stats tables under `prefix` (overwrites). Returns the corpus
@@ -282,7 +329,12 @@ object TextIndex {
     * works; serve-time df sums across epoch rows), and one (n, ndl,
     * sumdl) epoch row appends to the stats table. All three are exact
     * integer merges, so serving after append is BIT-IDENTICAL to a full
-    * rebuild over the union — the spec pins that. Contract: `newDocs`
+    * rebuild over the union — the spec pins that. One epoch is at most
+    * one file per bucket in the posting and lexicon tables plus one stats
+    * file, in at most 7 Spark jobs (spec-pinned): the tokens' one
+    * exchange by term, the persisted delta and its posting write, the
+    * lexicon write, the stats aggregate and its write, and the closing
+    * stats read. Contract: `newDocs`
     * ids must not already be in the index NOR in the delete vector
     * (replacement = remove + [[compact]] + append: the vector filters
     * by doc_id alone, so re-appending a removed id before compaction
@@ -302,28 +354,18 @@ object TextIndex {
     // positional tables, when present, take the same epoch append
     if (spark.catalog.tableExists(positionsTable(prefix)))
       appendPositional(newDocs, prefix, numBuckets)
-    // the delta feeds THREE consumers (postings write, per-term df,
-    // ndl/sumdl) — persist the batch-sized frame so the batch is
-    // tokenized+aggregated once, not three times (OPTIMIZATION r14;
-    // bounded by the append batch, never the index)
-    val delta = postingsFor(newDocs).persist()
+    // the delta feeds two writes (postings, per-term df): persist it so
+    // the batch is tokenized and aggregated once (bounded by the batch,
+    // never the index). The term clustering is the ONE exchange: it also
+    // satisfies the (doc_id, term) tf aggregation and the lexicon's
+    // per-term df over the persisted delta
+    val delta = tfRows(clusterByTerm(tokenRows(newDocs), numBuckets)).persist()
     try {
-      delta.write.mode(SaveMode.Append)
-        .bucketBy(numBuckets, "term").sortBy("term")
-        .format("parquet").saveAsTable(postingsTable(prefix))
+      appendEpoch(delta, postingsTable(prefix), numBuckets)
       // per-term df of THIS batch only — merged by sum at lookup time
-      delta.groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode(SaveMode.Append)
-        .bucketBy(numBuckets, "term").sortBy("term")
-        .format("parquet").saveAsTable(lexiconTable(prefix))
-      val n = newDocs.count()
-      val dld = delta.select(col("doc_id"), col("dl")).distinct()
-        .agg(count(lit(1)).as("ndl"), sum("dl").as("sumdl")).first()
-      val ndl = dld.getLong(0)
-      val sumdl = if (dld.isNullAt(1)) 0L else dld.getLong(1)
-      import spark.implicits._
-      Seq((n, ndl, sumdl)).toDF("n", "ndl", "sumdl")
-        .write.mode(SaveMode.Append)
+      appendEpoch(delta.groupBy("term").agg(count(lit(1)).as("df")),
+        lexiconTable(prefix), numBuckets)
+      epochStats(newDocs).write.mode(SaveMode.Append)
         .format("parquet").saveAsTable(statsTable(prefix))
     } finally delta.unpersist()
     stats(spark, prefix)
@@ -594,9 +636,7 @@ object TextIndex {
     val spark = newDocs.sparkSession
     require(spark.catalog.tableExists(positionsTable(prefix)),
       s"positional index '$prefix' does not exist — call buildPositional")
-    tokenPositions(newDocs).write.mode(SaveMode.Append)
-      .bucketBy(numBuckets, "term").sortBy("term")
-      .format("parquet").saveAsTable(positionsTable(prefix))
+    appendEpoch(tokenPositions(newDocs), positionsTable(prefix), numBuckets)
     // a LEGACY index (built before the nextword table existed) stays in
     // its unigram-only shape: creating positions2 here would hold only
     // this batch's bigrams, and phraseTopDocs would then route every
@@ -604,9 +644,8 @@ object TextIndex {
     // silent wrong results. The unigram fallback keeps append ≡ rebuild
     // for the legacy layout; rebuild with buildPositional to upgrade.
     if (spark.catalog.tableExists(positions2Table(prefix)))
-      bigramPositions(newDocs).write.mode(SaveMode.Append)
-        .bucketBy(numBuckets, "term").sortBy("term")
-        .format("parquet").saveAsTable(positions2Table(prefix))
+      appendEpoch(bigramPositions(newDocs), positions2Table(prefix),
+        numBuckets)
     ()
   }
 
@@ -755,8 +794,10 @@ object TextIndex {
     * as one index epoch via [[append]] — so a stream-built index serves
     * bit-identically to a batch build over the same docs (spec-pinned),
     * the same stream-built/batch-served contract the vector side's
-    * `IncrementalIvfIndex.snapshot` keeps. Epochs accumulate one posting
-    * file set per batch; run [[compact]] on the usual epoch cadence.
+    * `IncrementalIvfIndex.snapshot` keeps. Each non-empty batch adds
+    * one [[append]] epoch — at most one file per bucket per table, plus
+    * one stats file — so files still accumulate with the batch count:
+    * run [[compact]] on the usual epoch cadence.
     * Caller owns the returned query's lifecycle (and the checkpoint via
     * the usual writeStream options upstream). */
   def streamingAppend(stream: DataFrame, prefix: String,
@@ -809,20 +850,10 @@ object TextIndex {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch.persist()
         try if (!b.isEmpty) {
-          val spark = b.sparkSession
-          import spark.implicits._
-          val delta = postingsFor(b).persist()
-          try {
-            delta.write.mode(SaveMode.Overwrite)
-              .parquet(s"$root/postings/epoch=b$batchId")
-            val n = b.count()
-            val dld = delta.select(col("doc_id"), col("dl")).distinct()
-              .agg(count(lit(1)).as("ndl"), sum("dl").as("sumdl")).first()
-            val sumdl = if (dld.isNullAt(1)) 0L else dld.getLong(1)
-            Seq((n, dld.getLong(0), sumdl)).toDF("n", "ndl", "sumdl")
-              .write.mode(SaveMode.Overwrite)
-              .parquet(s"$root/stats/epoch=b$batchId")
-          } finally { delta.unpersist(); () }
+          postingsFor(b).write.mode(SaveMode.Overwrite)
+            .parquet(s"$root/postings/epoch=b$batchId")
+          epochStats(b).write.mode(SaveMode.Overwrite)
+            .parquet(s"$root/stats/epoch=b$batchId")
         } finally { b.unpersist(); () }
       }
       .start()
@@ -889,7 +920,8 @@ object TextIndex {
     }
 
   /** Fold committed staged epochs into the bucketed base tables (one
-    * [[append]]-shape write set) and drop the staged dirs. MAINTENANCE
+    * [[append]]-shape epoch: all staged epochs together add at most one
+    * file per bucket per table) and drop the staged dirs. MAINTENANCE
     * op with the [[compact]] posture: run it with the stream STOPPED;
     * like compact's tmp-table dance it is not crash-atomic across its
     * table writes — a JVM death mid-fold calls for a rebuild. */
@@ -899,15 +931,11 @@ object TextIndex {
       case None => stats(spark, prefix)
       case Some((epPosts, epN, epNdl, epSumdl)) =>
         import spark.implicits._
-        val posts = epPosts.persist()
+        val posts = clusterByTerm(epPosts, numBuckets).persist()
         try {
-          posts.write.mode(SaveMode.Append)
-            .bucketBy(numBuckets, "term").sortBy("term")
-            .format("parquet").saveAsTable(postingsTable(prefix))
-          posts.groupBy("term").agg(count(lit(1)).as("df"))
-            .write.mode(SaveMode.Append)
-            .bucketBy(numBuckets, "term").sortBy("term")
-            .format("parquet").saveAsTable(lexiconTable(prefix))
+          appendEpoch(posts, postingsTable(prefix), numBuckets)
+          appendEpoch(posts.groupBy("term").agg(count(lit(1)).as("df")),
+            lexiconTable(prefix), numBuckets)
           Seq((epN, epNdl, epSumdl)).toDF("n", "ndl", "sumdl")
             .write.mode(SaveMode.Append)
             .format("parquet").saveAsTable(statsTable(prefix))

@@ -249,6 +249,135 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.drop(spark, inc); TextIndex.drop(spark, full)
   }
 
+  test("an epoch of degenerate docs (null, empty, whitespace-only, one " +
+      "token) merges and serves like a rebuild over the union") {
+    import spark.implicits._
+    val inc = "graft_tix_degen"; val full = "graft_tix_degenfull"
+    TextIndex.drop(spark, inc); TextIndex.drop(spark, full)
+    val base = docs.select("doc_id", "text")
+    val tok = base.filter(col("doc_id") === 0).first().getString(1)
+      .trim.split("\\s+").head
+    val batch = Seq((900000L, null: String), (900001L, ""), (900002L, "   "),
+      (900003L, tok)).toDF("doc_id", "text")
+    TextIndex.build(base, inc, numBuckets = 8)
+    val stInc = TextIndex.append(batch, inc, numBuckets = 8)
+    val stFull = TextIndex.build(base.unionByName(batch), full, numBuckets = 8)
+    assert(stInc == stFull, s"merged stats $stInc vs rebuilt $stFull")
+    // the epoch row: all four docs count toward N; the three non-null
+    // ones reach the token stream ("" and "   " as one empty token each)
+    assert(spark.table(s"${inc}_stats").filter(col("n") === 4)
+      .select("ndl", "sumdl").as[(Long, Long)].collect().toSeq == Seq((3L, 3L)))
+    val qt = spark.table(s"${full}_postings")
+      .filter(col("doc_id") < 20 || col("doc_id") >= 900000)
+      .select(col("doc_id").as("qid"), col("term")).cache()
+    val served = serve(inc, qt)
+    assert(served == serve(full, qt))
+    assert(Seq(900001L, 900002L, 900003L).forall(q => served.exists(_._1 == q)),
+      "each non-null degenerate doc must be served for its own terms")
+    qt.unpersist()
+    TextIndex.drop(spark, inc); TextIndex.drop(spark, full)
+  }
+
+  /** The data files of `table`'s warehouse dir. */
+  private def dataFiles(table: String): Set[String] = {
+    val dir = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) Set.empty
+    else fs.listStatus(dir).map(_.getPath.getName)
+      .filter(_.startsWith("part-")).toSet
+  }
+
+  /** The bucket id of each data file `body` adds to each of `tables`. */
+  private def bucketsAdded(tables: Seq[String])(body: => Any)
+      : Map[String, Seq[Int]] = {
+    val before = tables.map(t => t -> dataFiles(t)).toMap
+    body
+    val id = "_(\\d+)\\.c\\d+".r
+    tables.map { t =>
+      t -> (dataFiles(t) -- before(t)).toSeq.map(f =>
+        id.findFirstMatchIn(f).map(_.group(1).toInt)
+          .getOrElse(fail(s"$t: unbucketed file $f")))
+    }.toMap
+  }
+
+  test("an epoch adds at most one file per bucket to each bucketed table " +
+      "(append, appendPositional, foldEpochs), for any shuffle partition " +
+      "count") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    val p = "graft_tix_layout"
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    def oneFilePerBucket(added: Map[String, Seq[Int]]): Unit =
+      added.foreach { case (t, ids) =>
+        assert(ids.nonEmpty && ids.size == ids.distinct.size &&
+          ids.forall(i => i >= 0 && i < 8),
+          s"$t gained files in buckets ${ids.sorted.mkString(",")}")
+      }
+    try for (parts <- Seq("4", "3")) {
+      spark.conf.set(key, parts)
+      TextIndex.drop(spark, p)
+      TextIndex.build(docs.filter(col("doc_id") < 200), p, numBuckets = 8)
+      TextIndex.buildPositional(docs.filter(col("doc_id") < 200), p,
+        numBuckets = 8)
+      // append writes the BM25 and the positional epochs
+      oneFilePerBucket(bucketsAdded(Seq("postings", "lexicon", "positions",
+          "positions2").map(t => s"${p}_$t")) {
+        TextIndex.append(docs.filter(col("doc_id").between(200, 349)), p,
+          numBuckets = 8)
+      })
+      oneFilePerBucket(bucketsAdded(Seq("positions", "positions2")
+          .map(t => s"${p}_$t")) {
+        TextIndex.appendPositional(
+          docs.filter(col("doc_id").between(350, 399)), p, numBuckets = 8)
+      })
+      // docs 350–399 went to the positional tables alone: the BM25
+      // tables take every doc from 350 on as two committed streaming
+      // epochs, which fold as one epoch
+      val tmp = java.nio.file.Files.createTempDirectory("tix-layout").toFile
+      try {
+        val rest = docs.filter(col("doc_id") >= 350).orderBy("doc_id")
+          .select(col("doc_id"), col("text")).as[(Long, String)].collect()
+        implicit val sqlCtx = spark.sqlContext
+        val mem = MemoryStream[(Long, String)]
+        val q = TextIndex.streamingAppendEpochs(
+          mem.toDF().toDF("doc_id", "text"), p, s"$tmp/root", s"$tmp/ckpt",
+          numBuckets = 8)
+        try rest.grouped(rest.length / 2 + 1).foreach { part =>
+          mem.addData(part.toSeq); q.processAllAvailable()
+        } finally q.stop()
+        oneFilePerBucket(bucketsAdded(Seq("postings", "lexicon")
+            .map(t => s"${p}_$t")) {
+          TextIndex.foldEpochs(spark, p, s"$tmp/root", numBuckets = 8)
+        })
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+      assert(TextIndex.stats(spark, p) ==
+        TextIndex.build(docs, s"${p}_ref", numBuckets = 8),
+        s"stats after the epochs at $parts shuffle partitions")
+      TextIndex.drop(spark, s"${p}_ref")
+    } finally spark.conf.set(key, saved)
+    TextIndex.drop(spark, p)
+  }
+
+  test("a warm append runs at most 7 Spark jobs") {
+    val p = "graft_tix_appendjobs"
+    TextIndex.drop(spark, p)
+    TextIndex.build(docs.filter(col("doc_id") < 200), p, numBuckets = 8)
+    TextIndex.append(docs.filter(col("doc_id").between(200, 299)), p,
+      numBuckets = 8)
+    val batch = docs.filter(col("doc_id") >= 300)
+    // postings: the term exchange's map stage, the persisted delta, the
+    // bucketed write (3); lexicon: one write over the persisted delta,
+    // already clustered by term (1); stats row: the global aggregate's
+    // map stage and its write (2); the closing stats read (1)
+    val jobs = org.apache.spark.ListenerBusDrain.jobsDuring(
+      spark.sparkContext)(TextIndex.append(batch, p, numBuckets = 8))
+    info(s"$jobs jobs")
+    assert(jobs <= 7, s"$jobs jobs for one warm append")
+    TextIndex.drop(spark, p)
+  }
+
   test("remove (delete vector) serves bit-identically to a rebuild " +
       "without those docs; compact folds and preserves results") {
     val del = "graft_tix_del"; val ref = "graft_tix_delref"
