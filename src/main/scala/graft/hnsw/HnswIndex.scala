@@ -568,10 +568,14 @@ final class HnswIndex(
   }
 
   /** O12 k-NN query (src/main.ts:253-283): greedy descent to layer 1,
-    * ef-bounded layer-0 search, dedupe, recompute scores, truncate at k. */
+    * ef-bounded layer-0 search, dedupe, recompute scores, truncate at k.
+    * A query whose dimension differs from the index's throws: the
+    * similarity kernels would otherwise score only the common prefix. */
   def searchKNN(query: Array[Float], k: Int,
       efSearchOverride: Option[Int] = None): Array[(Long, Double)] = {
     if (entryPointId == -1L || nodes.isEmpty || k <= 0) return Array.empty
+    if (query.length != d) throw new IllegalArgumentException(
+      s"searchKNN: dimension mismatch, ${query.length} vs $d")
     var entry = nodes(entryPointId)
     val qNorm = qNormOf(query)
     var level = levelMax

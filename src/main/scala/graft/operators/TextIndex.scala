@@ -28,9 +28,12 @@ import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType,
   *    df rows, summed there as exact Longs. The resolved (qid, df)
   *    entries ride into the posting scan as one term-keyed map literal
   *    (no broadcast job), and each posting row is scored in the scan
-  *    stage. The probe terms are that scan's `IN` filter — whole buckets
-  *    prune for narrow queries (`SelectedBucketsCount`) and parquet
-  *    row-group stats on the sorted term column prune within buckets.
+  *    stage. The probe terms are that scan's `IN` filter: the scan reads
+  *    only the files of the buckets the terms hash to, packed into one or
+  *    two tasks (a session with `graft.GraftExtensions` reads it
+  *    non-bucketed, since nothing under the qid exchange uses the
+  *    bucketing), and parquet row-group stats on the sorted term column
+  *    prune within those files.
   *    One exchange by qid feeds both the (qid, doc) sum and the top-k
   *    window — the transient pipeline's score and ranking, minus the
   *    corpus-wide aggregations.
@@ -526,9 +529,12 @@ object TextIndex {
     *     scan stage: a term → array<(qid, df)> map literal, looked up
     *     and inlined per posting row (no broadcast job; the lookup scans
     *     the map's keys, which the probe contract keeps few). The scan is
-    *     `IN`-filtered to the surviving terms and stays bucket-pruned;
-    *     each row is scored there with the score arithmetic of
-    *     `TextQueries.bm25Ranked`;
+    *     `IN`-filtered to the surviving terms and bucket-pruned: it reads
+    *     only the selected buckets' files. Under `graft.GraftExtensions`
+    *     it reads them non-bucketed, packed by `maxSplitBytes` into one
+    *     or two tasks instead of one task per bucket
+    *     ([[graft.plans.DisableUnusedBucketedScan]]); each row is scored
+    *     there with the score arithmetic of `TextQueries.bm25Ranked`;
     *  4. the scored rows are hash-partitioned by qid ONCE: that
     *     exchange satisfies both the (qid, doc) sum — rounded to 4 dp
     *     before ranking — and the per-qid top-k window on

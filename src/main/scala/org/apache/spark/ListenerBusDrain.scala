@@ -2,12 +2,12 @@ package org.apache.spark
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 
-/** Test helper: waits until every queued listener event has been
-  * delivered, so a listener's counts are complete when an action
-  * returns. Lives in this package because the listener bus is
-  * Spark-private. */
+/** Waits until every queued listener event has been delivered, so a
+  * listener's counts are complete when an action returns. Lives in this
+  * package because the listener bus is Spark-private. */
 object ListenerBusDrain {
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
@@ -30,5 +30,14 @@ object ListenerBusDrain {
       override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     })(body)
     jobs.get
+  }
+
+  /** The number of Spark tasks that ended while `body` runs. */
+  def tasksDuring(sc: SparkContext)(body: => Any): Int = {
+    val tasks = new AtomicInteger()
+    listening(sc, new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = { tasks.incrementAndGet(); () }
+    })(body)
+    tasks.get
   }
 }

@@ -1,7 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.datasources.{BucketingUtils,
+  FilePartition}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.functions.{col, explode}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.plans.DisableUnusedBucketedScan
 
 /** Physical-plan shape guards: the properties that make these operators
   * scale (pushdown, broadcast choice, partial aggregation, exchange reuse)
@@ -26,6 +33,12 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+
+  private def scans(p: SparkPlan): Seq[FileSourceScanExec] =
+    p.collect { case s: FileSourceScanExec => s }
+
+  private def exchanges(p: SparkPlan): Int =
+    p.collect { case e: Exchange => e }.size
 
   test("q1_agg: shipdate filter pushed to the parquet scan, two-phase agg") {
     val p = plan("q1_agg")
@@ -153,6 +166,14 @@ class PlanSpec extends AnyFunSuite {
       val ap = agg.queryExecution.executedPlan.toString
       assert(!ap.contains("Exchange"),
         s"groupBy on bucket key must be shuffle-free:\n$ap")
+      // the join and the aggregate use the bucketing: the unused-bucketing
+      // rule leaves every scan bucketed and adds no exchange
+      for (q <- Seq(joined, agg)) {
+        val after = DisableUnusedBucketedScan(q.queryExecution.executedPlan)
+        val ss = scans(after)
+        assert(ss.nonEmpty && ss.forall(_.bucketedScan) && exchanges(after) == 0,
+          s"a used bucketing was dropped:\n$after")
+      }
       // results match the unbucketed join
       assert(joined.count() ==
         l.join(o, "l_orderkey").count())
@@ -375,5 +396,61 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"),
       s"rerank candidates must broadcast (base never shuffles):\n$p")
     graft.streaming.IncrementalBqIndex.drop(spark, path)
+  }
+
+  test("unused-bucketing rule: the BM25 posting scan under the qid " +
+      "exchange reads only its selected buckets' files, packed into one task") {
+    import spark.implicits._
+    val prefix = "graft_plan_bm25"
+    graft.operators.TextIndex.drop(spark, prefix)
+    graft.operators.TextIndex.build(
+      spark.read.parquet(s"$dir/documents.parquet"), prefix, numBuckets = 32)
+    try {
+      val terms = spark.table(s"${prefix}_lexicon").select("term")
+        .as[String].collect().sorted.take(3)
+      val probe = terms.toSeq.map(t => (0L, t)).toDF("qid", "term")
+      val before = graft.operators.TextIndex
+        .bm25TopDocs(spark, prefix, probe, topk = 10).queryExecution.executedPlan
+      val after = DisableUnusedBucketedScan(before)
+      def postings(p: SparkPlan) = scans(p)
+        .filter(_.tableIdentifier.exists(_.table == s"${prefix}_postings"))
+      // Spark keeps the scan bucketed: the (qid, doc_id) aggregate above
+      // the exchange is clustered, and a Generate sits below it
+      assert(postings(before).map(_.bucketedScan) == Seq(true), s"$before")
+      val Seq(scan) = postings(after)
+      assert(!scan.bucketedScan, s"the posting scan stayed bucketed:\n$after")
+      assert(exchanges(after) == exchanges(before), s"$after")
+      val selected = scan.optionalBucketSet.get
+      assert(selected.cardinality() <= 3, s"$selected")
+      val parts = scan.inputRDD.partitions.map(_.asInstanceOf[FilePartition])
+      val read = parts.flatMap(_.files).map(_.toPath.getName).toSet
+      // every file of a selected bucket, and no other
+      val want = scan.relation.location.inputFiles
+        .map(new org.apache.hadoop.fs.Path(_).getName)
+        .filter(n => selected.get(BucketingUtils.getBucketId(n).get)).toSet
+      assert(want.nonEmpty && read == want, s"read $read, want $want")
+      assert(parts.length == 1, s"${parts.length} tasks for ${read.size} files")
+    } finally graft.operators.TextIndex.drop(spark, prefix)
+  }
+
+  test("unused-bucketing rule: a Generate then an aggregate by the bucket " +
+      "key, with no exchange between them, keeps the scan bucketed") {
+    import spark.implicits._
+    val t = "graft_plan_gen_b"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    graft.operators.Bucketing.writeBucketed(
+      Seq(("a", Seq(1L, 2L)), ("b", Seq(3L)), ("c", Seq(4L, 5L, 6L)))
+        .toDF("term", "docs"), t, "term", 4)
+    try {
+      val q = spark.table(t).select(col("term"), explode(col("docs")).as("doc"))
+        .groupBy("term").count()
+      val p = q.queryExecution.executedPlan
+      assert(p.toString.contains("Generate") && exchanges(p) == 0, s"$p")
+      val after = DisableUnusedBucketedScan(p)
+      assert(scans(after).map(_.bucketedScan) == Seq(true),
+        s"the aggregate's bucketing was dropped:\n$after")
+      assert(q.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+        Map("a" -> 2L, "b" -> 1L, "c" -> 3L))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 }

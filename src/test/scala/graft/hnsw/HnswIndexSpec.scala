@@ -61,6 +61,17 @@ class HnswIndexSpec extends AnyFunSuite {
     assert(e.getMessage.contains("same dimension"))
   }
 
+  test("a query of the wrong dimension throws instead of scoring a prefix") {
+    val idx = build(fixture, levels = Seq(0, 0, 0, 0, 0))
+    for (q <- Seq(Array(3f, 4f), Array.fill(7)(1f))) {
+      val e = intercept[IllegalArgumentException](idx.searchKNN(q, 3))
+      assert(e.getMessage == s"searchKNN: dimension mismatch, ${q.length} vs 5")
+    }
+    assert(idx.searchKNN(Array(3f, 4f, 5f, 6f, 7f), 3).length == 3)
+    // an empty index has no dimension to hold a query to
+    assert(new HnswIndex().searchKNN(Array(1f, 2f), 3).isEmpty)
+  }
+
   test("duplicate id throws (src/main.ts:240-242)") {
     val idx = new HnswIndex()
     idx.addPoint(1L, Array(1f, 2f))

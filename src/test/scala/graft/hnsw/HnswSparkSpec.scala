@@ -328,6 +328,20 @@ class HnswSparkSpec extends AnyFunSuite {
     model.unpersist()
   }
 
+  test("knnJoin with a probe of the wrong dimension fails with the kernel's message") {
+    val s = spark; import s.implicits._
+    val model = HnswIndexer.fit(emb, HnswParams(numPartitions = 2))
+    val v = emb.filter(col("vec_id") === 3).select("embedding").as[Array[Float]].head()
+    val half = Seq((3L, v.take(v.length / 2))).toDF("query_id", "query_vec")
+    val e = intercept[Exception](model.knnJoin(half, k = 5).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains(
+      s"searchKNN: dimension mismatch, ${v.length / 2} vs ${v.length}")),
+      msgs.mkString("\n"))
+    model.unpersist()
+  }
+
   test("unpersist of a lazily loaded model after delete runs no job and evicts its sub-indexes") {
     val model = IvfHnsw.fit(emb, numCells = 4,
       HnswParams(m = 8, efConstruction = 60, numPartitions = 4))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -15,15 +16,34 @@ import scala.jdk.CollectionConverters._
   * earlier serve plan's shape — a local (qid, term, df) relation
   * broadcast-joined to the posting rows, a (qid, doc_id) aggregate, then
   * a row_number window — over every index layout serving reads. Scores
-  * compare by their raw bits, schemas by name, type and nullability. */
-class TextIndexServeSpec extends AnyFunSuite {
+  * compare by their raw bits, schemas by name, type and nullability.
+  *
+  * The suite serves in a session with [[graft.GraftExtensions]], as every
+  * graft entry point does, so the posting scan reads flat
+  * ([[graft.plans.DisableUnusedBucketedScan]]). */
+class TextIndexServeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  // getOrCreate reuses an existing session and ignores extensions, so
+  // stop it first; afterAll stops this one, and later suites
+  // re-getOrCreate lazily
+  lazy val spark: SparkSession = {
+    SparkSession.getDefaultSession.foreach(_.stop())
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    SparkSession.builder()
+      .master("local[4]")
+      .withExtensions(new graft.GraftExtensions)
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .getOrCreate()
+  }
+
+  override def afterAll(): Unit = {
+    spark.stop()
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+  }
 
   val dir = "/root/testdata/sf0.001"
   private def docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -221,6 +241,27 @@ class TextIndexServeSpec extends AnyFunSuite {
     val jobs = warmJobs(TextIndex.bm25TopDocs(spark, deleted, _, 10),
       threeTerms(deleted))
     assert(jobs <= 9, s"$jobs jobs for one warm 3-term query")
+  }
+
+  test("a warm 3-term serve over a 32-bucket index runs 4 tasks") {
+    import spark.implicits._
+    val p = "graft_tis_b32"
+    TextIndex.drop(spark, p)
+    TextIndex.build(docs, p, numBuckets = 32)
+    val terms = spark.table(s"${p}_lexicon").select("term").as[String]
+      .collect().sorted.take(3).toSeq
+    val probe = terms.map(t => (0L, t)).toDF("qid", "term")
+    def query() = TextIndex.bm25TopDocs(spark, p, probe, 10).collect()
+    assert(query().nonEmpty, "the probe terms come from the lexicon")
+    val tasks = org.apache.spark.ListenerBusDrain
+      .tasksDuring(spark.sparkContext)(query())
+    // the lookup collect reads the stats and the lexicon files, one task
+    // each; the posting scan reads the 3 selected buckets' files in one
+    // task (a bucketed scan ran one task per bucket: 32); the aggregate
+    // and window after the qid exchange run in one coalesced task
+    info(s"$tasks tasks")
+    assert(tasks == 4, s"$tasks tasks for one warm 3-term query")
+    TextIndex.drop(spark, p)
   }
 
   test("a warm bm25TopDocsWithEpochs serve runs no more jobs than the " +
