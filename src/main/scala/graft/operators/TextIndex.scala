@@ -13,14 +13,17 @@ import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType,
   * counterpart of the from-scratch `bm25_top_docs` pipeline, which
   * re-tokenizes the corpus per query. At 100 TB you tokenize ONCE:
   *
-  *  - `build` writes a posting table (term, doc_id, tf, dl) BUCKETED AND
+  *  - An index is a posting table (term, doc_id, tf, dl) BUCKETED AND
   *    SORTED BY term, a LEXICON table (term, df — the classic dictionary
-  *    file, vocabulary-sized, same bucketing), and a 1-row corpus stats
-  *    table (N, avgdl). The posting write is a LINEAR plan — scan →
-  *    explode → tf aggregation → per-doc window for dl → bucketed write:
-  *    one tokenization pass, zero joins (plan-asserted in PlanSpec); the
-  *    lexicon and avgdl then derive from the WRITTEN postings (one
-  *    aggregation each — index-derived, never a second tokenize).
+  *    file, vocabulary-sized, same bucketing) and a stats table of
+  *    (n, ndl, sumdl) rows: docs, docs with tokens, and their token
+  *    count, exact integers that merge by sum. Every table is written in
+  *    EPOCHS by one writer ([[writeEpoch]]): an epoch's posting rows are
+  *    hash-partitioned by term once and persisted, appended to the
+  *    postings, their per-term count appended to the lexicon, and the
+  *    epoch's one stats row appended. [[build]] is the first epoch: one
+  *    linear tokenize → tf aggregation plan (zero joins, plan-asserted in
+  *    PlanSpec) and one global aggregate for its stats row.
   *  - `bm25TopDocs` serves queries from the persisted tables alone in at
   *    most three Spark jobs. The bounded probe resolves on the DRIVER:
   *    the (qid, term) pairs are collected and deduped once, and ONE
@@ -60,12 +63,14 @@ import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType,
   * survivors — again bit-identical to a rebuild without those docs);
   * [[compact]] folds both back into a fresh single-epoch layout. The
   * `bm25_incremental` battery entry hash-matches the SAME oracle as the
-  * build-once path after an append. An epoch's rows are hash-partitioned
-  * by term once before they are written ([[clusterByTerm]]), so each
-  * bucket sits in one task: an epoch adds at most ONE file per bucket to
-  * each bucketed table (postings, lexicon, positional tables) plus one
-  * stats file — 2·numBuckets + 1 files for a BM25 append — whatever the
-  * session's shuffle partition count.
+  * build-once path after an append. Every bucketed write — the BM25
+  * epochs of build, append, [[foldEpochs]] and compact, and the
+  * positional tables' — goes through [[appendBucketed]], which
+  * hash-partitions the rows by term first ([[clusterByTerm]]), so each
+  * bucket sits in one task: a write adds at most ONE file per bucket to
+  * each bucketed table, plus one stats file for a BM25 epoch —
+  * 2·numBuckets + 1 files — whatever the session's shuffle partition
+  * count.
   */
 object TextIndex {
 
@@ -135,69 +140,75 @@ object TextIndex {
         lit(0L)).as("sumdl"))
   }
 
-  /** Hash-partition epoch rows by term into the largest divisor of
+  /** A stats row from exact sums the driver already holds. */
+  private def statsRow(spark: SparkSession, n: Long, ndl: Long,
+      sumdl: Long): DataFrame = {
+    import spark.implicits._
+    Seq((n, ndl, sumdl)).toDF("n", "ndl", "sumdl")
+  }
+
+  /** Hash-partition rows by term into the largest divisor of
     * `numBuckets` that is at most the session's shuffle partition count.
     * Spark's bucket id is pmod(murmur3(term), numBuckets), and for n
     * dividing numBuckets pmod(h, n) = pmod(pmod(h, numBuckets), n): each
-    * bucket's rows land in exactly one task, so [[appendEpoch]] writes
-    * one file per bucket while the task count stays at the session's. */
+    * bucket's rows land in exactly one task, so [[appendBucketed]] writes
+    * one file per bucket while the task count stays at the session's.
+    * Rows that already are partitioned so (a per-term aggregate over a
+    * clustered frame) keep their partitioning with no second exchange. */
   private def clusterByTerm(rows: DataFrame, numBuckets: Int): DataFrame = {
     val cap = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val n = (math.min(cap, numBuckets) to 1 by -1).find(numBuckets % _ == 0).get
     rows.repartition(n, col("term"))
   }
 
-  /** Append one epoch's rows to the bucketed table `table`. The rows are
-    * [[clusterByTerm]]-partitioned here; rows that already are (a
-    * per-term aggregate over a clustered frame) keep their partitioning
-    * with no second exchange. */
-  private def appendEpoch(rows: DataFrame, table: String,
+  /** The one bucketed write: append `rows` to `table` (created when it
+    * does not exist), [[clusterByTerm]]-partitioned first, so the write
+    * adds at most one file per bucket. */
+  private def appendBucketed(rows: DataFrame, table: String,
       numBuckets: Int): Unit =
     clusterByTerm(rows, numBuckets).write.mode(SaveMode.Append)
       .bucketBy(numBuckets, "term").sortBy("term")
       .format("parquet").saveAsTable(table)
 
+  /** The one BM25 epoch writer: `postings` (term, doc_id, tf, dl) rows
+    * are clustered by term and persisted once, appended to the postings,
+    * their per-term count appended to the lexicon (the clustering
+    * satisfies that aggregate, so it adds no exchange), and the epoch's
+    * one (n, ndl, sumdl) row `stats` appended to the stats table. */
+  private def writeEpoch(postings: DataFrame, stats: DataFrame,
+      prefix: String, numBuckets: Int): Unit = {
+    val rows = clusterByTerm(postings, numBuckets).persist()
+    try {
+      appendBucketed(rows, postingsTable(prefix), numBuckets)
+      appendBucketed(rows.groupBy("term").agg(count(lit(1)).as("df")),
+        lexiconTable(prefix), numBuckets)
+      stats.write.mode(SaveMode.Append)
+        .format("parquet").saveAsTable(statsTable(prefix))
+    } finally { rows.unpersist(); () }
+  }
+
+  /** `rows` without the docs in the delete vector, columns in order. */
+  private def minusDeletes(rows: DataFrame,
+      deletes: Option[DataFrame]): DataFrame = deletes match {
+    case Some(d) => rows.join(broadcast(d.select("doc_id")), Seq("doc_id"),
+      "left_anti").select(rows.columns.map(col).toSeq: _*)
+    case None => rows
+  }
+
   /** Tokenize `docs` (doc_id, text) and persist the posting + lexicon +
-    * stats tables under `prefix` (overwrites). Returns the corpus
+    * stats tables under `prefix` (overwrites) as one [[writeEpoch]]
+    * epoch: the map-side-combined tf aggregate (raw tokens are not
+    * shuffled) and the docs' one stats aggregate. Returns the corpus
     * stats. */
   def build(docs: DataFrame, prefix: String, numBuckets: Int = 32): Stats = {
     val spark = docs.sparkSession
-    clearTable(spark, postingsTable(prefix))
-    clearTable(spark, lexiconTable(prefix))
-    clearTable(spark, statsTable(prefix))
-    postingsFor(docs).write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "term").sortBy("term")
-      .format("parquet").saveAsTable(postingsTable(prefix))
-    // the lexicon (term, df) aggregates the WRITTEN postings — one
-    // vocabulary-sized pass over the index, never a second tokenize.
-    // Same bucketing as the postings so query-term lookups bucket-prune.
-    spark.table(postingsTable(prefix))
-      .groupBy("term").agg(count(lit(1)).as("df"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "term").sortBy("term")
-      .format("parquet").saveAsTable(lexiconTable(prefix))
-    // n must count ALL docs (a null-text doc never reaches the token
-    // stream but still counts toward N, matching the transient path);
-    // avgdl derives from the index itself — the write above was the one
-    // and only tokenization pass. ndl/sumdl are the MERGEABLE exact-
-    // integer forms of avgdl (dl is an integer token count, so epoch
-    // sums are exactly representable and Σsumdl/Σndl after appends is
-    // the SAME double a full rebuild computes).
-    val n = docs.count()
-    // clearTable, not a bare DROP: a stale deletes LOCATION from a
-    // previous JVM (catalog empty, files present) would fail the next
-    // remove()'s saveAsTable with LOCATION_ALREADY_EXISTS
-    clearTable(spark, deletesTable(prefix))
-    val dld = spark.table(postingsTable(prefix))
-      .select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)).as("ndl"), sum("dl").as("sumdl")).first()
-    val ndl = dld.getLong(0)
-    val sumdl = if (dld.isNullAt(1)) 0L else dld.getLong(1)
-    import spark.implicits._
-    Seq((n, ndl, sumdl)).toDF("n", "ndl", "sumdl")
-      .write.mode(SaveMode.Overwrite)
-      .format("parquet").saveAsTable(statsTable(prefix))
-    Stats(n, avgdlOf(ndl, sumdl))
+    // clearTable, not a bare DROP: a stale LOCATION from a previous JVM
+    // (catalog empty, files present) would fail the next saveAsTable
+    // with LOCATION_ALREADY_EXISTS
+    Seq(postingsTable(prefix), lexiconTable(prefix), statsTable(prefix),
+      deletesTable(prefix)).foreach(clearTable(spark, _))
+    writeEpoch(postingsFor(docs), epochStats(docs), prefix, numBuckets)
+    stats(spark, prefix)
   }
 
   private def avgdlOf(ndl: Long, sumdl: Long): Double =
@@ -213,19 +224,20 @@ object TextIndex {
     acc
   }
 
-  /** What one [[lookup]] read resolves: the corpus stats (epoch rows
-    * summed, deletions subtracted), the number of stats epoch rows, the
-    * number of deleted docs, and the df of the looked-up terms summed
-    * across their epoch rows. */
-  private case class Lookup(stats: Stats, epochs: Long, deleted: Long,
-      df: Map[String, Long])
+  /** What one [[lookup]] read resolves: the corpus's exact (n, ndl,
+    * sumdl) sums (epoch rows summed, deletions subtracted), the number
+    * of stats epoch rows, the number of deleted docs, and the df of the
+    * looked-up terms summed across their epoch rows. */
+  private case class Lookup(n: Long, ndl: Long, sumdl: Long, epochs: Long,
+      deleted: Long, df: Map[String, Long]) {
+    def stats: Stats = Stats(n, avgdlOf(ndl, sumdl))
+  }
 
   /** ONE driver collect over the union of the small reads serving needs:
     * the stats epoch rows, the delete vector's rows and, when given, the
     * (term, df) rows of the probe terms. Each row is laid out as
-    * (a, b, c, kind, term, avgdl):
-    *  - kind 0, a stats epoch row: (n, ndl, sumdl); an index persisted
-    *    before the mergeable format has one (n, -, -, avgdl) row;
+    * (a, b, c, kind, term):
+    *  - kind 0, a stats epoch row: (n, ndl, sumdl);
     *  - kind 1, a deleted doc: (1, 1 when it has postings, its dl);
     *  - kind 2, a df row: (df, -, -, term).
     * The longs are summed here as exact integers, so the stats are
@@ -236,16 +248,12 @@ object TextIndex {
   private def lookup(statsT: DataFrame, deletes: Option[DataFrame],
       dfRows: Option[DataFrame],
       staged: (Long, Long, Long) = (0L, 0L, 0L)): Lookup = {
-    val legacy = !statsT.columns.contains("sumdl")
     val nul = lit(null)
-    def rows(kind: Int, a: Column, b: Column, c: Column,
-        term: Column = nul, avgdl: Column = nul) =
+    def rows(kind: Int, a: Column, b: Column, c: Column, term: Column = nul) =
       Seq(a.cast("long"), b.cast("long"), c.cast("long"), lit(kind),
-        term.cast("string"), avgdl.cast("double"))
-    val statRows =
-      if (legacy) rows(0, col("n"), nul, nul, avgdl = col("avgdl"))
-      else rows(0, col("n"), col("ndl"), col("sumdl"))
-    val parts = Seq(statsT.select(statRows: _*)) ++
+        term.cast("string"))
+    val parts =
+      Seq(statsT.select(rows(0, col("n"), col("ndl"), col("sumdl")): _*)) ++
       deletes.map(_.select(
         rows(1, lit(1L), col("dl").isNotNull, col("dl")): _*)) ++
       dfRows.map(_.select(rows(2, col("df"), nul, nul, col("term")): _*))
@@ -254,11 +262,8 @@ object TextIndex {
     val Array(n, ndl, sumdl) = sumLongs(of(0), 3)
     val Array(nDel, ndlDel, sumdlDel) = sumLongs(of(1), 3)
     val (sn, sndl, ssumdl) = staged
-    val st =
-      if (legacy) Stats(of(0).head.getLong(0), of(0).head.getDouble(5))
-      else Stats(n - nDel + sn,
-        avgdlOf(ndl - ndlDel + sndl, sumdl - sumdlDel + ssumdl))
-    Lookup(st, of(0).length.toLong, nDel,
+    Lookup(n - nDel + sn, ndl - ndlDel + sndl, sumdl - sumdlDel + ssumdl,
+      of(0).length.toLong, nDel,
       of(2).groupMapReduce(_.getString(4))(_.getLong(0))(_ + _))
   }
 
@@ -327,17 +332,17 @@ object TextIndex {
   }
 
   /** Append a NEW batch of docs to a persisted index without touching the
-    * existing posting files: the batch's postings and per-term df rows
-    * append to the bucketed tables (same bucket spec ⇒ pruning still
-    * works; serve-time df sums across epoch rows), and one (n, ndl,
-    * sumdl) epoch row appends to the stats table. All three are exact
-    * integer merges, so serving after append is BIT-IDENTICAL to a full
-    * rebuild over the union — the spec pins that. One epoch is at most
-    * one file per bucket in the posting and lexicon tables plus one stats
-    * file, in at most 7 Spark jobs (spec-pinned): the tokens' one
-    * exchange by term, the persisted delta and its posting write, the
-    * lexicon write, the stats aggregate and its write, and the closing
-    * stats read. Contract: `newDocs`
+    * existing posting files: the batch is one [[writeEpoch]] epoch — its
+    * postings and per-term df rows append to the bucketed tables (same
+    * bucket spec ⇒ pruning still works; serve-time df sums across epoch
+    * rows), and its (n, ndl, sumdl) row appends to the stats table. All
+    * three are exact integer merges, so serving after append is
+    * BIT-IDENTICAL to a full rebuild over the union — the spec pins that.
+    * One epoch is at most one file per bucket in the posting and lexicon
+    * tables plus one stats file, in at most 7 Spark jobs (spec-pinned):
+    * the tokens' one exchange by term, the persisted delta and its
+    * posting write, the lexicon write, the stats aggregate and its write,
+    * and the closing stats read. Contract: `newDocs`
     * ids must not already be in the index NOR in the delete vector
     * (replacement = remove + [[compact]] + append: the vector filters
     * by doc_id alone, so re-appending a removed id before compaction
@@ -357,20 +362,12 @@ object TextIndex {
     // positional tables, when present, take the same epoch append
     if (spark.catalog.tableExists(positionsTable(prefix)))
       appendPositional(newDocs, prefix, numBuckets)
-    // the delta feeds two writes (postings, per-term df): persist it so
-    // the batch is tokenized and aggregated once (bounded by the batch,
-    // never the index). The term clustering is the ONE exchange: it also
-    // satisfies the (doc_id, term) tf aggregation and the lexicon's
-    // per-term df over the persisted delta
-    val delta = tfRows(clusterByTerm(tokenRows(newDocs), numBuckets)).persist()
-    try {
-      appendEpoch(delta, postingsTable(prefix), numBuckets)
-      // per-term df of THIS batch only — merged by sum at lookup time
-      appendEpoch(delta.groupBy("term").agg(count(lit(1)).as("df")),
-        lexiconTable(prefix), numBuckets)
-      epochStats(newDocs).write.mode(SaveMode.Append)
-        .format("parquet").saveAsTable(statsTable(prefix))
-    } finally delta.unpersist()
+    // the term clustering of the raw tokens is the ONE exchange: it also
+    // satisfies the (doc_id, term) tf aggregation, so the writer's own
+    // clustering is a no-op (a batch is small: shuffling its tokens costs
+    // less than a second exchange)
+    writeEpoch(tfRows(clusterByTerm(tokenRows(newDocs), numBuckets)),
+      epochStats(newDocs), prefix, numBuckets)
     stats(spark, prefix)
   }
 
@@ -389,10 +386,11 @@ object TextIndex {
     val ids = docIds.select(col("doc_id").cast("long").as("doc_id"))
     val rows =
       if (hasBm25) {
-        require(spark.table(statsTable(prefix)).columns.contains("sumdl"),
-          s"index '$prefix' predates the mergeable stats format — rebuild it")
-        val dls = spark.table(postingsTable(prefix))
-          .select(col("doc_id"), col("dl")).distinct()
+        // each id's dl from its own posting rows (every row of a doc
+        // carries the same dl), aggregated over those ids alone
+        val dls = spark.table(postingsTable(prefix)).select("doc_id", "dl")
+          .join(broadcast(ids), Seq("doc_id"), "left_semi")
+          .groupBy("doc_id").agg(max("dl").as("dl"))
         ids.join(dls, Seq("doc_id"), "left")
       } else
         // positional-only index: no dl to record (dl only feeds the
@@ -403,80 +401,53 @@ object TextIndex {
     ()
   }
 
-  /** Fold appends + deletes into a fresh single-epoch layout: rewrite the
-    * postings minus the delete set (via a temp table — the source can't
-    * be overwritten while it is being read), rebuild the lexicon from the
-    * compacted postings, consolidate stats to one row, drop the delete
-    * vector. Serving before and after compact is bit-identical; compact
-    * restores the stopword-cut skip-read (maxDfFrac) that the delete
-    * path suspends. Works on positional-only indexes too (no BM25
-    * tables): only the positional fold runs and the returned Stats is
-    * the zero value (stats are a BM25-side concept). */
+  /** Rewrite the bucketed `table` minus the delete vector: the survivors
+    * go to a tmp table first (a table can't be overwritten while it is
+    * being read), then `table` and `alsoClear` are cleared and `write`
+    * gets the tmp table's rows. */
+  private def rewriteSurvivors(spark: SparkSession, table: String,
+      deletes: Option[DataFrame], numBuckets: Int,
+      alsoClear: Seq[String] = Nil)(write: DataFrame => Unit): Unit = {
+    val tmp = s"${table}_compact_tmp"
+    clearTable(spark, tmp)
+    appendBucketed(minusDeletes(spark.table(table), deletes), tmp, numBuckets)
+    (table +: alsoClear).foreach(clearTable(spark, _))
+    write(spark.table(tmp))
+    clearTable(spark, tmp)
+  }
+
+  /** Fold appends + deletes into a fresh single-epoch layout: the
+    * postings minus the delete set are rewritten as ONE [[writeEpoch]]
+    * epoch (lexicon recounted from them, one stats row of the exact
+    * post-delete sums the [[lookup]] already holds), the positional
+    * tables minus the delete set are rewritten the same way, and the
+    * delete vector is dropped. Serving before and after compact is
+    * bit-identical; compact restores the stopword-cut skip-read
+    * (maxDfFrac) that the delete path suspends. Works on positional-only
+    * indexes too (no BM25 tables): only the positional fold runs and the
+    * returned Stats is the zero value (stats are a BM25-side concept).
+    * Like [[foldEpochs]] it is not crash-atomic across its table
+    * writes — a JVM death mid-compact calls for a rebuild. */
   def compact(spark: SparkSession, prefix: String, numBuckets: Int = 32): Stats = {
     val hasBm25 = spark.catalog.tableExists(postingsTable(prefix))
     require(hasBm25 || spark.catalog.tableExists(positionsTable(prefix)),
       s"index '$prefix' does not exist")
+    val deletes = deletesOf(spark, prefix)
     val out = if (hasBm25) {
-      val st = stats(spark, prefix) // pre-compute the post-delete stats
-      val tmp = s"${prefix}_compact_tmp"
-      clearTable(spark, tmp)
-      val survivors =
-        if (deletesExist(spark, prefix))
-          spark.table(postingsTable(prefix)).join(
-            broadcast(spark.table(deletesTable(prefix)).select("doc_id")),
-            Seq("doc_id"), "left_anti")
-        else spark.table(postingsTable(prefix))
-      survivors.select("term", "doc_id", "tf", "dl")
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(numBuckets, "term").sortBy("term")
-        .format("parquet").saveAsTable(tmp)
-      clearTable(spark, postingsTable(prefix))
-      spark.table(tmp).write.mode(SaveMode.Overwrite)
-        .bucketBy(numBuckets, "term").sortBy("term")
-        .format("parquet").saveAsTable(postingsTable(prefix))
-      clearTable(spark, tmp)
-      clearTable(spark, lexiconTable(prefix))
-      spark.table(postingsTable(prefix))
-        .groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(numBuckets, "term").sortBy("term")
-        .format("parquet").saveAsTable(lexiconTable(prefix))
-      val dld = spark.table(postingsTable(prefix))
-        .select(col("doc_id"), col("dl")).distinct()
-        .agg(count(lit(1)).as("ndl"), sum("dl").as("sumdl")).first()
-      val ndl = dld.getLong(0)
-      val sumdl = if (dld.isNullAt(1)) 0L else dld.getLong(1)
-      import spark.implicits._
-      clearTable(spark, statsTable(prefix))
-      Seq((st.n, ndl, sumdl)).toDF("n", "ndl", "sumdl")
-        .write.mode(SaveMode.Overwrite)
-        .format("parquet").saveAsTable(statsTable(prefix))
-      Stats(st.n, avgdlOf(ndl, sumdl))
+      val lk = lookupIndex(spark, prefix) // the post-delete sums
+      rewriteSurvivors(spark, postingsTable(prefix), deletes, numBuckets,
+          Seq(lexiconTable(prefix), statsTable(prefix))) { survivors =>
+        writeEpoch(survivors, statsRow(spark, lk.n, lk.ndl, lk.sumdl),
+          prefix, numBuckets)
+      }
+      lk.stats
     } else Stats(0L, 0.0)
     // positional tables, when present, fold the delete vector the same
     // way (phrase serving then needs no anti-join until the next remove)
-    if (spark.catalog.tableExists(positionsTable(prefix))) {
-      for (tbl <- Seq(positionsTable(prefix), positions2Table(prefix))
-           if spark.catalog.tableExists(tbl)) {
-        val ptmp = s"${tbl}_compact_tmp"
-        clearTable(spark, ptmp)
-        val surv =
-          if (deletesExist(spark, prefix))
-            spark.table(tbl).join(
-              broadcast(spark.table(deletesTable(prefix)).select("doc_id")),
-              Seq("doc_id"), "left_anti")
-          else spark.table(tbl)
-        surv.select("term", "doc_id", "pos")
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(numBuckets, "term").sortBy("term")
-          .format("parquet").saveAsTable(ptmp)
-        clearTable(spark, tbl)
-        spark.table(ptmp).write.mode(SaveMode.Overwrite)
-          .bucketBy(numBuckets, "term").sortBy("term")
-          .format("parquet").saveAsTable(tbl)
-        clearTable(spark, ptmp)
-      }
-    }
+    for (tbl <- Seq(positionsTable(prefix), positions2Table(prefix))
+         if spark.catalog.tableExists(tbl))
+      rewriteSurvivors(spark, tbl, deletes, numBuckets)(
+        appendBucketed(_, tbl, numBuckets))
     spark.sql(s"DROP TABLE IF EXISTS ${deletesTable(prefix)}")
     out
   }
@@ -495,36 +466,30 @@ object TextIndex {
     * results hash-match the same oracle. With `maxDfFrac < 1`, terms
     * with df > maxDfFrac·N contribute nothing (their ~zero idf mass is
     * dropped with them); a query whose every term is cut returns no
-    * rows. Under deletes, and on indexes persisted before the lexicon
-    * existed, df is counted from the surviving pruned postings (correct,
-    * but the cut then can't skip the read). The result keeps the
-    * probe's `qid` type and nullability. */
+    * rows. Under deletes df is counted from the surviving pruned
+    * postings (correct, but the cut then can't skip the read). The
+    * result keeps the probe's `qid` type and nullability. */
   def bm25TopDocs(spark: SparkSession, prefix: String,
       queryTerms: DataFrame, topk: Int,
       k1: Double = 1.2, b: Double = 0.75,
-      maxDfFrac: Double = 1.0): DataFrame = {
-    val deletes = deletesOf(spark, prefix)
+      maxDfFrac: Double = 1.0): DataFrame =
     bm25Serve(spark.table(statsTable(prefix)), (0L, 0L, 0L),
-      spark.table(postingsTable(prefix)),
-      if (deletes.isEmpty && spark.catalog.tableExists(lexiconTable(prefix)))
-        Some(spark.table(lexiconTable(prefix)))
-      else None,
-      deletes, queryTerms, topk, k1, b, maxDfFrac)
-  }
+      spark.table(postingsTable(prefix)), spark.table(lexiconTable(prefix)),
+      deletesOf(spark, prefix), queryTerms, topk, k1, b, maxDfFrac)
 
   /** The serve plan over explicit frames — shared by the table path
     * ([[bm25TopDocs]]) and the table∪streaming-epoch path
-    * ([[bm25TopDocsWithEpochs]]). At most three Spark jobs on the
-    * lexicon path:
+    * ([[bm25TopDocsWithEpochs]]). At most three Spark jobs without
+    * deletes:
     *  1. the bounded (qid, term) pairs are collected and deduped on the
     *     driver (a local probe costs no job);
     *  2. ONE [[lookup]] collect returns the stats epoch rows and the
     *     probe terms' df rows — the `lexicon` (term, df) rows, one per
-    *     epoch, or, when `deletes` is given or there is no lexicon, the
-    *     surviving pruned postings counted per term (df must count
-    *     survivors), beside the delete vector's rows. The `maxDfFrac`
-    *     cut applies to the merged df, so its keep/drop decisions match
-    *     a single-epoch rebuild;
+    *     epoch, or, when `deletes` is given, the surviving pruned
+    *     postings counted per term (df must count survivors), beside
+    *     the delete vector's rows. The `maxDfFrac` cut applies to the
+    *     merged df, so its keep/drop decisions match a single-epoch
+    *     rebuild;
     *  3. the resolved (qid, df) entries join the posting rows INSIDE the
     *     scan stage: a term → array<(qid, df)> map literal, looked up
     *     and inlined per posting row (no broadcast job; the lookup scans
@@ -544,7 +509,7 @@ object TextIndex {
     * nothing; no surviving term gives an empty (qid, rnk, doc_id, bm25)
     * frame, which runs no job. */
   private def bm25Serve(statsT: DataFrame, staged: (Long, Long, Long),
-      postings: DataFrame, lexicon: Option[DataFrame],
+      postings: DataFrame, lexicon: DataFrame,
       deletes: Option[DataFrame], queryTerms: DataFrame, topk: Int,
       k1: Double, b: Double, maxDfFrac: Double): DataFrame = {
     require(topk > 0, "topk must be positive")
@@ -553,18 +518,11 @@ object TextIndex {
     val pairs = probe.collect().map(r => (r.get(0), r.getString(1)))
       .filter(_._2 != null).distinct
     val probeTerms = pairs.map(_._2).distinct.toSeq
-    val antiDel = (p: DataFrame) => deletes match {
-      case Some(d) => p.join(broadcast(d.select("doc_id")),
-        Seq("doc_id"), "left_anti")
-      case None => p
-    }
-    val dfRows = lexicon match {
-      case Some(lex) if deletes.isEmpty =>
-        lex.filter(col("term").isin(probeTerms: _*)).select("term", "df")
-      case _ =>
-        antiDel(postings.filter(col("term").isin(probeTerms: _*)))
-          .groupBy("term").agg(count(lit(1)).as("df"))
-    }
+    val probed = col("term").isin(probeTerms: _*)
+    val dfRows =
+      if (deletes.isEmpty) lexicon.filter(probed).select("term", "df")
+      else minusDeletes(postings.filter(probed), deletes)
+        .groupBy("term").agg(count(lit(1)).as("df"))
     val lk = lookup(statsT, deletes, Some(dfRows), staged)
     val st = lk.stats
     val df = lk.df.filter { case (_, d) => d <= maxDfFrac * st.n.toDouble }
@@ -585,7 +543,8 @@ object TextIndex {
       (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / st.avgdl))
     // an empty IN list (no probe term, or no term survives) prunes the
     // plan to an empty relation in the optimizer: it runs no job
-    val scored = antiDel(postings.filter(col("term").isin(df.keys.toSeq: _*)))
+    val scored = minusDeletes(
+        postings.filter(col("term").isin(df.keys.toSeq: _*)), deletes)
       .select(col("doc_id"), col("tf"), col("dl"),
         inline(element_at(probeMap, col("term"))))
       .select(col("qid"), col("doc_id"), score.as("score"))
@@ -614,21 +573,15 @@ object TextIndex {
     * posting list is O(corpus), but a phrase's BIGRAM lists are sharply
     * smaller, and serve cost is bounded by the probed lists (measured
     * in BASELINE.md round 8, "Phrase search at scale"). Independent of
-    * the BM25 tables: build either or both under one prefix. */
+    * the BM25 tables: build either or both under one prefix. Each table
+    * is one [[appendBucketed]] write: at most one file per bucket. */
   def buildPositional(docs: DataFrame, prefix: String,
       numBuckets: Int = 32): Unit = {
     val spark = docs.sparkSession
     clearTable(spark, positionsTable(prefix))
     clearTable(spark, positions2Table(prefix))
-    tokenPositions(docs)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "term").sortBy("term")
-      .format("parquet").saveAsTable(positionsTable(prefix))
-    bigramPositions(docs)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "term").sortBy("term")
-      .format("parquet").saveAsTable(positions2Table(prefix))
-    ()
+    appendBucketed(tokenPositions(docs), positionsTable(prefix), numBuckets)
+    appendBucketed(bigramPositions(docs), positions2Table(prefix), numBuckets)
   }
 
   /** Epoch-append a NEW doc batch to the positional tables only (for
@@ -642,7 +595,7 @@ object TextIndex {
     val spark = newDocs.sparkSession
     require(spark.catalog.tableExists(positionsTable(prefix)),
       s"positional index '$prefix' does not exist — call buildPositional")
-    appendEpoch(tokenPositions(newDocs), positionsTable(prefix), numBuckets)
+    appendBucketed(tokenPositions(newDocs), positionsTable(prefix), numBuckets)
     // a LEGACY index (built before the nextword table existed) stays in
     // its unigram-only shape: creating positions2 here would hold only
     // this batch's bigrams, and phraseTopDocs would then route every
@@ -650,7 +603,7 @@ object TextIndex {
     // silent wrong results. The unigram fallback keeps append ≡ rebuild
     // for the legacy layout; rebuild with buildPositional to upgrade.
     if (spark.catalog.tableExists(positions2Table(prefix)))
-      appendEpoch(bigramPositions(newDocs), positions2Table(prefix),
+      appendBucketed(bigramPositions(newDocs), positions2Table(prefix),
         numBuckets)
     ()
   }
@@ -659,7 +612,7 @@ object TextIndex {
     * form of the positional posting table (pos = 1-based token ordinal). */
   private def tokenPositions(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-        posexplode(split(trim(col("text")), "\\s+")).as(Seq("p0", "term")))
+        posexplode(tokensOf(col("text"))).as(Seq("p0", "term")))
       .select(col("term"), col("doc_id"), (col("p0") + 1).as("pos"))
 
   /** The NEXTWORD table: (bigram, doc_id, pos-of-first-token) rows — one
@@ -669,7 +622,7 @@ object TextIndex {
     * per doc). */
   private def bigramPositions(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-        explode(array(split(trim(col("text")), "\\s+"))).as("t"))
+        explode(array(tokensOf(col("text")))).as("t"))
       .select(col("doc_id"), posexplode(expr(
         """CASE WHEN size(t) >= 2
           |  THEN transform(sequence(0, size(t)-2),
@@ -699,11 +652,7 @@ object TextIndex {
       phrases: DataFrame, topk: Int): DataFrame = {
     // honor the index's delete vector (docs removed via [[remove]] must
     // not surface from ANY serving path, lexical or positional)
-    val antiDel = (p: DataFrame) =>
-      if (deletesExist(spark, prefix))
-        p.join(broadcast(spark.table(deletesTable(prefix))
-          .select("doc_id")), Seq("doc_id"), "left_anti")
-      else p
+    val deletes = deletesOf(spark, prefix)
     // the probe set is bounded by contract — ONE collect tokenizes it
     // driver-side (same \s+ split as the tables), so constraint frames
     // are local literals, terms need no extra jobs, and statically
@@ -733,8 +682,8 @@ object TextIndex {
       (biRows, positions2Table(prefix)),
       (uniRows, positionsTable(prefix))
     ).collect { case (rows, tbl) if rows.nonEmpty =>
-      phraseIntersect(antiDel(spark.table(tbl)), constraints(rows),
-        rows.map(_._3).distinct, topk)
+      phraseIntersect(minusDeletes(spark.table(tbl), deletes),
+        constraints(rows), rows.map(_._3).distinct, topk)
     }
     if (parts.isEmpty)
       Seq.empty[(Long, Int, Long, Long)].toDF("qid", "rnk", "doc_id", "n_hits")
@@ -786,7 +735,7 @@ object TextIndex {
       .select("qid", "rnk", "doc_id", "n_hits")
   }
 
-  /** Build an EMPTY index (all three tables, mergeable stats) when
+  /** Build an EMPTY index (all three tables) when
     * `prefix` does not exist yet — the bootstrap for streaming ingest. */
   def ensure(spark: SparkSession, prefix: String, numBuckets: Int = 32): Unit =
     if (!spark.catalog.tableExists(postingsTable(prefix))) {
@@ -795,44 +744,6 @@ object TextIndex {
         numBuckets)
       ()
     }
-
-  /** Streaming ingest: every micro-batch of (doc_id, text) rows appends
-    * as one index epoch via [[append]] — so a stream-built index serves
-    * bit-identically to a batch build over the same docs (spec-pinned),
-    * the same stream-built/batch-served contract the vector side's
-    * `IncrementalIvfIndex.snapshot` keeps. Each non-empty batch adds
-    * one [[append]] epoch — at most one file per bucket per table, plus
-    * one stats file — so files still accumulate with the batch count:
-    * run [[compact]] on the usual epoch cadence.
-    * Caller owns the returned query's lifecycle (and the checkpoint via
-    * the usual writeStream options upstream). */
-  def streamingAppend(stream: DataFrame, prefix: String,
-      numBuckets: Int = 32): org.apache.spark.sql.streaming.StreamingQuery = {
-    val serveSession = stream.sparkSession
-    ensure(serveSession, prefix, numBuckets)
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // append() runs several actions over the batch (postings write,
-        // delta lexicon, stats) — persist so each sees the same rows
-        // instead of re-pulling the micro-batch source per action
-        val b = batch.persist()
-        try {
-          if (!b.isEmpty) {
-            append(b, prefix, numBuckets)
-            // foreachBatch runs in a CLONED session whose writes don't
-            // invalidate the serving session's relation cache (ensure()
-            // cached the postings relation while it was still empty) —
-            // refresh there so serves see each epoch immediately
-            Seq(postingsTable(prefix), lexiconTable(prefix),
-              statsTable(prefix))
-              .foreach(serveSession.catalog.refreshTable)
-          }
-        }
-        finally { b.unpersist(); () }
-      }
-      .start()
-  }
 
   /** CRASH-SAFE idempotent streaming sink (the epoch-directory handoff
     * the vector ([[graft.streaming.IncrementalBqIndex]]) and media
@@ -909,25 +820,19 @@ object TextIndex {
     committedEpochs(spark, root) match {
       case None => bm25TopDocs(spark, prefix, queryTerms, topk, k1, b, maxDfFrac)
       case Some((epPosts, epN, epNdl, epSumdl)) =>
-        val statsT = spark.table(statsTable(prefix))
-        require(statsT.columns.contains("sumdl"),
-          s"index '$prefix' predates the mergeable stats format — rebuild it")
         val postings = spark.table(postingsTable(prefix))
           .select("term", "doc_id", "tf", "dl").unionByName(epPosts)
-        val deletes = deletesOf(spark, prefix)
-        val lex =
-          if (deletes.isEmpty && spark.catalog.tableExists(lexiconTable(prefix)))
-            Some(spark.table(lexiconTable(prefix)).select("term", "df")
-              .unionByName(
-                epPosts.groupBy("term").agg(count(lit(1)).as("df"))))
-          else None
-        bm25Serve(statsT, (epN, epNdl, epSumdl), postings, lex, deletes,
-          queryTerms, topk, k1, b, maxDfFrac)
+        val lex = spark.table(lexiconTable(prefix)).select("term", "df")
+          .unionByName(epPosts.groupBy("term").agg(count(lit(1)).as("df")))
+        bm25Serve(spark.table(statsTable(prefix)), (epN, epNdl, epSumdl),
+          postings, lex, deletesOf(spark, prefix), queryTerms, topk, k1, b,
+          maxDfFrac)
     }
 
   /** Fold committed staged epochs into the bucketed base tables (one
-    * [[append]]-shape epoch: all staged epochs together add at most one
-    * file per bucket per table) and drop the staged dirs. MAINTENANCE
+    * [[writeEpoch]] epoch of their postings and summed stats: all staged
+    * epochs together add at most one file per bucket per table) and drop
+    * the staged dirs. MAINTENANCE
     * op with the [[compact]] posture: run it with the stream STOPPED;
     * like compact's tmp-table dance it is not crash-atomic across its
     * table writes — a JVM death mid-fold calls for a rebuild. */
@@ -936,16 +841,8 @@ object TextIndex {
     committedEpochs(spark, root) match {
       case None => stats(spark, prefix)
       case Some((epPosts, epN, epNdl, epSumdl)) =>
-        import spark.implicits._
-        val posts = clusterByTerm(epPosts, numBuckets).persist()
-        try {
-          appendEpoch(posts, postingsTable(prefix), numBuckets)
-          appendEpoch(posts.groupBy("term").agg(count(lit(1)).as("df")),
-            lexiconTable(prefix), numBuckets)
-          Seq((epN, epNdl, epSumdl)).toDF("n", "ndl", "sumdl")
-            .write.mode(SaveMode.Append)
-            .format("parquet").saveAsTable(statsTable(prefix))
-        } finally { posts.unpersist(); () }
+        writeEpoch(epPosts, statsRow(spark, epN, epNdl, epSumdl), prefix,
+          numBuckets)
         val conf = spark.sparkContext.hadoopConfiguration
         Seq(s"$root/postings", s"$root/stats").foreach { d =>
           val p = new org.apache.hadoop.fs.Path(d)

@@ -35,7 +35,8 @@ import graft.operators.{Bq, IvfBq, IvfFlat, IvfRabitq, Opq, RabitQ}
   * batch [[IvfBq.knnJoin]], and a lost executor costs nothing. The
   * trade: no graph traversal — serving is the compressed Hamming scan
   * of the probed cells. Batch-built and stream-built indexes are
-  * bit-identical (spec-pinned), exactly like `TextIndex.streamingAppend`.
+  * bit-identical (spec-pinned), exactly like
+  * `TextIndex.streamingAppendEpochs`.
   */
 object IncrementalBqIndex {
 

@@ -17,7 +17,7 @@ import graft.operators.{Bpe, Mixing, SequenceExport}
   * and shipped as an `epochs/epoch=<batchId>` sequence+audit unit.
   *
   * Epoch-handoff contract (the [[graft.operators.TextIndex]]
-  * streamingAppend shape):
+  * streamingAppendEpochs shape):
   *
   *  - An epoch is COMMITTED iff its `audit/` directory exists — the
   *    audit is written strictly after `sequences/`, so a kill between

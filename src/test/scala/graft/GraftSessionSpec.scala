@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins "one way to build a session": every entry point under
   * `src/main/scala` goes through [[GraftSession.local]], so the session
-  * settings live in one file. */
+  * settings live in one file; and "one bucketed write" in
+  * `graft.operators.TextIndex`. */
 class GraftSessionSpec extends AnyFunSuite {
 
   /** The source without its comments (line, block and nested block);
@@ -72,5 +73,13 @@ class GraftSessionSpec extends AnyFunSuite {
     }.map(p => root.relativize(p).toString.replace('\\', '/')).sorted
     assert(builders == Seq("graft/GraftSession.scala"),
       s"sessions built outside GraftSession: $builders")
+  }
+
+  test("TextIndex has one bucketed write: .bucketBy( appears once in code") {
+    val src = Paths.get("src/main/scala/graft/operators/TextIndex.scala")
+    val c = code(new String(Files.readAllBytes(src), "UTF-8"))
+    assert(c.contains("saveAsTable"), s"${src.toAbsolutePath} has no writes")
+    assert(c.split("\\.bucketBy\\(", -1).length - 1 == 1,
+      "every TextIndex table write must go through its one bucketed write")
   }
 }

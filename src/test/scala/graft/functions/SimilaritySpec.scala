@@ -60,7 +60,8 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("GraftExtensions injects functions into a fresh session") {
     // getOrCreate reuses an existing session and ignores extensions, so
-    // stop the suite session first; later suites re-getOrCreate lazily.
+    // stop the suite session first; this one is stopped and cleared at
+    // the end, so later tests and suites re-getOrCreate a plain session
     spark.stop()
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -71,10 +72,16 @@ class SimilaritySpec extends AnyFunSuite {
       .withExtensions(new graft.GraftExtensions)
       .appName("ext-test")
       .getOrCreate()
-    val r = s2.sql(
-      "SELECT euclidean_sim(array(cast(0.0 as float), cast(0.0 as float)), " +
-        "array(cast(3.0 as float), cast(4.0 as float)))").first().getDouble(0)
-    assert(math.abs(r - 1.0 / 6.0) < 1e-12)
+    try {
+      val r = s2.sql(
+        "SELECT euclidean_sim(array(cast(0.0 as float), cast(0.0 as float)), " +
+          "array(cast(3.0 as float), cast(4.0 as float)))").first().getDouble(0)
+      assert(math.abs(r - 1.0 / 6.0) < 1e-12)
+    } finally {
+      s2.stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
   }
 
   test("FloorPercentiles aggregator matches the reference floor-index method") {

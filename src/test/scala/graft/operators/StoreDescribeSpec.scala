@@ -141,4 +141,38 @@ class StoreDescribeSpec extends AnyFunSuite {
       .unionByName(ImageDup.describe(spark, path))
     assert(union.count() == 2L)
   }
+
+  test("a warm describe runs a bounded number of Spark jobs per store " +
+      "kind (BQ, text, image)") {
+    import spark.implicits._
+    val bqPath = java.nio.file.Files
+      .createTempDirectory("descjobs").toString + "/idx"
+    IncrementalBqIndex.build(emb, bqPath, numCells = 4)
+    val tix = "graft_descspec_jobs"
+    TextIndex.drop(spark, tix)
+    TextIndex.build(docs.filter(col("doc_id") < 30), tix, numBuckets = 4)
+    val imgPath = java.nio.file.Files
+      .createTempDirectory("descjobsimg").toString
+    val imgs = (0L until 6L).map(id => (id, Multimodal.encodeGray(
+      Array.tabulate(64)(i => ((i * 7 + id) % 256).toInt), 8, 8)))
+      .toDF("media_id", "content")
+    ImageDup.hashAppend(imgs, imgPath, epochTag = "0")
+    def warmJobs(describe: => DataFrame): Int = {
+      row(describe)
+      org.apache.spark.ListenerBusDrain.jobsDuring(spark.sparkContext)(
+        row(describe))
+    }
+    val jobs = Seq(
+      "incremental_bq" -> warmJobs(IncrementalBqIndex.describe(spark, bqPath)),
+      "text_index" -> warmJobs(TextIndex.describe(spark, tix)),
+      "image_dup" -> warmJobs(ImageDup.describe(spark, imgPath)))
+    info(jobs.map { case (k, j) => s"$k $j" }.mkString(", ") + " jobs")
+    // measured: BQ 10, text 6, image 4
+    val bound = Map("incremental_bq" -> 10, "text_index" -> 6,
+      "image_dup" -> 4)
+    jobs.foreach { case (k, j) =>
+      assert(j <= bound(k), s"$k: $j jobs for one warm describe")
+    }
+    TextIndex.drop(spark, tix)
+  }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
@@ -15,7 +15,8 @@ import scala.jdk.CollectionConverters._
   * .bm25TopDocsWithEpochs]]) against a reference built here in the
   * earlier serve plan's shape — a local (qid, term, df) relation
   * broadcast-joined to the posting rows, a (qid, doc_id) aggregate, then
-  * a row_number window — over every index layout serving reads. Scores
+  * a row_number window — over every index state serving reads: built,
+  * appended, under a delete vector, and with staged epochs. Scores
   * compare by their raw bits, schemas by name, type and nullability.
   *
   * The suite serves in a session with [[graft.GraftExtensions]], as every
@@ -203,20 +204,6 @@ class TextIndexServeSpec extends AnyFunSuite with BeforeAndAfterAll {
       "reference over base ∪ epochs") {
     val (p, root, _) = staged
     check(docs, TextIndex.bm25TopDocsWithEpochs(spark, p, root, _, _))
-  }
-
-  test("legacy layout (n, avgdl stats, no lexicon): served == the " +
-      "reference") {
-    import spark.implicits._
-    val p = "graft_tis_legacy"
-    TextIndex.drop(spark, p)
-    val st = TextIndex.build(docs, p, numBuckets = 8)
-    Seq((st.n, st.avgdl)).toDF("n", "avgdl").write.mode(SaveMode.Overwrite)
-      .format("parquet").saveAsTable(s"${p}_stats")
-    spark.sql(s"DROP TABLE ${p}_lexicon")
-    assert(TextIndex.stats(spark, p) == st)
-    check(docs, TextIndex.bm25TopDocs(spark, p, _, _))
-    TextIndex.drop(spark, p)
   }
 
   /** Spark jobs of one warm 3-term single-query serve. */

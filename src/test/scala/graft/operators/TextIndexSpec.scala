@@ -267,16 +267,32 @@ class TextIndexSpec extends AnyFunSuite {
     val base = docs.select("doc_id", "text")
     val tok = base.filter(col("doc_id") === 0).first().getString(1)
       .trim.split("\\s+").head
-    val batch = Seq((900000L, null: String), (900001L, ""), (900002L, "   "),
-      (900003L, tok)).toDF("doc_id", "text")
+    val batchTexts = Seq(null, "", "   ", tok)
+    val batch = batchTexts.zipWithIndex
+      .map { case (t, i) => (900000L + i, t) }.toDF("doc_id", "text")
     TextIndex.build(base, inc, numBuckets = 8)
     val stInc = TextIndex.append(batch, inc, numBuckets = 8)
     val stFull = TextIndex.build(base.unionByName(batch), full, numBuckets = 8)
-    assert(stInc == stFull, s"merged stats $stInc vs rebuilt $stFull")
-    // the epoch row: all four docs count toward N; the three non-null
-    // ones reach the token stream ("" and "   " as one empty token each)
+    // the expected (n, ndl, sumdl), counted here from the texts: every
+    // doc counts toward N; a non-null text reaches the token stream with
+    // its whitespace-split token count after Spark's trim of spaces (""
+    // and "   " as one empty token each)
+    def sums(texts: Seq[String]): (Long, Long, Long) = {
+      val live = texts.filter(_ != null)
+        .map(_.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse)
+      (texts.size.toLong, live.size.toLong,
+        live.map(_.split("\\s+", -1).length.toLong).sum)
+    }
+    assert(sums(batchTexts) == ((4L, 3L, 3L)))
+    val (n, ndl, sumdl) =
+      sums(base.select("text").as[String].collect().toSeq ++ batchTexts)
+    val want = TextIndex.Stats(n, sumdl.toDouble / ndl)
+    assert(stInc == want, s"merged stats $stInc vs counted $want")
+    assert(stFull == want, s"rebuilt stats $stFull vs counted $want")
+    // the epoch row holds the batch's own sums
     assert(spark.table(s"${inc}_stats").filter(col("n") === 4)
-      .select("ndl", "sumdl").as[(Long, Long)].collect().toSeq == Seq((3L, 3L)))
+      .select("n", "ndl", "sumdl").as[(Long, Long, Long)].collect().toSeq ==
+      Seq(sums(batchTexts)))
     val qt = spark.table(s"${full}_postings")
       .filter(col("doc_id") < 20 || col("doc_id") >= 900000)
       .select(col("doc_id").as("qid"), col("term")).cache()
@@ -325,12 +341,20 @@ class TextIndexSpec extends AnyFunSuite {
           ids.forall(i => i >= 0 && i < 8),
           s"$t gained files in buckets ${ids.sorted.mkString(",")}")
       }
+    // build, buildPositional and compact write through the same
+    // bucketed write, so they are held to the same layout
     try for (parts <- Seq("4", "3")) {
       spark.conf.set(key, parts)
       TextIndex.drop(spark, p)
-      TextIndex.build(docs.filter(col("doc_id") < 200), p, numBuckets = 8)
-      TextIndex.buildPositional(docs.filter(col("doc_id") < 200), p,
-        numBuckets = 8)
+      oneFilePerBucket(bucketsAdded(Seq("postings", "lexicon")
+          .map(t => s"${p}_$t")) {
+        TextIndex.build(docs.filter(col("doc_id") < 200), p, numBuckets = 8)
+      })
+      oneFilePerBucket(bucketsAdded(Seq("positions", "positions2")
+          .map(t => s"${p}_$t")) {
+        TextIndex.buildPositional(docs.filter(col("doc_id") < 200), p,
+          numBuckets = 8)
+      })
       // append writes the BM25 and the positional epochs
       oneFilePerBucket(bucketsAdded(Seq("postings", "lexicon", "positions",
           "positions2").map(t => s"${p}_$t")) {
@@ -366,6 +390,13 @@ class TextIndexSpec extends AnyFunSuite {
         TextIndex.build(docs, s"${p}_ref", numBuckets = 8),
         s"stats after the epochs at $parts shuffle partitions")
       TextIndex.drop(spark, s"${p}_ref")
+      // compact rewrites all four tables, minus a delete vector
+      TextIndex.remove((0L until 10L).toDF("doc_id"), p)
+      oneFilePerBucket(bucketsAdded(Seq("postings", "lexicon", "positions",
+          "positions2").map(t => s"${p}_$t")) {
+        TextIndex.compact(spark, p, numBuckets = 8)
+      })
+      assert(TextIndex.stats(spark, p).n == docs.count() - 10)
     } finally spark.conf.set(key, saved)
     TextIndex.drop(spark, p)
   }
@@ -385,6 +416,17 @@ class TextIndexSpec extends AnyFunSuite {
       spark.sparkContext)(TextIndex.append(batch, p, numBuckets = 8))
     info(s"$jobs jobs")
     assert(jobs <= 7, s"$jobs jobs for one warm append")
+    // a warm build of 200 docs, one writeEpoch epoch: postings: the tf
+    // aggregate's map stage, the term exchange's map stage, the persisted
+    // rows and the bucketed write (4); lexicon: one write over the
+    // persisted rows, already clustered by term (1); stats row: the
+    // docs' global aggregate's map stage and its write (2); the closing
+    // stats read (1)
+    val first = docs.filter(col("doc_id") < 200)
+    val buildJobs = org.apache.spark.ListenerBusDrain.jobsDuring(
+      spark.sparkContext)(TextIndex.build(first, p, numBuckets = 8))
+    info(s"$buildJobs build jobs")
+    assert(buildJobs <= 8, s"$buildJobs jobs for one warm build")
     TextIndex.drop(spark, p)
   }
 
@@ -671,24 +713,37 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.drop(spark, str); TextIndex.drop(spark, ref)
     val rows = docs.select(col("doc_id"), col("text"))
       .as[(Long, String)].collect()
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val q = TextIndex.streamingAppend(
-      mem.toDF().toDF("doc_id", "text"), str, numBuckets = 8)
+    val tmp = java.nio.file.Files.createTempDirectory("tix-stream").toFile
+    val root = s"$tmp/root"
     try {
-      mem.addData(rows.take(200).toSeq)
-      q.processAllAvailable()
-      mem.addData(rows.drop(200).toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val stRef = TextIndex.build(docs, ref, numBuckets = 8)
-    assert(TextIndex.stats(spark, str) == stRef)
-    val qt = spark.table(s"${ref}_postings").filter(col("doc_id") < 20)
-      .select(col("doc_id").as("qid"), col("term")).cache()
-    qt.count()
-    assert(serve(str, qt) == serve(ref, qt),
-      "stream-built index must serve identically to the batch build")
-    qt.unpersist()
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[(Long, String)]
+      val q = TextIndex.streamingAppendEpochs(mem.toDF().toDF("doc_id", "text"),
+        str, root, s"$tmp/ckpt", numBuckets = 8)
+      try {
+        mem.addData(rows.take(200).toSeq)
+        q.processAllAvailable()
+        mem.addData(rows.drop(200).toSeq)
+        q.processAllAvailable()
+      } finally q.stop()
+      val stRef = TextIndex.build(docs, ref, numBuckets = 8)
+      val qt = spark.table(s"${ref}_postings").filter(col("doc_id") < 20)
+        .select(col("doc_id").as("qid"), col("term")).cache()
+      qt.count()
+      def bits(df: DataFrame) = df.collect().map(r => (r.getLong(0),
+        r.getInt(1), r.getLong(2),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).toSet
+      val want = bits(TextIndex.bm25TopDocs(spark, ref, qt, topk = 10))
+      assert(want.nonEmpty)
+      assert(bits(TextIndex.bm25TopDocsWithEpochs(spark, str, root, qt,
+        topk = 10)) == want,
+        "staged epochs must serve identically to the batch build")
+      assert(TextIndex.foldEpochs(spark, str, root, numBuckets = 8) == stRef)
+      assert(TextIndex.stats(spark, str) == stRef)
+      assert(bits(TextIndex.bm25TopDocs(spark, str, qt, topk = 10)) == want,
+        "folded epochs must serve identically to the batch build")
+      qt.unpersist()
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
     TextIndex.drop(spark, str); TextIndex.drop(spark, ref)
   }
 }
