@@ -22,4 +22,9 @@ object Qutil {
     val p = lit(math.pow(10, d))
     floor(c * p + 0.5) / p
   }
+
+  /** Scalar twin of [[rnd]] for kernels, with `scale` = math.pow(10, d)
+    * precomputed: the same floor form on the same doubles. */
+  @inline def rnd(x: Double, scale: Double): Double =
+    math.floor(x * scale + 0.5) / scale
 }

@@ -1,9 +1,6 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Binary (sign) quantization: 1 bit per dimension packed into 64-bit
@@ -25,10 +22,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: fit is two narrow no-shuffle passes (per-partition min/max
   * partials + one broadcast encode); search scans only the code table
-  * (8 bytes/vector at d=64) with per-partition bounded heaps, then a
-  * bounded candidate exchange (`rerank` rows/query) and a broadcast-query
-  * rerank join. Nothing grows with corpus size except the embarrassingly
-  * parallel code scan.
+  * (8 bytes/vector at d=64) with the kernel's ([[CodeScan]]) bounded
+  * per-partition heaps, then a bounded candidate exchange (`rerank`
+  * rows/query) and a broadcast-query rerank join. Nothing grows with
+  * corpus size except the embarrassingly parallel code scan.
   */
 object Bq {
 
@@ -141,82 +138,24 @@ object Bq {
     require(k > 0 && rerank >= k)
     val spark = model.encoded.sparkSession
     import spark.implicits._
-    val bcT = spark.sparkContext.broadcast(model.thresholds)
-    val probes = queries
-      .select(col(queryId).cast("long"), col(queryVec).cast("array<float>"))
-      .as[(Long, Array[Float])].collect()
-    val qbits = probes.map { case (qid, qv) => (qid, packBits(qv, bcT.value)) }
-    val bcQ = spark.sparkContext.broadcast(qbits)
-    val r = rerank
-    val cands = model.encoded.as[(Long, Array[Long])].mapPartitions { rows =>
-      val qs = bcQ.value
-      // heap order = ((hamming, cand_id)) — the SAME integer total order
-      // the global window and the DuckDB oracle rank by, so the
-      // per-partition cut can never disagree with the cross-engine ranking
-      val heaps = Array.fill(qs.length)(
-        mutable.PriorityQueue.empty[(Int, Long)](Ordering.Tuple2[Int, Long]))
-      // Row-chunked, QUERY-MAJOR scan (same shape as [[Sq.knnJoin]]): at
-      // 10k+ probes the per-row inner loop touches every query's bits and
-      // heap head — a working set far past L2. Buffering a chunk of rows
-      // and looping queries outside keeps one (qbits, heap) pair hot
-      // across the chunk. The bounded heap keeps the EXACT top-r under
-      // the (hamming, id) total order — insertion-order-invariant, so
-      // results are bit-identical to the row-major loop.
-      val chunk = 1024
-      val idBuf = new Array[Long](chunk)
-      val bitBuf = new Array[Array[Long]](chunk)
-      def flush(nRows: Int): Unit = {
-        var q = 0
-        while (q < qs.length) {
-          val qb = qs(q)._2
-          val h = heaps(q)
-          var j = 0
-          while (j < nRows) {
-            val hd = hamming(qb, bitBuf(j))
-            val id = idBuf(j)
-            if (h.size < r) h.enqueue((hd, id))
-            else {
-              // allocation-free (hd, id) < h.head in the Tuple2 order (the
-              // reject path runs once per row × query — no boxing here)
-              val top = h.head
-              if (hd < top._1 || (hd == top._1 && id < top._2)) {
-                h.dequeue(); h.enqueue((hd, id))
-              }
-            }
-            j += 1
-          }
-          q += 1
+    val probes = CodeScan.collectProbes(queries, queryId, queryVec)
+    val bcQ = spark.sparkContext.broadcast(
+      probes.map { case (_, qv) => packBits(qv, model.thresholds) })
+    val topCands = CodeScan.topCandidates(model.encoded.as[(Long, Array[Long])],
+      probes.map { case (qid, _) => CodeScan.Probe(qid, Array(0), rerank) },
+      (t: (Long, Array[Long])) => t._1, None,
+      () => new CodeScan.Scorer[(Long, Array[Long])] {
+        private val qbits = bcQ.value
+        def score(q: Int, slot: Int, rows: Array[(Long, Array[Long])],
+            from: Int, until: Int, out: Array[Double]): Unit = {
+          val qb = qbits(q)
+          var j = from
+          while (j < until) { out(j) = hamming(qb, rows(j)._2); j += 1 }
         }
-      }
-      var nBuf = 0
-      rows.foreach { case (id, bits) =>
-        idBuf(nBuf) = id; bitBuf(nBuf) = bits; nBuf += 1
-        if (nBuf == chunk) { flush(nBuf); nBuf = 0 }
-      }
-      if (nBuf > 0) flush(nBuf)
-      heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-        val qid = qs(q)._1
-        h.iterator.map { case (hd, id) => (qid, id, hd) }
-      }
-    }.toDF("query_id", "cand_id", "hamming")
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("cand_id").asc)
-    val topCands = cands.withColumn("crank", row_number().over(wr))
-      .filter(col("crank") <= r)
-      .select("query_id", "cand_id")
+      })
     KnnJoin.rerank(topCands, base, queries, k, "cosine", queryId, queryVec,
       idCol, vecCol, scoreDigits)
   }
-
-  /** Large-probe-set variant: caps the per-batch collect/broadcast at
-    * ~batchRows probes (see [[ProbeBatch]]). */
-  def knnJoinBatched(model: Model, base: DataFrame, queries: DataFrame, k: Int,
-      rerank: Int = 100, batchRows: Int = 100000, queryId: String = "query_id",
-      queryVec: String = "query_vec", idCol: String = "vec_id",
-      vecCol: String = "embedding", scoreDigits: Int = -1): DataFrame =
-    ProbeBatch.batched(queries, batchRows, queryId)(
-      knnJoin(model, base, _, k, rerank, queryId, queryVec, idCol, vecCol,
-        scoreDigits))
 
   /** DuckDB CTE reproducing the whole pipeline from the same min/max
     * aggregates: midrange thresholds → per-dim bits → per-dim disagreement

@@ -1,11 +1,7 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
 
 /** IVF × binary quantization: the composition the round-8 compressed-scan
   * ladder measured its way to. Standalone BQ needs rerank ∝ n to hold
@@ -109,8 +105,8 @@ object IvfBq {
 
   /** Cell-routed Hamming scan + exact cosine rerank: probes route to
     * their `nprobe` nearest cells via the proven scorer expression, only
-    * those cells' code rows are scanned (chunked query-major, like
-    * [[Bq.knnJoin]]), candidates cut at the integer (hamming, cand_id)
+    * those cells' code rows are scanned (the kernel, [[CodeScan]]),
+    * candidates cut at the integer (hamming, cand_id)
     * order, bounded rounded-cosine rerank on the originals. */
   def knnJoin(model: Model, base: DataFrame, queries: DataFrame, k: Int,
       nprobe: Int = 4, rerank: Int = 100, queryId: String = "query_id",
@@ -118,16 +114,17 @@ object IvfBq {
       vecCol: String = "embedding", metric: String = "cosine",
       scoreDigits: Int = -1): DataFrame = {
     require(rerank >= k)
-    knnJoinWith(model, base, queries, k, nprobe, (_, _) => rerank,
+    knnJoinWith(model, base, queries, k, nprobe, _ => rerank,
       queryId, queryVec, idCol, vecCol, metric, scoreDigits)
   }
 
   /** Per-query ADAPTIVE overfetch: the 10M study's law — recall is a
     * function of rerank / probed-cell population — turned into the knob.
     * Each query's rerank = max(`rerankMin`, ceil(`rerankFrac` × Σ
-    * population of its probed cells)), so recall holds as cells grow
-    * instead of silently decaying under one global rerank. `rerankFrac =
-    * 1` with all cells probed degenerates to exact (spec-pinned). */
+    * population of its probed cells)) ([[CodeScan.populationBudget]]), so
+    * recall holds as cells grow instead of silently decaying under one
+    * global rerank. `rerankFrac = 1` with all cells probed degenerates to
+    * exact (spec-pinned). */
   def knnJoinAdaptive(model: Model, base: DataFrame, queries: DataFrame,
       k: Int, nprobe: Int = 4, rerankFrac: Double = 0.1,
       rerankMin: Int = 100, queryId: String = "query_id",
@@ -138,11 +135,7 @@ object IvfBq {
     require(model.cellCounts.nonEmpty,
       "adaptive rerank needs the model's cellCounts (refit with this build)")
     knnJoinWith(model, base, queries, k, nprobe,
-      (_, cells) => {
-        val pop = cells.map(c => model.cellCounts.getOrElse(c, 0L)).sum
-        math.max(rerankMin.toLong, math.ceil(rerankFrac * pop).toLong)
-          .min(Int.MaxValue).toInt
-      },
+      CodeScan.populationBudget(model.cellCounts, rerankFrac, rerankMin),
       queryId, queryVec, idCol, vecCol, metric, scoreDigits)
   }
 
@@ -150,10 +143,10 @@ object IvfBq {
     * their cumulative LIVE population covers `minCandidates` (and at
     * least `minNprobe` cells), instead of a fixed cell count — a query
     * landing in dense cells stops early, one landing in sparse cells
-    * keeps probing up to `maxNprobe`. The per-query analog of
-    * [[knnJoinAdaptive]]'s rerank sizing, and composable with it: the
-    * rerank is sized from the cells actually kept. Requires cellCounts
-    * (build with counts). */
+    * keeps probing up to `maxNprobe` ([[CodeScan.trimToPopulation]]). The
+    * per-query analog of [[knnJoinAdaptive]]'s rerank sizing, and
+    * composable with it: the rerank is sized from the cells actually
+    * kept. Requires cellCounts (build with counts). */
   def knnJoinAdaptiveProbe(model: Model, base: DataFrame, queries: DataFrame,
       k: Int, maxNprobe: Int = 16, minNprobe: Int = 1,
       minCandidates: Int = 2000, rerankFrac: Double = 0.1,
@@ -166,135 +159,50 @@ object IvfBq {
     require(model.cellCounts.nonEmpty,
       "adaptive probing needs the model's cellCounts (build withCounts)")
     knnJoinWith(model, base, queries, k, maxNprobe,
-      rerankOf = (_, cells) => {
-        val pop = cells.map(c => model.cellCounts.getOrElse(c, 0L)).sum
-        math.max(rerankMin.toLong, math.ceil(rerankFrac * pop).toLong)
-          .min(Int.MaxValue).toInt
-      },
+      CodeScan.populationBudget(model.cellCounts, rerankFrac, rerankMin),
       queryId, queryVec, idCol, vecCol, metric, scoreDigits,
-      probeOf = (_, cells) => {
-        val keep = scala.collection.mutable.ArrayBuffer.empty[Int]
-        var cum = 0L
-        var i = 0
-        while (i < cells.length &&
-            (keep.length < minNprobe || cum < minCandidates)) {
-          keep += cells(i)
-          cum += model.cellCounts.getOrElse(cells(i), 0L)
-          i += 1
-        }
-        keep.toArray
-      })
+      CodeScan.trimToPopulation(model.cellCounts, minNprobe, minCandidates))
   }
 
+  /** One code-table row as the scan reads it. */
+  private type CodeRow = (Int, Long, Array[Long])
+
   private def knnJoinWith(model: Model, base: DataFrame, queries: DataFrame,
-      k: Int, nprobe: Int, rerankOf: (Long, Array[Int]) => Int,
+      k: Int, nprobe: Int, rerankOf: Array[Int] => Int,
       queryId: String, queryVec: String, idCol: String,
       vecCol: String, metric: String, scoreDigits: Int,
-      probeOf: (Long, Array[Int]) => Array[Int] = (_, cs) => cs)
-      : DataFrame = {
+      probeOf: Array[Int] => Array[Int] = identity): DataFrame = {
     require(k > 0 && nprobe > 0)
     val spark = model.encoded.sparkSession
     import spark.implicits._
-    // routing runs IN-PLAN through the same expression that assigns base
-    // rows (ties: (s desc, cell desc)) — then one bounded collect of
-    // (qid, qv, cells) for the broadcast scan; probeOf may TRIM each
-    // query's ranked cell list (adaptive nprobe)
-    val routed = queries.select(col(queryId).cast("long"),
-        col(queryVec).cast("array<float>").as("qv"),
-        graft.functions.cells.nearest_cells(
-          col(queryVec).cast("array<float>"), model.centroids, metric,
-          n = nprobe, tieCellDesc = true).as("cells"))
-      .as[(Long, Array[Float], Array[Int])].collect()
-      .map { case (qid, qv, cells) => (qid, qv, probeOf(qid, cells)) }
+    val routed = CodeScan.routeCells(queries, model.centroids, metric, nprobe,
+      queryId, queryVec, probeOf)
     // residual mode: one code per PROBED CELL per query — candidates in
     // cell c compare against the query's cell-c residual signs
     val cents = model.centroids.sortBy(_._1).map(_._2)
-    val qbits = routed.map { case (qid, qv, cells) =>
-      val perCell: Array[Array[Long]] =
-        if (model.residual) cells.map(c => packResidualBits(qv, cents(c)))
-        else {
-          val b = Bq.packBits(qv, model.thresholds)
-          cells.map(_ => b)
-        }
-      (qid, perCell, cells, rerankOf(qid, cells))
-    }
+    val bcQ = spark.sparkContext.broadcast(routed.map { case (_, qv, cells) =>
+      if (model.residual) cells.map(c => packResidualBits(qv, cents(c)))
+      else {
+        val b = Bq.packBits(qv, model.thresholds)
+        cells.map(_ => b)
+      }
+    })
     val wanted = routed.flatMap(_._3).distinct.toSeq
-    val bcQ = spark.sparkContext.broadcast(qbits)
-    val nCells = model.centroids.length
     val pruned = model.encoded.filter(
       graft.functions.cells.cellPruneFilter(col("cell"), wanted))
-    val cands = pruned.as[(Int, Long, Array[Long])].mapPartitions { rows =>
-      val qs = bcQ.value
-      val heaps = Array.fill(qs.length)(
-        mutable.PriorityQueue.empty[(Int, Long)](Ordering.Tuple2[Int, Long]))
-      // chunked scan with the INVERTED cell → (query, cellIdx) map: a
-      // code row is scored only against the queries probing its cell —
-      // the all-queries membership loop was O(rows × nQueries) (the
-      // IvfRabitq 100M lesson; per-query row order unchanged, results
-      // bit-identical)
-      val cellQs: Array[Array[Long]] = {
-        val b = Array.fill(nCells)(mutable.ArrayBuffer.empty[Long])
-        var q = 0
-        while (q < qs.length) {
-          val qcells = qs(q)._3
-          var c = 0
-          while (c < qcells.length) {
-            b(qcells(c)) += (q.toLong << 32) | c.toLong
-            c += 1
-          }
-          q += 1
+    val topCands = CodeScan.topCandidates(pruned.as[CodeRow],
+      routed.map { case (qid, _, cells) =>
+        CodeScan.Probe(qid, cells, rerankOf(cells)) },
+      (t: CodeRow) => t._2, Some((t: CodeRow) => t._1),
+      () => new CodeScan.Scorer[CodeRow] {
+        private val qbits = bcQ.value
+        def score(q: Int, slot: Int, rows: Array[CodeRow], from: Int, until: Int,
+            out: Array[Double]): Unit = {
+          val qb = qbits(q)(slot)
+          var j = from
+          while (j < until) { out(j) = Bq.hamming(qb, rows(j)._3); j += 1 }
         }
-        b.map(_.toArray)
-      }
-      val chunk = 1024
-      val cellBuf = new Array[Int](chunk)
-      val idBuf = new Array[Long](chunk)
-      val bitBuf = new Array[Array[Long]](chunk)
-      def flush(nRows: Int): Unit = {
-        var j = 0
-        while (j < nRows) {
-          val hits = cellQs(cellBuf(j))
-          val id = idBuf(j)
-          var hi = 0
-          while (hi < hits.length) {
-            val q = (hits(hi) >>> 32).toInt
-            val cellIdx = (hits(hi) & 0xffffffffL).toInt
-            val (_, qb, _, r) = qs(q)
-            val h = heaps(q)
-            val hd = Bq.hamming(qb(cellIdx), bitBuf(j))
-            if (h.size < r) h.enqueue((hd, id))
-            else {
-              val top = h.head
-              if (hd < top._1 || (hd == top._1 && id < top._2)) {
-                h.dequeue(); h.enqueue((hd, id))
-              }
-            }
-            hi += 1
-          }
-          j += 1
-        }
-      }
-      var nBuf = 0
-      rows.foreach { case (cell, id, bits) =>
-        cellBuf(nBuf) = cell; idBuf(nBuf) = id; bitBuf(nBuf) = bits
-        nBuf += 1
-        if (nBuf == chunk) { flush(nBuf); nBuf = 0 }
-      }
-      if (nBuf > 0) flush(nBuf)
-      heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-        val qid = qs(q)._1
-        h.iterator.map { case (hd, id) => (qid, id, hd) }
-      }
-    }.toDF("query_id", "cand_id", "hamming")
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("cand_id").asc)
-    // per-query candidate cut (tiny broadcast of (query_id, rq) — all
-    // equal under fixed rerank, cell-population-scaled under adaptive)
-    val rq = broadcast(qbits.map(t => (t._1, t._4)).toSeq.toDF("query_id", "rq"))
-    val topCands = cands.withColumn("crank", row_number().over(wr))
-      .join(rq, Seq("query_id"))
-      .filter(col("crank") <= col("rq"))
-      .select("query_id", "cand_id")
+      })
     // a cell-clustered rerank store prunes to the probed cells' row
     // groups (the 100M small-wave serve was rerank-scan-bound)
     KnnJoin.rerank(topCands,
@@ -302,17 +210,6 @@ object IvfBq {
         model.centroids.length),
       queries, k, "cosine", queryId, queryVec, idCol, vecCol, scoreDigits)
   }
-
-  /** Large-probe-set variant: caps the per-batch collect/broadcast at
-    * ~batchRows probes (see [[ProbeBatch]]). */
-  def knnJoinBatched(model: Model, base: DataFrame, queries: DataFrame, k: Int,
-      nprobe: Int = 4, rerank: Int = 100, batchRows: Int = 100000,
-      queryId: String = "query_id", queryVec: String = "query_vec",
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      metric: String = "cosine", scoreDigits: Int = -1): DataFrame =
-    ProbeBatch.batched(queries, batchRows, queryId)(
-      knnJoin(model, base, _, k, nprobe, rerank, queryId, queryVec, idCol,
-        vecCol, metric, scoreDigits))
 
   /** Composed DuckDB oracle from the trained centroid literals: the
     * `knn_ivf_cosine` assignment/routing CTEs (NaN-guarded cosine, (s
@@ -325,14 +222,11 @@ object IvfBq {
     val rows = centroids.map { case (c, v) =>
       s"($c, CAST([${v.map(_.toDouble.toString).mkString(", ")}] AS DOUBLE[]))"
     }.mkString(",\n   ")
-    def guarded(a: String, b: String): String =
-      s"""CASE WHEN isnan(list_cosine_similarity($a, $b)) THEN -1.0
-         |        ELSE list_cosine_similarity($a, $b) END""".stripMargin
     s"""WITH ivf_cents(cell, cvec) AS (VALUES
        |   $rows),
        | ivf_sim AS (
        |  SELECT e.vec_id, c.cell,
-       |   ${guarded("CAST(e.embedding AS DOUBLE[])", "c.cvec")} AS s
+       |   ${IvfFlat.duckdbGuardedCosine("CAST(e.embedding AS DOUBLE[])", "c.cvec")} AS s
        |  FROM embeddings e CROSS JOIN ivf_cents c),
        | ivf_assigned AS (
        |  SELECT vec_id, cell FROM (
@@ -343,7 +237,7 @@ object IvfBq {
        |           FROM embeddings WHERE vec_id < $nQueries),
        | ivf_qsim AS (
        |  SELECT q.query_id, c.cell,
-       |   ${guarded("CAST(q.qv AS DOUBLE[])", "c.cvec")} AS s
+       |   ${IvfFlat.duckdbGuardedCosine("CAST(q.qv AS DOUBLE[])", "c.cvec")} AS s
        |  FROM ivf_q q CROSS JOIN ivf_cents c),
        | ivf_qcells AS (
        |  SELECT query_id, cell FROM (

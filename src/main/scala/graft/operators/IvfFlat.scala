@@ -265,14 +265,11 @@ object IvfFlat {
     val rows = centroids.map { case (c, v) =>
       s"($c, CAST([${v.map(_.toDouble.toString).mkString(", ")}] AS DOUBLE[]))"
     }.mkString(",\n   ")
-    def guarded(a: String, b: String): String =
-      s"""CASE WHEN isnan(list_cosine_similarity($a, $b)) THEN -1.0
-         |        ELSE list_cosine_similarity($a, $b) END""".stripMargin
     s"""WITH ivf_cents(cell, cvec) AS (VALUES
        |   $rows),
        | ivf_sim AS (
        |  SELECT e.vec_id, e.embedding, c.cell,
-       |   ${guarded("CAST(e.embedding AS DOUBLE[])", "c.cvec")} AS s
+       |   ${duckdbGuardedCosine("CAST(e.embedding AS DOUBLE[])", "c.cvec")} AS s
        |  FROM embeddings e CROSS JOIN ivf_cents c),
        | ivf_assigned AS (
        |  SELECT vec_id, embedding, cell FROM (
@@ -283,7 +280,7 @@ object IvfFlat {
        |           FROM embeddings WHERE $probeFilter),
        | ivf_qsim AS (
        |  SELECT q.query_id, q.qv, c.cell,
-       |   ${guarded("CAST(q.qv AS DOUBLE[])", "c.cvec")} AS s
+       |   ${duckdbGuardedCosine("CAST(q.qv AS DOUBLE[])", "c.cvec")} AS s
        |  FROM ivf_q q CROSS JOIN ivf_cents c),
        | ivf_qcells AS (
        |  SELECT query_id, qv, cell FROM (
@@ -292,7 +289,7 @@ object IvfFlat {
        |   FROM ivf_qsim) WHERE rn <= $nprobe),
        | ivf_cand AS (
        |  SELECT qc.query_id, a.vec_id AS neighbor_id,
-       |   floor((${guarded("CAST(a.embedding AS DOUBLE[])", "CAST(qc.qv AS DOUBLE[])")})*1e6 + 0.5)/1e6 AS score
+       |   floor((${duckdbGuardedCosine("CAST(a.embedding AS DOUBLE[])", "CAST(qc.qv AS DOUBLE[])")})*1e6 + 0.5)/1e6 AS score
        |  FROM ivf_qcells qc JOIN ivf_assigned a USING (cell)),
        | ivf_topk AS (
        |  SELECT query_id, neighbor_id, score, rank FROM (

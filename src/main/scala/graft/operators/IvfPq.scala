@@ -1,9 +1,6 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF-PQ (additive beyond the reference's ANN surface, like its
@@ -188,141 +185,52 @@ object IvfPq {
       scoreDigits: Int = -1, adcDigits: Int = -1): DataFrame = {
     require(k > 0 && rerank >= k && nprobe > 0)
     val spark = model.encoded.sparkSession
-    import spark.implicits._
-    val probes = queries
-      .select(col(queryId).cast("long"), col(queryVec).cast("array<float>"))
-      .as[(Long, Array[Float])].collect()
+    val probes = CodeScan.collectProbes(queries, queryId, queryVec)
     // per query: its nprobe nearest cells by euclidean distance to centroid
-    val cellsOf: Map[Long, Array[Int]] = probes.map { case (qid, qv) =>
-      val byDist = model.centroids.map { case (c, cent) =>
+    val cellsOf = probes.map { case (_, qv) =>
+      model.centroids.map { case (c, cent) =>
         var dist = 0.0; var j = 0
         while (j < qv.length) { dist += sq(qv(j) - cent(j)); j += 1 }
         (dist, c)
       }.sortBy(t => (t._1, t._2)).take(nprobe).map(_._2)
-      qid -> byDist
-    }.toMap
-    val wantedCells = cellsOf.values.flatten.toSet
-    val bcQ = spark.sparkContext.broadcast(probes)
-    val bcCells = spark.sparkContext.broadcast(cellsOf)
+    }
+    val wantedCells = cellsOf.flatten.distinct.toSeq
+    val bcQ = spark.sparkContext.broadcast(probes.map(_._2).zip(cellsOf))
     val bcCb = spark.sparkContext.broadcast(model.codebooks)
     val bcCents = spark.sparkContext.broadcast(model.centroids.map(_._2))
     val bcRot = spark.sparkContext.broadcast(model.rotation)
     val numSub = model.numSub
     val subDim = model.subDim
-    val r = rerank
-    // partition pruning: only scan rows of probed cells; `codeAt` abstracts
-    // the storage layout (array<smallint> vs packed nibbles)
+    // partition pruning: only scan rows of probed cells
     val pruned = model.encoded.filter(
-      graft.functions.cells.cellPruneFilter(col("cell"), wantedCells.toSeq))
-    def scanRows[C](rows: Iterator[(Int, Long, C)],
-        codeAt: (C, Int) => Int): Iterator[(Long, Long, Double)] = {
-      val cbs = bcCb.value
-      val cents = bcCents.value
-      val qs = bcQ.value
-      val qCells = bcCells.value
-      val rot = bcRot.value
-      // ADC tables are per (query, cell): (rotated) residual-space lookup
-      val luts = mutable.Map.empty[(Long, Int), Array[Array[Double]]]
-      def lut(qid: Long, qv: Array[Float], cell: Int): Array[Array[Double]] =
-        luts.getOrElseUpdate((qid, cell), {
-          val cent = cents(cell)
-          var qr = Array.tabulate(qv.length)(j => qv(j) - cent(j))
-          rot.foreach { r => qr = Opq.rotate(r, qr) }
-          Array.tabulate(numSub) { s =>
-            Array.tabulate(cbs(s).length) { c =>
-              var dist = 0.0; var j = 0
-              while (j < subDim) {
-                dist += sq((qr(s * subDim + j) - cbs(s)(c)(j)).toFloat); j += 1
-              }
-              dist
-            }
+      graft.functions.cells.cellPruneFilter(col("cell"), wantedCells))
+    val topCands = Pq.adcTopCandidates(pruned, model.packed, flat = false,
+      probes.zip(cellsOf).map { case ((qid, _), cells) =>
+        CodeScan.Probe(qid, cells, rerank) },
+      numSub, adcDigits, () => {
+        val cbs = bcCb.value
+        val cents = bcCents.value
+        val rot = bcRot.value
+        val qs = bcQ.value
+        // ADC tables are per (query, probed cell): (rotated) residual space
+        val luts = qs.map { case (_, cells) =>
+          new Array[Array[Array[Double]]](cells.length) }
+        (q, slot) => {
+          if (luts(q)(slot) == null) {
+            val (qv, cells) = qs(q)
+            val cent = cents(cells(slot))
+            var qr = Array.tabulate(qv.length)(j => qv(j) - cent(j))
+            rot.foreach { r => qr = Opq.rotate(r, qr) }
+            luts(q)(slot) = Pq.adcLut(cbs, qr, numSub, subDim)
           }
-        })
-      // Row-chunked, QUERY-MAJOR scan (the [[Sq.knnJoin]] shape): the
-      // row-major loop paid a boxed Map lookup (qCells, heaps) per
-      // (row × query) and streamed every query's LUT past the core per
-      // row. Index-addressed per-query state + chunking keeps one
-      // (lut, heap) pair hot across 1024 rows; rows arrive cell-clustered
-      // (the code table is cell-partitioned), so the per-query last-cell
-      // LUT cache hits for whole runs. Per query the candidates arrive in
-      // the SAME row order as before ⇒ identical kept sets.
-      val heaps = Array.fill(qs.length)(
-        mutable.PriorityQueue.empty[(Double, Long)](Ordering.by(_._1)))
-      val probedCells = qs.map { case (qid, _) => qCells(qid) }
-      val chunk = 1024
-      val cellBuf = new Array[Int](chunk)
-      val idBuf = new Array[Long](chunk)
-      val codeBuf = new Array[Any](chunk)
-      def flush(nRows: Int): Unit = {
-        var q = 0
-        while (q < qs.length) {
-          val (qid, qv) = qs(q)
-          val cellsQ = probedCells(q)
-          val h = heaps(q)
-          var lastCell = -1
-          var t: Array[Array[Double]] = null
-          var j = 0
-          while (j < nRows) {
-            val cell = cellBuf(j)
-            var probed = false
-            var c = 0
-            while (!probed && c < cellsQ.length) {
-              probed = cellsQ(c) == cell; c += 1
-            }
-            if (probed) {
-              if (cell != lastCell) { t = lut(qid, qv, cell); lastCell = cell }
-              val codes = codeBuf(j).asInstanceOf[C]
-              var dist = 0.0; var s = 0
-              while (s < numSub) { dist += t(s)(codeAt(codes, s)); s += 1 }
-              val id = idBuf(j)
-              if (h.size < r) h.enqueue((dist, id))
-              else if (dist < h.head._1) { h.dequeue(); h.enqueue((dist, id)) }
-            }
-            j += 1
-          }
-          q += 1
+          luts(q)(slot)
         }
-      }
-      var nBuf = 0
-      rows.foreach { case (cell, id, codes) =>
-        cellBuf(nBuf) = cell; idBuf(nBuf) = id; codeBuf(nBuf) = codes
-        nBuf += 1
-        if (nBuf == chunk) { flush(nBuf); nBuf = 0 }
-      }
-      if (nBuf > 0) flush(nBuf)
-      heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-        val qid = qs(q)._1
-        h.iterator.map { case (dist, id) => (qid, id, dist) }
-      }
-    }
-    val cands = (if (model.packed)
-        pruned.as[(Int, Long, Array[Byte])].mapPartitions(rows =>
-          scanRows[Array[Byte]](rows, (c, s) => Pq.nibble(c, s)))
-      else
-        pruned.as[(Int, Long, Array[Short])].mapPartitions(rows =>
-          scanRows[Array[Short]](rows, (c, s) => c(s).toInt)))
-      .toDF("query_id", "cand_id", "adc_dist")
-    val rankDist =
-      if (adcDigits >= 0) graft.Qutil.rnd(col("adc_dist"), adcDigits)
-      else col("adc_dist")
-    val wr = Window.partitionBy("query_id")
-      .orderBy(rankDist.asc, col("cand_id").asc)
-    val topCands = cands.withColumn("crank", row_number().over(wr))
-      .filter(col("crank") <= r).select("query_id", "cand_id")
+      })
     // a cell-clustered rerank store prunes to the probed cells' row groups
     KnnJoin.rerank(topCands, graft.functions.cells
-        .pruneRerankBase(base, wantedCells.toSeq, model.centroids.length),
+        .pruneRerankBase(base, wantedCells, model.centroids.length),
       queries, k, "euclidean", queryId, queryVec, idCol, vecCol, scoreDigits)
   }
-
-  /** Large-probe-set variant: caps the per-batch collect/broadcast at
-    * ~batchRows probes (see [[ProbeBatch]]). */
-  def knnJoinBatched(model: Model, base: DataFrame, queries: DataFrame, k: Int,
-      nprobe: Int = 4, rerank: Int = 100, batchRows: Int = 100000,
-      queryId: String = "query_id", queryVec: String = "query_vec",
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ProbeBatch.batched(queries, batchRows, queryId)(
-      knnJoin(model, base, _, k, nprobe, rerank, queryId, queryVec, idCol, vecCol))
 
   /** DuckDB CTE reproducing the WHOLE composed IVF-PQ pipeline from
     * trained literals (centroids + codebooks + optional OPQ rotation) —

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -33,9 +31,9 @@ import org.apache.spark.sql.functions._
   * minus the tie mass.
   *
   * Scale shape = [[IvfBq.knnJoin]]: cell-routed scan touches only probed
-  * cells' (bits, g) rows (d/8 + 8 bytes/vector), bounded per-partition
-  * heaps, a `rerank`-rows-per-query exchange, broadcast-query exact
-  * rerank.
+  * cells' (bits, g) rows (d/8 + 8 bytes/vector) through the kernel
+  * ([[CodeScan]]: bounded per-partition heaps, a `rerank`-rows-per-query
+  * exchange), then a broadcast-query exact rerank.
   */
 object IvfRabitq {
 
@@ -92,8 +90,7 @@ object IvfRabitq {
     var num = 0.0
     var j = 0
     while (j < qres.length) {
-      val q = qres(j)
-      num += (if (((bits(j >> 6) >>> (j & 63)) & 1L) != 0L) q else -q)
+      num += qres(j) * RabitQ.sign(bits, j)
       j += 1
     }
     num
@@ -152,13 +149,14 @@ object IvfRabitq {
       vecCol: String = "embedding", metric: String = "cosine",
       scoreDigits: Int = -1): DataFrame = {
     require(rerank >= k)
-    knnJoinWith(model, base, queries, k, nprobe, (_, _) => rerank,
+    knnJoinWith(model, base, queries, k, nprobe, _ => rerank,
       queryId, queryVec, idCol, vecCol, metric, scoreDigits)
   }
 
   /** Adaptive RERANK: per-query candidate budget scaled to the probed
-    * cells' live population (the [[IvfBq.knnJoinAdaptive]] knob on the
-    * estimator path). Requires the model's cellCounts. */
+    * cells' live population ([[CodeScan.populationBudget]], the
+    * [[IvfBq.knnJoinAdaptive]] knob on the estimator path). Requires the
+    * model's cellCounts. */
   def knnJoinAdaptive(model: Model, base: DataFrame, queries: DataFrame,
       k: Int, nprobe: Int = 4, rerankFrac: Double = 0.1,
       rerankMin: Int = 100, queryId: String = "query_id",
@@ -169,11 +167,7 @@ object IvfRabitq {
     require(model.cellCounts.nonEmpty,
       "adaptive rerank needs the model's cellCounts")
     knnJoinWith(model, base, queries, k, nprobe,
-      (_, cells) => {
-        val pop = cells.map(c => model.cellCounts.getOrElse(c, 0L)).sum
-        math.max(rerankMin.toLong, math.ceil(rerankFrac * pop).toLong)
-          .min(Int.MaxValue).toInt
-      },
+      CodeScan.populationBudget(model.cellCounts, rerankFrac, rerankMin),
       queryId, queryVec, idCol, vecCol, metric, scoreDigits)
   }
 
@@ -194,24 +188,9 @@ object IvfRabitq {
     require(model.cellCounts.nonEmpty,
       "adaptive probing needs the model's cellCounts")
     knnJoinWith(model, base, queries, k, maxNprobe,
-      rerankOf = (_, cells) => {
-        val pop = cells.map(c => model.cellCounts.getOrElse(c, 0L)).sum
-        math.max(rerankMin.toLong, math.ceil(rerankFrac * pop).toLong)
-          .min(Int.MaxValue).toInt
-      },
+      CodeScan.populationBudget(model.cellCounts, rerankFrac, rerankMin),
       queryId, queryVec, idCol, vecCol, metric, scoreDigits,
-      probeOf = (_, cells) => {
-        val keep = mutable.ArrayBuffer.empty[Int]
-        var cum = 0L
-        var i = 0
-        while (i < cells.length &&
-            (keep.length < minNprobe || cum < minCandidates)) {
-          keep += cells(i)
-          cum += model.cellCounts.getOrElse(cells(i), 0L)
-          i += 1
-        }
-        keep.toArray
-      })
+      CodeScan.trimToPopulation(model.cellCounts, minNprobe, minCandidates))
   }
 
   /** Production kernel: per-cell query residuals quantized to 4-bit
@@ -226,33 +205,31 @@ object IvfRabitq {
       vecCol: String = "embedding", metric: String = "cosine",
       scoreDigits: Int = -1): DataFrame = {
     require(rerank >= k)
-    knnJoinWith(model, base, queries, k, nprobe, (_, _) => rerank,
+    knnJoinWith(model, base, queries, k, nprobe, _ => rerank,
       queryId, queryVec, idCol, vecCol, metric, scoreDigits, u4 = true)
   }
 
+  /** One code-table row as the scan reads it. */
+  private type CodeRow = (Int, Long, Array[Long], Double)
+
   private def knnJoinWith(model: Model, base: DataFrame, queries: DataFrame,
-      k: Int, nprobe: Int, rerankOf: (Long, Array[Int]) => Int,
+      k: Int, nprobe: Int, rerankOf: Array[Int] => Int,
       queryId: String, queryVec: String, idCol: String,
       vecCol: String, metric: String, scoreDigits: Int,
-      probeOf: (Long, Array[Int]) => Array[Int] = (_, cs) => cs,
+      probeOf: Array[Int] => Array[Int] = identity,
       u4: Boolean = false): DataFrame = {
     require(k > 0 && nprobe > 0)
     val spark = model.encoded.sparkSession
     import spark.implicits._
-    val routed = queries.select(col(queryId).cast("long"),
-        col(queryVec).cast("array<float>").as("qv"),
-        graft.functions.cells.nearest_cells(
-          col(queryVec).cast("array<float>"), model.centroids, metric,
-          n = nprobe, tieCellDesc = true).as("cells"))
-      .as[(Long, Array[Float], Array[Int])].collect()
-      .map { case (qid, qv, cells) => (qid, qv, probeOf(qid, cells)) }
+    val routed = CodeScan.routeCells(queries, model.centroids, metric, nprobe,
+      queryId, queryVec, probeOf)
     val rot = model.rotation
     val rcs = model.rotCents
     // per probed cell: the query's shifted residual + its norm (exact
     // ascending-j folds — the quantities the oracle recomputes)
-    val qres = routed.map { case (qid, qv, cells) =>
+    val qres = routed.map { case (_, qv, cells) =>
       val qrv = Opq.rotate(rot, qv)
-      val perCell = cells.map { c =>
+      cells.map { c =>
         val rc = rcs(c)
         val res = new Array[Double](qrv.length)
         var nsq = 0.0
@@ -265,121 +242,40 @@ object IvfRabitq {
         }
         (res, math.sqrt(nsq))
       }
-      (qid, perCell, cells, math.max(rerankOf(qid, cells), k))
     }
     val wanted = routed.flatMap(_._3).distinct.toSeq
     val bcQ = spark.sparkContext.broadcast(qres)
     // u4: the 4-bit query planes are deterministic per (query, probed
     // cell) — quantize once on the driver and broadcast, rather than
-    // nQueries x nprobe quantizeQuery calls in EVERY partition (ADVICE
-    // r10). ~(4·d/8 + 24) bytes per (query, cell): same order as qres.
-    val bcPlanes: org.apache.spark.broadcast.Broadcast[Array[Array[RabitQ.QueryPlanes]]] =
-      if (u4) spark.sparkContext.broadcast(
-        qres.map { case (_, perCell, _, _) =>
-          perCell.map { case (res, _) =>
-            RabitQ.quantizeQuery(res.map(_.toFloat))
-          }
-        })
-      else null
-    val worstFirst = new Ordering[(Double, Long)] {
-      def compare(a: (Double, Long), b: (Double, Long)): Int = {
-        val c = java.lang.Double.compare(b._1, a._1)
-        if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-      }
-    }
-    val useU4 = u4
-    val numCells = model.rotCents.length
+    // nQueries x nprobe quantizeQuery calls in EVERY partition.
+    // ~(4·d/8 + 24) bytes per (query, cell): same order as qres.
+    val bcPlanes = if (!u4) null else spark.sparkContext.broadcast(
+      qres.map(_.map { case (res, _) => RabitQ.quantizeQuery(res.map(_.toFloat)) }))
     val pruned = model.encoded.filter(
       graft.functions.cells.cellPruneFilter(col("cell"), wanted))
-    val scored = pruned.as[(Int, Long, Array[Long], Double)]
-      .mapPartitions { rows =>
-        val qs = bcQ.value
-        val planes: Array[Array[RabitQ.QueryPlanes]] =
-          if (useU4) bcPlanes.value else null
-        val heaps = Array.fill(qs.length)(
-          mutable.PriorityQueue.empty[(Double, Long)](worstFirst))
-        // INVERTED cell → (query, cellIdx) map: a code row is scored
-        // only against the queries that actually probe its cell. The
-        // previous all-queries membership loop made a serving wave
-        // O(probed rows × nQueries) — at the 100M point (1000 queries,
-        // most of 1024 cells probed by someone) that was ~60× redundant
-        // work per row. Per-query row ORDER is unchanged (same rows,
-        // same j sequence), so heap decisions — and results — are
-        // bit-identical.
-        val cellQs: Array[Array[Long]] = {
-          val b = Array.fill(numCells)(
-            mutable.ArrayBuffer.empty[Long])
-          var q = 0
-          while (q < qs.length) {
-            val qcells = qs(q)._3
-            var c = 0
-            while (c < qcells.length) {
-              b(qcells(c)) += (q.toLong << 32) | c.toLong
-              c += 1
-            }
-            q += 1
-          }
-          b.map(_.toArray)
-        }
-        val chunk = 1024
-        val cellBuf = new Array[Int](chunk)
-        val idBuf = new Array[Long](chunk)
-        val bitBuf = new Array[Array[Long]](chunk)
-        val gBuf = new Array[Double](chunk)
-        def flush(nRows: Int): Unit = {
-          var j = 0
-          while (j < nRows) {
-            val hits = cellQs(cellBuf(j))
-            val id = idBuf(j)
-            var hi = 0
-            while (hi < hits.length) {
-              val q = (hits(hi) >>> 32).toInt
-              val cellIdx = (hits(hi) & 0xffffffffL).toInt
-              val (_, perCell, _, r) = qs(q)
-              val h = heaps(q)
-              val (res, nq) = perCell(cellIdx)
-              val est =
-                if (nq == 0.0) 0.0
-                else if (useU4)
-                  planes(q)(cellIdx).signDot(bitBuf(j)) * gBuf(j) / nq
-                else signDotD(bitBuf(j), res) * gBuf(j) / nq
-              val ts = math.floor(est * 1e6 + 0.5) / 1e6
-              if (h.size < r) h.enqueue((ts, id))
-              else {
-                val top = h.head
-                if (ts > top._1 || (ts == top._1 && id < top._2)) {
-                  h.dequeue(); h.enqueue((ts, id))
-                }
-              }
-              hi += 1
-            }
+    val topCands = CodeScan.topCandidates(pruned.as[CodeRow],
+      routed.map { case (qid, _, cells) =>
+        CodeScan.Probe(qid, cells, rerankOf(cells)) },
+      (t: CodeRow) => t._2, Some((t: CodeRow) => t._1),
+      () => new CodeScan.Scorer[CodeRow] {
+        private val qs = bcQ.value
+        private val planes = if (u4) bcPlanes.value else null
+        def score(q: Int, slot: Int, rows: Array[CodeRow], from: Int, until: Int,
+            out: Array[Double]): Unit = {
+          val (res, nq) = qs(q)(slot)
+          var j = from
+          while (j < until) {
+            val row = rows(j)
+            val est =
+              if (nq == 0.0) 0.0
+              else if (u4) planes(q)(slot).signDot(row._3) * row._4 / nq
+              else signDotD(row._3, res) * row._4 / nq
+            // the negated 1e-6-rounded estimator: (tscore DESC, cand_id)
+            out(j) = 0.0 - graft.Qutil.rnd(est, 1e6)
             j += 1
           }
         }
-        var nBuf = 0
-        rows.foreach { case (cell, id, bits, g) =>
-          cellBuf(nBuf) = cell; idBuf(nBuf) = id; bitBuf(nBuf) = bits
-          gBuf(nBuf) = g; nBuf += 1
-          if (nBuf == chunk) { flush(nBuf); nBuf = 0 }
-        }
-        if (nBuf > 0) flush(nBuf)
-        heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-          val qid = qs(q)._1
-          h.iterator.map { case (ts, id) => (qid, id, ts) }
-        }
-      }.toDF("query_id", "cand_id", "tscore")
-    // per-query candidate cut (all rq equal under fixed rerank,
-    // population-scaled under the adaptive variants) — the heaps already
-    // bound candidates per partition; this is the global cut
-    val wc = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-      .orderBy(col("tscore").desc, col("cand_id").asc)
-    val rq = org.apache.spark.sql.functions.broadcast(
-      qres.map(t => (t._1, t._4)).toSeq.toDF("query_id", "rq"))
-    val topCands = scored
-      .withColumn("crank", org.apache.spark.sql.functions.row_number().over(wc))
-      .join(rq, Seq("query_id"))
-      .filter(col("crank") <= col("rq"))
-      .select("query_id", "cand_id")
+      })
     // a cell-clustered rerank store prunes to the probed cells' row
     // groups (the 100M small-wave serve was rerank-scan-bound)
     KnnJoin.rerank(topCands,
@@ -387,17 +283,6 @@ object IvfRabitq {
         model.centroids.length),
       queries, k, "cosine", queryId, queryVec, idCol, vecCol, scoreDigits)
   }
-
-  /** Large-probe-set variant: caps the per-batch collect/broadcast at
-    * ~batchRows probes (see [[ProbeBatch]]). */
-  def knnJoinBatched(model: Model, base: DataFrame, queries: DataFrame,
-      k: Int, nprobe: Int = 4, rerank: Int = 100, batchRows: Int = 100000,
-      queryId: String = "query_id", queryVec: String = "query_vec",
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      metric: String = "cosine", scoreDigits: Int = -1): DataFrame =
-    ProbeBatch.batched(queries, batchRows, queryId)(
-      knnJoin(model, base, _, k, nprobe, rerank, queryId, queryVec, idCol,
-        vecCol, metric, scoreDigits))
 
   private def foldExpr(d: Int, term: Int => String): String =
     (0 until d).map(term).mkString("\n      + ")
@@ -418,9 +303,6 @@ object IvfRabitq {
     val rcRows = rotCents.zipWithIndex.map { case (rc, c) =>
       s"($c, CAST([${rc.map(_.toString).mkString(", ")}] AS DOUBLE[]))"
     }.mkString(",\n   ")
-    def guarded(a: String, b: String): String =
-      s"""CASE WHEN isnan(list_cosine_similarity($a, $b)) THEN -1.0
-         |        ELSE list_cosine_similarity($a, $b) END""".stripMargin
     val resTerm = (pv: String, j: Int) =>
       s"(CAST($pv[${j + 1}] AS DOUBLE) - rc.rcvec[${j + 1}])"
     val sumAbs = foldExpr(d, j => s"abs(${resTerm("pv", j)})")
@@ -440,7 +322,7 @@ object IvfRabitq {
        |  FROM embeddings),
        | ivf_sim AS (
        |  SELECT e.vec_id, c.cell,
-       |   ${guarded("CAST(e.embedding AS DOUBLE[])", "c.cvec")} AS s
+       |   ${IvfFlat.duckdbGuardedCosine("CAST(e.embedding AS DOUBLE[])", "c.cvec")} AS s
        |  FROM embeddings e CROSS JOIN ivf_cents c),
        | ivf_assigned AS (
        |  SELECT vec_id, cell FROM (
@@ -461,7 +343,7 @@ object IvfRabitq {
        |           FROM embeddings WHERE vec_id < $nQueries),
        | ivf_qsim AS (
        |  SELECT q.query_id, c.cell,
-       |   ${guarded("CAST(q.qv AS DOUBLE[])", "c.cvec")} AS s
+       |   ${IvfFlat.duckdbGuardedCosine("CAST(q.qv AS DOUBLE[])", "c.cvec")} AS s
        |  FROM ivf_q q CROSS JOIN ivf_cents c),
        | ivf_qcells AS (
        |  SELECT query_id, cell FROM (

@@ -57,25 +57,21 @@ object KnnJoin {
       .filter(col("rank") <= k)
   }
 
-  /** Shared candidate cut of the cosine candidate-generation paths
-    * ([[Mrl]], [[Pca]], [[RabitQ]]): keep `rerank` candidates per query
-    * in (tscore DESC, cand_id ASC) order, then [[rerank]] them by exact
-    * cosine. `scored` must carry (query_id, cand_id, tscore). */
+  /** Candidate cut + rerank of the projected-cosine paths ([[Mrl]],
+    * [[Pca]]): the kernel's cut ([[CodeScan.cut]]) keeps `rerank`
+    * candidates per query in (tscore DESC, cand_id ASC) order, then
+    * [[rerank]] scores them by exact cosine. `scored` must carry
+    * (query_id, cand_id, tscore). */
   private[operators] def cosineCandidateRerank(scored: DataFrame,
       base: DataFrame, queries: DataFrame, k: Int, rerank: Int,
       queryId: String, queryVec: String, idCol: String, vecCol: String,
-      scoreDigits: Int): DataFrame = {
-    val wc = Window.partitionBy("query_id")
-      .orderBy(col("tscore").desc, col("cand_id").asc)
-    val cands = scored.withColumn("crank", row_number().over(wc))
-      .filter(col("crank") <= rerank)
-      .select("query_id", "cand_id")
-    this.rerank(cands, base, queries, k, "cosine", queryId, queryVec, idCol,
-      vecCol, scoreDigits)
-  }
+      scoreDigits: Int): DataFrame =
+    this.rerank(CodeScan.cut(scored, col("tscore").desc, lit(rerank)), base,
+      queries, k, "cosine", queryId, queryVec, idCol, vecCol, scoreDigits)
 
-  /** The one exact-rerank tail of every candidate-generation path (PQ,
-    * OPQ, SQ, BQ, IVF-BQ, IVF-PQ, IVF-RaBitQ, RaBitQ, MRL, PCA): score
+  /** The one exact-rerank tail of every candidate-generation path (the
+    * [[CodeScan]] kernel's families PQ, OPQ, SQ, BQ, IVF-BQ, IVF-PQ,
+    * IVF-RaBitQ and RaBitQ, and MRL, PCA): score
     * (query_id, cand_id) candidates on the original vectors by
     * `similarity.sim(metric)` and keep the top-k per query with the
     * battery's (score DESC, neighbor_id ASC) order. `scoreDigits >= 0`

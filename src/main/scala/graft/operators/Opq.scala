@@ -249,12 +249,8 @@ object Opq {
       idCol: String = "vec_id", vecCol: String = "embedding",
       scoreDigits: Int = -1, adcDigits: Int = -1): DataFrame = {
     require(k > 0 && rerank >= k)
-    val spark = model.pq.encoded.sparkSession
-    import spark.implicits._
     val rr = model.rotation
-    val probes = queries
-      .select(col(queryId).cast("long"), col(queryVec).cast("array<float>"))
-      .as[(Long, Array[Float])].collect()
+    val probes = CodeScan.collectProbes(queries, queryId, queryVec)
       .map { case (qid, qv) => (qid, rotate(rr, qv)) }
     val topCands = Pq.adcCandidates(model.pq, probes, rerank, adcDigits)
     KnnJoin.rerank(topCands, base, queries, k, "euclidean", queryId, queryVec,
@@ -301,13 +297,4 @@ object Opq {
         s"FROM opq_rv WHERE $probeFilter",
       lutVec = "q.qrv")
   }
-
-  /** Large-probe-set variant: caps the per-batch collect/broadcast at
-    * ~batchRows probes (see [[ProbeBatch]]). */
-  def knnJoinBatched(model: Model, base: DataFrame, queries: DataFrame, k: Int,
-      rerank: Int = 100, batchRows: Int = 100000, queryId: String = "query_id",
-      queryVec: String = "query_vec",
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ProbeBatch.batched(queries, batchRows, queryId)(
-      knnJoin(model, base, _, k, rerank, queryId, queryVec, idCol, vecCol))
 }

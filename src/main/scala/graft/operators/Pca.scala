@@ -145,7 +145,7 @@ object Pca {
   /** Projected-cosine candidates + exact full-dim cosine top-k rerank
     * (the [[Mrl]] serving shape with the trained projection in place of
     * the prefix slice). Probes project on the driver — the bounded probe
-    * set is the only collect; cap it with [[knnJoinBatched]]. */
+    * set is the only collect; cap it with [[ProbeBatch.batched]]. */
   def knnJoin(model: Model, base: DataFrame, queries: DataFrame, k: Int,
       rerank: Int = 100, queryId: String = "query_id",
       queryVec: String = "query_vec",
@@ -166,17 +166,6 @@ object Pca {
     KnnJoin.cosineCandidateRerank(scored, base, queries, k, rerank,
       queryId, queryVec, idCol, vecCol, scoreDigits)
   }
-
-  /** Large-probe-set variant: caps the per-batch collect/broadcast at
-    * ~batchRows probes (see [[ProbeBatch]]). */
-  def knnJoinBatched(model: Model, base: DataFrame, queries: DataFrame,
-      k: Int, rerank: Int = 100, batchRows: Int = 100000,
-      queryId: String = "query_id", queryVec: String = "query_vec",
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scoreDigits: Int = -1, candDigits: Int = 6): DataFrame =
-    ProbeBatch.batched(queries, batchRows, queryId)(
-      knnJoin(model, base, _, k, rerank, queryId, queryVec, idCol, vecCol,
-        scoreDigits, candDigits))
 
   /** Store CRUD (the battery's model-store contract): projected corpus
     * + trained params as parquet. */

@@ -1,9 +1,6 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product quantization (PQ) — the memory-bound ANN scale path, additive
@@ -20,9 +17,9 @@ import org.apache.spark.sql.functions._
   * PQ practice — training cost is O(sample), never O(corpus)); encoding
   * is one mapPartitions over the corpus with broadcast codebooks; the
   * query scan emits only the per-partition top-`rerank` candidates per
-  * query (bounded heaps inside the partition — the corpus-sized candidate
-  * set never materializes); the exact rerank joins the original vectors
-  * of |queries|·rerank rows.
+  * query (the kernel's bounded heaps inside the partition, [[CodeScan]]
+  * — the corpus-sized candidate set never materializes); the exact rerank
+  * joins the original vectors of |queries|·rerank rows.
   *
   * Deterministic: sampling, codebook init, and Lloyd refinement are all
   * pure functions of (seed, id), so fits reproduce under any partitioning.
@@ -218,94 +215,81 @@ object Pq {
     ()
   }
 
-  /** ADC candidate stage: top-`rerank` (query_id, cand_id) pairs per query
-    * by asymmetric distance over the code table. `probes` must already be
-    * in the model's code space (OPQ hands in rotated queries). */
+  /** ADC lookup table of one query in the code space: lut(s)(c) =
+    * ||q_sub − cent||² (float diffs, squared in double). */
+  private[operators] def adcLut(cbs: Array[Array[Array[Float]]], qv: Array[Float],
+      numSub: Int, subDim: Int): Array[Array[Double]] =
+    Array.tabulate(numSub) { s =>
+      Array.tabulate(cbs(s).length) { c =>
+        var dist = 0.0; var j = 0
+        while (j < subDim) { dist += sq(qv(s * subDim + j) - cbs(s)(c)(j)); j += 1 }
+        dist
+      }
+    }
+
+  /** The ADC candidate stage of PQ, OPQ and IVF-PQ: (cell, id, codes) rows
+    * of either code layout through the [[CodeScan]] kernel. The key is
+    * Σ_s lut(s)(code_s), rounded to 1e-`adcDigits` when `adcDigits >= 0`
+    * so a cross-engine oracle that sums the subspaces in another order
+    * ranks the same (dist, cand_id) order. `lutOf` builds, once per
+    * partition, the lookup of probe q's table in its probed cell slot. */
+  private[operators] def adcTopCandidates(codes: DataFrame, packed: Boolean,
+      flat: Boolean, probes: Array[CodeScan.Probe], numSub: Int, adcDigits: Int,
+      lutOf: () => (Int, Int) => Array[Array[Double]]): DataFrame = {
+    val spark = codes.sparkSession
+    import spark.implicits._
+    val scale = math.pow(10, adcDigits)
+    def scan[C](ds: org.apache.spark.sql.Dataset[(Int, Long, C)]): DataFrame =
+      CodeScan.topCandidates(ds, probes, (t: (Int, Long, C)) => t._2,
+        if (flat) None else Some((t: (Int, Long, C)) => t._1),
+        () => new CodeScan.Scorer[(Int, Long, C)] {
+          private val lut = lutOf()
+          def score(q: Int, slot: Int, rows: Array[(Int, Long, C)],
+              from: Int, until: Int, out: Array[Double]): Unit = {
+            val t = lut(q, slot)
+            var j = from
+            while (j < until) {
+              var dist = 0.0
+              var s = 0
+              if (packed) {
+                val c = rows(j)._3.asInstanceOf[Array[Byte]]
+                while (s < numSub) { dist += t(s)(nibble(c, s)); s += 1 }
+              } else {
+                val c = rows(j)._3.asInstanceOf[Array[Short]]
+                while (s < numSub) { dist += t(s)(c(s)); s += 1 }
+              }
+              out(j) = if (adcDigits >= 0) graft.Qutil.rnd(dist, scale) else dist
+              j += 1
+            }
+          }
+        })
+    if (packed) scan(codes.as[(Int, Long, Array[Byte])])
+    else scan(codes.as[(Int, Long, Array[Short])])
+  }
+
+  /** Flat ADC candidates: top-`rerank` (query_id, cand_id) pairs per query.
+    * `probes` must already be in the model's code space (OPQ hands in
+    * rotated queries). */
   private[operators] def adcCandidates(model: Model, probes: Array[(Long, Array[Float])],
       rerank: Int, adcDigits: Int = -1): DataFrame = {
     val spark = model.encoded.sparkSession
-    import spark.implicits._
-    val bcQ = spark.sparkContext.broadcast(probes)
+    val bcQ = spark.sparkContext.broadcast(probes.map(_._2))
     val bcCb = spark.sparkContext.broadcast(model.codebooks)
     val numSub = model.numSub
     val subDim = model.subDim
-    val r = rerank
-    // per-query ADC lookup tables: lut(q)(s)(c) = ||q_sub - cent||^2,
-    // then a bounded max-heap of the r best per query; `codeAt` abstracts
-    // the storage layout (array<smallint> vs packed nibbles)
-    def scanRows[C](rows: Iterator[(Long, C)],
-        codeAt: (C, Int) => Int): Iterator[(Long, Long, Double)] = {
-      val cbs = bcCb.value
-      val qs = bcQ.value
-      val luts = qs.map { case (_, qv) =>
-        Array.tabulate(numSub) { s =>
-          Array.tabulate(cbs(s).length) { c =>
-            var dist = 0.0; var j = 0
-            while (j < subDim) { dist += sq(qv(s * subDim + j) - cbs(s)(c)(j)); j += 1 }
-            dist
-          }
+    adcTopCandidates(
+      model.encoded.select(lit(0).as("cell"), col("id"), col("codes")),
+      model.packed, flat = true,
+      probes.map { case (qid, _) => CodeScan.Probe(qid, Array(0), rerank) },
+      numSub, adcDigits, () => {
+        val cbs = bcCb.value
+        val qs = bcQ.value
+        val luts = new Array[Array[Array[Double]]](qs.length)
+        (q, _) => {
+          if (luts(q) == null) luts(q) = adcLut(cbs, qs(q), numSub, subDim)
+          luts(q)
         }
-      }
-      val heaps = Array.fill(qs.length)(
-        mutable.PriorityQueue.empty[(Double, Long)](Ordering.by(_._1)))
-      // Row-chunked, QUERY-MAJOR scan (the [[Sq.knnJoin]] shape): at many
-      // probes a row-major loop streams every query's LUT + heap head
-      // past the core per row; chunking keeps one (lut, heap) pair hot
-      // across 1024 rows. Per query the candidates arrive in the SAME
-      // row order as before, so the heap's kept set (and its
-      // order-dependent equal-dist behavior) is unchanged.
-      val chunk = 1024
-      val idBuf = new Array[Long](chunk)
-      val codeBuf = new Array[Any](chunk)
-      def flush(nRows: Int): Unit = {
-        var q = 0
-        while (q < qs.length) {
-          val lut = luts(q)
-          val h = heaps(q)
-          var j = 0
-          while (j < nRows) {
-            val codes = codeBuf(j).asInstanceOf[C]
-            var dist = 0.0; var s = 0
-            while (s < numSub) { dist += lut(s)(codeAt(codes, s)); s += 1 }
-            val id = idBuf(j)
-            if (h.size < r) h.enqueue((dist, id))
-            else if (dist < h.head._1) { h.dequeue(); h.enqueue((dist, id)) }
-            j += 1
-          }
-          q += 1
-        }
-      }
-      var nBuf = 0
-      rows.foreach { case (id, codes) =>
-        idBuf(nBuf) = id; codeBuf(nBuf) = codes; nBuf += 1
-        if (nBuf == chunk) { flush(nBuf); nBuf = 0 }
-      }
-      if (nBuf > 0) flush(nBuf)
-      heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-        val qid = qs(q)._1
-        h.iterator.map { case (dist, id) => (qid, id, dist) }
-      }
-    }
-    val cands = (if (model.packed)
-        model.encoded.as[(Long, Array[Byte])].mapPartitions(rows =>
-          scanRows[Array[Byte]](rows, (c, s) => nibble(c, s)))
-      else
-        model.encoded.as[(Long, Array[Short])].mapPartitions(rows =>
-          scanRows[Array[Short]](rows, (c, s) => c(s).toInt)))
-      .toDF("query_id", "cand_id", "adc_dist")
-    // global top-rerank per query over the per-partition candidates.
-    // adcDigits >= 0 rounds the ADC distance (fixed-point floor form)
-    // BEFORE ranking so a cross-engine oracle that re-sums the same
-    // subspace distances in a different order lands on the same
-    // (dist, cand_id) total order — the SQ8 recipe's trick.
-    val rankDist =
-      if (adcDigits >= 0) graft.Qutil.rnd(col("adc_dist"), adcDigits)
-      else col("adc_dist")
-    val wr = Window.partitionBy("query_id")
-      .orderBy(rankDist.asc, col("cand_id").asc)
-    cands.withColumn("crank", row_number().over(wr))
-      .filter(col("crank") <= r)
-      .select("query_id", "cand_id")
+      })
   }
 
   /** ADC scan + exact rerank: approximate euclidean top-`rerank` per query
@@ -317,24 +301,11 @@ object Pq {
       idCol: String = "vec_id", vecCol: String = "embedding",
       scoreDigits: Int = -1, adcDigits: Int = -1): DataFrame = {
     require(k > 0 && rerank >= k)
-    val spark = model.encoded.sparkSession
-    import spark.implicits._
-    val probes = queries
-      .select(col(queryId).cast("long"), col(queryVec).cast("array<float>"))
-      .as[(Long, Array[Float])].collect()
+    val probes = CodeScan.collectProbes(queries, queryId, queryVec)
     val topCands = adcCandidates(model, probes, rerank, adcDigits)
     KnnJoin.rerank(topCands, base, queries, k, "euclidean", queryId, queryVec,
       idCol, vecCol, scoreDigits)
   }
-
-  /** Large-probe-set variant: caps the per-batch collect/broadcast at
-    * ~batchRows probes (see [[ProbeBatch]]). */
-  def knnJoinBatched(model: Model, base: DataFrame, queries: DataFrame, k: Int,
-      rerank: Int = 100, batchRows: Int = 100000, queryId: String = "query_id",
-      queryVec: String = "query_vec",
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ProbeBatch.batched(queries, batchRows, queryId)(
-      knnJoin(model, base, _, k, rerank, queryId, queryVec, idCol, vecCol))
 
   /** DuckDB CTE reproducing the WHOLE PQ pipeline from trained-codebook
     * literals (the LSH/SQ8/IVF cross-engine recipe extended to product

@@ -22,8 +22,10 @@ import org.apache.spark.sql.functions._
   * joins are eager, so their results cross the driver too, bounded by
   * probes × k rows per batch.
   *
-  * One helper so Hnsw / IvfHnsw / Pq / Opq / Sq / IvfPq / IvfFlat batch
-  * identically instead of five hand-rolled copies.
+  * One helper for every probe-set batch: `HnswModel.knnJoinBatched`,
+  * `IvfHnsw.knnJoinBatched` and the streaming indexes call it, and a
+  * caller of any other ANN `knnJoin` (BQ, SQ, PQ, OPQ, RaBitQ, IVF-PQ,
+  * IVF-BQ, IVF-RaBitQ, PCA) wraps that call in it directly.
   */
 object ProbeBatch {
 

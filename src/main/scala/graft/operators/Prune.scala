@@ -63,14 +63,12 @@ object Prune {
     * vec_id ties, keep = rank <= ceil(keepFrac · cell size). */
   def duckdbSql(centroids: Array[(Int, Array[Float])], keepFrac: Double,
       scoreDigits: Int = 6): String = {
-    def guarded(a: String, b: String): String =
-      IvfFlat.duckdbGuardedCosine(a, b)
     val p = s"1e$scoreDigits"
     s"""${IvfFlat.duckdbAssignCte("pr_", centroids,
             extraSim = Seq(("e.embedding", "embedding")), keepCvec = true)},
        | pr_scored AS (
        |  SELECT vec_id, cell,
-       |   floor((${guarded("CAST(embedding AS DOUBLE[])", "cvec")})*$p + 0.5)/$p AS proto_sim
+       |   floor((${IvfFlat.duckdbGuardedCosine("CAST(embedding AS DOUBLE[])", "cvec")})*$p + 0.5)/$p AS proto_sim
        |  FROM pr_assigned),
        | pr_ranked AS (
        |  SELECT vec_id, cell, proto_sim,

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,7 +28,7 @@ import org.apache.spark.sql.functions._
   * left-associative fold over those floats, mirrored term-by-term in
   * [[duckdbTopkCte]]; the candidate key is the 1e-6-rounded estimator
   * with `cand_id` tiebreak, then the battery's shared rounded-cosine
-  * rerank ([[KnnJoin.cosineCandidateRerank]]).
+  * rerank ([[KnnJoin.rerank]]).
   *
   * Scale shape (100 TB): fit is one seeded Gram–Schmidt on the driver
   * (d×d doubles — microscopic) + one no-shuffle encode pass; search scans
@@ -120,12 +118,18 @@ object RabitQ {
     var num = 0.0
     var j = 0
     while (j < qrv.length) {
-      val q = qrv(j).toDouble
-      num += (if (((bits(j >> 6) >>> (j & 63)) & 1L) != 0L) q else -q)
+      num += qrv(j).toDouble * sign(bits, j)
       j += 1
     }
     num
   }
+
+  /** +1.0 when bit j is set, else −1.0. Multiplying by it is exact (the
+    * same double as choosing q or −q) and has no branch: a query-major
+    * scan meets a new bit pattern with every row, so a branch on the bit
+    * mispredicts about half the time. */
+  @inline private[graft] def sign(bits: Array[Long], j: Int): Double =
+    ((((bits(j >> 6) >>> (j & 63)) & 1L) << 1) - 1L).toDouble
 
   /** Rotate (seeded), sign-pack, factor — one no-shuffle corpus pass with
     * the d×d rotation broadcast. Deterministic for fixed (seed, data). */
@@ -156,7 +160,7 @@ object RabitQ {
     * integer-safe total order [[duckdbTopkCte]] ranks by — and
     * `scoreDigits = 6` applies the battery's rounded-cosine rerank
     * contract. Probes collect/rotate on the driver (bounded; cap with
-    * [[knnJoinBatched]]). */
+    * [[ProbeBatch.batched]]). */
   def knnJoin(model: Model, base: DataFrame, queries: DataFrame, k: Int,
       rerank: Int = 100, queryId: String = "query_id",
       queryVec: String = "query_vec",
@@ -180,6 +184,9 @@ object RabitQ {
     scanKnn(model, base, queries, k, rerank, queryId, queryVec, idCol,
       vecCol, scoreDigits, u4 = true)
 
+  /** One code-table row as the scan reads it. */
+  private type CodeRow = (Long, Array[Long], Double)
+
   private def scanKnn(model: Model, base: DataFrame, queries: DataFrame,
       k: Int, rerank: Int, queryId: String, queryVec: String, idCol: String,
       vecCol: String, scoreDigits: Int, u4: Boolean): DataFrame = {
@@ -187,70 +194,30 @@ object RabitQ {
     val spark = model.encoded.sparkSession
     import spark.implicits._
     val rr = model.rotation
-    val probes = queries
-      .select(col(queryId).cast("long"), col(queryVec).cast("array<float>"))
-      .as[(Long, Array[Float])].collect()
+    val probes = CodeScan.collectProbes(queries, queryId, queryVec)
       .map { case (qid, qv) => (qid, Opq.rotate(rr, qv)) }
-    val bcQ = spark.sparkContext.broadcast(probes)
-    val r = rerank
-    val useU4 = u4
-    // worst-kept-on-top order: lower tscore (ties: higher cand_id) = greater
-    val worstFirst = new Ordering[(Double, Long)] {
-      def compare(a: (Double, Long), b: (Double, Long)): Int = {
-        val c = java.lang.Double.compare(b._1, a._1)
-        if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-      }
-    }
-    val scored = model.encoded.as[(Long, Array[Long], Double)]
-      .mapPartitions { rows =>
-        val qs = bcQ.value
-        val planes = if (useU4) qs.map { case (_, qrv) => quantizeQuery(qrv) } else null
-        val heaps = Array.fill(qs.length)(
-          mutable.PriorityQueue.empty[(Double, Long)](worstFirst))
-        // row-chunked QUERY-MAJOR scan (the [[Bq.knnJoin]] cache shape):
-        // one (query, heap) pair stays hot across a 1024-row chunk
-        val chunk = 1024
-        val idBuf = new Array[Long](chunk)
-        val bitBuf = new Array[Array[Long]](chunk)
-        val gBuf = new Array[Double](chunk)
-        def flush(nRows: Int): Unit = {
-          var q = 0
-          while (q < qs.length) {
-            val h = heaps(q)
-            val qrv = qs(q)._2
-            var j = 0
-            while (j < nRows) {
-              val num =
-                if (useU4) planes(q).signDot(bitBuf(j))
-                else signDot(bitBuf(j), qrv)
-              val est = num * gBuf(j)
-              val ts = math.floor(est * 1e6 + 0.5) / 1e6
-              val id = idBuf(j)
-              if (h.size < r) h.enqueue((ts, id))
-              else {
-                val top = h.head
-                if (ts > top._1 || (ts == top._1 && id < top._2)) {
-                  h.dequeue(); h.enqueue((ts, id))
-                }
-              }
-              j += 1
-            }
-            q += 1
+    val bcQ = spark.sparkContext.broadcast(probes.map(_._2))
+    val topCands = CodeScan.topCandidates(model.encoded.as[CodeRow],
+      probes.map { case (qid, _) => CodeScan.Probe(qid, Array(0), rerank) },
+      (t: CodeRow) => t._1, None,
+      () => new CodeScan.Scorer[CodeRow] {
+        private val qs = bcQ.value
+        private val planes = if (u4) qs.map(quantizeQuery) else null
+        def score(q: Int, slot: Int, rows: Array[CodeRow], from: Int, until: Int,
+            out: Array[Double]): Unit = {
+          val qrv = qs(q)
+          var j = from
+          while (j < until) {
+            val row = rows(j)
+            val num = if (u4) planes(q).signDot(row._2) else signDot(row._2, qrv)
+            // the negated 1e-6-rounded estimator: (tscore DESC, cand_id)
+            out(j) = 0.0 - graft.Qutil.rnd(num * row._3, 1e6)
+            j += 1
           }
         }
-        var nBuf = 0
-        rows.foreach { case (id, bits, g) =>
-          idBuf(nBuf) = id; bitBuf(nBuf) = bits; gBuf(nBuf) = g; nBuf += 1
-          if (nBuf == chunk) { flush(nBuf); nBuf = 0 }
-        }
-        if (nBuf > 0) flush(nBuf)
-        heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-          val qid = qs(q)._1
-          h.iterator.map { case (ts, id) => (qid, id, ts) }
-        }
-      }.toDF("query_id", "cand_id", "tscore")
-    KnnJoin.cosineCandidateRerank(scored, base, queries, k, rerank,
-      queryId, queryVec, idCol, vecCol, scoreDigits)
+      })
+    KnnJoin.rerank(topCands, base, queries, k, "cosine", queryId, queryVec,
+      idCol, vecCol, scoreDigits)
   }
 
   /** 4-bit bit-sliced query: q̃(j) = lo + delta·u(j), u ∈ [0,15], planes
@@ -307,17 +274,6 @@ object RabitQ {
     }
     new QueryPlanes(d, lo, delta, planes, tSum)
   }
-
-  /** Large-probe-set variant: caps the per-batch collect/broadcast at
-    * ~batchRows probes (see [[ProbeBatch]]). */
-  def knnJoinBatched(model: Model, base: DataFrame, queries: DataFrame,
-      k: Int, rerank: Int = 100, batchRows: Int = 100000,
-      queryId: String = "query_id", queryVec: String = "query_vec",
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scoreDigits: Int = -1): DataFrame =
-    ProbeBatch.batched(queries, batchRows, queryId)(
-      knnJoin(model, base, _, k, rerank, queryId, queryVec, idCol, vecCol,
-        scoreDigits))
 
   /** Store CRUD (the battery's model-store contract): codes + rotation as
     * parquet; load-missing → None. */

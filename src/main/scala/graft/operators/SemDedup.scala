@@ -48,8 +48,6 @@ object SemDedup {
     * keep-first on vec_id. */
   def duckdbSql(centroids: Array[(Int, Array[Float])], threshold: Double,
       scoreDigits: Int = 6): String = {
-    def guarded(a: String, b: String): String =
-      IvfFlat.duckdbGuardedCosine(a, b)
     val p = s"1e$scoreDigits"
     s"""${IvfFlat.duckdbAssignCte("sd_", centroids,
             extraSim = Seq(("e.embedding", "embedding")))},
@@ -57,7 +55,7 @@ object SemDedup {
        |  SELECT DISTINCT a.vec_id
        |  FROM sd_assigned a JOIN sd_assigned b USING (cell)
        |  WHERE b.vec_id < a.vec_id
-       |    AND floor((${guarded("CAST(a.embedding AS DOUBLE[])", "CAST(b.embedding AS DOUBLE[])")})*$p + 0.5)/$p >= $threshold)
+       |    AND floor((${IvfFlat.duckdbGuardedCosine("CAST(a.embedding AS DOUBLE[])", "CAST(b.embedding AS DOUBLE[])")})*$p + 0.5)/$p >= $threshold)
        |SELECT a.vec_id, a.cell, (d.vec_id IS NULL) AS kept
        |FROM sd_assigned a LEFT JOIN sd_dom d USING (vec_id)""".stripMargin
   }

@@ -1,9 +1,6 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Scalar quantization (SQ8): per-dimension affine int8 codes —
@@ -15,9 +12,10 @@ import org.apache.spark.sql.functions._
   * Fit is two narrow passes with no shuffle: per-partition (min, max)
   * partials reduced on the driver (P tiny rows), then a broadcast encode
   * pass. Search is an ADC scan — per-query lookup table lut(i)(c) =
-  * (q_i − decode(c))² so each candidate costs d table adds — with bounded
-  * per-partition heaps, a global per-query top-`rerank` window, and exact
-  * `1/(1+L2)` rerank on the original vectors (shared with PQ/OPQ). At
+  * (q_i − decode(c))² so each candidate costs d table adds — through the
+  * kernel ([[CodeScan]]: bounded per-partition heaps, a global per-query
+  * top-`rerank` cut), and exact `1/(1+L2)` rerank on the original
+  * vectors (shared with PQ/OPQ). At
   * scale the code table is the only thing scanned: 100 TB of float32
   * becomes 25 TB of codes, and the scan parallelizes per partition with
   * zero shuffles before the bounded candidate exchange.
@@ -34,11 +32,6 @@ object Sq {
 
   private def decode(m: Model, i: Int, c: Int): Double =
     m.mins(i).toDouble + c * m.scales(i)
-
-  /** floor(x·1e9+0.5)/1e9 — the Qutil.rnd fixed-point form, applied to
-    * ADC distances BEFORE ranking so both engines rank the same total
-    * order ((rounded dist, cand_id)) regardless of summation order. */
-  @inline private def rnd9(x: Double): Double = math.floor(x * 1e9 + 0.5) / 1e9
 
   /** Per-dimension min/max over the corpus (partition partials + driver
     * combine), then one broadcast encode pass. Deterministic. */
@@ -134,103 +127,53 @@ object Sq {
     require(k > 0 && rerank >= k)
     val spark = model.encoded.sparkSession
     import spark.implicits._
-    val probes = queries
-      .select(col(queryId).cast("long"), col(queryVec).cast("array<float>"))
-      .as[(Long, Array[Float])].collect()
-    val bcQ = spark.sparkContext.broadcast(probes)
+    val probes = CodeScan.collectProbes(queries, queryId, queryVec)
+    val bcQ = spark.sparkContext.broadcast(probes.map(_._2))
     val bcM = spark.sparkContext.broadcast(model)
-    val r = rerank
-    val cands = model.encoded.as[(Long, Array[Byte])].mapPartitions { rows =>
-      val m = bcM.value
-      val qs = bcQ.value
-      val d = m.mins.length
-      // per-query LUT: lut(i*256 + c) = (q_i − decode(i, c))²
-      val luts = qs.map { case (_, qv) =>
-        val lut = new Array[Double](d * 256)
-        var i = 0
-        while (i < d) {
-          var c = 0
-          while (c < 256) {
-            val diff = qv(i).toDouble - decode(m, i, c)
-            lut(i * 256 + c) = diff * diff
-            c += 1
+    val topCands = CodeScan.topCandidates(model.encoded.as[(Long, Array[Byte])],
+      probes.map { case (qid, _) => CodeScan.Probe(qid, Array(0), rerank) },
+      (t: (Long, Array[Byte])) => t._1, None,
+      () => new CodeScan.Scorer[(Long, Array[Byte])] {
+        private val m = bcM.value
+        private val qs = bcQ.value
+        private val d = m.mins.length
+        // per-query LUT, built on first use: lut(i*256 + c) = (q_i − decode(i, c))²
+        private val luts = new Array[Array[Double]](qs.length)
+        private def lut(q: Int): Array[Double] = {
+          if (luts(q) == null) {
+            val qv = qs(q)
+            val t = new Array[Double](d * 256)
+            var i = 0
+            while (i < d) {
+              var c = 0
+              while (c < 256) {
+                val diff = qv(i).toDouble - decode(m, i, c)
+                t(i * 256 + c) = diff * diff
+                c += 1
+              }
+              i += 1
+            }
+            luts(q) = t
           }
-          i += 1
+          luts(q)
         }
-        lut
-      }
-      // heap order = ((rounded dist, cand_id)) — the SAME total order the
-      // global window and the DuckDB oracle rank by, so the per-partition
-      // cut can never disagree with the cross-engine ranking
-      val heaps = Array.fill(qs.length)(
-        mutable.PriorityQueue.empty[(Double, Long)](
-          Ordering.Tuple2[Double, Long]))
-      // Row-chunked, QUERY-MAJOR scan: with many probes the LUT set (q ×
-      // d × 256 doubles — 131 KB/probe) dwarfs every cache, and a
-      // row-major loop streams the whole set past the core once per row.
-      // Buffering a chunk of rows and putting queries on the outer loop
-      // keeps one LUT hot across the chunk (the codes chunk is ~64 KB —
-      // L1/L2-resident). The bounded heap keeps the EXACT top-r under the
-      // (dist, id) total order, which is insertion-order-invariant, so
-      // results are bit-identical to the row-major loop.
-      val chunk = 1024
-      val ids = new Array[Long](chunk)
-      val codeBuf = new Array[Array[Byte]](chunk)
-      def flush(nRows: Int): Unit = {
-        var q = 0
-        while (q < qs.length) {
-          val lut = luts(q)
-          val h = heaps(q)
-          var j = 0
-          while (j < nRows) {
-            val codes = codeBuf(j)
+        def score(q: Int, slot: Int, rows: Array[(Long, Array[Byte])],
+            from: Int, until: Int, out: Array[Double]): Unit = {
+          val t = lut(q)
+          var j = from
+          while (j < until) {
+            val codes = rows(j)._2
             var dist = 0.0
             var i = 0
-            while (i < d) { dist += lut(i * 256 + (codes(i) & 0xff)); i += 1 }
-            val rd = rnd9(dist)
-            val id = ids(j)
-            if (h.size < r) h.enqueue((rd, id))
-            else {
-              // allocation-free (rd, id) < h.head in the Tuple2 order —
-              // the reject path runs once per (row × query); boxing a
-              // tuple per comparison dominated the scan at 1M × 2k probes
-              val hd = h.head
-              if (rd < hd._1 || (rd == hd._1 && id < hd._2)) {
-                h.dequeue(); h.enqueue((rd, id))
-              }
-            }
+            while (i < d) { dist += t(i * 256 + (codes(i) & 0xff)); i += 1 }
+            // rounded BEFORE ranking, so both engines rank the same
+            // (dist, cand_id) order whatever their summation order
+            out(j) = graft.Qutil.rnd(dist, 1e9)
             j += 1
           }
-          q += 1
         }
-      }
-      var nBuf = 0
-      rows.foreach { case (id, codes) =>
-        ids(nBuf) = id; codeBuf(nBuf) = codes; nBuf += 1
-        if (nBuf == chunk) { flush(nBuf); nBuf = 0 }
-      }
-      if (nBuf > 0) flush(nBuf)
-      heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-        val qid = qs(q)._1
-        h.iterator.map { case (dist, id) => (qid, id, dist) }
-      }
-    }.toDF("query_id", "cand_id", "adc_dist")
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("adc_dist").asc, col("cand_id").asc)
-    val topCands = cands.withColumn("crank", row_number().over(wr))
-      .filter(col("crank") <= r)
-      .select("query_id", "cand_id")
+      })
     KnnJoin.rerank(topCands, base, queries, k, "euclidean", queryId, queryVec,
       idCol, vecCol, scoreDigits)
   }
-
-  /** Large-probe-set variant: caps the per-batch collect/broadcast at
-    * ~batchRows probes (see [[ProbeBatch]]). */
-  def knnJoinBatched(model: Model, base: DataFrame, queries: DataFrame, k: Int,
-      rerank: Int = 100, batchRows: Int = 100000, queryId: String = "query_id",
-      queryVec: String = "query_vec", idCol: String = "vec_id",
-      vecCol: String = "embedding", scoreDigits: Int = -1): DataFrame =
-    ProbeBatch.batched(queries, batchRows, queryId)(
-      knnJoin(model, base, _, k, rerank, queryId, queryVec, idCol, vecCol,
-        scoreDigits))
 }

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins "one way to build a session": every entry point under
   * `src/main/scala` goes through [[GraftSession.local]], so the session
-  * settings live in one file; and "one bucketed write" in
-  * `graft.operators.TextIndex`. */
+  * settings live in one file; "one bucketed write" in
+  * `graft.operators.TextIndex`; and one candidate heap, the
+  * `graft.operators.CodeScan` kernel's. */
 class GraftSessionSpec extends AnyFunSuite {
 
   /** The source without its comments (line, block and nested block);
@@ -73,6 +74,19 @@ class GraftSessionSpec extends AnyFunSuite {
     }.map(p => root.relativize(p).toString.replace('\\', '/')).sorted
     assert(builders == Seq("graft/GraftSession.scala"),
       s"sessions built outside GraftSession: $builders")
+  }
+
+  test("one compressed-code scan: PriorityQueue appears in code under " +
+      "graft/operators only in CodeScan.scala") {
+    val root = Paths.get("src/main/scala/graft/operators")
+    val files = Files.list(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 30, s"only ${files.size} sources found under $root")
+    val heaps = files.filter { (p: Path) =>
+      code(new String(Files.readAllBytes(p), "UTF-8")).contains("PriorityQueue")
+    }.map(_.getFileName.toString).sorted
+    assert(heaps == Seq("CodeScan.scala"),
+      s"candidate heaps outside the CodeScan kernel: $heaps")
   }
 
   test("TextIndex has one bucketed write: .bucketBy( appears once in code") {

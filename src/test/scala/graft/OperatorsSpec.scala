@@ -770,6 +770,56 @@ class OperatorsSpec extends AnyFunSuite {
     m.encoded.unpersist()
   }
 
+  /** In-memory recompute of the PQ-family candidate cut + euclidean
+    * rerank over `in`'s probes (vec_id < 20): each probe's candidates are
+    * the code rows (cell, id, codes) of the cells `cellsOf` routes it to,
+    * keyed by rnd(Σ_s lut(s)(code_s), adcDigits) in the (key, cand_id)
+    * order, top-`rerank`; then 1/(1+L2) rounded to 1e-6, (score DESC, id)
+    * top-k. `lutVec(qv, cell)` is the query in the cell's code space. */
+  private def adcRecompute(in: DataFrame, codebooks: Array[Array[Array[Float]]],
+      codes: Seq[(Int, Long, Array[Short])], k: Int, rerank: Int,
+      adcDigits: Int, cellsOf: Array[Float] => Seq[Int],
+      lutVec: (Array[Float], Int) => Array[Float]): Set[(Long, Long, Int)] = {
+    val numSub = codebooks.length
+    val subDim = codebooks(0)(0).length
+    val vecs = in.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    val bmap = vecs.toMap
+    def rnd(x: Double, d: Int): Double =
+      math.floor(x * math.pow(10, d) + 0.5) / math.pow(10, d)
+    vecs.filter(_._1 < 20).toSeq.flatMap { case (qid, qv) =>
+      val cells = cellsOf(qv)
+      val cands = cells.flatMap { cell =>
+        val q = lutVec(qv, cell)
+        val lut = Array.tabulate(numSub, codebooks(0).length) { (s, c) =>
+          var dist = 0.0
+          (0 until subDim).foreach { j =>
+            val x = q(s * subDim + j) - codebooks(s)(c)(j)
+            dist += x.toDouble * x
+          }
+          dist
+        }
+        codes.filter(_._1 == cell).map { case (_, id, code) =>
+          var dist = 0.0
+          (0 until numSub).foreach(s => dist += lut(s)(code(s)))
+          (rnd(dist, adcDigits), id)
+        }
+      }.sorted.take(rerank)
+      cands.map { case (_, id) =>
+        val v = bmap(id)
+        var ss = 0.0
+        v.indices.foreach { i => val d = v(i).toDouble - qv(i); ss += d * d }
+        (-rnd(1.0 / (1.0 + math.sqrt(ss)), 6), id)
+      }.sorted.take(k).zipWithIndex.map { case ((_, id), i) => (qid, id, i + 1) }
+    }.toSet
+  }
+
+  private def probesOf(in: DataFrame): DataFrame = in.filter(col("vec_id") < 20)
+    .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+
+  private def triples(df: DataFrame): Set[(Long, Long, Int)] =
+    df.select("query_id", "neighbor_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+
   test("PQ: deterministic fit, ADC+rerank recall, exhaustive-rerank exactness") {
     import graft.operators.Pq
     val m1 = Pq.fit(emb, numSub = 8, codesPerSub = 16)
@@ -788,7 +838,21 @@ class OperatorsSpec extends AnyFunSuite {
     val full = Pq.knnJoin(m1, emb, probes, k = 10, rerank = n)
     val r2 = Recall.microAvgRecall(full, exact).select("recall").first().getDouble(0)
     assert(r2 == 1.0, s"exhaustive-rerank pq recall = $r2")
-    m1.encoded.unpersist(); m2.encoded.unpersist()
+    // the (rnd(dist, adcDigits), cand_id) order, recomputed in memory — on
+    // this input, and on a duplicate-vector one whose cut falls in a tie
+    def recompute(in: DataFrame, m: Pq.Model, k: Int, rerank: Int): Unit = {
+      val got = triples(Pq.knnJoin(m, in, probesOf(in), k = k, rerank = rerank,
+        scoreDigits = 6, adcDigits = 9))
+      val codes = m.encoded.collect()
+        .map(r => (0, r.getLong(0), r.getSeq[Short](1).toArray)).toSeq
+      assert(got == adcRecompute(in, m.codebooks, codes, k, rerank, 9,
+        _ => Seq(0), (qv, _) => qv))
+    }
+    recompute(emb, m1, k = 5, rerank = 30)
+    val dup = graft.operators.TieInputs.duplicated(emb)
+    val dm = Pq.fit(dup, numSub = 8, codesPerSub = 16)
+    recompute(dup, dm, k = 6, rerank = 6)
+    m1.encoded.unpersist(); m2.encoded.unpersist(); dm.encoded.unpersist()
   }
 
   test("IVF-PQ: deterministic fit, nprobe recall floor, all-cells+full-rerank exactness") {
@@ -807,7 +871,28 @@ class OperatorsSpec extends AnyFunSuite {
     val full = IvfPq.knnJoin(m1, emb, probes, k = 10, nprobe = 8, rerank = n)
     val r2 = Recall.microAvgRecall(full, exact).select("recall").first().getDouble(0)
     assert(r2 == 1.0, s"exhaustive ivfpq recall = $r2")
-    m1.encoded.unpersist(); m2.encoded.unpersist()
+    // the (rnd(dist, adcDigits), cand_id) order behind euclidean routing
+    // ((dist, cell), float diffs), recomputed in memory — on this input,
+    // and on a duplicate-vector one whose cut falls in a tie
+    def recompute(in: DataFrame, m: IvfPq.Model, k: Int, rerank: Int): Unit = {
+      val got = triples(IvfPq.knnJoin(m, in, probesOf(in), k = k, nprobe = 4,
+        rerank = rerank, scoreDigits = 6, adcDigits = 9))
+      val codes = m.encoded.collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Short](2).toArray)).toSeq
+      val cents = m.centroids.toMap
+      def route(qv: Array[Float]): Seq[Int] = m.centroids.map { case (c, cv) =>
+        var dist = 0.0
+        qv.indices.foreach { j => val x = qv(j) - cv(j); dist += x.toDouble * x }
+        (dist, c)
+      }.sorted.take(4).map(_._2).toSeq
+      assert(got == adcRecompute(in, m.codebooks, codes, k, rerank, 9, route,
+        (qv, cell) => qv.indices.map(j => qv(j) - cents(cell)(j)).toArray))
+    }
+    recompute(emb, m1, k = 5, rerank = 30)
+    val dup = graft.operators.TieInputs.duplicated(emb)
+    val dm = IvfPq.fit(dup, numCells = 8, numSub = 8, codesPerSub = 16)
+    recompute(dup, dm, k = 6, rerank = 6)
+    m1.encoded.unpersist(); m2.encoded.unpersist(); dm.encoded.unpersist()
   }
 
   test("IVF-PQ with rotated residuals: orthogonal R, recall holds, exactness") {
@@ -1048,23 +1133,24 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("probe batching: batched == unbatched on every code-based ANN path") {
-    import graft.operators.{IvfPq, Opq, Pq, Sq}
+    import graft.operators.{IvfPq, Opq, Pq, ProbeBatch, Sq}
     // batchRows = 7 forces 3 hash batches over the 20 probes on each path
     def asSet(df: DataFrame): Set[Seq[Any]] =
       df.select("query_id", "neighbor_id", "rank").collect().map(_.toSeq).toSet
+    def batched(join: DataFrame => DataFrame): DataFrame =
+      ProbeBatch.batched(probes, 7, "query_id")(join)
     val pq = Pq.fit(emb, numSub = 8, codesPerSub = 16)
     assert(asSet(Pq.knnJoin(pq, emb, probes, k = 5, rerank = 50)) ==
-      asSet(Pq.knnJoinBatched(pq, emb, probes, k = 5, rerank = 50, batchRows = 7)))
+      asSet(batched(Pq.knnJoin(pq, emb, _, k = 5, rerank = 50))))
     val opq = Opq.fit(emb, numSub = 8, codesPerSub = 16)
     assert(asSet(Opq.knnJoin(opq, emb, probes, k = 5, rerank = 50)) ==
-      asSet(Opq.knnJoinBatched(opq, emb, probes, k = 5, rerank = 50, batchRows = 7)))
+      asSet(batched(Opq.knnJoin(opq, emb, _, k = 5, rerank = 50))))
     val sq = Sq.fit(emb)
     assert(asSet(Sq.knnJoin(sq, emb, probes, k = 5, rerank = 50)) ==
-      asSet(Sq.knnJoinBatched(sq, emb, probes, k = 5, rerank = 50, batchRows = 7)))
+      asSet(batched(Sq.knnJoin(sq, emb, _, k = 5, rerank = 50))))
     val ivfpq = IvfPq.fit(emb, numCells = 8, numSub = 8, codesPerSub = 16)
     assert(asSet(IvfPq.knnJoin(ivfpq, emb, probes, k = 5, nprobe = 4, rerank = 50)) ==
-      asSet(IvfPq.knnJoinBatched(ivfpq, emb, probes, k = 5, nprobe = 4,
-        rerank = 50, batchRows = 7)))
+      asSet(batched(IvfPq.knnJoin(ivfpq, emb, _, k = 5, nprobe = 4, rerank = 50))))
   }
 
   test("MLlib LSH paths: MinHash near-dups + BRP ANN join produce ranked output") {

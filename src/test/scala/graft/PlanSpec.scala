@@ -78,7 +78,12 @@ class PlanSpec extends AnyFunSuite {
   test("projected-candidate paths (PCA, MRL) keep BOTH rank cuts as " +
       "WindowGroupLimit — the candidate stage scores n·q rows, so a full " +
       "sort there is the 10M regression") {
-    Seq("knn_pca_cosine", "knn_mrl_cosine").foreach { q =>
+    // the compressed-code families' fixed-rerank entries share the same
+    // candidate cut (CodeScan.cut with a literal rerank)
+    Seq("knn_pca_cosine", "knn_mrl_cosine", "knn_bq_cosine", "knn_sq_euclid",
+        "knn_pq_euclid", "knn_opq_euclid", "knn_rabitq_cosine",
+        "knn_ivfpq_euclid", "knn_ivfbq_cosine", "knn_ivfrabitq_cosine")
+        .foreach { q =>
       val p = plan(q)
       // candidate cut (crank <= rerank, partial+final around the
       // exchange) AND final cut (rank <= k; final-only — the rerank

@@ -55,38 +55,48 @@ class BqSpec extends AnyFunSuite {
 
   test("knnJoin matches an in-memory brute-force recompute of the same " +
       "(hamming, id) candidate cut + cosine rerank") {
-    val got = Bq.knnJoin(model, emb, probes, k = 5, rerank = 30,
-        scoreDigits = 6)
-      .select("query_id", "neighbor_id", "rank").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    def check(in: DataFrame, m: Bq.Model, k: Int, rerank: Int): Unit = {
+      val qs = in.filter(col("vec_id") < 20)
+        .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+      val got = Bq.knnJoin(m, in, qs, k = k, rerank = rerank, scoreDigits = 6)
+        .select("query_id", "neighbor_id", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
 
-    val vecs = emb.collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val codes = vecs.map { case (id, v) =>
-      id -> Bq.packBits(v, model.thresholds) }
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < a.length) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val want = (0L until 20L).flatMap { qid =>
-      val qb = codes(qid)
-      val cands = codes.toSeq
-        .map { case (id, bits) => (Bq.hamming(qb, bits), id) }
-        .sorted.take(30).map(_._2)
-      cands
-        .map { id =>
-          val s = math.floor(cos(vecs(qid), vecs(id)) * 1e6 + 0.5) / 1e6
-          (s, id)
+      val vecs = in.collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+      val codes = vecs.map { case (id, v) =>
+        id -> Bq.packBits(v, m.thresholds) }
+      def cos(a: Array[Float], b: Array[Float]): Double = {
+        var dot = 0.0; var na = 0.0; var nb = 0.0
+        var i = 0
+        while (i < a.length) {
+          dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
         }
-        .sortBy { case (s, id) => (-s, id) }
-        .take(5).zipWithIndex
-        .map { case ((_, id), i) => (qid, id, i + 1) }
-    }.toSet
-    assert(got == want)
+        dot / (math.sqrt(na) * math.sqrt(nb))
+      }
+      val want = (0L until 20L).flatMap { qid =>
+        val qb = codes(qid)
+        val cands = codes.toSeq
+          .map { case (id, bits) => (Bq.hamming(qb, bits), id) }
+          .sorted.take(rerank).map(_._2)
+        cands
+          .map { id =>
+            val s = math.floor(cos(vecs(qid), vecs(id)) * 1e6 + 0.5) / 1e6
+            (s, id)
+          }
+          .sortBy { case (s, id) => (-s, id) }
+          .take(k).zipWithIndex
+          .map { case ((_, id), i) => (qid, id, i + 1) }
+      }.toSet
+      assert(got == want)
+    }
+    check(emb, model, k = 5, rerank = 30)
+    // every vector 4 times, ids falling as rows arrive: k = rerank = 6
+    // shows the candidate set, and its cut falls inside a tie
+    val dup = TieInputs.duplicated(emb)
+    val dm = Bq.fit(dup)
+    check(dup, dm, k = 6, rerank = 6)
+    dm.encoded.unpersist()
   }
 
   test("rerank restores ranking fidelity: recall@10 above code-only") {
@@ -109,8 +119,8 @@ class BqSpec extends AnyFunSuite {
   test("batched probes ≡ whole probe set; save/load round-trips") {
     val whole = Bq.knnJoin(model, emb, probes, k = 5, rerank = 50)
       .select("query_id", "neighbor_id", "rank").collect().map(_.toSeq).toSet
-    val batched = Bq.knnJoinBatched(model, emb, probes, k = 5, rerank = 50,
-        batchRows = 7)
+    val batched = ProbeBatch.batched(probes, 7, "query_id")(
+        Bq.knnJoin(model, emb, _, k = 5, rerank = 50))
       .select("query_id", "neighbor_id", "rank").collect().map(_.toSeq).toSet
     assert(batched == whole)
 

@@ -155,8 +155,8 @@ class IvfBqSpec extends AnyFunSuite {
     val whole = IvfBq.knnJoin(model, emb, probes, k = 5, nprobe = 2,
         rerank = 50)
       .select("query_id", "neighbor_id", "rank").collect().map(_.toSeq).toSet
-    val batched = IvfBq.knnJoinBatched(model, emb, probes, k = 5, nprobe = 2,
-        rerank = 50, batchRows = 7)
+    val batched = ProbeBatch.batched(probes, 7, "query_id")(
+        IvfBq.knnJoin(model, emb, _, k = 5, nprobe = 2, rerank = 50))
       .select("query_id", "neighbor_id", "rank").collect().map(_.toSeq).toSet
     assert(batched == whole)
   }

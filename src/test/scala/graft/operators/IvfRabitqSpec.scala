@@ -68,48 +68,59 @@ class IvfRabitqSpec extends AnyFunSuite {
 
   test("knnJoin matches an in-memory recompute of routing + estimator " +
       "cut + cosine rerank") {
-    val got = IvfRabitq.knnJoin(model, emb, probes, k = 5, nprobe = 3,
-        rerank = 30, scoreDigits = 6)
-      .select("query_id", "neighbor_id", "rank").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    def check(in: DataFrame, m: IvfRabitq.Model, k: Int, rerank: Int): Unit = {
+      val qs = in.filter(col("vec_id") < 20)
+        .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+      val got = IvfRabitq.knnJoin(m, in, qs, k = k, nprobe = 3,
+          rerank = rerank, scoreDigits = 6)
+        .select("query_id", "neighbor_id", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
 
-    val base = emb.select(col("vec_id").cast("long"), col("embedding"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    val bmap = base.toMap
-    val enc = model.encoded.collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toArray,
-        r.getDouble(3)))
-    def cosD(a: Array[Float], b: Array[Float]): Double = {
-      var dd = 0.0; var na = 0.0; var nb = 0.0
-      a.indices.foreach { i =>
-        dd += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-        nb += b(i).toDouble * b(i)
+      val base = in.select(col("vec_id").cast("long"), col("embedding"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+      val bmap = base.toMap
+      val enc = m.encoded.collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toArray,
+          r.getDouble(3)))
+      def cosD(a: Array[Float], b: Array[Float]): Double = {
+        var dd = 0.0; var na = 0.0; var nb = 0.0
+        a.indices.foreach { i =>
+          dd += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
+          nb += b(i).toDouble * b(i)
+        }
+        if (na == 0 || nb == 0) Double.NaN else dd / (math.sqrt(na) * math.sqrt(nb))
       }
-      if (na == 0 || nb == 0) Double.NaN else dd / (math.sqrt(na) * math.sqrt(nb))
+      val cents = m.centroids.sortBy(_._1)
+      val want = base.filter(_._1 < 20).flatMap { case (qid, qv) =>
+        // route: top-3 cells by (cos desc, cell desc), NaN -> -1
+        val ranked = cents.map { case (c, cv) =>
+          val s = cosD(qv, cv)
+          (c, if (s.isNaN) -1.0 else s)
+        }.sortBy { case (c, s) => (-s, -c) }.take(3).map(_._1).toSet
+        val qrv = Opq.rotate(m.rotation, qv)
+        val cands = enc.filter(t => ranked.contains(t._1))
+          .map { case (cell, id, bits, g) =>
+            val rc = m.rotCents(cell)
+            val res = qrv.indices.map(j => qrv(j).toDouble - rc(j)).toArray
+            val nq = math.sqrt(res.map(x => x * x).sum)
+            val est = if (nq == 0.0) 0.0
+              else IvfRabitq.signDotD(bits, res) * g / nq
+            (id, math.floor(est * 1e6 + 0.5) / 1e6)
+          }.sortBy { case (id, ts) => (-ts, id) }.take(rerank)
+        cands.map { case (id, _) =>
+          (id, math.floor(cosD(bmap(id), qv) * 1e6 + 0.5) / 1e6)
+        }.sortBy { case (id, sc) => (-sc, id) }.take(k).zipWithIndex
+          .map { case ((id, _), i) => (qid, id, i + 1) }
+      }.toSet
+      assert(got == want)
     }
-    val cents = model.centroids.sortBy(_._1)
-    val want = base.filter(_._1 < 20).flatMap { case (qid, qv) =>
-      // route: top-3 cells by (cos desc, cell desc), NaN -> -1
-      val ranked = cents.map { case (c, cv) =>
-        val s = cosD(qv, cv)
-        (c, if (s.isNaN) -1.0 else s)
-      }.sortBy { case (c, s) => (-s, -c) }.take(3).map(_._1).toSet
-      val qrv = Opq.rotate(model.rotation, qv)
-      val cands = enc.filter(t => ranked.contains(t._1))
-        .map { case (cell, id, bits, g) =>
-          val rc = model.rotCents(cell)
-          val res = qrv.indices.map(j => qrv(j).toDouble - rc(j)).toArray
-          val nq = math.sqrt(res.map(x => x * x).sum)
-          val est = if (nq == 0.0) 0.0
-            else IvfRabitq.signDotD(bits, res) * g / nq
-          (id, math.floor(est * 1e6 + 0.5) / 1e6)
-        }.sortBy { case (id, ts) => (-ts, id) }.take(30)
-      cands.map { case (id, _) =>
-        (id, math.floor(cosD(bmap(id), qv) * 1e6 + 0.5) / 1e6)
-      }.sortBy { case (id, sc) => (-sc, id) }.take(5).zipWithIndex
-        .map { case ((id, _), i) => (qid, id, i + 1) }
-    }.toSet
-    assert(got == want)
+    check(emb, model, k = 5, rerank = 30)
+    // every vector 4 times, ids falling as rows arrive: k = rerank = 6
+    // shows the candidate set, and its cut falls inside a tie
+    val dup = TieInputs.duplicated(emb)
+    val dm = IvfRabitq.fit(dup, numCells = 8)
+    check(dup, dm, k = 6, rerank = 6)
+    dm.encoded.unpersist()
   }
 
   test("recall@10 at nprobe=all matches standalone estimator quality") {

@@ -106,8 +106,8 @@ class PcaSpec extends AnyFunSuite {
     val whole = Pca.knnJoin(model, emb, probes, k = 5, rerank = 30,
         scoreDigits = 6)
       .select("query_id", "neighbor_id", "rank").collect().map(_.toSeq).toSet
-    val batched = Pca.knnJoinBatched(model, emb, probes, k = 5, rerank = 30,
-        batchRows = 7, scoreDigits = 6)
+    val batched = ProbeBatch.batched(probes, 7, "query_id")(
+        Pca.knnJoin(model, emb, _, k = 5, rerank = 30, scoreDigits = 6))
       .select("query_id", "neighbor_id", "rank").collect().map(_.toSeq).toSet
     assert(batched == whole)
   }

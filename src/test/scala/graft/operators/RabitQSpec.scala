@@ -147,34 +147,45 @@ class RabitQSpec extends AnyFunSuite {
 
   test("knnJoin matches an in-memory recompute of the same candidate cut " +
       "+ cosine rerank") {
-    val got = RabitQ.knnJoin(model, emb, probes, k = 5, rerank = 30,
-        scoreDigits = 6)
-      .select("query_id", "neighbor_id", "rank").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    def check(in: DataFrame, m: RabitQ.Model, k: Int, rerank: Int): Unit = {
+      val qs = in.filter(col("vec_id") < 20)
+        .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+      val got = RabitQ.knnJoin(m, in, qs, k = k, rerank = rerank,
+          scoreDigits = 6)
+        .select("query_id", "neighbor_id", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
 
-    val base = emb.select(col("vec_id").cast("long"), col("embedding"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    val enc = base.map { case (id, v) =>
-      val (bits, g) = RabitQ.encodeVec(Opq.rotate(model.rotation, v))
-      (id, bits, g)
+      val base = in.select(col("vec_id").cast("long"), col("embedding"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+      val enc = base.map { case (id, v) =>
+        val (bits, g) = RabitQ.encodeVec(Opq.rotate(m.rotation, v))
+        (id, bits, g)
+      }
+      val want = base.filter(_._1 < 20).flatMap { case (qid, qv) =>
+        val qrv = Opq.rotate(m.rotation, qv)
+        val cands = enc.map { case (id, bits, g) =>
+          val ts = math.floor(RabitQ.signDot(bits, qrv) * g * 1e6 + 0.5) / 1e6
+          (id, ts)
+        }.sortBy { case (id, ts) => (-ts, id) }.take(rerank)
+        val qmap = base.toMap
+        cands.map { case (id, _) =>
+          val v = qmap(id)
+          def dot(a: Array[Float], b: Array[Float]): Double =
+            a.indices.map(i => a(i).toDouble * b(i)).sum
+          val cos = dot(v, qv) / (math.sqrt(dot(v, v)) * math.sqrt(dot(qv, qv)))
+          (id, math.floor(cos * 1e6 + 0.5) / 1e6)
+        }.sortBy { case (id, sc) => (-sc, id) }.take(k).zipWithIndex
+          .map { case ((id, _), i) => (qid, id, i + 1) }
+      }.toSet
+      assert(got == want)
     }
-    val want = base.filter(_._1 < 20).flatMap { case (qid, qv) =>
-      val qrv = Opq.rotate(model.rotation, qv)
-      val cands = enc.map { case (id, bits, g) =>
-        val ts = math.floor(RabitQ.signDot(bits, qrv) * g * 1e6 + 0.5) / 1e6
-        (id, ts)
-      }.sortBy { case (id, ts) => (-ts, id) }.take(30)
-      val qmap = base.toMap
-      cands.map { case (id, _) =>
-        val v = qmap(id)
-        def dot(a: Array[Float], b: Array[Float]): Double =
-          a.indices.map(i => a(i).toDouble * b(i)).sum
-        val cos = dot(v, qv) / (math.sqrt(dot(v, v)) * math.sqrt(dot(qv, qv)))
-        (id, math.floor(cos * 1e6 + 0.5) / 1e6)
-      }.sortBy { case (id, sc) => (-sc, id) }.take(5).zipWithIndex
-        .map { case ((id, _), i) => (qid, id, i + 1) }
-    }.toSet
-    assert(got == want)
+    check(emb, model, k = 5, rerank = 30)
+    // every vector 4 times, ids falling as rows arrive: k = rerank = 6
+    // shows the candidate set, and its cut falls inside a tie
+    val dup = TieInputs.duplicated(emb)
+    val dm = RabitQ.fit(dup, seed = 42L)
+    check(dup, dm, k = 6, rerank = 6)
+    dm.encoded.unpersist()
   }
 
   test("recall@10 >= 0.9 at rerank=100, and u4 kernel stays within 0.05") {
